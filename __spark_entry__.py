@@ -143,9 +143,7 @@ def _searcher(spark: SparkSession, sf_dir: str) -> IndexSearcher:
     import json
     import shutil
 
-    from hail_elasticsearch_pipelines_spark.plans.pipeline import (
-        INDEX_FORMAT_VERSION,
-    )
+    from hail_elasticsearch_pipelines_spark.layout import INDEX_FORMAT_VERSION
 
     out = os.path.join(INDEX_ROOT, os.path.basename(os.path.normpath(sf_dir)))
     manifest_path = os.path.join(out, "manifest.json")

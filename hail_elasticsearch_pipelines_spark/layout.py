@@ -8,7 +8,9 @@ posture luigi_pipeline/lib/hail_tasks.py:230-244).  The analog here:
 
 * ``manifest.json`` carries a ``tables`` map of logical table name →
   relative directory (``{"postings": "postings-g3", ...}``; a missing
-  entry means the plain name — pre-generation indexes keep working).
+  entry means the plain name).  Its ``format_version`` is checked at
+  load: an index written in any other on-disk format is refused with
+  ``IndexFormatError`` and must be rebuilt.
 * A maintenance op that rewrites a table writes the replacement into a
   NEW ``<table>-g<G>`` directory and publishes every rewritten table
   with ONE atomic manifest replace (write temp + os.replace).  A
@@ -42,10 +44,28 @@ TABLES = ("postings", "termdict", "doclens", "deletes", "nested")
 _GEN_RE = re.compile(r"^(postings|termdict|doclens|deletes|nested)-g\d+$")
 _SCRATCH_RE = re.compile(r".*(__staging|__updating|__compacting|__old)$")
 
+# bump when the on-disk table layout changes; load_manifest refuses
+# every other version (the ES index-version analog)
+INDEX_FORMAT_VERSION = 6  # v6: doclens carries warc_ts doc values
+
+
+class IndexFormatError(ValueError):
+    """The index was written in an on-disk format this code does not
+    read; rebuild it with ``build_index``."""
+
 
 def load_manifest(index_dir: str) -> dict:
+    """The index's manifest — the single load behind every searcher and
+    maintenance op, so the format check below is the only version gate."""
     with open(os.path.join(index_dir, "manifest.json")) as f:
-        return json.load(f)
+        manifest = json.load(f)
+    version = manifest.get("format_version")
+    if version != INDEX_FORMAT_VERSION:
+        raise IndexFormatError(
+            f"index {index_dir} has format_version {version!r}, this code "
+            f"reads {INDEX_FORMAT_VERSION}; rebuild it with build_index"
+        )
+    return manifest
 
 
 def save_manifest_atomic(index_dir: str, manifest: dict) -> None:
@@ -63,8 +83,8 @@ def save_manifest_atomic(index_dir: str, manifest: dict) -> None:
 
 def table_path(index_dir: str, name: str, manifest: dict | None = None) -> str:
     """Resolve a logical table to its CURRENT directory via the manifest
-    generation pointer; plain name when unmapped (legacy layout) or when
-    no manifest exists yet (mid-build)."""
+    generation pointer; plain name when unmapped or when no manifest
+    exists yet (mid-build)."""
     if manifest is None:
         try:
             manifest = load_manifest(index_dir)

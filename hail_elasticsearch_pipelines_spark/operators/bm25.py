@@ -273,29 +273,15 @@ def _score_intersection(
     return common, scores
 
 
-def _flat_delete_files(deletes_path: str) -> list[str]:
-    """Root-level (pre-sidecar, 'flat' layout) tombstone parquet files:
-    files sitting directly in deletes/ with a ``segment`` DATA column,
-    written by indexes older than the hive-sidecar layout."""
-    if not os.path.isdir(deletes_path):
-        return []
-    return sorted(
-        os.path.join(deletes_path, fn)
-        for fn in os.listdir(deletes_path)
-        if fn.endswith(".parquet")
-        and os.path.isfile(os.path.join(deletes_path, fn))
-    )
-
-
 _EPOCH_FILE_RE = None  # compiled lazily (re import kept out of task hot path)
 
 
 def _file_epoch(fn: str) -> int:
-    """Publish epoch encoded in a sidecar file name (``e<N>-...``);
-    0 for legacy/unprefixed files.  Lets a searcher pinned at epoch E
-    ignore tombstones published AFTER its snapshot — an upsert landing
-    mid-query must not make the old doc vanish before its replacement
-    becomes visible at reload (MVCC on the delete axis)."""
+    """Publish epoch encoded in a sidecar file name (``e<N>-...``).
+    Lets a searcher pinned at epoch E ignore tombstones published AFTER
+    its snapshot — an upsert landing mid-query must not make the old
+    doc vanish before its replacement becomes visible at reload (MVCC
+    on the delete axis)."""
     global _EPOCH_FILE_RE
     if _EPOCH_FILE_RE is None:
         import re
@@ -319,11 +305,7 @@ def load_deletes(
     dict would ride into every task closure and turn heavy upsert churn
     into a multi-GB broadcast.
 
-    Handles all three on-disk layouts: hive sidecars
-    (``deletes/segment=K/``), legacy flat root files (``segment`` as a
-    data column), and a MIX of both (a legacy index whose first
-    new-code upsert published sidecars next to flat files) — the two
-    sources are unioned per segment, never treated as exclusive.
+    Tombstones live in per-segment hive sidecars (``deletes/segment=K/``).
 
     ``epoch``: when given, only sidecar files published at or before
     that epoch are read (snapshot semantics for a searcher pinned at
@@ -343,7 +325,7 @@ def load_deletes(
         return {}
     import pyarrow.dataset as ds
 
-    out: dict[int, list[np.ndarray]] = {}
+    out: dict[int, np.ndarray] = {}
     for e in sorted(os.listdir(path)):
         if not (e.startswith("segment=") and os.path.isdir(os.path.join(path, e))):
             continue
@@ -359,20 +341,8 @@ def load_deletes(
             continue
         tbl = ds.dataset(files, format="parquet").to_table(columns=["doc_id"])
         if tbl.num_rows:
-            out.setdefault(seg, []).append(
-                tbl.column("doc_id").to_numpy(zero_copy_only=False)
-            )
-    flat = _flat_delete_files(path)
-    if flat:
-        tbl = ds.dataset(flat, format="parquet").to_table(
-            columns=["segment", "doc_id"]
-        )
-        if tbl.num_rows:
-            segs = tbl.column("segment").to_numpy(zero_copy_only=False)
-            ids = tbl.column("doc_id").to_numpy(zero_copy_only=False)
-            for s in np.unique(segs):
-                out.setdefault(int(s), []).append(ids[segs == s])
-    return {s: np.unique(np.concatenate(v)) for s, v in out.items()}
+            out[seg] = np.unique(tbl.column("doc_id").to_numpy(zero_copy_only=False))
+    return out
 
 
 # Executor-process cache of per-segment tombstone sidecars, keyed by
@@ -399,12 +369,7 @@ def read_segment_deletes(
     directory.  ``epoch=None`` reads EVERY sidecar file regardless of
     publish epoch — compaction uses this so its strip, doclens
     anti-join, and n_stripped count all see one tombstone set even if a
-    crashed upsert left files ahead of the manifest epoch (ADVICE r4).
-    Legacy flat root-level delete files (``segment`` as a
-    data column) are UNIONED with the sidecar, never treated as
-    exclusive — a legacy index whose first new-code upsert published
-    sidecars next to flat files must not resurrect flat-era
-    tombstones."""
+    crashed upsert left files ahead of the manifest epoch (ADVICE r4)."""
     segment = int(segment)
     key = (deletes_dir, None if epoch is None else int(epoch), segment)
     if key in _SEG_DELETES_CACHE:
@@ -412,7 +377,7 @@ def read_segment_deletes(
     import pyarrow.dataset as ds
 
     seg_dir = os.path.join(deletes_dir, f"segment={segment}")
-    parts: list[np.ndarray] = []
+    out: np.ndarray | None = None
     if os.path.isdir(seg_dir):
         files = sorted(
             os.path.join(seg_dir, fn)
@@ -425,19 +390,7 @@ def read_segment_deletes(
                 columns=["doc_id"]
             )
             if tbl.num_rows:
-                parts.append(tbl.column("doc_id").to_numpy(zero_copy_only=False))
-    flat = _flat_delete_files(deletes_dir)
-    if flat:
-        dset = ds.dataset(flat, format="parquet")
-        if "segment" in dset.schema.names:  # legacy flat layout
-            tbl = dset.to_table(
-                columns=["doc_id"], filter=ds.field("segment") == segment
-            )
-            if tbl.num_rows:
-                parts.append(tbl.column("doc_id").to_numpy(zero_copy_only=False))
-    out: np.ndarray | None = (
-        np.unique(np.concatenate(parts)) if parts else None
-    )
+                out = np.unique(tbl.column("doc_id").to_numpy(zero_copy_only=False))
     if len(_SEG_DELETES_CACHE) >= _SEG_DELETES_CACHE_MAX:
         _SEG_DELETES_CACHE.clear()
     _SEG_DELETES_CACHE[key] = out
@@ -1050,11 +1003,6 @@ def _score_union_maxscore(
     present = [t for t in terms_sorted if t in cache]
     if not present:
         return empty
-    if any(t not in cache.block_max_tf for t in present):
-        # no score-bound metadata (legacy rows): plain exhaustive
-        full = _mask_deleted({t: cache.full(t) for t in present}, dead)
-        d, s = _score_union_exhaustive(full, terms_sorted, idf, avgdl)
-        return _topk(d, s, k)
     ub = {
         t: float(
             (
@@ -1354,9 +1302,8 @@ class IndexSearcher:
         self._postings = self.spark.read.parquet(
             table_path(self.index_dir, "postings", self.manifest)
         )
-        td_path = table_path(self.index_dir, "termdict", self.manifest)
-        self._termdict = (
-            self.spark.read.parquet(td_path) if os.path.exists(td_path) else None
+        self._termdict = self.spark.read.parquet(
+            table_path(self.index_dir, "termdict", self.manifest)
         )
         self._doclens_path = table_path(self.index_dir, "doclens", self.manifest)
         self._nested_path = table_path(self.index_dir, "nested", self.manifest)
@@ -1397,20 +1344,12 @@ class IndexSearcher:
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
         """Global document frequency per term.  Scans the term DICTIONARY
         (tiny, partition-pruned by term_bucket), never posting blobs."""
-        if self._termdict is not None:
-            buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
-            rows = (
-                self._termdict.filter(
-                    F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-                )
-                .select("term", "df")
-                .collect()
-            )
-            return {r["term"]: int(r["df"]) for r in rows}
+        buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
         rows = (
-            self._term_rows(terms)
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
+            self._termdict.filter(
+                F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
+            )
+            .select("term", "df")
             .collect()
         )
         return {r["term"]: int(r["df"]) for r in rows}
@@ -1425,14 +1364,11 @@ class IndexSearcher:
         "block_last", "block_max_tf", "block_min_dl", "block_off",
     )
 
-    def _rows_with_global_df(self, terms_sorted: list[str]) -> DataFrame | None:
+    def _rows_with_global_df(self, terms_sorted: list[str]) -> DataFrame:
         """Pruned posting rows (scoring columns only) annotated with
         each term's GLOBAL df via a broadcast join against the (pruned)
         term dictionary — so scoring runs as ONE Spark job, no
-        driver-side df-lookup job first.  Returns None when the index
-        predates the termdict table."""
-        if self._termdict is None:
-            return None
+        driver-side df-lookup job first."""
         buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms_sorted})
         td = (
             self._termdict.filter(
@@ -1513,17 +1449,6 @@ class IndexSearcher:
         get_deletes = self._segment_deletes_fn()
 
         rows = self._rows_with_global_df(terms_sorted)
-        if rows is None:
-            # legacy two-job path: collect dfs, then score
-            dfs = self.global_dfs(terms_sorted)
-            if not dfs or (mode_u == "AND" and any(t not in dfs for t in terms_sorted)):
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
-            rows = self._term_rows(terms_sorted).select(*self.SCORING_COLS).withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
 
         def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
             if pdf.empty:
@@ -1655,17 +1580,14 @@ class IndexSearcher:
         strong_df: dict[int, tuple[float, int]] = {}
         for r in meta:
             seg = int(r["segment"])
-            if r["mx"] is None or r["mn"] is None:
-                b = float("inf")  # legacy row without bounds: never skip
-            else:
-                idf_t = bm25_idf(self.n_docs, int(r["df_global"]))
-                b = idf_t * float(
-                    bm25_tf_weight(
-                        np.array([r["mx"]], np.float64),
-                        np.array([r["mn"]], np.float64),
-                        _adl(avgdl, r["term"]),
-                    )[0]
-                )
+            idf_t = bm25_idf(self.n_docs, int(r["df_global"]))
+            b = idf_t * float(
+                bm25_tf_weight(
+                    np.array([r["mx"]], np.float64),
+                    np.array([r["mn"]], np.float64),
+                    _adl(avgdl, r["term"]),
+                )[0]
+            )
             bounds[seg] = bounds.get(seg, 0.0) + b
             present[seg] = present.get(seg, 0) + 1
             if b >= strong_df.get(seg, (-1.0, 0))[0]:
@@ -1678,11 +1600,8 @@ class IndexSearcher:
         if len(segs) < 3:
             return None
         if auto:
-            finite = [bounds[s] for s in segs if bounds[s] != float("inf")]
-            if not finite:
-                return None
-            b_max = max(finite)
-            frac = sum(1 for b in finite if b < 0.5 * b_max) / len(segs)
+            b_max = max(bounds[s] for s in segs)
+            frac = sum(1 for s in segs if bounds[s] < 0.5 * b_max) / len(segs)
             if frac < self.SEGPRUNE_MIN_DISCRIMINATION:
                 return None
         # probe the top-P bound segments TOGETHER: one segment's local
@@ -1774,14 +1693,6 @@ class IndexSearcher:
         get_deletes = self._segment_deletes_fn()
 
         rows = self._rows_with_global_df(terms)
-        if rows is None:
-            dfs = self.global_dfs(terms)
-            rows = self._term_rows(terms).select(*self.SCORING_COLS).withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
 
         if ranges or phrases or nested:
             # range/phrase/nested filters evaluate on the doc-set path
@@ -1949,16 +1860,6 @@ class IndexSearcher:
         n_docs = self.n_docs
         get_deletes = self._segment_deletes_fn()
         rows = self._rows_with_global_df(expanded)
-        if rows is None:
-            dfs = self.global_dfs(expanded)
-            if not dfs:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
-            rows = self._term_rows(expanded).select(*self.SCORING_COLS).withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
 
         def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
             if pdf.empty:
@@ -2013,7 +1914,6 @@ class IndexSearcher:
         too_many_clauses analog) — silently truncating would return a
         plausible but wrong ranking."""
         lo, hi = prefix_term_range(prefix)
-        src = self._termdict if self._termdict is not None else self._postings
         cond = (F.col("term") >= lo) & (F.col("term") < hi)
         if ":" not in prefix:
             # exclude analyzed-field terms (title:foo sorts inside
@@ -2021,7 +1921,7 @@ class IndexSearcher:
             # only enter via a '_' prefix, which the validator rejects
             cond &= ~F.col("term").contains(":")
         rows = (
-            src.filter(cond)
+            self._termdict.filter(cond)
             .select("term")
             .distinct()
             .limit(max_expansions + 1)
@@ -2076,7 +1976,6 @@ class IndexSearcher:
         field, body = (
             term.split(":", 1) if ":" in term else (None, term)
         )
-        src = self._termdict if self._termdict is not None else self._postings
         cand = F.col("term")
         if field is not None:
             cand_body = F.substring_index(cand, ":", -1)
@@ -2092,7 +1991,7 @@ class IndexSearcher:
         )
         cond &= F.levenshtein(cand_body, F.lit(body)) <= max_edits
         rows = (
-            src.filter(cond)
+            self._termdict.filter(cond)
             .select("term")
             .distinct()
             .limit(max_expansions + 1)
@@ -2139,7 +2038,6 @@ class IndexSearcher:
         scopes the match to an analyzed field's terms.  Over
         ``max_expansions`` matches raises RegexpExpansionError."""
         check_regexp(pattern)
-        src = self._termdict if self._termdict is not None else self._postings
         cand = F.col("term")
         if field is not None:
             if not re.fullmatch(r"[a-z0-9]+", field):
@@ -2160,7 +2058,7 @@ class IndexSearcher:
             cond &= rng
         cond &= body.rlike("^(?:" + pattern + ")$")
         rows = (
-            src.filter(cond)
+            self._termdict.filter(cond)
             .select("term")
             .distinct()
             .limit(max_expansions + 1)
@@ -2192,13 +2090,12 @@ class IndexSearcher:
         """field → its indexed facet tokens, from the term dictionary
         (vocabulary-bounded — never the postings).  Pseudo-field
         ``dlen`` covers the power-of-two doc-length bucket tokens."""
-        src = self._termdict if self._termdict is not None else self._postings
         out: dict[str, list[str]] = {f: [] for f in fields}
         conds = None
         for f in fields:
             c = F.col("term").startswith(f"__{f}_") & F.col("term").endswith("__")
             conds = c if conds is None else (conds | c)
-        rows = src.filter(conds).select("term").distinct().collect()
+        rows = self._termdict.filter(conds).select("term").distinct().collect()
         for r in rows:
             t = r["term"]
             for f in fields:
@@ -2455,10 +2352,9 @@ class IndexSearcher:
             return self.spark.createDataFrame(
                 [], "term string, df long"
             )
-        src = self._termdict if self._termdict is not None else self._postings
         buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
         return (
-            src.filter(
+            self._termdict.filter(
                 F.col("term_bucket").isin(buckets)
                 & F.col("term").isin(terms)
             )
@@ -2573,18 +2469,6 @@ class IndexSearcher:
         avgdl, n_docs = self.avgdl, self.n_docs
         get_deletes = self._segment_deletes_fn()
         rows = self._rows_with_global_df(terms_sorted)
-        if rows is None:
-            dfs = self.global_dfs(terms_sorted)
-            if not dfs:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
-            rows = self._term_rows(terms_sorted).select(
-                *self.SCORING_COLS
-            ).withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
         cursor = after
 
         def page_segment(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3431,19 +3315,9 @@ class IndexSearcher:
             .agg(F.count(F.lit(1)).alias("fg_count"))
             .where(F.col("fg_count") >= int(min_doc_count))
         )
-        if self._termdict is not None:
-            joined = self._termdict.select("term", "df").join(
-                F.broadcast(fg), "term"
-            )
-        else:  # legacy index without a termdict: sample vocab is bounded
-            fg_rows = {r["term"]: int(r["fg_count"]) for r in fg.collect()}
-            dfs = self.global_dfs(sorted(fg_rows))
-            rows = [
-                (t, c, dfs[t]) for t, c in fg_rows.items() if t in dfs
-            ]
-            joined = self.spark.createDataFrame(
-                rows, "term string, fg_count long, df long"
-            )
+        joined = self._termdict.select("term", "df").join(
+            F.broadcast(fg), "term"
+        )
         n_docs = self.n_docs
         return (
             joined.select(
@@ -3983,14 +3857,6 @@ class IndexSearcher:
             # single-job path: global dfs ride in on a broadcast termdict
             # join (same as `search`) instead of a driver-side lookup job
             rows = self._rows_with_global_df(all_terms)
-            if rows is None:
-                dfs = self.global_dfs(all_terms)
-                rows = self._term_rows(all_terms).select(*self.SCORING_COLS).withColumn(
-                    "df_global",
-                    F.create_map(
-                        *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                    )[F.col("term")],
-                )
             compiled_t, compiled_b = term_specs, bool_specs
 
             def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -478,27 +478,11 @@ def range_mask(vals: np.ndarray, rt, is_array: bool = False) -> np.ndarray:
     return m
 
 
-def _scoring_rows(searcher: "IndexSearcher", qterms, mode_u: str):
-    """(segment, term, blob, df_global) rows for the query terms, or
-    None when the query provably matches nothing (empty dictionary, or
-    AND with a term absent from the index).  Handles legacy indexes
-    without a termdict via a broadcast-literal df map."""
-    rows = searcher._rows_with_global_df(qterms)
-    if rows is None:  # legacy index without a termdict
-        dfs = searcher.global_dfs(qterms)
-        if not dfs or (mode_u == "AND" and any(t not in dfs for t in qterms)):
-            return None
-        rows = (
-            searcher._term_rows(qterms)
-            .select(*searcher.SCORING_COLS)
-            .withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
-        )
-    return rows.select("segment", "term", "blob", "df_global")
+def _scoring_rows(searcher: "IndexSearcher", qterms):
+    """(segment, term, blob, df_global) rows for the query terms."""
+    return searcher._rows_with_global_df(qterms).select(
+        "segment", "term", "blob", "df_global"
+    )
 
 
 def search_range(
@@ -551,9 +535,7 @@ def search_range(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
         "doc_id",
     )
-    rows = _scoring_rows(searcher, qterms, mode_u)
-    if rows is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    rows = _scoring_rows(searcher, qterms)
     n_docs = searcher.n_docs
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()
@@ -773,9 +755,7 @@ def search_collapse(
     )
     if not qterms:
         return spark.createDataFrame([], out_schema)
-    rows = _scoring_rows(searcher, qterms, mode_u)
-    if rows is None:
-        return spark.createDataFrame([], out_schema)
+    rows = _scoring_rows(searcher, qterms)
     dpp, seg_group = _seg_params(searcher.manifest)
     vals = dl.where(F.col(field).isNotNull()).select(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
@@ -916,9 +896,7 @@ def search_grouped_tophits(
     )
     if not qterms:
         return spark.createDataFrame([], result_schema)
-    rows = _scoring_rows(searcher, qterms, mode_u)
-    if rows is None:
-        return spark.createDataFrame([], result_schema)
+    rows = _scoring_rows(searcher, qterms)
     dpp, seg_group = _seg_params(searcher.manifest)
     vals = dl.where(F.col(field).isNotNull()).select(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
@@ -1153,9 +1131,7 @@ def _rescore_with_values(
     spark = searcher.spark
     if not qterms:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    rows = _scoring_rows(searcher, qterms, mode_u)
-    if rows is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    rows = _scoring_rows(searcher, qterms)
     n_docs = searcher.n_docs
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()
@@ -1632,7 +1608,6 @@ def _search_decay_bool(
         field_avgdl_map,
     )
 
-    spark = searcher.spark
     ast = bq.parse(
         query,
         analyzed_fields=set(analyzed_fields_of(searcher.manifest)),
@@ -1678,9 +1653,7 @@ def _search_decay_bool(
     for p in parts[1:]:
         allowed = allowed.unionByName(p)
     rkeys = [rt.key() for rt in ranges]
-    rows = _scoring_rows(searcher, terms, "OR")
-    if rows is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    rows = _scoring_rows(searcher, terms)
     n_docs = searcher.n_docs
     avgdl = field_avgdl_map(searcher.manifest, terms)
     get_deletes = searcher._segment_deletes_fn()
@@ -2136,9 +2109,7 @@ def search_terms_set(
     check_scalar(searcher, m_field, dl)
     if isinstance(dl.schema[m_field].dataType, (T.TimestampType, T.DateType)):
         raise DocValueError("terms_set needs a numeric requirement field")
-    rows = _scoring_rows(searcher, qterms, "OR")
-    if rows is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    rows = _scoring_rows(searcher, qterms)
     dpp, seg_group = _seg_params(searcher.manifest)
     vals = dl.where(F.col(m_field).isNotNull()).select(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),

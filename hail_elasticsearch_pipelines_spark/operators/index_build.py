@@ -141,8 +141,6 @@ def normalize_pages(
 
 
 DEFAULT_FACET_FIELDS = ("lang",)
-# backward-compat alias (round-1 name)
-FACET_FIELDS = DEFAULT_FACET_FIELDS
 
 # columns that are the engine's own, never metadata fields
 CORE_COLUMNS = frozenset({"url", "warc_ts", "html", "text", "doc_id", "doc_len"})
@@ -572,7 +570,7 @@ def build_partials(
     This is the UDAF shape the reference never needed (SURVEY §2.9 U5):
     doc range → (term, postings blob) rows."""
     spark = docs.sparkSession
-    if num_partitions is None:
+    if num_partitions is None or num_partitions <= 0:
         num_partitions = spark.sparkContext.defaultParallelism
     if facet_fields is None:
         facet_fields = DEFAULT_FACET_FIELDS

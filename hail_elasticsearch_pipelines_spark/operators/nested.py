@@ -313,9 +313,7 @@ def search_nested(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
         "doc_id",
     )
-    rows = _scoring_rows(searcher, qterms, mode_u)
-    if rows is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    rows = _scoring_rows(searcher, qterms)
     n_docs = searcher.n_docs
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()

@@ -17,7 +17,6 @@ a real serving tier would run on each index node.
 from __future__ import annotations
 
 import json
-import os
 
 import numpy as np
 import pyarrow.dataset as ds
@@ -65,18 +64,14 @@ class _CacheRow:
         self.blob = tbl["blob"][i].as_py()
         self.block_last = _list_np(tbl["block_last"][i], np.int64)
         self.block_off = _list_np(tbl["block_off"][i], np.int32)
-        # legacy rows may carry NULL score-bound lists — keep None so
-        # _BlockCache omits bounds and the scorers take their explicit
-        # exhaustive fallback instead of crashing the serving path
-        bmt, bmd = tbl["block_max_tf"][i], tbl["block_min_dl"][i]
-        self.block_max_tf = None if not bmt.is_valid else _list_np(bmt, np.int64)
-        self.block_min_dl = None if not bmd.is_valid else _list_np(bmd, np.int64)
+        self.block_max_tf = _list_np(tbl["block_max_tf"][i], np.int64)
+        self.block_min_dl = _list_np(tbl["block_min_dl"][i], np.int64)
 
     def nbytes(self) -> int:
-        n = len(self.blob) + self.block_last.nbytes + self.block_off.nbytes
-        if self.block_max_tf is not None:
-            n += self.block_max_tf.nbytes + self.block_min_dl.nbytes
-        return n
+        return (
+            len(self.blob) + self.block_last.nbytes + self.block_off.nbytes
+            + self.block_max_tf.nbytes + self.block_min_dl.nbytes
+        )
 
 
 def _put_unique(d: dict, key, value) -> None:
@@ -111,11 +106,10 @@ class LocalSearcher:
             format="parquet",
             partitioning="hive",
         )
-        td = table_path(self.index_dir, "termdict", self.manifest)
-        self._termdict = (
-            ds.dataset(td, format="parquet", partitioning="hive")
-            if os.path.exists(td)
-            else None
+        self._termdict = ds.dataset(
+            table_path(self.index_dir, "termdict", self.manifest),
+            format="parquet",
+            partitioning="hive",
         )
         self._deletes = load_deletes(
             self.index_dir,
@@ -226,12 +220,12 @@ class LocalSearcher:
         return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(terms)
 
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
-        src = self._termdict if self._termdict is not None else self._postings
-        tbl = src.to_table(filter=self._bucket_filter(terms), columns=["term", "df"])
-        out: dict[str, int] = {}
-        for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-            out[t] = out.get(t, 0) + int(d)
-        return out
+        tbl = self._termdict.to_table(
+            filter=self._bucket_filter(terms), columns=["term", "df"]
+        )
+        return {
+            t: int(d) for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())
+        }
 
     def _term_rows(self, terms: list[str], columns: list[str]):
         return self._postings.to_table(
@@ -287,16 +281,13 @@ class LocalSearcher:
         present: dict[int, int] = {}
         for t, seg_map in rows.items():
             for seg, r in seg_map.items():
-                if r.block_max_tf is None or r.block_min_dl is None:
-                    b = float("inf")
-                else:
-                    b = idf.get(t, 0.0) * float(
-                        bm25_tf_weight(
-                            np.array([r.block_max_tf.max()], np.float64),
-                            np.array([r.block_min_dl.min()], np.float64),
-                            _adl(avgdl, t),
-                        )[0]
-                    )
+                b = idf.get(t, 0.0) * float(
+                    bm25_tf_weight(
+                        np.array([r.block_max_tf.max()], np.float64),
+                        np.array([r.block_min_dl.min()], np.float64),
+                        _adl(avgdl, t),
+                    )[0]
+                )
                 bounds[seg] = bounds.get(seg, 0.0) + b
                 present[seg] = present.get(seg, 0) + 1
         return bounds, present
@@ -312,8 +303,7 @@ class LocalSearcher:
         bound(seg) = Σ_t idf_t · w(max over blocks of max_tf, min over
         blocks of min_dl).  Mixing one block's max_tf with another's
         min_dl only loosens the bound (w is ↑ in tf, ↓ in dl), so it
-        stays safe.  Legacy rows without block bounds force +inf (never
-        skipped).  Returns (bounds, per-segment present-term counts)."""
+        stays safe.  Returns (bounds, per-segment present-term counts)."""
         if avgdl is None:
             avgdl = self.avgdl
         bounds: dict[int, float] = {}
@@ -323,16 +313,13 @@ class LocalSearcher:
             seg = int(segs[i])
             t = mtbl["term"][i].as_py()
             bmt, bmd = mtbl["block_max_tf"][i], mtbl["block_min_dl"][i]
-            if not bmt.is_valid or not bmd.is_valid:
-                b = float("inf")
-            else:
-                b = idf[t] * float(
-                    bm25_tf_weight(
-                        np.array([_list_np(bmt, np.int64).max()], np.float64),
-                        np.array([_list_np(bmd, np.int64).min()], np.float64),
-                        _adl(avgdl, t),
-                    )[0]
-                )
+            b = idf[t] * float(
+                bm25_tf_weight(
+                    np.array([_list_np(bmt, np.int64).max()], np.float64),
+                    np.array([_list_np(bmd, np.int64).min()], np.float64),
+                    _adl(avgdl, t),
+                )[0]
+            )
             bounds[seg] = bounds.get(seg, 0.0) + b
             present[seg] = present.get(seg, 0) + 1
         return bounds, present
@@ -545,8 +532,7 @@ class LocalSearcher:
         from .bm25 import PrefixExpansionError, prefix_term_range
 
         lo, hi = prefix_term_range(prefix)
-        src = self._termdict if self._termdict is not None else self._postings
-        tbl = src.to_table(
+        tbl = self._termdict.to_table(
             filter=(ds.field("term") >= lo) & (ds.field("term") < hi),
             columns=["term"],
         )
@@ -599,7 +585,6 @@ class LocalSearcher:
                 "with an optional 'field:' prefix"
             )
         field, body = term.split(":", 1) if ":" in term else (None, term)
-        src = self._termdict if self._termdict is not None else self._postings
         # length ±max_edits pushed into the scan (plus the field's
         # prefix bytes) — the termdict materializes only plausible
         # candidates, not the whole vocabulary
@@ -617,7 +602,7 @@ class LocalSearcher:
         if prefix_length > 0:
             lo, hi = prefix_term_range(term[:base + prefix_length])
             flt = flt & (ds.field("term") >= lo) & (ds.field("term") < hi)
-        tbl = src.to_table(filter=flt, columns=["term"])
+        tbl = self._termdict.to_table(filter=flt, columns=["term"])
         out = set()
         pre = f"{field}:" if field is not None else None
         for t in set(tbl["term"].to_pylist()):
@@ -680,7 +665,6 @@ class LocalSearcher:
         check_regexp(pattern)
         if field is not None and not _re.fullmatch(r"[a-z0-9]+", field):
             raise ValueError(f"bad field name {field!r}")
-        src = self._termdict if self._termdict is not None else self._postings
         prefixes = regexp_prefixes(pattern)
         flt = None
         if prefixes:
@@ -696,7 +680,7 @@ class LocalSearcher:
             # the field-prefixed terms even with no literal prefix
             lo, hi = field + ":", field + ";"
             flt = (ds.field("term") >= lo) & (ds.field("term") < hi)
-        tbl = src.to_table(filter=flt, columns=["term"])
+        tbl = self._termdict.to_table(filter=flt, columns=["term"])
         rex = _re.compile(pattern)
         terms = set()
         for t in set(tbl["term"].to_pylist()):
@@ -818,8 +802,7 @@ class LocalSearcher:
             ast = None
             qterms = sorted(set(query))
         prefixes = {f: f"__{f}_" for f in fields}
-        src = self._termdict if self._termdict is not None else self._postings
-        tnames = src.to_table(columns=["term"]).column("term").to_pylist()
+        tnames = self._termdict.to_table(columns=["term"]).column("term").to_pylist()
         fterms = sorted(
             {
                 t
@@ -948,8 +931,7 @@ class LocalSearcher:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        src = self._termdict if self._termdict is not None else self._postings
-        tbl = src.to_table(columns=["term", "df"])
+        tbl = self._termdict.to_table(columns=["term", "df"])
         # arrow-side aggregation: filter facet tokens, sum df per term —
         # the python dict loop over a web-scale vocabulary cost ~0.6 s
         tbl = tbl.filter(

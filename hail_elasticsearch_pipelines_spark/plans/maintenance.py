@@ -42,32 +42,27 @@ from ..functions import codecs
 from ..operators import index_build as ib
 from .pipeline import _update_termdict, _write_termdict
 
-_load_manifest = layout.load_manifest
 _save_manifest = layout.save_manifest_atomic
 
 
-def _postings_metrics(postings: DataFrame, n_terms: "int | None" = None) -> dict:
-    """Manifest metrics over a postings table.  ``n_terms`` may be
-    passed by callers that hold a termdict consistent with the table
-    (one row per (term_bucket, term), bucket a function of the term, so
-    its row count == distinct terms) — that turns the most expensive
-    part, a countDistinct shuffle of the term STRINGS over the whole
-    index, into a metadata-only parquet count; the remaining aggregate
-    reads only (df, n_bytes, segment) thanks to column pruning."""
-    aggs = [
+def _postings_metrics(postings: DataFrame, n_terms: int) -> dict:
+    """Manifest metrics over a postings table.  ``n_terms`` comes from
+    the termdict consistent with the table (one row per (term_bucket,
+    term), bucket a function of the term, so its row count == distinct
+    terms) — a metadata-only parquet count instead of a countDistinct
+    shuffle of the term STRINGS over the whole index; the aggregate
+    here reads only (df, n_bytes, segment) thanks to column pruning."""
+    row = postings.agg(
         F.sum("df").alias("postings_emitted"),
         F.sum("n_bytes").alias("bytes_compressed"),
         F.count("*").alias("posting_rows"),
         F.countDistinct("segment").alias("n_segments"),
-    ]
-    if n_terms is None:
-        aggs.append(F.countDistinct("term").alias("n_terms"))
-    row = postings.agg(*aggs).collect()[0]
+    ).collect()[0]
     return {
         "postings_emitted": int(row["postings_emitted"] or 0),
         "bytes_compressed": int(row["bytes_compressed"] or 0),
         "posting_rows": int(row["posting_rows"]),
-        "n_terms": int(row["n_terms"]) if n_terms is None else int(n_terms),
+        "n_terms": int(n_terms),
         "n_segments": int(row["n_segments"]),
     }
 
@@ -75,19 +70,16 @@ def _postings_metrics(postings: DataFrame, n_terms: "int | None" = None) -> dict
 def _termdict_row_count(
     spark: SparkSession, index_dir: str, manifest: dict,
     flips: "dict[str, str] | None" = None,
-) -> "int | None":
+) -> int:
     """Row count of the termdict the NEXT manifest will publish (the
     just-written generation when flipped, else the current one) — a
-    metadata-only parquet count, or None when the index predates the
-    termdict table."""
+    metadata-only parquet count."""
     rel = (flips or {}).get("termdict")
     path = (
         os.path.join(index_dir, rel)
         if rel
         else layout.table_path(index_dir, "termdict", manifest)
     )
-    if not os.path.exists(path):
-        return None
     return int(spark.read.parquet(path).count())
 
 
@@ -121,11 +113,11 @@ def _maintenance_lock(index_dir: str):
     # r3 pid-file steal had an unfixable check-then-rename TOCTOU: two
     # waiters observing a dead pid could free-for-all and one would
     # delete the winner's fresh lock).  The pid content is diagnostic
-    # plus an ADVISORY guard for legacy lockfiles written without
-    # flock.  The open/flock/verify loop is the standard pattern for
-    # flock on an unlink-on-release path: after acquiring, re-stat the
-    # path and retry if our fd no longer names it (the previous holder
-    # unlinked between our open and flock).
+    # only (named in the error message); a pid left behind by a killed
+    # holder never blocks.  The open/flock/verify loop is the standard
+    # pattern for flock on an unlink-on-release path: after acquiring,
+    # re-stat the path and retry if our fd no longer names it (the
+    # previous holder unlinked between our open and flock).
     while True:
         fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
         try:
@@ -146,21 +138,6 @@ def _maintenance_lock(index_dir: str):
         except FileNotFoundError:
             os.close(fd)
             continue
-        try:
-            pid = int(os.read(fd, 64).decode().strip() or "0")
-        except ValueError:
-            pid = 0
-        if pid and pid != os.getpid():
-            alive = True
-            try:
-                os.kill(pid, 0)
-            except (ProcessLookupError, PermissionError):
-                alive = False
-            if alive:  # legacy non-flock holder — honor it
-                os.close(fd)
-                raise ConcurrentMaintenanceError(
-                    f"index {index_dir} is being maintained by pid {pid}"
-                )
         os.ftruncate(fd, 0)
         os.pwrite(fd, str(os.getpid()).encode(), 0)
         break
@@ -170,40 +147,6 @@ def _maintenance_lock(index_dir: str):
         with contextlib.suppress(OSError):
             os.unlink(lock)
         os.close(fd)  # releases the flock
-
-
-def _migrate_flat_deletes(deletes_path: str) -> None:
-    """One-shot migration of legacy flat root-level delete files
-    (``segment`` as a data column) into per-segment hive sidecars.
-
-    Runs before the first sidecar publish on a legacy index so the two
-    layouts never coexist long-term.  Crash-safe ordering: sidecar
-    files are written and renamed in FIRST, flat files removed LAST —
-    a crash in between leaves a mixed layout that the readers union
-    (np.unique absorbs the duplication), never lost tombstones."""
-    from ..operators.bm25 import _flat_delete_files
-
-    flat = _flat_delete_files(deletes_path)
-    if not flat:
-        return
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    tbl = ds.dataset(flat, format="parquet").to_table(
-        columns=["segment", "doc_id"]
-    )
-    segs = tbl.column("segment").to_numpy(zero_copy_only=False)
-    ids = tbl.column("doc_id").to_numpy(zero_copy_only=False)
-    for s in np.unique(segs):
-        seg_dir = os.path.join(deletes_path, f"segment={int(s)}")
-        os.makedirs(seg_dir, exist_ok=True)
-        tmp = os.path.join(seg_dir, ".migrated-flat.parquet.tmp")
-        pq.write_table(pa.table({"doc_id": np.unique(ids[segs == s])}), tmp)
-        os.rename(tmp, os.path.join(seg_dir, "migrated-flat.parquet"))
-    for fn in flat:
-        with contextlib.suppress(FileNotFoundError):
-            os.unlink(fn)
 
 
 def _publish_tombstones(
@@ -218,11 +161,7 @@ def _publish_tombstones(
     carry id_base so retried upserts never collide, and the ``e<epoch>-``
     prefix lets searchers pinned at an older deletes_epoch ignore these
     files (snapshot semantics — the old doc must not vanish from a
-    pinned searcher before its replacement becomes visible at reload).
-    Legacy flat-layout delete files are migrated into sidecars first
-    (ADVICE r3: a mixed layout must never silently drop flat-era
-    tombstones)."""
-    _migrate_flat_deletes(deletes_path)
+    pinned searcher before its replacement becomes visible at reload)."""
     for entry in sorted(os.listdir(staging)):
         src_dir = os.path.join(staging, entry)
         if not (entry.startswith("segment=") and os.path.isdir(src_dir)):
@@ -253,20 +192,16 @@ def _intent_markers(index_dir: str) -> list[str]:
 
 
 def _parse_intent(path: str) -> dict:
-    """Intent-marker payload: JSON ``{"mode", "id_base", "n_docs"}``
-    (current format) or a bare mode string (legacy markers)."""
+    """Intent-marker payload: JSON ``{"mode", "id_base", "n_docs"}``;
+    ``{}`` when the marker is unreadable or torn."""
     import json
 
     try:
         with open(path) as f:
-            raw = f.read().strip()
-    except OSError:
+            out = json.loads(f.read())
+    except (OSError, ValueError):
         return {}
-    try:
-        out = json.loads(raw)
-        return out if isinstance(out, dict) else {}
-    except ValueError:
-        return {"mode": raw}
+    return out if isinstance(out, dict) else {}
 
 
 def _max_delete_file_epoch(deletes_path: str) -> int:
@@ -350,11 +285,12 @@ def _reconcile_orphan_batch(
     )
     base, info = infos[0]  # at most one stale marker can exist (repair
     # runs under the lock before every op writes its own)
-    if info.get("mode") == "delete_by_query":
-        # pure-tombstone op: no postings/doclens appends happened, so
-        # there is no batch to reconcile.  The caller (repair_index)
-        # still advances deletes_epoch to the max on-disk file epoch
-        # and recomputes globals from the live doclens view, which is
+    if info.get("mode") in (None, "delete_by_query"):
+        # pure-tombstone op, or a marker torn by a crash while it was
+        # being written (markers are written before any append): no
+        # batch to reconcile.  The caller (repair_index) still
+        # advances deletes_epoch to the max on-disk file epoch and
+        # recomputes globals from the live doclens view, which is
         # exactly the state a crash between _publish_tombstones and
         # _save_manifest leaves inconsistent (ADVICE r5, medium).
         return None
@@ -364,11 +300,8 @@ def _reconcile_orphan_batch(
         .filter(F.col("doc_id") >= F.lit(base))
         .count()
     )
-    expected = info.get("n_docs")
-    if expected is not None and actual == int(expected):
+    if actual == info.get("n_docs"):
         return None  # appends completed; only derived state needs repair
-    if expected is None and actual > 0:
-        return None  # legacy marker without a count: assume complete
     postings_path = layout.table_path(index_dir, "postings", manifest)
     rel = layout.next_gen_rel(manifest, "postings")
     newp = os.path.join(index_dir, rel)
@@ -429,7 +362,7 @@ def repair_index(spark: SparkSession, index_dir: str) -> dict:
     batch counts as fully indexed and an INCOMPLETE one as never
     started, so the retry's create/upsert arithmetic is exact either
     way."""
-    manifest = _load_manifest(index_dir)
+    manifest = layout.load_manifest(index_dir)
     flips: dict[str, str] = {}
     recon = _reconcile_orphan_batch(spark, index_dir, manifest, flips)
     postings_path = (
@@ -494,7 +427,10 @@ def repair_index(spark: SparkSession, index_dir: str) -> dict:
     manifest["metrics"] = {
         "docs_indexed": g["n_docs"],
         "n_tombstones": n_tombstones,
-        **_postings_metrics(spark.read.parquet(postings_path)),
+        **_postings_metrics(
+            spark.read.parquet(postings_path),
+            n_terms=_termdict_row_count(spark, index_dir, manifest, flips),
+        ),
     }
     manifest.setdefault("repairs", []).append(
         {
@@ -553,7 +489,7 @@ def _extend_index_locked(
     """
     if mode not in ("create", "upsert"):
         raise ValueError(f"unknown extend mode {mode!r}")
-    manifest = _load_manifest(index_dir)
+    manifest = layout.load_manifest(index_dir)
     # grace-period GC: directories retired by the PREVIOUS op's
     # generation flip (plus crash orphans) are only removed now, so
     # readers pinned to the previous generation had a full maintenance
@@ -786,14 +722,7 @@ def _extend_index_locked(
                     .parquet(nested_path)
                 )
             stored = [c for c in stored_fields if c in docs.columns]
-            # append must match the EXISTING doclens schema: a pre-v6
-            # index has no warc_ts column and plain (non-mergeSchema)
-            # parquet reads take the first file's schema
-            dv = (
-                ["warc_ts"]
-                if "warc_ts" in existing.columns and "warc_ts" in docs.columns
-                else []
-            )
+            dv = ["warc_ts"] if "warc_ts" in docs.columns else []
             docs.select("doc_id", "url", "doc_len", *stored, *dv).write.mode(
                 "append"
             ).parquet(doclens_path)
@@ -805,7 +734,6 @@ def _extend_index_locked(
             td_rel = layout.next_gen_rel(manifest, "termdict")
             _update_termdict(
                 spark,
-                index_dir,
                 merged,
                 src_path=layout.table_path(index_dir, "termdict", manifest),
                 dest_path=os.path.join(index_dir, td_rel),
@@ -963,7 +891,7 @@ def _update_facet_field_locked(
     value (the r3 inter-bucket crash/visibility window)."""
     import shutil
 
-    manifest = _load_manifest(index_dir)
+    manifest = layout.load_manifest(index_dir)
     layout.gc_stale_dirs(index_dir, manifest)
     params, g = manifest["params"], manifest["globals"]
     dpp, seg_group = int(g["docs_per_part"]), int(params["seg_group"])
@@ -1433,30 +1361,23 @@ def _compact_index_tiered_locked(
     Segment ids are NOT renumbered (that is the full policy's job), so
     query results over live docs are unchanged by construction.
     Publish is the same single atomic manifest flip."""
-    manifest = _load_manifest(index_dir)
+    manifest = layout.load_manifest(index_dir)
     layout.gc_stale_dirs(index_dir, manifest)
     postings_path = layout.table_path(index_dir, "postings", manifest)
     deletes_path = layout.table_path(index_dir, "deletes", manifest)
     doclens_path = layout.table_path(index_dir, "doclens", manifest)
     n_term_buckets = int(manifest["params"]["n_term_buckets"])
 
-    # dirty = segments with tombstone sidecars; legacy flat root-level
-    # delete files carry segment as a data column → every file is
-    # conservatively dirty (degrades to a full strip, still correct)
+    # dirty = segments with tombstone sidecars
     dirty: set[int] = set()
-    all_dirty = False
     if os.path.isdir(deletes_path):
-        from ..operators.bm25 import _flat_delete_files
-
-        if _flat_delete_files(deletes_path):
-            all_dirty = True
         for e in os.scandir(deletes_path):
             if e.is_dir() and e.name.startswith("segment="):
                 if any(
                     fn.endswith(".parquet") for fn in os.listdir(e.path)
                 ):
                     dirty.add(int(e.name.split("=", 1)[1]))
-    has_deletes = all_dirty or bool(dirty)
+    has_deletes = bool(dirty)
 
     candidates: list[tuple[str, str, str]] = []  # (bucket_rel, fn, path)
     for bdir in sorted(os.scandir(postings_path), key=lambda e: e.name):
@@ -1468,7 +1389,7 @@ def _compact_index_tiered_locked(
 
     def classify(item):
         bucket_rel, fn, fp = item
-        if os.path.getsize(fp) < min_file_bytes or all_dirty:
+        if os.path.getsize(fp) < min_file_bytes:
             return (True, bucket_rel, fn, fp)
         mn, mx = _parquet_file_segment_range(fp)
         return (any(mn <= s <= mx for s in dirty), bucket_rel, fn, fp)
@@ -1641,7 +1562,7 @@ def _compact_index_locked(spark: SparkSession, index_dir: str, factor: int = 2) 
     concurrent reader sees the whole pre-compaction index or the whole
     post-compaction index, never stripped postings next to un-stripped
     doclens (the r3 multi-directory swap window)."""
-    manifest = _load_manifest(index_dir)
+    manifest = layout.load_manifest(index_dir)
     layout.gc_stale_dirs(index_dir, manifest)
     postings_path = layout.table_path(index_dir, "postings", manifest)
     deletes_path = layout.table_path(index_dir, "deletes", manifest)
@@ -1784,7 +1705,7 @@ def _delete_by_query_locked(
             "delete_by_query needs a query — deleting every doc must be "
             "an explicit rebuild, not a match_all delete"
         )
-    manifest = _load_manifest(index_dir)
+    manifest = layout.load_manifest(index_dir)
     layout.gc_stale_dirs(index_dir, manifest)
     g = manifest["globals"]
     params = manifest["params"]
@@ -1988,7 +1909,7 @@ def snapshot_index(index_dir: str, snap_dir: str) -> dict:
     if os.path.exists(snap_dir) and os.listdir(snap_dir):
         raise ValueError(f"snapshot target {snap_dir!r} exists and is not empty")
     with _maintenance_lock(index_dir):
-        manifest = _load_manifest(index_dir)
+        manifest = layout.load_manifest(index_dir)
         os.makedirs(snap_dir, exist_ok=True)
         linked = 0
         for name in layout.TABLES:
@@ -2015,10 +1936,10 @@ def restore_snapshot(snap_dir: str, index_dir: str) -> dict:
     searchers keep serving the pre-restore state until ``reload()``,
     exactly like any other maintenance op, and the next op's GC sweeps
     the replaced generations."""
-    snap = _load_manifest(snap_dir)
+    snap = layout.load_manifest(snap_dir)
     with _maintenance_lock(index_dir):
         try:
-            cur_gen = int(_load_manifest(index_dir).get("generation", 0))
+            cur_gen = int(layout.load_manifest(index_dir).get("generation", 0))
         except FileNotFoundError:
             cur_gen = 0
         gen = cur_gen + 1

@@ -47,11 +47,6 @@ from ..operators import index_build as ib
 from . import sizing
 
 
-# bump when the on-disk postings schema changes (readers refuse or
-# rebuild on mismatch — the ES index-version analog)
-INDEX_FORMAT_VERSION = 6  # v6: doclens carries warc_ts doc values
-
-
 def _write_termdict(
     spark: SparkSession,
     out_dir: str,
@@ -86,48 +81,37 @@ def _write_termdict(
 
 def _update_termdict(
     spark: SparkSession,
-    out_dir: str,
     new_postings: DataFrame,
-    src_path: str | None = None,
-    dest_path: str | None = None,
+    src_path: str,
+    dest_path: str,
 ) -> None:
     """Incremental termdict maintenance for appends: aggregate ONLY the
-    new batch's rows and fold them into the existing termdict — touches
-    O(batch) + O(termdict), never the full postings table (which
-    _write_termdict re-scans).  ``new_postings`` must carry term_bucket/
-    term/df/cf and should be persisted by the caller (it is consumed
-    once here and once by the postings append).
+    new batch's rows and fold them into the termdict at ``src_path`` —
+    touches O(batch) + O(termdict), never the full postings table
+    (which _write_termdict re-scans).  ``new_postings`` must carry
+    term_bucket/term/df/cf and should be persisted by the caller (it is
+    consumed once here and once by the postings append).
 
-    With ``dest_path`` the combined termdict is written into that fresh
-    generation dir (published by the caller's atomic manifest flip —
-    concurrent readers keep the old termdict until then); without it,
-    legacy in-place staged swap."""
-    final = src_path or os.path.join(out_dir, "termdict")
+    The combined termdict is written into the fresh generation dir
+    ``dest_path``, published by the caller's atomic manifest flip —
+    concurrent readers keep the old termdict until then."""
     new_td = new_postings.groupBy("term_bucket", "term").agg(
         F.sum("df").alias("df"),
         F.sum("cf").alias("cf"),
         F.count("*").alias("n_rows"),
     )
-    if os.path.exists(final):
-        old = spark.read.parquet(final)
-        combined = (
-            old.unionByName(new_td)
-            .groupBy("term_bucket", "term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.sum("cf").alias("cf"),
-                F.sum("n_rows").alias("n_rows"),
-            )
+    combined = (
+        spark.read.parquet(src_path)
+        .unionByName(new_td)
+        .groupBy("term_bucket", "term")
+        .agg(
+            F.sum("df").alias("df"),
+            F.sum("cf").alias("cf"),
+            F.sum("n_rows").alias("n_rows"),
         )
-    else:
-        combined = new_td
+    )
     plan = combined.repartition("term_bucket").sortWithinPartitions("term")
-    if dest_path is not None:
-        plan.write.mode("overwrite").partitionBy("term_bucket").parquet(dest_path)
-        return
-    staging = final + "__staging"
-    plan.write.mode("overwrite").partitionBy("term_bucket").parquet(staging)
-    _swap_dir(staging, final)
+    plan.write.mode("overwrite").partitionBy("term_bucket").parquet(dest_path)
 
 
 def _swap_dir(staging: str, final: str) -> None:
@@ -418,8 +402,10 @@ class IndexBuildPipeline:
         fp = _fingerprint(["publish", self.params_fp, globals_])
         manifest_path = self._p("manifest.json")
         if os.path.exists(marker) and os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                m = json.load(f)
+            try:
+                m = layout.load_manifest(self.out)
+            except layout.IndexFormatError:
+                m = {}  # an index in another format: republish over it
             if m.get("fingerprint") == fp:
                 return m
         partials = self.spark.read.parquet(self._p("stages", "partials"))
@@ -493,7 +479,7 @@ class IndexBuildPipeline:
             F.countDistinct("segment").alias("n_segments"),
         ).collect()[0]
         manifest = {
-            "format_version": INDEX_FORMAT_VERSION,
+            "format_version": layout.INDEX_FORMAT_VERSION,
             "fingerprint": fp,
             # generation-pointer layout (layout.py): the initial build
             # publishes plain table dirs at generation 0; maintenance

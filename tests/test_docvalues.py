@@ -190,41 +190,6 @@ def test_docvalues_respect_deletes(spark, small_pages_df, tmp_path):
     assert [(r.doc_id, r.score) for r in s.search_range(Q, "doc_len", 1, 10_000, k=10).collect()] == L.search_range(Q, "doc_len", 1, 10_000, k=10)
 
 
-def test_extend_onto_legacy_doclens_without_warc_ts(spark, tiny_pages_pdf, tmp_path):
-    """A pre-v6 index (no warc_ts column) accepts extends: the append
-    matches the existing schema instead of splitting it."""
-    import pyarrow.parquet as pq
-    import pyarrow as pa
-    import glob
-    import os
-
-    from hail_elasticsearch_pipelines_spark import layout
-    from hail_elasticsearch_pipelines_spark.operators.index_build import build_index
-    from hail_elasticsearch_pipelines_spark.plans.maintenance import extend_index
-    from hail_elasticsearch_pipelines_spark.sources.corpus import gen_pages_pdf
-
-    out = str(tmp_path / "idx")
-    m = build_index(
-        spark, spark.createDataFrame(tiny_pages_pdf), out,
-        docs_per_part=10, seg_group=2, n_term_buckets=4,
-    )
-    dl_dir = layout.table_path(out, "doclens", m)
-    for f in glob.glob(os.path.join(dl_dir, "*.parquet")):
-        t = pq.read_table(f)
-        # drop the spark row-metadata footer key too — spark trusts it
-        # over the physical schema when inferring
-        pq.write_table(t.drop_columns(["warc_ts"]).replace_schema_metadata({}), f)
-    for crc in glob.glob(os.path.join(dl_dir, ".*.crc")):
-        os.unlink(crc)  # hadoop checksum sidecars for the replaced files
-    batch = spark.createDataFrame(gen_pages_pdf(np.arange(30, 45)))
-    m2 = extend_index(spark, out, batch, mode="create")
-    dl = spark.read.parquet(layout.table_path(out, "doclens", m2))
-    assert "warc_ts" not in dl.columns
-    assert dl.count() > len(tiny_pages_pdf["url"].unique()) - 1
-    with pytest.raises(DocValueError):
-        LocalSearcher(out).search_sorted(Q, "warc_ts", k=3)
-
-
 # ---- round-5 late additions: collapse, percentiles, range buckets,
 # search_after pagination, cumulative histograms ----
 

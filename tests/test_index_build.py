@@ -106,6 +106,29 @@ def test_merge_determinism_across_chunking(spark, small_pages_df, tmp_path, smal
     assert snapshot(index_dir) == snapshot(out2)
 
 
+def test_build_partials_nonpositive_partitions_means_default(spark, tiny_pages_pdf):
+    """num_partitions <= 0 falls back to the default parallelism, like
+    None, and builds the same postings."""
+    from hail_elasticsearch_pipelines_spark.operators.index_build import (
+        build_partials,
+        docs_with_ids_fused,
+        extract_pages,
+    )
+
+    docs = docs_with_ids_fused(extract_pages(spark.createDataFrame(tiny_pages_pdf)))
+
+    def digest(num_partitions):
+        rows = build_partials(docs, 10, 2, num_partitions=num_partitions).collect()
+        return sorted(
+            (r["term"], r["segment"], r["df"], r["cf"], bytes(r["blob"])) for r in rows
+        )
+
+    expected = digest(None)
+    assert expected
+    assert digest(0) == expected
+    assert digest(-1) == expected
+
+
 def test_content_determinism_across_part_width(spark, small_pages_df, tmp_path, small_index, small_oracle):
     """Different docs_per_part → same logical index content."""
     oracle, _ = small_oracle

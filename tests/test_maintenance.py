@@ -319,8 +319,10 @@ def test_search_many_msearch_parity(spark, small_index):
 
 
 def test_maintenance_lock_excludes_and_steals(spark, tmp_path):
-    """Single-writer lock: a live holder blocks other maintenance ops;
-    a dead holder's lock is stolen (crash-retry stays one command)."""
+    """Single-writer lock: a live flock holder blocks other maintenance
+    ops; a dead holder's lockfile is taken over (crash-retry stays one
+    command)."""
+    import fcntl
     import os
 
     import numpy as np
@@ -342,12 +344,17 @@ def test_maintenance_lock_excludes_and_steals(spark, tmp_path):
         n_term_buckets=8,
     )
     lock = os.path.join(out, "_MAINTENANCE_LOCK")
-    # simulate a LIVE holder (this test's own pid is alive, use a
-    # long-lived system pid instead: pid 1)
-    with open(lock, "w") as f:
-        f.write("1")
-    with pytest.raises(ConcurrentMaintenanceError):
-        upsert_index(spark, out, spark.createDataFrame(gen_pages_pdf(np.arange(5))))
+    # a LIVE holder: flock taken on the lockfile through its own fd
+    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        os.write(fd, b"1")
+        with pytest.raises(ConcurrentMaintenanceError, match="pid 1"):
+            upsert_index(
+                spark, out, spark.createDataFrame(gen_pages_pdf(np.arange(5)))
+            )
+    finally:
+        os.close(fd)
     # dead holder → stolen, op proceeds, lock released afterwards
     with open(lock, "w") as f:
         f.write("999999999")
@@ -359,6 +366,95 @@ def test_maintenance_lock_excludes_and_steals(spark, tmp_path):
     # context manager round-trip
     with _maintenance_lock(out):
         assert os.path.exists(lock)
+    assert not os.path.exists(lock)
+
+
+def test_lockfile_naming_a_live_pid_without_flock_does_not_block(spark, tmp_path):
+    """A SIGKILLed holder leaves its pid in the lockfile; once another
+    process reuses that pid the file names a LIVE process, but nobody
+    holds the flock — the next op must take the lock and proceed."""
+    import os
+
+    import numpy as np
+
+    from hail_elasticsearch_pipelines_spark.plans.maintenance import upsert_index
+    from hail_elasticsearch_pipelines_spark.sources.corpus import gen_pages_pdf
+
+    out = str(tmp_path / "idx")
+    build_index(
+        spark,
+        spark.createDataFrame(gen_pages_pdf(np.arange(40))),
+        out,
+        docs_per_part=37,
+        seg_group=2,
+        n_term_buckets=8,
+    )
+    lock = os.path.join(out, "_MAINTENANCE_LOCK")
+    with open(lock, "w") as f:
+        f.write(str(os.getppid()))  # alive, but holds no flock
+    m = upsert_index(
+        spark, out, spark.createDataFrame(gen_pages_pdf(np.arange(40, 45)))
+    )
+    assert m["extensions"][-1]["docs_added"] == 5
+    assert not os.path.exists(lock)
+
+
+def _contend_for_lock(idx: str, start_evt, q) -> None:
+    """Child-process contender: reports 'acquired'/'busy'/error repr."""
+    import os
+    import time
+
+    from hail_elasticsearch_pipelines_spark.plans.maintenance import (
+        ConcurrentMaintenanceError,
+        _maintenance_lock,
+    )
+
+    start_evt.wait()
+    try:
+        with _maintenance_lock(idx):
+            lock = os.path.join(idx, "_MAINTENANCE_LOCK")
+            with open(lock) as f:
+                held_pid = int(f.read())
+            time.sleep(0.3)  # overlap the other contenders' attempts
+            q.put(("acquired", held_pid == os.getpid()))
+    except ConcurrentMaintenanceError:
+        q.put(("busy", True))
+    except Exception as e:  # noqa: BLE001
+        q.put(("error", repr(e)))
+
+
+def test_stale_lock_steal_is_single_winner(tmp_path):
+    """N processes contending over a dead holder's lockfile: the steal
+    must be atomic — exactly one contender acquires (the rest find the
+    winner's flock held and raise ConcurrentMaintenanceError), and
+    the second unlink of the old unsafe steal path must neither delete
+    the winner's fresh lock nor leak FileNotFoundError (ADVICE r3)."""
+    import multiprocessing as mp
+    import os
+
+    ctx = mp.get_context("fork")
+    idx = str(tmp_path)
+    lock = os.path.join(idx, "_MAINTENANCE_LOCK")
+    with open(lock, "w") as f:
+        f.write("999999999")  # dead holder
+    q = ctx.Queue()
+    start_evt = ctx.Event()
+    procs = [
+        ctx.Process(target=_contend_for_lock, args=(idx, start_evt, q))
+        for _ in range(6)
+    ]
+    for p in procs:
+        p.start()
+    start_evt.set()
+    results = [q.get(timeout=30) for _ in procs]
+    for p in procs:
+        p.join(timeout=30)
+    outcomes = [r[0] for r in results]
+    assert outcomes.count("error") == 0, results
+    assert outcomes.count("acquired") == 1, results
+    assert outcomes.count("busy") == len(procs) - 1, results
+    winner = [r for r in results if r[0] == "acquired"][0]
+    assert winner[1], "winner's lockfile must carry the winner's pid"
     assert not os.path.exists(lock)
 
 

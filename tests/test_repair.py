@@ -111,6 +111,29 @@ def test_crash_before_doclens_append_drops_orphan_batch(
         assert _url_scores(s1, terms) == _url_scores(s2, terms), terms
 
 
+@pytest.mark.parametrize(
+    "payload", ["", '{"mode": "delete_by'], ids=["empty", "truncated"]
+)
+def test_torn_intent_marker_drops_nothing(spark, built, payload):
+    """Intent markers are written before any append, so a marker that
+    does not parse comes from a crash while it was being written:
+    repair must treat it as "nothing appended" and keep every doc —
+    even for the id_base=0 name delete_by_query uses, where reading it
+    as an incomplete batch would drop the whole index."""
+    out, base = built
+    s0 = IndexSearcher(spark, out)
+    queries = (["the"], ["term0042"])
+    before = [_url_scores(s0, t) for t in queries]
+    os.makedirs(os.path.join(out, "stages"), exist_ok=True)
+    with open(os.path.join(out, "stages", "_EXTEND_INTENT_0"), "w") as f:
+        f.write(payload)
+    m = mt.repair_index(spark, out)
+    assert not mt._intent_markers(out)
+    assert m["globals"]["n_docs"] == base["url"].nunique()
+    s1 = IndexSearcher(spark, out)
+    assert [_url_scores(s1, t) for t in queries] == before
+
+
 def test_crash_after_tombstone_publish_advances_epoch(
     spark, built, monkeypatch, tmp_path
 ):

@@ -15,6 +15,7 @@ from hail_elasticsearch_pipelines_spark.operators.index_build import build_index
 from hail_elasticsearch_pipelines_spark.operators.serve import LocalSearcher
 from hail_elasticsearch_pipelines_spark.plans.maintenance import (
     compact_index,
+    delete_by_query,
     extend_index,
 )
 from hail_elasticsearch_pipelines_spark.sources.corpus import gen_pages_pdf
@@ -113,17 +114,33 @@ def test_tiered_consolidates_and_links(spark, fragmented_index, tmp_path):
         assert got == exp
 
 
+def _assert_n_terms_consistent(spark, index_dir):
+    """termdict rows == distinct postings terms == manifest n_terms."""
+    m = load_manifest(index_dir)
+    td_rows = spark.read.parquet(table_path(index_dir, "termdict", m)).count()
+    postings_terms = (
+        spark.read.parquet(table_path(index_dir, "postings", m))
+        .select("term")
+        .distinct()
+        .count()
+    )
+    assert td_rows == postings_terms == m["metrics"]["n_terms"], index_dir
+
+
 def test_tiered_with_tombstones_equals_full_compact(
     spark, fragmented_index, tmp_path
 ):
-    """Upsert → tombstones; tiered strip must leave the index in the
-    same logical state as a full factor=1 compaction: identical scores
-    (termdict df delta exact) and zero tombstones."""
+    """Extends → upsert → delete_by_query → tombstones; tiered strip
+    must leave the index in the same logical state as a full factor=1
+    compaction: identical scores (termdict df delta exact) and zero
+    tombstones.  After every op the termdict, the postings and the
+    manifest agree on the term count."""
     import shutil
 
     tiered = str(tmp_path / "tiered")
     full = str(tmp_path / "full")
     shutil.copytree(fragmented_index, tiered)
+    _assert_n_terms_consistent(spark, tiered)
     re_pdf = (
         gen_pages_pdf(np.arange(40)).drop_duplicates("url", keep="last").copy()
     )
@@ -136,10 +153,15 @@ def test_tiered_with_tombstones_equals_full_compact(
         spark, tiered, spark.createDataFrame(re_pdf), mode="upsert",
         validation=None,
     )
+    _assert_n_terms_consistent(spark, tiered)
+    delete_by_query(spark, tiered, ["term0205"], mode="OR")
+    _assert_n_terms_consistent(spark, tiered)
     shutil.copytree(tiered, full)
 
     mt = compact_index(spark, tiered, policy="tiered", min_file_bytes=1)
+    _assert_n_terms_consistent(spark, tiered)
     mf = compact_index(spark, full, policy="full", factor=1)
+    _assert_n_terms_consistent(spark, full)
     assert mt["metrics"]["n_tombstones"] == 0
     assert (
         mt["compactions"][-1]["tombstones_dropped"]
