@@ -478,11 +478,11 @@ def range_mask(vals: np.ndarray, rt, is_array: bool = False) -> np.ndarray:
     return m
 
 
-def _scoring_rows(searcher: "IndexSearcher", qterms):
-    """(segment, term, blob, df_global) rows for the query terms."""
-    return searcher._rows_with_global_df(qterms).select(
-        "segment", "term", "blob", "df_global"
-    )
+def _rows_and_idf(searcher: "IndexSearcher", qterms):
+    """(segment, term, blob) rows for the query terms, plus their
+    query-wide idf read on the driver from the pinned termdict."""
+    rows = searcher._scoring_rows(qterms).select("segment", "term", "blob")
+    return rows, searcher._query_idf(qterms)
 
 
 def search_range(
@@ -506,10 +506,9 @@ def search_range(
     materialization of the allowed set."""
     from .bm25 import (
         RESULT_SCHEMA,
-        _check_unique_terms,
+        _check_scoring_rows,
         _msm_scores,
         _topk,
-        bm25_idf,
         field_avgdl_map,
     )
 
@@ -535,8 +534,7 @@ def search_range(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
         "doc_id",
     )
-    rows = _scoring_rows(searcher, qterms)
-    n_docs = searcher.n_docs
+    rows, idf = _rows_and_idf(searcher, qterms)
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()
     msm = len(qterms) if mode_u == "AND" else 1
@@ -544,13 +542,9 @@ def search_range(
     def score_segment(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return pd.DataFrame({"doc_id": [], "score": []})
-        _check_unique_terms(left)
+        _check_scoring_rows(left, idf)
         seg = int(key[0])
         dead = get_deletes(seg)
-        idf = {
-            t: bm25_idf(n_docs, int(d))
-            for t, d in zip(left["term"], left["df_global"])
-        }
         postings = {
             r.term: codecs.decode_postings(bytes(r.blob))
             for r in left.itertuples()
@@ -737,7 +731,7 @@ def search_collapse(
     (its best doc) — the shuffle carries at most n_values x n_segments
     rows, never per-doc data.  The global reduce is a max_by per value
     followed by top-k."""
-    from .bm25 import _check_unique_terms, _msm_scores, bm25_idf, field_avgdl_map
+    from .bm25 import _check_scoring_rows, _msm_scores, field_avgdl_map
 
     mode_u = mode.upper()
     if mode_u not in ("OR", "AND"):
@@ -755,14 +749,13 @@ def search_collapse(
     )
     if not qterms:
         return spark.createDataFrame([], out_schema)
-    rows = _scoring_rows(searcher, qterms)
+    rows, idf = _rows_and_idf(searcher, qterms)
     dpp, seg_group = _seg_params(searcher.manifest)
     vals = dl.where(F.col(field).isNotNull()).select(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
         "doc_id",
         F.col(field).alias("value"),
     )
-    n_docs = searcher.n_docs
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()
     msm = len(qterms) if mode_u == "AND" else 1
@@ -771,12 +764,8 @@ def search_collapse(
     def best_per_value(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return pd.DataFrame(empty)
-        _check_unique_terms(left)
+        _check_scoring_rows(left, idf)
         dead = get_deletes(int(key[0]))
-        idf = {
-            t: bm25_idf(n_docs, int(d))
-            for t, d in zip(left["term"], left["df_global"])
-        }
         postings = {
             r.term: codecs.decode_postings(bytes(r.blob))
             for r in left.itertuples()
@@ -870,7 +859,7 @@ def search_grouped_tophits(
     top-n_buckets selection — never per-doc data."""
     from pyspark.sql.window import Window
 
-    from .bm25 import _check_unique_terms, _msm_scores, bm25_idf, field_avgdl_map
+    from .bm25 import _check_scoring_rows, _msm_scores, field_avgdl_map
 
     mode_u = mode.upper()
     if mode_u not in ("OR", "AND"):
@@ -896,14 +885,13 @@ def search_grouped_tophits(
     )
     if not qterms:
         return spark.createDataFrame([], result_schema)
-    rows = _scoring_rows(searcher, qterms)
+    rows, idf = _rows_and_idf(searcher, qterms)
     dpp, seg_group = _seg_params(searcher.manifest)
     vals = dl.where(F.col(field).isNotNull()).select(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
         "doc_id",
         F.col(field).alias("value"),
     )
-    n_docs = searcher.n_docs
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()
     msm = len(qterms) if mode_u == "AND" else 1
@@ -913,12 +901,8 @@ def search_grouped_tophits(
     def topk_per_value(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return pd.DataFrame(empty)
-        _check_unique_terms(left)
+        _check_scoring_rows(left, idf)
         dead = get_deletes(int(key[0]))
-        idf = {
-            t: bm25_idf(n_docs, int(d))
-            for t, d in zip(left["term"], left["df_global"])
-        }
         postings = {
             r.term: codecs.decode_postings(bytes(r.blob))
             for r in left.itertuples()
@@ -1121,18 +1105,16 @@ def _rescore_with_values(
     segment emits only its top-k; scores stay float64 end-to-end."""
     from .bm25 import (
         RESULT_SCHEMA,
-        _check_unique_terms,
+        _check_scoring_rows,
         _msm_scores,
         _topk,
-        bm25_idf,
         field_avgdl_map,
     )
 
     spark = searcher.spark
     if not qterms:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    rows = _scoring_rows(searcher, qterms)
-    n_docs = searcher.n_docs
+    rows, idf = _rows_and_idf(searcher, qterms)
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()
     msm = len(qterms) if mode_u == "AND" else 1
@@ -1140,12 +1122,8 @@ def _rescore_with_values(
     def score_part(key, left: pd.DataFrame, right: "pd.DataFrame | None"):
         if left.empty:
             return pd.DataFrame({"doc_id": [], "score": []})
-        _check_unique_terms(left)
+        _check_scoring_rows(left, idf)
         dead = get_deletes(int(key[0]))
-        idf = {
-            t: bm25_idf(n_docs, int(d))
-            for t, d in zip(left["term"], left["df_global"])
-        }
         postings = {
             r.term: codecs.decode_postings(bytes(r.blob))
             for r in left.itertuples()
@@ -1215,15 +1193,6 @@ def search_decay(
     that a reweight invalidates), multiplies by the decay factor, and
     emits its top-k — only k rows per segment reach the final global
     order.  Scores stay float64 end-to-end."""
-    from .bm25 import (
-        RESULT_SCHEMA,
-        _check_unique_terms,
-        _msm_scores,
-        _topk,
-        bm25_idf,
-        field_avgdl_map,
-    )
-
     check_decay(fn, scale, decay, offset)
     mode_u = mode.upper()
     if mode_u == "BOOL":
@@ -1599,11 +1568,10 @@ def _search_decay_bool(
     from ..functions import boolquery as bq
     from .bm25 import (
         RESULT_SCHEMA,
-        _check_unique_terms,
+        _check_scoring_rows,
         _mask_deleted,
         _topk,
         analyzed_fields_of,
-        bm25_idf,
         dv_filter_fields_of,
         field_avgdl_map,
     )
@@ -1653,8 +1621,8 @@ def _search_decay_bool(
     for p in parts[1:]:
         allowed = allowed.unionByName(p)
     rkeys = [rt.key() for rt in ranges]
-    rows = _scoring_rows(searcher, terms)
-    n_docs = searcher.n_docs
+    rows, idf = _rows_and_idf(searcher, terms)
+    idf = {t: v * boosts.get(t, 1.0) for t, v in idf.items()}
     avgdl = field_avgdl_map(searcher.manifest, terms)
     get_deletes = searcher._segment_deletes_fn()
     scale_f, decay_f, offset_f = float(scale), float(decay), float(offset)
@@ -1662,13 +1630,9 @@ def _search_decay_bool(
     def score_segment(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"doc_id": [], "score": []})
         dead = get_deletes(int(key[0]))
-        postings, idf = {}, {}
+        postings = {}
         if not left.empty:
-            _check_unique_terms(left)
-            idf = {
-                t: bm25_idf(n_docs, int(d)) * boosts.get(t, 1.0)
-                for t, d in zip(left["term"], left["df_global"])
-            }
+            _check_scoring_rows(left, idf)
             for r in left.itertuples():
                 postings[r.term] = codecs.decode_postings(bytes(r.blob))
         postings = _mask_deleted(postings, dead)
@@ -2094,9 +2058,8 @@ def search_terms_set(
     bounds), per-segment top-k."""
     from .bm25 import (
         RESULT_SCHEMA,
-        _check_unique_terms,
+        _check_scoring_rows,
         _topk,
-        bm25_idf,
         bm25_tf_weight,
         field_avgdl_map,
     )
@@ -2109,26 +2072,21 @@ def search_terms_set(
     check_scalar(searcher, m_field, dl)
     if isinstance(dl.schema[m_field].dataType, (T.TimestampType, T.DateType)):
         raise DocValueError("terms_set needs a numeric requirement field")
-    rows = _scoring_rows(searcher, qterms)
+    rows, idf = _rows_and_idf(searcher, qterms)
     dpp, seg_group = _seg_params(searcher.manifest)
     vals = dl.where(F.col(m_field).isNotNull()).select(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
         "doc_id",
         F.col(m_field).alias("value"),
     )
-    n_docs = searcher.n_docs
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()
 
     def score_segment(key: tuple, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return pd.DataFrame({"doc_id": [], "score": []})
-        _check_unique_terms(left)
+        _check_scoring_rows(left, idf)
         dead = get_deletes(int(key[0]))
-        idf = {
-            t: bm25_idf(n_docs, int(d))
-            for t, d in zip(left["term"], left["df_global"])
-        }
         postings = {
             r.term: codecs.decode_postings(bytes(r.blob))
             for r in left.itertuples()

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 from ..functions import codecs
 from .bm25 import (
     IndexSearcher,
-    _check_unique_terms,
+    _check_scoring_rows,
     _msm_scores,
     _topk,
     bm25_idf,
@@ -132,7 +132,7 @@ def search_indices(
         if pdf.empty:
             return pd.DataFrame({"index_id": [], "doc_id": [], "score": []})
         idx = int(key[0])
-        _check_unique_terms(pdf)
+        _check_scoring_rows(pdf, idf_of[idx])
         dead = deletes_of[idx](int(pdf["segment"].iloc[0]))
         postings = {
             r.term: codecs.decode_postings(bytes(r.blob))

@@ -293,13 +293,12 @@ def search_nested(
     driver)."""
     from .bm25 import (
         RESULT_SCHEMA,
-        _check_unique_terms,
+        _check_scoring_rows,
         _msm_scores,
         _topk,
-        bm25_idf,
         field_avgdl_map,
     )
-    from .docvalues import _scoring_rows
+    from .docvalues import _rows_and_idf
 
     mode_u = mode.upper()
     if mode_u not in ("OR", "AND"):
@@ -313,8 +312,7 @@ def search_nested(
         segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
         "doc_id",
     )
-    rows = _scoring_rows(searcher, qterms)
-    n_docs = searcher.n_docs
+    rows, idf = _rows_and_idf(searcher, qterms)
     avgdl = field_avgdl_map(searcher.manifest, qterms)
     get_deletes = searcher._segment_deletes_fn()
     msm = len(qterms) if mode_u == "AND" else 1
@@ -322,12 +320,8 @@ def search_nested(
     def score_segment(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return pd.DataFrame({"doc_id": [], "score": []})
-        _check_unique_terms(left)
+        _check_scoring_rows(left, idf)
         dead = get_deletes(int(key[0]))
-        idf = {
-            t: bm25_idf(n_docs, int(d))
-            for t, d in zip(left["term"], left["df_global"])
-        }
         postings = {
             r.term: codecs.decode_postings(bytes(r.blob))
             for r in left.itertuples()

@@ -39,8 +39,10 @@ from .bm25 import (
     expand_fielded_terms,
     field_avgdl_map,
     load_deletes,
+    term_filter,
+    termdict_dfs,
 )
-from .index_build import bm25_idf, bm25_tf_weight, term_bucket
+from .index_build import bm25_idf, bm25_tf_weight
 
 
 def _list_np(list_scalar, dtype) -> np.ndarray:
@@ -215,21 +217,12 @@ class LocalSearcher:
         self._cache_put(term, seg, out)
         return out
 
-    def _bucket_filter(self, terms: list[str]):
-        buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
-        return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(terms)
-
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
-        tbl = self._termdict.to_table(
-            filter=self._bucket_filter(terms), columns=["term", "df"]
-        )
-        return {
-            t: int(d) for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())
-        }
+        return termdict_dfs(self._termdict, terms, self.n_term_buckets)
 
     def _term_rows(self, terms: list[str], columns: list[str]):
         return self._postings.to_table(
-            filter=self._bucket_filter(terms), columns=columns
+            filter=term_filter(terms, self.n_term_buckets), columns=columns
         )
 
     SCORING_ROW_COLS = [

@@ -13,11 +13,14 @@ Reference analogs:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+log = logging.getLogger(__name__)
 
 
 def check_inputs_exist(paths: list[str]) -> None:
@@ -51,6 +54,9 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:
+        # private-API probe (py4j into the optimized plan): if a Spark
+        # version moves it, skip the spread rather than fail the caller
+        log.debug("spread_small_scan: size probe failed, input left as is", exc_info=True)
         return df
     if size >= target * SPREAD_BYTES_PER_CORE:
         return df

@@ -155,3 +155,25 @@ def test_partitioned_corpus_read_prunes_by_crawl_date(spark, tmp_path):
     # and the rows are exactly the interval
     got = pruned.select("crawl_date").distinct().collect()
     assert [r["crawl_date"].isoformat() for r in got] == [lo]
+
+
+def test_spread_small_scan_logs_failed_size_probe(spark, monkeypatch, caplog):
+    """The size probe goes through Spark's private plan API; when it
+    raises, the input comes back unchanged and the failure is logged
+    at debug level instead of vanishing."""
+    import logging
+
+    from hail_elasticsearch_pipelines_spark.sources import readers
+
+    df = spark.range(3)
+
+    class _BrokenJdf:
+        def queryExecution(self):
+            raise RuntimeError("plan API moved")
+
+    monkeypatch.setattr(df, "_jdf", _BrokenJdf())
+    with caplog.at_level(logging.DEBUG, logger=readers.__name__):
+        assert readers.spread_small_scan(df) is df
+    (rec,) = [r for r in caplog.records if r.name == readers.__name__]
+    assert rec.levelno == logging.DEBUG and "size probe failed" in rec.getMessage()
+    assert "plan API moved" in str(rec.exc_info[1])

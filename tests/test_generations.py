@@ -115,6 +115,32 @@ def test_compact_pinned_searchers_see_old_then_new(spark, built):
     ] == post_res
 
 
+def test_extend_pinned_searcher_keeps_old_global_df_until_reload(spark, built):
+    """Global df is read on the driver from the searcher's termdict, so
+    that read must be pinned like the postings: after an extend changes
+    df("the"), a searcher built before it keeps the pre-extend df and
+    the bit-identical pre-extend top-k until reload_manifest()."""
+    out, _ = built
+    pre = IndexSearcher(spark, out)
+    pre_df = pre.global_dfs(["the"])
+
+    def top(s):
+        return [(r["doc_id"], r["score"]) for r in s.search(["the"], "OR", 30).collect()]
+
+    pre_res = top(pre)
+
+    extend_index(spark, out, spark.createDataFrame(gen_pages_pdf(np.arange(120, 180))))
+    fresh = IndexSearcher(spark, out)
+    assert fresh.global_dfs(["the"])["the"] > pre_df["the"]
+
+    assert pre.global_dfs(["the"]) == pre_df
+    assert top(pre) == pre_res
+
+    pre.reload_manifest()
+    assert pre.global_dfs(["the"]) == fresh.global_dfs(["the"])
+    assert top(pre) == top(fresh) == LocalSearcher(out).search(["the"], "OR", 30)
+
+
 def test_upsert_pinned_searcher_keeps_old_doc_until_reload(spark, built):
     """Epoch-pinned deletes: an upsert's tombstones must NOT make the
     old doc vanish from a searcher constructed before the upsert (its

@@ -1,0 +1,94 @@
+"""Distributed query plan shape: Spark jobs per call, and the driver-side
+global-df read those counts rest on (df comes from the searcher's pinned
+termdict, never from a Spark scan)."""
+
+from __future__ import annotations
+
+import glob
+import os
+import shutil
+
+import pyarrow.parquet as pq
+import pytest
+
+from hail_elasticsearch_pipelines_spark.layout import load_manifest, table_path
+from hail_elasticsearch_pipelines_spark.operators.bm25 import IndexSearcher
+from hail_elasticsearch_pipelines_spark.operators.index_build import term_bucket
+
+
+@pytest.fixture(scope="module")
+def searcher(spark, small_index):
+    index_dir, _ = small_index
+    return IndexSearcher(spark, index_dir)
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "query job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "name, call, max_jobs",
+    [
+        ("or", lambda s: s.search(["the", "term0042"], "OR", 10).collect(), 2),
+        ("and", lambda s: s.search(["the", "of"], "AND", 10).collect(), 2),
+        ("bool", lambda s: s.search_bool("the AND (of OR term0042)", k=10).collect(), 2),
+        (
+            "many",
+            lambda s: s.search_many(
+                [
+                    {"query_id": "a", "terms": ["the", "term0042"], "mode": "OR", "k": 5},
+                    {"query_id": "b", "mode": "BOOL", "query": "the AND of", "k": 5},
+                ]
+            ).collect(),
+            3,
+        ),
+        ("range", lambda s: s.search_range(["the"], "doc_len", 50, 500, k=7).collect(), 4),
+        ("global_dfs", lambda s: s.global_dfs(["the", "of", "term0042"]), 0),
+    ],
+)
+def test_jobs_per_call(spark, searcher, name, call, max_jobs):
+    call(searcher)  # warm: first calls may plan extra jobs (schema reads)
+    n = _jobs(spark, f"qjobs_{name}", lambda: call(searcher))
+    assert n <= max_jobs, f"{name}: {n} Spark jobs > {max_jobs}"
+
+
+def test_postings_term_without_termdict_row_raises(spark, small_index, tmp_path):
+    """A postings row whose term has no termdict row is a corrupt index:
+    the query must fail naming the term, not drop that term's docs or
+    score it with df 0."""
+    src, _ = small_index
+    out = str(tmp_path / "idx")
+    shutil.copytree(src, out)
+    victim = "term0042"
+    manifest = load_manifest(out)
+    bucket_dir = os.path.join(
+        table_path(out, "termdict", manifest),
+        f"term_bucket={term_bucket(victim, manifest['params']['n_term_buckets'])}",
+    )
+    rewritten = 0
+    for f in glob.glob(os.path.join(bucket_dir, "*.parquet")):
+        tbl = pq.read_table(f)
+        keep = [t != victim for t in tbl.column("term").to_pylist()]
+        rewritten += len(keep) - sum(keep)
+        pq.write_table(tbl.filter(keep), f)
+        crc = os.path.join(bucket_dir, f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):  # Hadoop's checksum of the old bytes
+            os.remove(crc)
+    assert rewritten == 1
+
+    s = IndexSearcher(spark, out)
+    assert victim not in s.global_dfs([victim, "the"])
+    for run in (
+        lambda: s.search([victim, "the"], "OR", 10).collect(),
+        lambda: s.search([victim, "the"], "OR", 10, algo="exhaustive").collect(),
+        lambda: s.search_bool(f"the OR {victim}", k=10).collect(),
+        lambda: s.search_range([victim], "doc_len", 0, 10**6, k=5).collect(),
+    ):
+        with pytest.raises(Exception, match=f"corrupt index.*{victim}"):
+            run()
