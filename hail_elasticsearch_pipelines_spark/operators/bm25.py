@@ -23,8 +23,8 @@ accumulation order, so scores are bit-identical.
 
 from __future__ import annotations
 
+import dataclasses
 import heapq
-import json
 import os
 import re
 from functools import reduce
@@ -53,6 +53,11 @@ MULTI_RESULT_SCHEMA = T.StructType(
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("score", T.DoubleType(), False),
     ]
+)
+
+# per-segment rows of a batch (search_many): one extra query_id column
+QUERY_RESULT_SCHEMA = T.StructType(
+    [T.StructField("query_id", T.StringType(), False)] + RESULT_SCHEMA.fields
 )
 
 FACET_RESULT_SCHEMA = T.StructType(
@@ -887,6 +892,16 @@ def _per_segment_apply(rows: DataFrame, fn, schema) -> DataFrame:
     )
 
 
+def _result_schema(plans) -> T.StructType:
+    """Row schema of per-segment scoring output for ``plans``."""
+    return QUERY_RESULT_SCHEMA if plans[0].query_id is not None else RESULT_SCHEMA
+
+
+def _ranked(per_segment: DataFrame, k: int) -> DataFrame:
+    """Global top-k of per-segment rows by (score desc, doc_id asc)."""
+    return per_segment.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
 def _topk(docs: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     """k best by (score desc, doc_id asc)."""
     if docs.size == 0:
@@ -1159,23 +1174,23 @@ def _eval_bool_blockmax(
 
 
 def _score_union_blockmax(
-    blobs: dict[str, bytes],
-    blocks: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]],  # last, ub, off
+    cache: _BlockCache,
     terms_sorted: list[str],
     idf: dict[str, float],
-    avgdl: float,
+    avgdl: "float | dict[str, float]",
     k: int,
-    deleted: np.ndarray | None = None,
-    decoded: dict | None = None,
-    full_decode=None,
+    dead: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Block-max WAND, best-first over windows (vectorized bounds).
 
-    ``decoded`` may be a caller-owned persistent dict keyed (term,
-    block_idx) — a serving process passes its per-segment block cache
-    so repeated queries stop re-decoding hot blocks.  ``full_decode``
-    (term → (d, tf, dl)) likewise lets the caller route the adaptive
-    exhaustive fallback through its decoded-postings cache.
+    Blocks decode through ``cache`` (``_block``) and the adaptive
+    exhaustive fallback through ``cache.full`` — a serving process seeds
+    both from its persistent caches, so repeated queries stop
+    re-decoding hot blocks.  Block upper bounds are derived at query
+    time from (max_tf, min_dl) and each term's CURRENT avgdl (``_adl``,
+    so field-prefixed terms get their field's length norm): they stay
+    valid after incremental appends shift avgdl, unlike a score baked
+    at build time.
 
     Windows = merged block boundaries across query terms.  Per-window
     upper bounds (sum of covering blocks' bounds) are computed for ALL
@@ -1189,11 +1204,11 @@ def _score_union_blockmax(
     standard sorted-term accumulation, so scores stay bit-identical to
     the exhaustive path.
     """
-    present = [t for t in terms_sorted if t in blobs]
+    present = [t for t in terms_sorted if t in cache]
     if not present:
         return np.array([], np.int64), np.array([], np.float64)
     # window boundaries = union of block last-doc ids
-    bounds = reduce(np.union1d, (blocks[t][0] for t in present))
+    bounds = reduce(np.union1d, (cache.block_last[t] for t in present))
     W = len(bounds)
     los = np.empty(W, dtype=np.int64)
     los[0] = 0
@@ -1203,7 +1218,10 @@ def _score_union_blockmax(
     ub_w = np.zeros(W, dtype=np.float64)
     cover: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     for t in present:
-        bl, b_ub, _ = blocks[t]
+        bl = cache.block_last[t]
+        b_ub = idf[t] * bm25_tf_weight(
+            cache.block_max_tf[t], cache.block_min_dl[t], _adl(avgdl, t)
+        )
         idx = np.searchsorted(bl, bounds, side="left")
         valid = idx < len(bl)
         idx_c = np.minimum(idx, len(bl) - 1)
@@ -1216,8 +1234,6 @@ def _score_union_blockmax(
     ub_desc = ub_w[order]
     heap: list[tuple[float, int]] = []  # (score, -doc) min-heap of size k
     theta = -np.inf
-    if decoded is None:
-        decoded = {}
     for pos, w in enumerate(order.tolist()):
         if len(heap) == k and ub_w[w] < theta:
             break  # all remaining windows have ub <= this one < theta
@@ -1228,14 +1244,7 @@ def _score_union_blockmax(
             # windows still beat theta, finish exhaustively instead
             survivors = int(np.searchsorted(-ub_desc, -theta, side="right")) - pos
             if survivors > 0.5 * (W - pos):
-                full = {}
-                for t in present:
-                    full[t] = (
-                        full_decode(t)
-                        if full_decode is not None
-                        else codecs.decode_postings(blobs[t])
-                    )
-                full = _mask_deleted(full, deleted)
+                full = _mask_deleted({t: cache.full(t) for t in present}, dead)
                 docs_a, scores_a = _score_union_exhaustive(
                     full, terms_sorted, idf, avgdl
                 )
@@ -1246,17 +1255,12 @@ def _score_union_blockmax(
             idx_c, active = cover[t]
             if not active[w]:
                 continue
-            ci = int(idx_c[w])
-            key = (t, ci)
-            if key not in decoded:
-                _, _, b_off = blocks[t]
-                decoded[key] = codecs.decode_block(blobs[t], int(b_off[ci]))[:3]
-            d, tf, dl = decoded[key]
+            d, tf, dl = cache._block(t, int(idx_c[w]))
             m = (d >= lo_doc) & (d <= w_hi)
-            if deleted is not None and deleted.size:
+            if dead is not None and dead.size:
                 # block upper bounds stay valid (they bound a
                 # superset); only the decoded docs need masking
-                m &= ~np.isin(d, deleted, assume_unique=True)
+                m &= ~np.isin(d, dead, assume_unique=True)
             if m.any():
                 win_post[t] = (d[m], tf[m], dl[m])
         if not win_post:
@@ -1277,6 +1281,298 @@ def _score_union_blockmax(
         np.array([-d for _, d in items], dtype=np.int64),
         np.array([s for s, _ in items], dtype=np.float64),
     )
+
+
+@dataclasses.dataclass
+class QueryPlan:
+    """One query, planned once on the driver: everything score_segment
+    needs in a segment and everything an executor needs to schedule
+    segments.  Built by plan_terms / plan_fielded / plan_bool, which
+    both searchers share.
+
+    ``mode`` is "OR" or "AND" for term queries (a fielded AND also
+    carries ``variants``: token → its per-field index terms), "BEST" for
+    the dis_max variant, "BOOL" for a boolean query (``ast``, its
+    required conjuncts ``req``, its scoring ``pos_terms`` and its
+    range/phrase/nested ``atoms``).  ``after`` is a search_after cursor
+    (score, doc_id); ``query_id`` tags batch rows."""
+
+    terms: list[str]  # sorted index terms whose posting rows are read
+    mode: str
+    k: int
+    idf: dict[str, float]  # boosts and field weights folded in
+    avgdl: "float | dict[str, float]"
+    algo: str = "auto"
+    msm: int = 1
+    after: "tuple[float, int] | None" = None
+    variants: "dict[str, list[str]] | None" = None
+    tie_breaker: float = 0.0
+    ast: object = None
+    req: list[str] = dataclasses.field(default_factory=list)
+    pos_terms: list[str] = dataclasses.field(default_factory=list)
+    atoms: list = dataclasses.field(default_factory=list)
+    query_id: "str | None" = None
+
+    @property
+    def required(self) -> list[str]:
+        """Terms every match contains: a segment missing one of them
+        cannot match."""
+        if self.mode == "BOOL":
+            return self.req
+        return self.terms if self.mode == "AND" and self.variants is None else []
+
+    @property
+    def prunable(self) -> bool:
+        """True when a segment whose score bound is strictly below the
+        running k-th score may be skipped: the top-k term kernels and
+        the required-seeded bool kernel.  Not msm, bmw, exhaustive,
+        cursor pages, fielded AND/BEST or bool queries with atoms."""
+        if self.mode == "BOOL":
+            return bool(self.req) and not self.atoms
+        return (
+            self.mode in ("OR", "AND")
+            and self.variants is None
+            and self.msm == 1
+            and self.after is None
+            and (
+                self.algo in ("auto", "maxscore")
+                or (self.mode == "AND" and self.algo != "exhaustive")
+            )
+        )
+
+
+def query_idf(searcher, terms: list[str]) -> dict[str, float]:
+    """Query-wide BM25 idf for ``terms`` (absent terms absent), computed
+    once on the driver from the searcher's pinned termdict."""
+    return {
+        t: bm25_idf(searcher.n_docs, d) for t, d in searcher.global_dfs(terms).items()
+    }
+
+
+def plan_terms(
+    searcher,
+    terms: list[str],
+    mode: str = "OR",
+    k: int = 10,
+    algo: str = "auto",
+    min_should_match: int = 1,
+    after: "tuple[float, int] | None" = None,
+    query_id: "str | None" = None,
+) -> QueryPlan:
+    """Plan a term query (search, search_page, batch term specs).
+    avgdl is per term when field-prefixed terms are mixed in."""
+    mode_u = mode.upper()
+    msm = int(min_should_match)
+    if msm > 1 and mode_u != "OR":
+        raise ValueError("min_should_match applies to OR queries only")
+    terms_sorted = sorted(set(terms))
+    return QueryPlan(
+        terms_sorted, mode_u, int(k),
+        query_idf(searcher, terms_sorted),
+        field_avgdl_map(searcher.manifest, terms_sorted),
+        algo=algo, msm=msm, after=after, query_id=query_id,
+    )
+
+
+def plan_fielded(
+    searcher,
+    terms: list[str],
+    fields: "dict[str, float] | None",
+    k: int,
+    mode: str,
+    tie_breaker: float,
+) -> QueryPlan:
+    """Plan a multi-field query: expand tokens across fields, fold each
+    field's weight into its terms' idf (so OR runs the plain MaxScore
+    kernel), per-field avgdl.  AND keeps the per-token variants."""
+    mode_u = mode.upper()
+    text_fields = analyzed_fields_of(searcher.manifest)
+    if fields is None:
+        fields = {"text": 1.0, **{f: 1.0 for f in text_fields}}
+    expanded, weight = expand_fielded_terms(terms, fields, text_fields)
+    idf = {t: weight[t] * v for t, v in query_idf(searcher, expanded).items()}
+    avgdl = field_avgdl_map(searcher.manifest, expanded)
+    if mode_u == "AND":
+        variants = {
+            t: sorted(t if f == "text" else f"{f}:{t}" for f in fields)
+            for t in dict.fromkeys(terms)
+        }
+        return QueryPlan(expanded, "AND", int(k), idf, avgdl, variants=variants)
+    if mode_u == "BEST":
+        return QueryPlan(
+            expanded, "BEST", int(k), idf, avgdl, tie_breaker=float(tie_breaker)
+        )
+    return QueryPlan(expanded, "OR", int(k), idf, avgdl)
+
+
+def plan_bool(
+    searcher,
+    query: str,
+    k: int = 10,
+    synonyms: "dict | None" = None,
+    query_id: "str | None" = None,
+) -> QueryPlan:
+    """Plan a boolean query string: parse against the index's fields,
+    expand prefix/fuzzy atoms through the searcher's termdict, rewrite
+    synonyms, fold ``^boost`` into idf.  A query with no positive term
+    raises QueryParseError."""
+    from ..functions import boolquery as bq
+
+    manifest = searcher.manifest
+    ast = bq.parse(
+        query,
+        analyzed_fields=set(analyzed_fields_of(manifest)),
+        dv_fields=dv_filter_fields_of(manifest),
+        nested_fields=nested_paths_of(manifest),
+    )
+    if bq.has_wildcards(ast):
+        ast = bq.expand_wildcards(ast, searcher.expand_prefix, searcher.expand_fuzzy)
+    if synonyms:
+        # ES synonym_graph at search time — a pure query rewrite, so
+        # every kernel sees a plain boolean AST
+        ast = bq.expand_synonyms(ast, synonyms)
+    pos_terms = bq.positive_terms(ast)
+    if not pos_terms:
+        raise bq.QueryParseError("query has no positive terms")
+    terms = bq.all_terms(ast)
+    boosts = bq.term_boosts(ast)
+    idf = {t: v * boosts.get(t, 1.0) for t, v in query_idf(searcher, terms).items()}
+    return QueryPlan(
+        terms, "BOOL", int(k), idf, field_avgdl_map(manifest, terms),
+        ast=ast, req=bq.required_terms(ast), pos_terms=pos_terms,
+        atoms=bq.range_atoms(ast) + bq.phrase_atoms(ast) + bq.nested_atoms(ast),
+        query_id=query_id,
+    )
+
+
+def plan_spec(searcher, spec: dict) -> QueryPlan:
+    """Plan one search_many spec of mode "OR"/"AND" (``terms``) or
+    "BOOL" (``query``)."""
+    mode = spec.get("mode", "OR").upper()
+    k = int(spec.get("k", 10))
+    if mode in ("OR", "AND"):
+        return plan_terms(searcher, spec["terms"], mode, k, query_id=spec["query_id"])
+    if mode == "BOOL":
+        return plan_bool(searcher, spec["query"], k, query_id=spec["query_id"])
+    raise ValueError(f"unknown search_many mode {mode!r}")
+
+
+def segment_bounds(
+    q: QueryPlan, rows
+) -> tuple[dict[int, float], dict[int, tuple[float, int]], list[int]]:
+    """Per-segment BM25 score upper bounds for plan ``q`` from posting-row
+    metadata alone — ``rows`` yields (segment, term, df, max block_max_tf,
+    min block_min_dl).  bound(seg) = Σ_t idf_t · w(max_tf, min_dl) over
+    the terms that score (a bool query's NOT/filter terms add 0).
+    Mixing one block's max_tf with another's min_dl only loosens the
+    bound (w is ↑ in tf, ↓ in dl), so it stays safe.
+
+    Returns (bounds, per segment its strongest term's (bound, df), the
+    segments holding every required term)."""
+    scoring = set(q.pos_terms) if q.mode == "BOOL" else None
+    required = set(q.required)
+    bounds: dict[int, float] = {}
+    strong: dict[int, tuple[float, int]] = {}
+    n_req: dict[int, int] = {}
+    for seg, t, df, mx, mn in rows:
+        seg = int(seg)
+        idf = q.idf.get(t, 0.0) if scoring is None or t in scoring else 0.0
+        b = idf * float(
+            bm25_tf_weight(
+                np.array([mx], np.float64),
+                np.array([mn], np.float64),
+                _adl(q.avgdl, t),
+            )[0]
+        )
+        bounds[seg] = bounds.get(seg, 0.0) + b
+        if b >= strong.get(seg, (-1.0, 0))[0]:
+            strong[seg] = (b, int(df))
+        if t in required:
+            n_req[seg] = n_req.get(seg, 0) + 1
+    segs = [s for s in bounds if n_req.get(s, 0) == len(required)]
+    return bounds, strong, segs
+
+
+def _live_postings(
+    cache: _BlockCache, terms: list[str], dead: np.ndarray | None
+) -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Full decodes of ``terms`` present in the segment, tombstones
+    dropped."""
+    return _mask_deleted({t: cache.full(t) for t in terms if t in cache}, dead)
+
+
+def score_segment(
+    q: QueryPlan,
+    cache: _BlockCache,
+    dead: np.ndarray | None,
+    extra_sets: "dict[str, np.ndarray] | None" = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One segment's top-k (docs, scores) for plan ``q`` — the only place
+    a scoring kernel is chosen; both searchers run it per segment and
+    differ only in how they schedule segments and cache decodes.
+
+    ``cache`` holds the segment's posting rows (a batch shares one cache
+    across plans, so it may hold other plans' terms), ``dead`` its
+    tombstoned doc ids.  ``extra_sets`` maps a bool query's atom keys
+    to the segment's matching doc ids (range/phrase/nested atoms); given
+    it, the bool query evaluates over doc sets.  Every kernel keeps the
+    ascending-term float64 accumulation, so all choices are
+    bit-identical to the exhaustive one."""
+    exhaustive = q.algo == "exhaustive" or q.after is not None
+    if q.mode == "BOOL" and q.req and extra_sets is None:
+        docs, scores = _eval_bool_blockmax(
+            cache, q.ast, q.req, q.pos_terms, q.idf, q.avgdl, dead=dead
+        )
+    elif q.mode == "BOOL":
+        from ..functions import boolquery as bq
+
+        postings = _live_postings(cache, q.terms, dead)
+        doc_sets = {t: p[0] for t, p in postings.items()}
+        for rk, ids in (extra_sets or {}).items():
+            if dead is not None and dead.size and ids.size:
+                ids = ids[~np.isin(ids, dead, assume_unique=True)]
+            doc_sets[rk] = ids
+        docs = bq.eval_docs(q.ast, doc_sets)
+        if isinstance(docs, tuple) or docs.size == 0:
+            return np.array([], np.int64), np.array([], np.float64)
+        scores = bq.score_candidates(docs, postings, q.pos_terms, q.idf, q.avgdl)
+    elif q.msm > 1:
+        # the pruned kernels' candidate sets are not msm-safe (a doc
+        # matching only weak terms may be excluded before its match
+        # count is known)
+        docs, scores = _msm_scores(
+            _live_postings(cache, q.terms, dead), q.terms, q.idf, q.avgdl, q.msm
+        )
+    elif q.variants is not None:
+        docs, scores = _fielded_and_scores(
+            _live_postings(cache, q.terms, dead), q.variants, q.terms, q.idf, q.avgdl
+        )
+    elif q.mode == "BEST":
+        docs, scores = _fielded_best_scores(
+            _live_postings(cache, q.terms, dead),
+            {t: fielded_term_field(t) for t in q.terms},
+            q.terms, q.idf, q.avgdl, q.tie_breaker,
+        )
+    elif q.mode == "AND" and not exhaustive:
+        docs, scores = _score_intersection_blockmax(
+            cache, q.terms, q.idf, q.avgdl, dead=dead
+        )
+    elif q.algo == "bmw" and not exhaustive:
+        # WAND and MaxScore return the segment's top-k already
+        return _score_union_blockmax(cache, q.terms, q.idf, q.avgdl, q.k, dead=dead)
+    elif q.algo in ("auto", "maxscore") and not exhaustive:
+        return _score_union_maxscore(cache, q.terms, q.idf, q.avgdl, q.k, dead=dead)
+    else:
+        postings = _live_postings(cache, q.terms, dead)
+        if q.mode == "AND":
+            docs, scores = _score_intersection(postings, q.terms, q.idf, q.avgdl)
+        else:
+            docs, scores = _score_union_exhaustive(postings, q.terms, q.idf, q.avgdl)
+        if q.after is not None and docs.size:
+            s_a, d_a = float(q.after[0]), int(q.after[1])
+            keep = (scores < s_a) | ((scores == s_a) & (docs > d_a))
+            docs, scores = docs[keep], scores[keep]
+    return _topk(docs, scores, q.k)
 
 
 def _phrase_suggest_rows(
@@ -1395,14 +1691,6 @@ class IndexSearcher:
         never posting blobs, no Spark job."""
         return termdict_dfs(self._termdict_ds, terms, self.n_term_buckets)
 
-    def _query_idf(self, terms: list[str]) -> dict[str, float]:
-        """Query-wide BM25 idf for ``terms`` (absent terms absent),
-        computed once on the driver; scoring kernels capture it in
-        their closure, exactly as LocalSearcher passes its dict."""
-        return {
-            t: bm25_idf(self.n_docs, d) for t, d in self.global_dfs(terms).items()
-        }
-
     # columns the term/bool scoring kernels need — pos_blob (the
     # positional stream, comparable in bytes to the postings themselves)
     # is deliberately ABSENT: every selected column crosses the
@@ -1415,11 +1703,47 @@ class IndexSearcher:
 
     def _scoring_rows(self, terms_sorted: list[str]) -> DataFrame:
         """Pruned posting rows, scoring columns only.  Global df is not
-        joined in: callers take idf from _query_idf, so a scoring plan
-        is the postings scan → repartition("segment") → mapInPandas,
-        and a collect is 2 Spark jobs (the scan's shuffle map stage and
-        the scoring/top-k stage)."""
+        joined in: plans carry idf read on the driver (query_idf), so a
+        scoring plan is the postings scan → repartition("segment") →
+        mapInPandas, and a collect is 2 Spark jobs (the scan's shuffle
+        map stage and the scoring/top-k stage)."""
         return self._term_rows(terms_sorted).select(*self.SCORING_COLS)
+
+    def _segment_task(self, plans: list[QueryPlan]):
+        """The per-segment task body of every distributed scoring API:
+        ``run(pdf, segment, extra_sets=None)`` checks the segment's rows,
+        builds ONE block cache over them, looks up the segment's
+        tombstones and emits score_segment's top-k for each plan (a
+        batch shares the cache, so each blob decodes at most once)."""
+        get_deletes = self._segment_deletes_fn()
+        known = {t for q in plans for t in q.idf}
+
+        def run(pdf: pd.DataFrame, seg: int, extra_sets=None) -> pd.DataFrame:
+            if len(pdf):
+                _check_scoring_rows(pdf, known)
+            cache = _BlockCache(pdf.itertuples())
+            dead = get_deletes(seg)
+            frames = []
+            for q in plans:
+                docs, scores = score_segment(q, cache, dead, extra_sets)
+                cols = {"doc_id": docs, "score": scores}
+                if q.query_id is not None:
+                    cols = {"query_id": [q.query_id] * len(docs), **cols}
+                frames.append(pd.DataFrame(cols))
+            if len(frames) == 1:
+                return frames[0]
+            return pd.concat(frames, ignore_index=True)
+
+        return run
+
+    def _score_segments(self, rows: DataFrame, plans: list[QueryPlan]) -> DataFrame:
+        """Per-segment top-k rows of ``plans`` over posting ``rows``."""
+        run = self._segment_task(plans)
+        return _per_segment_apply(
+            rows,
+            lambda pdf: run(pdf, int(pdf["segment"].iloc[0])),
+            _result_schema(plans),
+        )
 
     # Auto-gate threshold for two-phase distributed segment pruning:
     # measured crossover on the 200k-doc bench corpus, local[32] (see
@@ -1451,120 +1775,37 @@ class IndexSearcher:
         list is decoded.
 
         segment_prune=True adds CROSS-SEGMENT pruning (two-phase): a
-        metadata-only collect computes per-segment score bounds (see
-        LocalSearcher._segment_bounds), the best-bound segment is
-        scored first as a probe, and segments whose bound is strictly
-        below the probe's k-th score never get a scoring task at all —
-        bit-identical (strict inequality forbids ties).  Costs one
-        extra small job + one tiny collect: the win is proportional to
-        segment count (at 10^12 docs a rare-but-widespread term's task
-        fan-out collapses), while on a handful of segments the fixed
-        job overhead dominates.  Default None AUTO-GATES on the
-        manifest's segment count at the measured crossover
-        (SEGPRUNE_AUTO_MIN_SEGMENTS); True/False force it.  The
-        sequential LocalSearcher has it always-on for free.
-        ``last_segments_skipped`` reports the count.
+        metadata-only collect computes per-segment score bounds
+        (segment_bounds), the best-bound segments are scored first as a
+        probe, and segments whose bound is strictly below the probe's
+        k-th score never get a scoring task at all — bit-identical
+        (strict inequality forbids ties).  Costs one extra small job +
+        one tiny collect: the win is proportional to segment count (at
+        10^12 docs a rare-but-widespread term's task fan-out collapses),
+        while on a handful of segments the fixed job overhead dominates.
+        Default None AUTO-GATES on the manifest's segment count at the
+        measured crossover (SEGPRUNE_AUTO_MIN_SEGMENTS); True/False
+        force it.  The sequential LocalSearcher has it always-on for
+        free.  ``last_segments_skipped`` reports the count.
 
         ``min_should_match`` (ES analog, OR mode only): a doc must
         contain at least this many of the query terms; scoring stays
         the disjunctive sum over the terms it has.  m=1 is plain OR,
         m=len(terms) equals AND."""
-        msm = int(min_should_match)
-        if msm > 1 and mode.upper() != "OR":
-            raise ValueError("min_should_match applies to OR queries only")
+        q = plan_terms(self, terms, mode, k, algo, min_should_match)
         auto_prune = segment_prune is None
         if auto_prune:
             n_segs = int(
                 self.manifest.get("metrics", {}).get("n_segments", 0) or 0
             )
             segment_prune = n_segs >= self.SEGPRUNE_AUTO_MIN_SEGMENTS
-        terms_sorted = sorted(set(terms))
-        mode_u = mode.upper()
-        # per-term when fielded terms are mixed in (prefix expansion
-        # over an analyzed field), plain body float otherwise
-        avgdl = field_avgdl_map(self.manifest, terms_sorted)
-        get_deletes = self._segment_deletes_fn()
-
-        rows = self._scoring_rows(terms_sorted)
-        idf = self._query_idf(terms_sorted)
-
-        def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            _check_scoring_rows(pdf, idf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            if msm > 1:
-                # dedicated path: the pruned kernels' candidate sets
-                # are not msm-safe (a doc matching only weak terms may
-                # be excluded before its match count is known)
-                postings = {
-                    r.term: codecs.decode_postings(bytes(r.blob))
-                    for r in pdf.itertuples()
-                }
-                postings = _mask_deleted(postings, dead)
-                docs, scores = _msm_scores(
-                    postings, terms_sorted, idf, avgdl, msm
-                )
-                docs, scores = _topk(docs, scores, k)
-                return pd.DataFrame({"doc_id": docs, "score": scores})
-            if mode_u == "OR" and algo == "bmw":
-                blobs = {r.term: bytes(r.blob) for r in pdf.itertuples()}
-                # block upper bound derived at query time from
-                # (max_tf, min_dl) and the CURRENT avgdl: stays a valid
-                # bound after incremental appends shift avgdl, unlike a
-                # score baked at build time.
-                blocks = {
-                    r.term: (
-                        np.asarray(r.block_last, dtype=np.int64),
-                        idf[r.term]
-                        * bm25_tf_weight(
-                            np.asarray(r.block_max_tf, dtype=np.int64),
-                            np.asarray(r.block_min_dl, dtype=np.int64),
-                            avgdl,
-                        ),
-                        np.asarray(r.block_off, dtype=np.int32),
-                    )
-                    for r in pdf.itertuples()
-                }
-                docs, scores = _score_union_blockmax(
-                    blobs, blocks, terms_sorted, idf, avgdl, k, deleted=dead
-                )
-                return pd.DataFrame({"doc_id": docs, "score": scores})
-            if mode_u == "AND" and algo != "exhaustive":
-                cache = _BlockCache(pdf.itertuples())
-                docs, scores = _score_intersection_blockmax(
-                    cache, terms_sorted, idf, avgdl, dead=dead
-                )
-                docs, scores = _topk(docs, scores, k)
-                return pd.DataFrame({"doc_id": docs, "score": scores})
-            if mode_u == "OR" and algo in ("auto", "maxscore"):
-                cache = _BlockCache(pdf.itertuples())
-                docs, scores = _score_union_maxscore(
-                    cache, terms_sorted, idf, avgdl, k, dead=dead
-                )
-                return pd.DataFrame({"doc_id": docs, "score": scores})
-            postings = {}
-            for r in pdf.itertuples():
-                d, tf, dl = codecs.decode_postings(bytes(r.blob))
-                postings[r.term] = (d, tf, dl)
-            postings = _mask_deleted(postings, dead)
-            if mode_u == "AND":
-                docs, scores = _score_intersection(postings, terms_sorted, idf, avgdl)
-            else:
-                docs, scores = _score_union_exhaustive(postings, terms_sorted, idf, avgdl)
-            docs, scores = _topk(docs, scores, k)
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
+        rows = self._scoring_rows(q.terms)
         self.last_segments_skipped = 0
-        if segment_prune and msm == 1 and algo not in ("bmw", "exhaustive"):
-            pruned = self._two_phase_segment_prune(
-                rows, score_segment, terms_sorted, mode_u, k, idf,
-                auto=auto_prune, avgdl=avgdl,
-            )
+        if segment_prune and q.msm == 1 and algo not in ("bmw", "exhaustive"):
+            pruned = self._two_phase_segment_prune(rows, q, auto=auto_prune)
             if pruned is not None:
                 return pruned
-        per_segment = _per_segment_apply(rows, score_segment, RESULT_SCHEMA)
-        return per_segment.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _ranked(self._score_segments(rows, [q]), q.k)
 
     # auto-mode bail-out: attempt the probe only when at least this
     # fraction of candidate segments has a bound under half the best
@@ -1577,10 +1818,7 @@ class IndexSearcher:
     SEGPRUNE_MIN_DISCRIMINATION = 0.3
 
     def _two_phase_segment_prune(
-        self, rows: DataFrame, score_segment, terms_sorted, mode_u, k,
-        idf: dict[str, float],
-        auto: bool = False,
-        avgdl: "float | dict[str, float] | None" = None,
+        self, rows: DataFrame, q: QueryPlan, auto: bool = False
     ) -> DataFrame | None:
         """Probe-then-prune: bounds from a metadata-only collect (tiny —
         |terms| × |segments| scalars, no blobs cross the wire thanks to
@@ -1594,8 +1832,7 @@ class IndexSearcher:
         cost of a bail-out is the metadata collect)."""
         if int(self.manifest.get("metrics", {}).get("n_segments", 999) or 999) < 3:
             return None
-        if avgdl is None:
-            avgdl = self.avgdl
+        k = q.k
         meta = rows.select(
             "segment",
             "term",
@@ -1603,34 +1840,17 @@ class IndexSearcher:
             F.array_max("block_max_tf").alias("mx"),
             F.array_min("block_min_dl").alias("mn"),
         ).collect()
-        _check_has_df({r["term"] for r in meta}, idf)
-        bounds: dict[int, float] = {}
-        present: dict[int, int] = {}
-        # per segment: df of its strongest term (highest single-row
-        # bound) — the docs that can push the probe's k-th score above
-        # other segments' bounds.  Sizing the probe by this count fixes
-        # the dilution failure where a 3-segment probe holds too few
-        # rare-term docs to establish a floor above stopword-only
-        # segment bounds (measured: 0 skips at 400 segments, k=10).
-        strong_df: dict[int, tuple[float, int]] = {}
-        for r in meta:
-            seg = int(r["segment"])
-            b = idf[r["term"]] * float(
-                bm25_tf_weight(
-                    np.array([r["mx"]], np.float64),
-                    np.array([r["mn"]], np.float64),
-                    _adl(avgdl, r["term"]),
-                )[0]
-            )
-            bounds[seg] = bounds.get(seg, 0.0) + b
-            present[seg] = present.get(seg, 0) + 1
-            if b >= strong_df.get(seg, (-1.0, 0))[0]:
-                strong_df[seg] = (b, int(r["df"]))
-        segs = [
-            s
-            for s in bounds
-            if mode_u != "AND" or present[s] == len(terms_sorted)
-        ]
+        _check_has_df({r["term"] for r in meta}, q.idf)
+        # strong[seg]: df of the segment's strongest term (highest
+        # single-row bound) — the docs that can push the probe's k-th
+        # score above other segments' bounds.  Sizing the probe by this
+        # count fixes the dilution failure where a 3-segment probe holds
+        # too few rare-term docs to establish a floor above
+        # stopword-only segment bounds (measured: 0 skips at 400
+        # segments, k=10).
+        bounds, strong, segs = segment_bounds(
+            q, ((r["segment"], r["term"], r["df"], r["mx"], r["mn"]) for r in meta)
+        )
         if len(segs) < 3:
             return None
         if auto:
@@ -1653,20 +1873,15 @@ class IndexSearcher:
             if n_probe >= cap:
                 break
             n_probe += 1
-            cum_strong += strong_df.get(s, (0.0, 0))[1]
+            cum_strong += strong.get(s, (0.0, 0))[1]
             if n_probe >= n_min and cum_strong >= 2 * k:
                 break
         n_probe = min(max(n_probe, min(n_min, cap)), cap)
         probe_segs = order[:n_probe]
-        probe = (
-            _per_segment_apply(
-                rows.filter(F.col("segment").isin(probe_segs)),
-                score_segment, RESULT_SCHEMA,
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
+        probe = _ranked(
+            self._score_segments(rows.filter(F.col("segment").isin(probe_segs)), [q]),
+            k,
+        ).collect()
         floor = float(probe[k - 1]["score"]) if len(probe) >= k else None
         survivors = [
             s
@@ -1676,12 +1891,11 @@ class IndexSearcher:
         self.last_segments_skipped = len(segs) - n_probe - len(survivors)
         probe_df = self.spark.createDataFrame(probe, RESULT_SCHEMA)
         if survivors:
-            rest = _per_segment_apply(
-                rows.filter(F.col("segment").isin(survivors)),
-                score_segment, RESULT_SCHEMA,
+            rest = self._score_segments(
+                rows.filter(F.col("segment").isin(survivors)), [q]
             )
             probe_df = probe_df.unionByName(rest)
-        return probe_df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _ranked(probe_df, k)
 
     def search_bool(
         self, query: str, k: int = 10, synonyms: "dict | None" = None
@@ -1698,148 +1912,56 @@ class IndexSearcher:
         per-atom predicates push into the doclens parquet scan and the
         allowed ids are cogrouped with the posting rows per segment, so
         range evaluation never materializes on the driver."""
+        q = plan_bool(self, query, k, synonyms)
+        if q.atoms:
+            return _ranked(self._score_bool_atoms(q), q.k)
+        return _ranked(self._score_segments(self._scoring_rows(q.terms), [q]), q.k)
+
+    def _score_bool_atoms(self, q: QueryPlan) -> DataFrame:
+        """Per-segment rows of a bool plan with range/phrase/nested atoms:
+        each atom's allowed ids (doclens scan, phrase matches, nested
+        sidecar) are tagged by atom key and cogrouped with the posting
+        rows per segment, and reach score_segment as ``extra_sets`` —
+        a segment holding only atom matches still gets a task."""
         from ..functions import boolquery as bq
+        from . import docvalues as dv
+        from . import nested as nst
 
-        ast = bq.parse(
-            query,
-            analyzed_fields=set(analyzed_fields_of(self.manifest)),
-            dv_fields=dv_filter_fields_of(self.manifest),
-            nested_fields=nested_paths_of(self.manifest),
+        dl = dv.doclens_df(self)
+        dpp, seg_group = dv._seg_params(self.manifest)
+        seg_of = dv.segment_expr(F.col("doc_id"), dpp, seg_group)
+
+        def tagged(df: DataFrame, atom) -> DataFrame:
+            return df.select(
+                seg_of.alias("segment"), "doc_id", F.lit(atom.key()).alias("rkey")
+            )
+
+        parts = []
+        for rt in bq.range_atoms(q.ast):
+            dv.check_field(self, rt.field, dl.columns)
+            pred = dv.range_pred(rt, dv.is_array_type(dl, rt.field))
+            parts.append(tagged(dl.filter(pred), rt))
+        parts += [
+            tagged(self._phrase_matches(list(pt.tokens), pt.slop), pt)
+            for pt in bq.phrase_atoms(q.ast)
+        ]
+        parts += [tagged(nst.atom_match_df(self, nt), nt) for nt in bq.nested_atoms(q.ast)]
+        allowed = reduce(DataFrame.unionByName, parts)
+        rkeys = [a.key() for a in q.atoms]
+        run = self._segment_task([q])
+
+        def score_cogroup(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            # atoms with no match in this segment get an empty set
+            extra = dict.fromkeys(rkeys, np.array([], np.int64))
+            for rk, grp in right.groupby("rkey"):
+                extra[rk] = np.sort(grp["doc_id"].to_numpy(np.int64))
+            return run(left, int(key[0]), extra)
+
+        return (
+            self._scoring_rows(q.terms).groupBy("segment")
+            .cogroup(allowed.groupBy("segment"))
+            .applyInPandas(score_cogroup, _result_schema([q]))
         )
-        if bq.has_wildcards(ast):
-            ast = bq.expand_wildcards(ast, self.expand_prefix, self.expand_fuzzy)
-        if synonyms:
-            # ES synonym_graph at search time — a pure query rewrite,
-            # so every downstream kernel (doc-set, block-skip, pruned)
-            # sees a plain boolean AST
-            ast = bq.expand_synonyms(ast, synonyms)
-        terms = bq.all_terms(ast)
-        pos_terms = bq.positive_terms(ast)
-        req = bq.required_terms(ast)
-        ranges = bq.range_atoms(ast)
-        phrases = bq.phrase_atoms(ast)
-        nested = bq.nested_atoms(ast)
-        boosts = bq.term_boosts(ast)
-        if not pos_terms:
-            raise bq.QueryParseError("query has no positive terms")
-        avgdl = field_avgdl_map(self.manifest, terms)
-        get_deletes = self._segment_deletes_fn()
-
-        rows = self._scoring_rows(terms)
-        idf = {
-            t: v * boosts.get(t, 1.0) for t, v in self._query_idf(terms).items()
-        }
-
-        if ranges or phrases or nested:
-            # range/phrase/nested filters evaluate on the doc-set path
-            # (block-skip can't see doc-value sets or positions);
-            # allowed ids ride a per-segment cogroup, tagged by atom key
-            from . import docvalues as dv
-            from . import nested as nst
-
-            dl = dv.doclens_df(self)
-            dpp, seg_group = dv._seg_params(self.manifest)
-            seg_of = dv.segment_expr(F.col("doc_id"), dpp, seg_group)
-            parts = []
-            for rt in ranges:
-                dv.check_field(self, rt.field, dl.columns)
-                parts.append(
-                    dl.filter(
-                        dv.range_pred(rt, dv.is_array_type(dl, rt.field))
-                    ).select(
-                        seg_of.alias("segment"),
-                        "doc_id",
-                        F.lit(rt.key()).alias("rkey"),
-                    )
-                )
-            for pt in phrases:
-                parts.append(
-                    self._phrase_matches(list(pt.tokens), pt.slop).select(
-                        seg_of.alias("segment"),
-                        "doc_id",
-                        F.lit(pt.key()).alias("rkey"),
-                    )
-                )
-            for nt in nested:
-                parts.append(
-                    nst.atom_match_df(self, nt).select(
-                        seg_of.alias("segment"),
-                        "doc_id",
-                        F.lit(nt.key()).alias("rkey"),
-                    )
-                )
-            allowed = parts[0]
-            for p in parts[1:]:
-                allowed = allowed.unionByName(p)
-            rkeys = (
-                [rt.key() for rt in ranges]
-                + [pt.key() for pt in phrases]
-                + [nt.key() for nt in nested]
-            )
-
-            def score_segment_rng(
-                key, left: pd.DataFrame, right: pd.DataFrame
-            ) -> pd.DataFrame:
-                dead = get_deletes(int(key[0]))
-                postings = {}
-                if not left.empty:
-                    _check_scoring_rows(left, idf)
-                    for r in left.itertuples():
-                        postings[r.term] = codecs.decode_postings(bytes(r.blob))
-                postings = _mask_deleted(postings, dead)
-                doc_sets = {t: p[0] for t, p in postings.items()}
-                empty_ids = np.array([], np.int64)
-                for rk in rkeys:  # atoms with no match in this segment
-                    doc_sets[rk] = empty_ids
-                for rk, grp in right.groupby("rkey"):
-                    ids = np.sort(grp["doc_id"].to_numpy(np.int64))
-                    if dead is not None and dead.size and ids.size:
-                        ids = ids[~np.isin(ids, dead, assume_unique=True)]
-                    doc_sets[rk] = ids
-                cand = bq.eval_docs(ast, doc_sets)
-                if isinstance(cand, tuple) or cand.size == 0:
-                    return pd.DataFrame({"doc_id": [], "score": []})
-                scores = bq.score_candidates(cand, postings, pos_terms, idf, avgdl)
-                d, s = _topk(cand, scores, k)
-                return pd.DataFrame({"doc_id": d, "score": s})
-
-            per_segment = (
-                rows.groupBy("segment")
-                .cogroup(allowed.groupBy("segment"))
-                .applyInPandas(score_segment_rng, RESULT_SCHEMA)
-            )
-            return per_segment.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-        def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            _check_scoring_rows(pdf, idf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            if req:
-                # required conjuncts exist → block-skip evaluation
-                cache = _BlockCache(pdf.itertuples())
-                d, s = _topk(
-                    *_eval_bool_blockmax(
-                        cache, ast, req, pos_terms, idf, avgdl, dead=dead
-                    ),
-                    k,
-                )
-                return pd.DataFrame({"doc_id": d, "score": s})
-            postings = {}
-            for r in pdf.itertuples():
-                d, tf, dl = codecs.decode_postings(bytes(r.blob))
-                postings[r.term] = (d, tf, dl)
-            postings = _mask_deleted(postings, dead)
-            doc_sets = {t: p[0] for t, p in postings.items()}
-            cand = bq.eval_docs(ast, doc_sets)
-            if isinstance(cand, tuple) or cand.size == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            scores = bq.score_candidates(cand, postings, pos_terms, idf, avgdl)
-            d, s = _topk(cand, scores, k)
-            return pd.DataFrame({"doc_id": d, "score": s})
-
-        per_segment = _per_segment_apply(rows, score_segment, RESULT_SCHEMA)
-        return per_segment.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_fielded(
         self,
@@ -1873,55 +1995,8 @@ class IndexSearcher:
         scores max(field sums) + ``tie_breaker`` × (the other field
         sums) — the "one field should dominate" ranking for fields that
         compete rather than complement (_fielded_best_scores)."""
-        mode_u = mode.upper()
-        text_fields = analyzed_fields_of(self.manifest)
-        if fields is None:
-            fields = {"text": 1.0, **{f: 1.0 for f in text_fields}}
-        expanded, weight = expand_fielded_terms(terms, fields, text_fields)
-        avgdl = field_avgdl_map(self.manifest, expanded)
-        variants = {
-            t: sorted(
-                t if f == "text" else f"{f}:{t}" for f in fields
-            )
-            for t in dict.fromkeys(terms)
-        }
-        get_deletes = self._segment_deletes_fn()
-        rows = self._scoring_rows(expanded)
-        idf = {t: weight[t] * v for t, v in self._query_idf(expanded).items()}
-
-        def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            _check_scoring_rows(pdf, idf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            if mode_u in ("AND", "BEST"):
-                postings = {}
-                for r in pdf.itertuples():
-                    postings[r.term] = codecs.decode_postings(bytes(r.blob))
-                postings = _mask_deleted(postings, dead)
-                if mode_u == "AND":
-                    docs, scores = _fielded_and_scores(
-                        postings, variants, expanded, idf, avgdl
-                    )
-                else:
-                    docs, scores = _fielded_best_scores(
-                        postings,
-                        {t: fielded_term_field(t) for t in expanded},
-                        expanded,
-                        idf,
-                        avgdl,
-                        tie_breaker,
-                    )
-                docs, scores = _topk(docs, scores, k)
-                return pd.DataFrame({"doc_id": docs, "score": scores})
-            cache = _BlockCache(pdf.itertuples())
-            docs, scores = _score_union_maxscore(
-                cache, expanded, idf, avgdl, k, dead=dead
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        per_segment = _per_segment_apply(rows, score_segment, RESULT_SCHEMA)
-        return per_segment.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        q = plan_fielded(self, terms, fields, k, mode, tie_breaker)
+        return _ranked(self._score_segments(self._scoring_rows(q.terms), [q]), q.k)
 
     DEFAULT_MAX_EXPANSIONS = 128
 
@@ -2488,41 +2563,8 @@ class IndexSearcher:
         deep-page blowup): each segment task scores exhaustively, drops
         docs at-or-before the cursor, and keeps its local top-k; the
         global merge is k rows per segment.  Page 1 = after=None."""
-        terms_sorted = sorted(set(terms))
-        mode_u = mode.upper()
-        avgdl = self.avgdl
-        get_deletes = self._segment_deletes_fn()
-        rows = self._scoring_rows(terms_sorted)
-        idf = self._query_idf(terms_sorted)
-        cursor = after
-
-        def page_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            _check_scoring_rows(pdf, idf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            postings = {}
-            for r in pdf.itertuples():
-                d, tf, dl = codecs.decode_postings(bytes(r.blob))
-                postings[r.term] = (d, tf, dl)
-            postings = _mask_deleted(postings, dead)
-            if mode_u == "AND":
-                docs, scores = _score_intersection(
-                    postings, terms_sorted, idf, avgdl
-                )
-            else:
-                docs, scores = _score_union_exhaustive(
-                    postings, terms_sorted, idf, avgdl
-                )
-            if cursor is not None and docs.size:
-                s_a, d_a = float(cursor[0]), int(cursor[1])
-                keep = (scores < s_a) | ((scores == s_a) & (docs > d_a))
-                docs, scores = docs[keep], scores[keep]
-            docs, scores = _topk(docs, scores, k)
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        per_segment = _per_segment_apply(rows, page_segment, RESULT_SCHEMA)
-        return per_segment.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        q = plan_terms(self, terms, mode, k, algo="exhaustive", after=after)
+        return _ranked(self._score_segments(self._scoring_rows(q.terms), [q]), q.k)
 
     def search_count(
         self, query: list[str] | str, mode: str = "OR"
@@ -3811,158 +3853,35 @@ class IndexSearcher:
         at most once across all queries); phrase queries add two (one
         match job for ALL phrases — phrase df isn't known until matches
         exist — plus the count); BOOL queries containing range/
-        ``_exists_``/doc-value atoms add one job each (they route
-        through search_bool's doc-value cogroup — the shared block
-        cache can't see doc values).  Returns DataFrame(query_id, rank,
-        doc_id, score), rank 1..k by (score desc, doc_id asc), results
+        ``_exists_``/doc-value atoms add one job each (they run
+        search_bool's doc-value cogroup — the shared block cache can't
+        see doc values).  Returns DataFrame(query_id, rank, doc_id,
+        score), rank 1..k by (score desc, doc_id asc), results
         bit-identical per query to search/search_bool/search_phrase."""
-        from ..functions import boolquery as bq
-
-        avgdl = self.avgdl
-        term_specs, bool_specs, phrase_specs = [], [], []
-        ranged_specs = []  # BOOL queries with range/_exists_/dv atoms
+        plans, atom_plans, phrase_specs = [], [], []
         for s in specs:
-            mode = s.get("mode", "OR").upper()
-            if mode in ("OR", "AND"):
-                term_specs.append(
-                    (s["query_id"], sorted(set(s["terms"])), mode, int(s.get("k", 10)))
-                )
-            elif mode == "BOOL":
-                ast = bq.parse(
-                    s["query"],
-                    analyzed_fields=set(analyzed_fields_of(self.manifest)),
-                    dv_fields=dv_filter_fields_of(self.manifest),
-                    nested_fields=nested_paths_of(self.manifest),
-                )
-                pos_terms = bq.positive_terms(ast)
-                if not pos_terms:
-                    raise bq.QueryParseError(
-                        f"query {s['query_id']} has no positive terms"
-                    )
-                if bq.range_atoms(ast) or bq.phrase_atoms(ast) or bq.nested_atoms(ast):
-                    # doc-value/phrase/nested atoms need the per-atom cogroup
-                    # — route through search_bool (one extra job per
-                    # such query; the shared block cache can't see doc
-                    # values or positions), results identical to a lone
-                    # search_bool
-                    ranged_specs.append(
-                        (s["query_id"], s["query"], int(s.get("k", 10)))
-                    )
-                    continue
-                bool_specs.append(
-                    (
-                        s["query_id"], ast, bq.all_terms(ast),
-                        bq.required_terms(ast), pos_terms, int(s.get("k", 10)),
-                        bq.term_boosts(ast),
-                    )
-                )
-            elif mode == "PHRASE":
+            if s.get("mode", "OR").upper() == "PHRASE":
                 phrase_specs.append(
                     (s["query_id"], list(s["phrase"]), int(s.get("k", 10)))
                 )
-            else:
-                raise ValueError(f"unknown search_many mode {mode!r}")
+                continue
+            q = plan_spec(self, s)
+            (atom_plans if q.atoms else plans).append(q)
 
         parts: list[DataFrame] = []
-        result_schema = T.StructType(
-            [T.StructField("query_id", T.StringType(), False)]
-            + RESULT_SCHEMA.fields
-        )
-        get_deletes = self._segment_deletes_fn()
-
-        all_terms = sorted(
-            {t for _, ts, _, _ in term_specs for t in ts}
-            | {t for _, _, ts, _, _, _, _ in bool_specs for t in ts}
-        )
+        all_terms = sorted({t for q in plans for t in q.terms})
         if all_terms:
-            # one scoring job for the whole batch: global dfs come from
-            # the driver-side termdict read (same as `search`)
-            rows = self._scoring_rows(all_terms)
-            idf = self._query_idf(all_terms)
-            compiled_t, compiled_b = term_specs, bool_specs
-
-            def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-                out_q, out_d, out_s = [], [], []
-                if not pdf.empty:
-                    _check_scoring_rows(pdf, idf)
-                    dead = get_deletes(pdf["segment"].iloc[0])
-                    # ONE lazy block cache per segment: conjunctive and
-                    # required-seeded queries skip-read through it;
-                    # essential full decodes are SHARED by every later
-                    # query touching the same term.
-                    cache = _BlockCache(pdf.itertuples())
-                    for qid, terms_sorted, mode, k in compiled_t:
-                        if mode == "AND":
-                            docs, scores = _score_intersection_blockmax(
-                                cache, terms_sorted, idf, avgdl, dead=dead
-                            )
-                            docs, scores = _topk(docs, scores, k)
-                        else:
-                            docs, scores = _score_union_maxscore(
-                                cache, terms_sorted, idf, avgdl, k, dead=dead
-                            )
-                        out_q.extend([qid] * len(docs))
-                        out_d.extend(docs.tolist())
-                        out_s.extend(scores.tolist())
-                    for qid, ast, q_terms, req, pos_terms, k, qb in compiled_b:
-                        # per-query boosted idf view (the shared idf
-                        # dict serves every query in the batch)
-                        q_idf = (
-                            {t: v * qb.get(t, 1.0) for t, v in idf.items()}
-                            if qb
-                            else idf
-                        )
-                        if req:
-                            docs, scores = _eval_bool_blockmax(
-                                cache, ast, req, pos_terms, q_idf, avgdl, dead=dead
-                            )
-                        else:
-                            postings = _mask_deleted(
-                                {t: cache.full(t) for t in q_terms if t in cache},
-                                dead,
-                            )
-                            cand = bq.eval_docs(
-                                ast, {t: p[0] for t, p in postings.items()}
-                            )
-                            if isinstance(cand, tuple) or cand.size == 0:
-                                continue
-                            scores = bq.score_candidates(
-                                cand, postings, pos_terms, q_idf, avgdl
-                            )
-                            docs = cand
-                        docs, scores = _topk(docs, scores, k)
-                        out_q.extend([qid] * len(docs))
-                        out_d.extend(docs.tolist())
-                        out_s.extend(scores.tolist())
-                return pd.DataFrame(
-                    {"query_id": out_q, "doc_id": out_d, "score": out_s}
-                )
-
-            parts.append(
-                _per_segment_apply(rows, score_segment, result_schema)
-            )
-
+            parts.append(self._score_segments(self._scoring_rows(all_terms), plans))
         if phrase_specs:
             parts.append(self._phrase_scores_many(phrase_specs))
-
-        for qid, q, k in ranged_specs:
-            parts.append(
-                self.search_bool(q, k=k)
-                .withColumn("query_id", F.lit(qid))
-                .select("query_id", "doc_id", "score")
-            )
-
+        for q in atom_plans:
+            parts.append(_ranked(self._score_bool_atoms(q), q.k))
         if not parts:
             return self.spark.createDataFrame([], MULTI_RESULT_SCHEMA)
-        per_segment = parts[0]
-        for p in parts[1:]:
-            per_segment = per_segment.unionByName(p)
-        k_pairs = (
-            [(qid, k) for qid, _, _, k in term_specs]
-            + [(qid, k) for qid, _, _, _, _, k, _ in bool_specs]
-            + [(qid, k) for qid, _, k in phrase_specs]
-            + [(qid, k) for qid, _, k in ranged_specs]
-        )
+        per_segment = reduce(DataFrame.unionByName, parts)
+        k_pairs = [(q.query_id, q.k) for q in plans + atom_plans] + [
+            (qid, k) for qid, _, k in phrase_specs
+        ]
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         k_map = F.create_map(
             *[x for qid, k in k_pairs for x in (F.lit(qid), F.lit(k))]
@@ -4045,13 +3964,7 @@ class IndexSearcher:
                 .collect()
             }
             if not counts:
-                return self.spark.createDataFrame(
-                    [],
-                    T.StructType(
-                        [T.StructField("query_id", T.StringType(), False)]
-                        + RESULT_SCHEMA.fields
-                    ),
-                )
+                return self.spark.createDataFrame([], QUERY_RESULT_SCHEMA)
             idf_map = F.create_map(
                 *[
                     x

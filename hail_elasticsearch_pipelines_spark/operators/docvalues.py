@@ -481,8 +481,10 @@ def range_mask(vals: np.ndarray, rt, is_array: bool = False) -> np.ndarray:
 def _rows_and_idf(searcher: "IndexSearcher", qterms):
     """(segment, term, blob) rows for the query terms, plus their
     query-wide idf read on the driver from the pinned termdict."""
+    from .bm25 import query_idf
+
     rows = searcher._scoring_rows(qterms).select("segment", "term", "blob")
-    return rows, searcher._query_idf(qterms)
+    return rows, query_idf(searcher, qterms)
 
 
 def search_range(

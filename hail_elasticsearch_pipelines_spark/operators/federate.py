@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from ..functions import codecs
 from .bm25 import (
     IndexSearcher,
+    QueryPlan,
     _check_scoring_rows,
     _msm_scores,
     _topk,
@@ -189,8 +190,8 @@ def local_search_indices(
             present = [t for t in qterms if t in s.global_dfs(qterms)]
             if not present or (mode_u == "AND" and len(present) < len(qterms)):
                 continue
-            s.last_segments_skipped = 0
-            for d, sc in s._search_pruned(qterms, mode_u, k, idf, avgdl):
+            q = QueryPlan(qterms, mode_u, int(k), idf, avgdl)
+            for d, sc in s._search_pruned(q):
                 hits.append((i, d, sc))
     else:
         for i, s in enumerate(searchers):

@@ -4,9 +4,17 @@ The reference hands queries to Elasticsearch data nodes that read local
 segment files.  The analog here: a searcher process reads ONLY the
 query's term_bucket partition directories (hive pruning) and, within
 them, the term's rows (parquet row-group min/max on the sorted `term`
-column) via pyarrow — millisecond-scale for the lookup, then the SAME
-numpy scoring kernels as the distributed path, so results are
-bit-identical (tests/test_serve.py).
+column) via pyarrow — millisecond-scale for the lookup.
+
+Both searchers run ONE per-segment scorer: the shared planners in
+bm25.py (plan_terms / plan_fielded / plan_bool) build a QueryPlan on
+the driver, and bm25.score_segment chooses the kernel, masks tombstones
+and cuts each segment's top-k — so results are bit-identical
+(tests/test_serve.py).  The executors differ only in scheduling and
+caching: IndexSearcher runs score_segment in one mapInPandas task per
+segment; LocalSearcher._search_pruned runs it in-process over its hot
+term-rows, decoded-postings and block caches, visiting segments in
+bound order with a running top-k.
 
 Scale posture: the distributed `IndexSearcher` is the 10^12-doc path
 (per-segment scoring fans out across executors).  `LocalSearcher` is
@@ -16,29 +24,25 @@ a real serving tier would run on each index node.
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pyarrow.dataset as ds
 
 from ..functions import codecs
 from .bm25 import (
-    _adl,
     _BlockCache,
-    _eval_bool_blockmax,
-    _mask_deleted,
     _phrase_match_counts,
-    _score_intersection,
-    _score_intersection_blockmax,
-    _score_union_blockmax,
-    _score_union_exhaustive,
-    _score_union_maxscore,
     _topk,
+    QueryPlan,
     analyzed_fields_of,
     dv_filter_fields_of,
-    expand_fielded_terms,
     field_avgdl_map,
     load_deletes,
+    plan_bool,
+    plan_fielded,
+    plan_spec,
+    plan_terms,
+    score_segment,
+    segment_bounds,
     term_filter,
     termdict_dfs,
 )
@@ -125,13 +129,14 @@ class LocalSearcher:
         self._cache: dict[tuple[str, int], tuple] = {}
         self._cache_bytes = 0
         self._cache_cap = 256 * 1024 * 1024
-        # block-level cache for the WAND path (keyed (segment) →
-        # {(term, block_idx): decoded block}) and positions cache for
-        # the phrase path — the p99 of both was dominated by re-decoding
-        # hot stopword blocks / position lists on every query.
-        self._bmw_cache: dict[int, dict] = {}
-        self._bmw_cache_blocks = 0
-        self._bmw_cache_max_blocks = 65536
+        # block-level cache (keyed segment → {(term, block_idx): decoded
+        # block}, the _blocks of each segment's _BlockCache: WAND windows
+        # and block-skip gathers) and positions cache for the phrase
+        # path — the p99 of both was dominated by re-decoding hot
+        # stopword blocks / position lists on every query.
+        self._block_cache: dict[int, dict] = {}
+        self._block_cache_blocks = 0
+        self._block_cache_max_blocks = 65536
         self._pos_cache: dict[tuple[str, int], tuple] = {}
         self._pos_cache_bytes = 0
         self._pos_cache_cap = 128 * 1024 * 1024
@@ -176,11 +181,11 @@ class LocalSearcher:
         self._load_snapshot()
         return True
 
-    def _bmw_blocks_for(self, seg: int) -> dict:
-        if self._bmw_cache_blocks >= self._bmw_cache_max_blocks:
-            self._bmw_cache.clear()
-            self._bmw_cache_blocks = 0
-        return self._bmw_cache.setdefault(int(seg), {})
+    def _blocks_for(self, seg: int) -> dict:
+        if self._block_cache_blocks >= self._block_cache_max_blocks:
+            self._block_cache.clear()
+            self._block_cache_blocks = 0
+        return self._block_cache.setdefault(int(seg), {})
 
     def _pos_cached(self, term: str, seg: int, pos_blob, tf: np.ndarray) -> tuple:
         key = (term, int(seg))
@@ -241,9 +246,13 @@ class LocalSearcher:
             for i in range(tbl.num_rows):
                 row = _CacheRow(tbl, i)
                 seg_map = self._rows_cache.setdefault(row.term, {})
-                if int(row.segment) not in seg_map:
-                    self._rows_cache_bytes += row.nbytes()
+                if int(row.segment) in seg_map:
+                    raise ValueError(
+                        f"corrupt index: multiple postings rows for term "
+                        f"{row.term!r} in segment {row.segment}"
+                    )
                 seg_map[int(row.segment)] = row
+                self._rows_cache_bytes += row.nbytes()
             for t in missing:
                 self._rows_cache.setdefault(t, {})
             while (
@@ -259,63 +268,6 @@ class LocalSearcher:
                 old = self._rows_cache.pop(old_t)
                 self._rows_cache_bytes -= sum(r.nbytes() for r in old.values())
         return {t: self._rows_cache[t] for t in terms}
-
-    def _bounds_from_rows(
-        self,
-        rows: dict[str, dict[int, "_CacheRow"]],
-        idf: dict[str, float],
-        avgdl: "float | dict[str, float] | None" = None,
-    ) -> tuple[dict[int, float], dict[int, int]]:
-        """Per-segment score bounds from cached rows (no dataset read):
-        same math as _bounds_from_table."""
-        if avgdl is None:
-            avgdl = self.avgdl
-        bounds: dict[int, float] = {}
-        present: dict[int, int] = {}
-        for t, seg_map in rows.items():
-            for seg, r in seg_map.items():
-                b = idf.get(t, 0.0) * float(
-                    bm25_tf_weight(
-                        np.array([r.block_max_tf.max()], np.float64),
-                        np.array([r.block_min_dl.min()], np.float64),
-                        _adl(avgdl, t),
-                    )[0]
-                )
-                bounds[seg] = bounds.get(seg, 0.0) + b
-                present[seg] = present.get(seg, 0) + 1
-        return bounds, present
-
-    def _bounds_from_table(
-        self,
-        mtbl,
-        idf: dict[str, float],
-        avgdl: "float | dict[str, float] | None" = None,
-    ) -> tuple[dict[int, float], dict[int, int]]:
-        """Per-segment BM25 score upper bounds from any row table
-        carrying (term, segment, block_max_tf, block_min_dl):
-        bound(seg) = Σ_t idf_t · w(max over blocks of max_tf, min over
-        blocks of min_dl).  Mixing one block's max_tf with another's
-        min_dl only loosens the bound (w is ↑ in tf, ↓ in dl), so it
-        stays safe.  Returns (bounds, per-segment present-term counts)."""
-        if avgdl is None:
-            avgdl = self.avgdl
-        bounds: dict[int, float] = {}
-        present: dict[int, int] = {}
-        segs = mtbl["segment"].to_pylist()
-        for i in range(mtbl.num_rows):
-            seg = int(segs[i])
-            t = mtbl["term"][i].as_py()
-            bmt, bmd = mtbl["block_max_tf"][i], mtbl["block_min_dl"][i]
-            b = idf[t] * float(
-                bm25_tf_weight(
-                    np.array([_list_np(bmt, np.int64).max()], np.float64),
-                    np.array([_list_np(bmd, np.int64).min()], np.float64),
-                    _adl(avgdl, t),
-                )[0]
-            )
-            bounds[seg] = bounds.get(seg, 0.0) + b
-            present[seg] = present.get(seg, 0) + 1
-        return bounds, present
 
     def search(
         self,
@@ -338,178 +290,80 @@ class LocalSearcher:
         blobs are ever read or decoded — bit-identical because every
         doc in it scores ≤ bound < k-th (strict, so ties are
         impossible).  ``last_segments_skipped`` reports the count."""
-        terms_sorted = sorted(set(terms))
-        dfs = self.global_dfs(terms_sorted)
-        mode_u = mode.upper()
-        msm = int(min_should_match)
-        if msm > 1 and mode_u != "OR":
-            raise ValueError("min_should_match applies to OR queries only")
-        self.last_segments_skipped = 0
-        if not dfs or (mode_u == "AND" and any(t not in dfs for t in terms_sorted)):
-            return []
-        idf = {t: bm25_idf(self.n_docs, d) for t, d in dfs.items()}
-        avgdl = field_avgdl_map(self.manifest, terms_sorted)
-
-        if msm > 1:
-            from .bm25 import _msm_scores
-
-            rows = self._rows_for(terms_sorted)
-            acc_d = np.array([], np.int64)
-            acc_s = np.array([], np.float64)
-            for seg in sorted({s for m in rows.values() for s in m}):
-                postings = {
-                    t: self._decode_cached(t, seg, rows[t][seg].blob)
-                    for t in terms_sorted
-                    if seg in rows.get(t, {})
-                }
-                postings = _mask_deleted(postings, self._deletes.get(seg))
-                docs, scores = _msm_scores(
-                    postings, terms_sorted, idf, avgdl, msm
-                )
-                if docs.size:
-                    acc_d, acc_s = _topk(
-                        np.concatenate([acc_d, docs]),
-                        np.concatenate([acc_s, scores]),
-                        k,
-                    )
-            return list(zip(acc_d.tolist(), acc_s.tolist()))
-
-        cols = ["term", "segment", "df", "blob", "block_last", "block_max_tf", "block_min_dl", "block_off"]
-        if algo in ("auto", "maxscore") or (
-            mode_u == "AND" and algo != "exhaustive"
-        ):
-            return self._search_pruned(terms_sorted, mode_u, k, idf, avgdl)
-        tbl = self._term_rows(terms_sorted, cols)
-        seg_arr = np.asarray(tbl["segment"].to_pylist())
-        cand_docs, cand_scores = [], []
-        for seg in np.unique(seg_arr):
-            idxs = np.flatnonzero(seg_arr == seg)
-            dead = self._deletes.get(int(seg))
-            if mode_u == "OR" and algo == "bmw":
-                blobs, blocks = {}, {}
-                for i in idxs:
-                    t = tbl["term"][int(i)].as_py()
-                    _put_unique(blobs, t, tbl["blob"][int(i)].as_py())
-                    # arrow-native list extraction: .values.to_numpy is
-                    # O(1)-ish vs as_py()'s per-element Python objects
-                    # (a stopword has thousands of blocks per row)
-                    blocks[t] = (
-                        _list_np(tbl["block_last"][int(i)], np.int64),
-                        idf[t]
-                        * bm25_tf_weight(
-                            _list_np(tbl["block_max_tf"][int(i)], np.int64),
-                            _list_np(tbl["block_min_dl"][int(i)], np.int64),
-                            _adl(avgdl, t),
-                        ),
-                        _list_np(tbl["block_off"][int(i)], np.int32),
-                    )
-                docs, scores = _score_union_blockmax(
-                    blobs,
-                    blocks,
-                    terms_sorted,
-                    idf,
-                    avgdl,
-                    k,
-                    deleted=dead,
-                    decoded=self._bmw_blocks_for(int(seg)),
-                    full_decode=lambda t, s=int(seg): self._decode_cached(
-                        t, s, blobs[t]
-                    ),
-                )
-                self._bmw_cache_blocks = sum(
-                    len(d) for d in self._bmw_cache.values()
-                )
-            else:
-                postings = {}
-                for i in idxs:
-                    t = tbl["term"][int(i)].as_py()
-                    d, tf, dl = self._decode_cached(t, int(seg), tbl["blob"][int(i)])
-                    _put_unique(postings, t, (d, tf, dl))
-                postings = _mask_deleted(postings, dead)
-                if mode_u == "AND":
-                    if not all(t in postings for t in terms_sorted):
-                        continue
-                    docs, scores = _score_intersection(
-                        postings, terms_sorted, idf, avgdl
-                    )
-                else:
-                    docs, scores = _score_union_exhaustive(
-                        postings, terms_sorted, idf, avgdl
-                    )
-                docs, scores = _topk(docs, scores, k)
-            cand_docs.append(docs)
-            cand_scores.append(scores)
-        if not cand_docs:
-            return []
-        all_d = np.concatenate(cand_docs)
-        all_s = np.concatenate(cand_scores)
-        d, s = _topk(all_d, all_s, k)
-        return list(zip(d.tolist(), s.tolist()))
+        return self._search_pruned(
+            plan_terms(self, terms, mode, k, algo, min_should_match)
+        )
 
     def _search_pruned(
-        self,
-        terms_sorted: list[str],
-        mode_u: str,
-        k: int,
-        idf: dict[str, float],
-        avgdl: "float | dict[str, float] | None" = None,
+        self, q: QueryPlan, extra_sets: "dict | None" = None
     ) -> list[tuple[int, float]]:
-        """auto/maxscore/AND-block-skip scoring with cross-segment
-        pruning over the hot term-rows cache: segments score in
-        bound-descending order with a running k-th floor; a segment
+        """The one local scoring loop (term, page, fielded, bool and
+        batch queries): rows come from the hot term-rows cache
+        (_rows_for — cold terms cost one dataset scan, warm terms never
+        touch the dataset, whose scan was the warm-path latency floor),
+        each segment gets a _BlockCache seeded from the decoded-postings
+        and block caches, score_segment picks the kernel, its decodes
+        are harvested back into the caches, and a running top-k merges
+        the segments.
+
+        Term segments missing a required term are never visited.
+        Prunable plans (QueryPlan.prunable) visit segments in
+        bound-descending order with a running k-th floor, and a segment
         whose bound cannot reach the floor is skipped before any of its
-        blobs are DECODED.  Cold terms cost one dataset scan
-        (_rows_for); warm terms never touch the dataset — the pyarrow
-        scan was the warm-path latency floor (r4 bench).  Within each
-        surviving segment the same kernels as the distributed searcher
-        run, seeded from / harvesting into the decoded-postings
-        cache."""
-        if avgdl is None:
-            avgdl = self.avgdl
-        rows = self._rows_for(terms_sorted)
-        bounds, present = self._bounds_from_rows(rows, idf, avgdl)
-        segs = [
-            s
-            for s in bounds
-            if mode_u != "AND" or present[s] == len(terms_sorted)
-        ]
+        blobs are decoded (``last_segments_skipped``).  ``extra_sets``
+        maps a bool plan's atom keys to (doc ids, their segments); the
+        segments it names are visited even when no query term touches
+        them."""
+        self.last_segments_skipped = 0
+        if extra_sets is None and (
+            not q.idf or any(t not in q.idf for t in q.required)
+        ):
+            return []
+        rows = self._rows_for(q.terms)
+        bounds, _strong, segs = segment_bounds(
+            q,
+            (
+                (seg, t, r.df, r.block_max_tf.max(), r.block_min_dl.min())
+                for t in q.terms
+                for seg, r in rows[t].items()
+            ),
+        )
+        if extra_sets is not None:
+            segs = set(segs).union(
+                *(np.unique(s_of).tolist() for _ids, s_of in extra_sets.values())
+            )
         # bound desc, segment asc for deterministic order on ties
-        order = sorted(segs, key=lambda s: (-bounds[s], s))
+        order = sorted(segs, key=lambda s: (-bounds.get(s, 0.0), s))
+        prune = q.prunable
         acc_d = np.array([], np.int64)
         acc_s = np.array([], np.float64)
         floor = -np.inf
         for seg in order:
-            if len(acc_d) >= k and bounds[seg] < floor:
+            if prune and len(acc_d) >= q.k and bounds[seg] < floor:
                 self.last_segments_skipped += 1
                 continue
-            seg_rows = [
-                rows[t][seg] for t in terms_sorted if seg in rows.get(t, {})
-            ]
-            if not seg_rows:
-                continue
-            dead = self._deletes.get(int(seg))
-            cache = _BlockCache(seg_rows)
+            cache = _BlockCache(rows[t][seg] for t in q.terms if seg in rows[t])
             for t in cache.blob:
-                hit = self._cache.get((t, int(seg)))
+                hit = self._cache.get((t, seg))
                 if hit is not None:
                     cache._full[t] = hit
-            if mode_u == "AND":
-                docs, scores = _score_intersection_blockmax(
-                    cache, terms_sorted, idf, avgdl, dead=dead
-                )
-                docs, scores = _topk(docs, scores, k)
-            else:
-                docs, scores = _score_union_maxscore(
-                    cache, terms_sorted, idf, avgdl, k, dead=dead
-                )
+            cache._blocks = self._blocks_for(seg)
+            n_blocks = len(cache._blocks)
+            seg_sets = None
+            if extra_sets is not None:
+                seg_sets = {
+                    rk: ids[s_of == seg] for rk, (ids, s_of) in extra_sets.items()
+                }
+            docs, scores = score_segment(q, cache, self._deletes.get(seg), seg_sets)
+            self._block_cache_blocks += len(cache._blocks) - n_blocks
             for t, out in cache._full.items():
-                self._cache_put(t, int(seg), out)
+                self._cache_put(t, seg, out)
             acc_d, acc_s = _topk(
                 np.concatenate([acc_d, docs]),
                 np.concatenate([acc_s, scores]),
-                k,
+                q.k,
             )
-            if len(acc_d) >= k:
+            if len(acc_d) >= q.k:
                 floor = float(acc_s[-1])
         return list(zip(acc_d.tolist(), acc_s.tolist()))
 
@@ -720,58 +574,9 @@ class LocalSearcher:
         hot-row cache (OR mode adds cross-segment pruning).  mode="BEST"
         is the dis_max / best_fields variant (same kernel as the
         distributed twin)."""
-        from .bm25 import (
-            _fielded_and_scores,
-            _fielded_best_scores,
-            _mask_deleted,
-            fielded_term_field,
+        return self._search_pruned(
+            plan_fielded(self, terms, fields, k, mode, tie_breaker)
         )
-
-        mode_u = mode.upper()
-        text_fields = analyzed_fields_of(self.manifest)
-        if fields is None:
-            fields = {"text": 1.0, **{f: 1.0 for f in text_fields}}
-        expanded, weight = expand_fielded_terms(terms, fields, text_fields)
-        avgdl = field_avgdl_map(self.manifest, expanded)
-        dfs = self.global_dfs(expanded)
-        self.last_segments_skipped = 0
-        if not dfs:
-            return []
-        idf = {
-            t: weight[t] * bm25_idf(self.n_docs, d) for t, d in dfs.items()
-        }
-        if mode_u not in ("AND", "BEST"):
-            return self._search_pruned(expanded, "OR", k, idf, avgdl)
-        variants = {
-            t: sorted(t if f == "text" else f"{f}:{t}" for f in fields)
-            for t in dict.fromkeys(terms)
-        }
-        field_of = {t: fielded_term_field(t) for t in expanded}
-        rows = self._rows_for(expanded)
-        acc_d = np.array([], np.int64)
-        acc_s = np.array([], np.float64)
-        for seg in sorted({s for m in rows.values() for s in m}):
-            postings = {
-                t: self._decode_cached(t, seg, rows[t][seg].blob)
-                for t in expanded
-                if seg in rows.get(t, {})
-            }
-            postings = _mask_deleted(postings, self._deletes.get(seg))
-            if mode_u == "AND":
-                docs, scores = _fielded_and_scores(
-                    postings, variants, expanded, idf, avgdl
-                )
-            else:
-                docs, scores = _fielded_best_scores(
-                    postings, field_of, expanded, idf, avgdl, tie_breaker
-                )
-            if docs.size:
-                acc_d, acc_s = _topk(
-                    np.concatenate([acc_d, docs]),
-                    np.concatenate([acc_s, scores]),
-                    k,
-                )
-        return list(zip(acc_d.tolist(), acc_s.tolist()))
 
     def search_facets(
         self,
@@ -874,44 +679,9 @@ class LocalSearcher:
         """Keyset pagination (ES ``search_after``), serving-path twin of
         IndexSearcher.search_page: top-k matches strictly after cursor
         (score, doc_id) in (score desc, doc_id asc) order."""
-        terms_sorted = sorted(set(terms))
-        dfs = self.global_dfs(terms_sorted)
-        mode_u = mode.upper()
-        if not dfs or (mode_u == "AND" and any(t not in dfs for t in terms_sorted)):
-            return []
-        idf = {t: bm25_idf(self.n_docs, d) for t, d in dfs.items()}
-        tbl = self._term_rows(terms_sorted, ["term", "segment", "blob"])
-        seg_arr = np.asarray(tbl["segment"].to_pylist())
-        cand_d, cand_s = [], []
-        for seg in np.unique(seg_arr):
-            idxs = np.flatnonzero(seg_arr == seg)
-            postings = {}
-            for i in idxs:
-                t = tbl["term"][int(i)].as_py()
-                d, tf, dl = self._decode_cached(t, int(seg), tbl["blob"][int(i)])
-                _put_unique(postings, t, (d, tf, dl))
-            postings = _mask_deleted(postings, self._deletes.get(int(seg)))
-            if mode_u == "AND":
-                if not all(t in postings for t in terms_sorted):
-                    continue
-                docs, scores = _score_intersection(
-                    postings, terms_sorted, idf, self.avgdl
-                )
-            else:
-                docs, scores = _score_union_exhaustive(
-                    postings, terms_sorted, idf, self.avgdl
-                )
-            if after is not None and docs.size:
-                s_a, d_a = float(after[0]), int(after[1])
-                keep = (scores < s_a) | ((scores == s_a) & (docs > d_a))
-                docs, scores = docs[keep], scores[keep]
-            docs, scores = _topk(docs, scores, k)
-            cand_d.append(docs)
-            cand_s.append(scores)
-        if not cand_d:
-            return []
-        d, s = _topk(np.concatenate(cand_d), np.concatenate(cand_s), k)
-        return list(zip(d.tolist(), s.tolist()))
+        return self._search_pruned(
+            plan_terms(self, terms, mode, k, algo="exhaustive", after=after)
+        )
 
     def warm_top_terms(self, n: int = 256) -> int:
         """ES index-warmer analog: preload the ``n`` highest-df terms —
@@ -2522,177 +2292,56 @@ class LocalSearcher:
 
     def search_many(self, specs: list[dict]) -> dict[str, list[tuple[int, float]]]:
         """msearch analog: term ("OR"/"AND"), "BOOL" (query string) and
-        "PHRASE" specs — same spec shape as IndexSearcher.search_many;
-        the searcher's caches amortize shared terms across the batch."""
+        "PHRASE" specs — same spec shape and planner as
+        IndexSearcher.search_many; the searcher's caches amortize shared
+        terms across the batch."""
         out: dict[str, list[tuple[int, float]]] = {}
         for s in specs:
-            mode = s.get("mode", "OR").upper()
-            k = int(s.get("k", 10))
-            if mode == "BOOL":
-                out[s["query_id"]] = self.search_bool(s["query"], k)
-            elif mode == "PHRASE":
-                out[s["query_id"]] = self.search_phrase(list(s["phrase"]), k)
-            else:
-                out[s["query_id"]] = self.search(s["terms"], mode, k)
+            if s.get("mode", "OR").upper() == "PHRASE":
+                out[s["query_id"]] = self.search_phrase(
+                    list(s["phrase"]), int(s.get("k", 10))
+                )
+                continue
+            q = plan_spec(self, s)
+            out[q.query_id] = self._search_pruned(q, self._atom_sets(q))
         return out
 
     def search_bool(
         self, query: str, k: int = 10, synonyms: "dict | None" = None
     ) -> list[tuple[int, float]]:
-        """Boolean query string — same semantics as
-        IndexSearcher.search_bool, no Spark jobs."""
-        import numpy as np
+        """Boolean query string — same semantics and planner as
+        IndexSearcher.search_bool, no Spark jobs.  Required conjuncts
+        (and no atoms) → block-skip evaluation with cross-segment
+        pruning (bound summed over POSITIVE terms only — facet/NOT
+        terms filter, never score)."""
+        q = plan_bool(self, query, k, synonyms)
+        return self._search_pruned(q, self._atom_sets(q))
 
+    def _atom_sets(self, q: QueryPlan) -> "dict[str, tuple] | None":
+        """A bool plan's range / quoted-phrase / nested atoms (filter
+        context) resolved once: atom key → (matching doc ids, their
+        segments), from cached doc values / positional chain matches /
+        the nested sidecar.  None when the plan has no atoms."""
+        if not q.atoms:
+            return None
         from ..functions import boolquery as bq
+        from . import nested as nst
+        from .docvalues import range_mask
 
-        from .bm25 import nested_paths_of
-
-        ast = bq.parse(
-            query,
-            analyzed_fields=set(analyzed_fields_of(self.manifest)),
-            dv_fields=dv_filter_fields_of(self.manifest),
-            nested_fields=nested_paths_of(self.manifest),
-        )
-        if bq.has_wildcards(ast):
-            ast = bq.expand_wildcards(
-                ast, self.expand_prefix, self.expand_fuzzy
+        g, p = self.manifest["globals"], self.manifest["params"]
+        dpp, seg_group = int(g["docs_per_part"]), int(p["seg_group"])
+        sets: dict[str, np.ndarray] = {}
+        for rt in bq.range_atoms(q.ast):
+            all_ids, vals = self._docvalues(rt.field)
+            ids = all_ids[range_mask(vals, rt, rt.field in self._dv_array_fields)]
+            sets[rt.key()] = ids
+        for pt in bq.phrase_atoms(q.ast):
+            sets[pt.key()] = np.sort(
+                self._phrase_match_rows(list(pt.tokens), pt.slop)[0]
             )
-        if synonyms:
-            ast = bq.expand_synonyms(ast, synonyms)
-        terms = bq.all_terms(ast)
-        pos_terms = bq.positive_terms(ast)
-        req = bq.required_terms(ast)
-        ranges = bq.range_atoms(ast)
-        phrases = bq.phrase_atoms(ast)
-        nested = bq.nested_atoms(ast)
-        if not pos_terms:
-            raise bq.QueryParseError("query has no positive terms")
-        avgdl = field_avgdl_map(self.manifest, terms)
-        dfs = self.global_dfs(terms)
-        boosts = bq.term_boosts(ast)
-        idf = {
-            t: bm25_idf(self.n_docs, d) * boosts.get(t, 1.0)
-            for t, d in dfs.items()
-        }
-        range_sets: dict[str, tuple] = {}
-        if ranges or phrases or nested:
-            # doc-value range / quoted-phrase / nested atoms (filter
-            # context): resolve allowed ids once (cached doc values /
-            # positional chain matches / nested-sidecar scan), sliced
-            # per segment below; forces the doc-set evaluation path
-            from .docvalues import range_mask
-
-            req = []
-            g, p = self.manifest["globals"], self.manifest["params"]
-            dpp, seg_group = int(g["docs_per_part"]), int(p["seg_group"])
-            for rt in ranges:
-                all_ids, vals = self._docvalues(rt.field)
-                ids = all_ids[
-                    range_mask(vals, rt, rt.field in self._dv_array_fields)
-                ]
-                range_sets[rt.key()] = (ids, (ids // dpp) // seg_group)
-            for pt in phrases:
-                ids = np.sort(
-                    self._phrase_match_rows(list(pt.tokens), pt.slop)[0]
-                )
-                range_sets[pt.key()] = (ids, (ids // dpp) // seg_group)
-            for nt in nested:
-                from . import nested as nst
-
-                ids = nst.local_atom_ids(self, nt)
-                range_sets[nt.key()] = (ids, (ids // dpp) // seg_group)
-        if req:
-            # required conjuncts → same block-skip evaluation as the
-            # distributed searcher, seeded from the decoded-postings
-            # cache and harvesting back into it.  Cross-segment pruning
-            # (r4): segments missing a required term are dropped from
-            # metadata alone, the rest score in bound-desc order (bound
-            # summed over POSITIVE terms only — facet/NOT terms filter,
-            # never score) with a running k-th floor.
-            cols = [
-                "term", "segment", "df", "blob",
-                "block_last", "block_max_tf", "block_min_dl", "block_off",
-            ]
-            tbl = self._term_rows(terms, cols)
-            seg_arr = np.asarray(tbl["segment"].to_pylist())
-            pos_idf = {t: idf.get(t, 0.0) for t in pos_terms}
-            bounds, _present = self._bounds_from_table(
-                tbl, {**{t: 0.0 for t in terms}, **pos_idf}, avgdl
-            )
-            req_count: dict[int, int] = {}
-            req_set = set(req)
-            terms_col = tbl["term"].to_pylist()
-            for i in range(tbl.num_rows):
-                if terms_col[i] in req_set:
-                    s_ = int(seg_arr[i])
-                    req_count[s_] = req_count.get(s_, 0) + 1
-            order = sorted(
-                (s for s in bounds if req_count.get(s, 0) == len(req_set)),
-                key=lambda s: (-bounds[s], s),
-            )
-            self.last_segments_skipped = 0
-            acc_d = np.array([], np.int64)
-            acc_s = np.array([], np.float64)
-            floor = -np.inf
-            for seg in order:
-                if len(acc_d) >= k and bounds[seg] < floor:
-                    self.last_segments_skipped += 1
-                    continue
-                idxs = np.flatnonzero(seg_arr == seg)
-                cache = _BlockCache(_CacheRow(tbl, int(i)) for i in idxs)
-                for t in cache.blob:
-                    hit = self._cache.get((t, int(seg)))
-                    if hit is not None:
-                        cache._full[t] = hit
-                docs, scores = _eval_bool_blockmax(
-                    cache, ast, req, pos_terms, idf, avgdl,
-                    dead=self._deletes.get(int(seg)),
-                )
-                for t, out in cache._full.items():
-                    self._cache_put(t, int(seg), out)
-                docs, scores = _topk(docs, scores, k)
-                acc_d, acc_s = _topk(
-                    np.concatenate([acc_d, docs]),
-                    np.concatenate([acc_s, scores]),
-                    k,
-                )
-                if len(acc_d) >= k:
-                    floor = float(acc_s[-1])
-            return list(zip(acc_d.tolist(), acc_s.tolist()))
-        tbl = self._term_rows(terms, ["term", "segment", "blob"])
-        seg_arr = np.asarray(tbl["segment"].to_pylist())
-        seg_list = set(np.unique(seg_arr).tolist())
-        for _ids, segs in range_sets.values():
-            # range-only OR branches can match in segments none of the
-            # query terms touch
-            seg_list |= set(np.unique(segs).tolist())
-        cand_d, cand_s = [], []
-        for seg in sorted(seg_list):
-            idxs = np.flatnonzero(seg_arr == seg)
-            postings = {}
-            for i in idxs:
-                t = tbl["term"][int(i)].as_py()
-                d, tf, dl = self._decode_cached(t, int(seg), tbl["blob"][int(i)])
-                _put_unique(postings, t, (d, tf, dl))
-            dead = self._deletes.get(int(seg))
-            postings = _mask_deleted(postings, dead)
-            doc_sets = {t: p[0] for t, p in postings.items()}
-            for rk, (ids, segs) in range_sets.items():
-                sel = ids[segs == seg]
-                if dead is not None and dead.size and sel.size:
-                    sel = sel[~np.isin(sel, dead, assume_unique=True)]
-                doc_sets[rk] = sel
-            cand = bq.eval_docs(ast, doc_sets)
-            if isinstance(cand, tuple) or cand.size == 0:
-                continue
-            scores = bq.score_candidates(cand, postings, pos_terms, idf, avgdl)
-            d, s = _topk(cand, scores, k)
-            cand_d.append(d)
-            cand_s.append(s)
-        if not cand_d:
-            return []
-        d, s = _topk(np.concatenate(cand_d), np.concatenate(cand_s), k)
-        return list(zip(d.tolist(), s.tolist()))
+        for nt in bq.nested_atoms(q.ast):
+            sets[nt.key()] = nst.local_atom_ids(self, nt)
+        return {rk: (ids, (ids // dpp) // seg_group) for rk, ids in sets.items()}
 
     def _phrase_match_rows(
         self,

@@ -438,3 +438,104 @@ def test_fielded_best_tie_breaker_semantics(spark, fielded_index):
     )
     for d, s1 in best1:
         assert best0[d] <= s1 + 1e-12
+
+
+# --- one per-segment scorer: distributed == local == exhaustive --------------
+
+MIXED = ["title:alpha", "title:beta", "omega"]
+# doc ids follow url order and _fielded_pdf stamps doc i at base + i s,
+# so this range atom keeps doc ids >= 30
+LATE = "warc_ts:[2025-01-01T00:00:30 TO *]"
+PARITY_CASES = (
+    [f"search-{m}-{a}" for m in ("OR", "AND") for a in ("auto", "maxscore", "bmw", "exhaustive")]
+    + ["search-msm2", "page-1", "page-2", "many-terms", "many-bool"]
+    + ["fielded-OR", "fielded-AND", "fielded-BEST", "bool", "bool-range"]
+)
+
+
+def _pairs(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def _parity_answers(case, s, ls, pdf):
+    """(distributed, local, exhaustive reference) answers for one case,
+    k=5 over terms that mix title-field and body terms."""
+
+    def exhaustive(mode, k=5, **kw):
+        return _pairs(s.search(MIXED, mode, k, algo="exhaustive", **kw))
+
+    def many(spec):
+        rows = sorted(s.search_many([spec]).collect(), key=lambda r: r["rank"])
+        dist = [(r["doc_id"], r["score"]) for r in rows]
+        return dist, ls.search_many([spec])[spec["query_id"]]
+
+    kind, _, arg = case.partition("-")
+    if kind == "search" and arg == "msm2":
+        return (
+            _pairs(s.search(MIXED, "OR", 5, min_should_match=2)),
+            ls.search(MIXED, "OR", 5, min_should_match=2),
+            exhaustive("OR", min_should_match=2),
+        )
+    if kind == "search":
+        mode, algo = arg.split("-")
+        return (
+            _pairs(s.search(MIXED, mode, 5, algo=algo)),
+            ls.search(MIXED, mode, 5, algo=algo),
+            exhaustive(mode),
+        )
+    if kind == "page":
+        after = None
+        if arg == "2":  # the cursor is (score, doc_id) of page 1's last hit
+            doc, score = ls.search_page(MIXED, "OR", 5)[-1]
+            after = (score, doc)
+        return (
+            _pairs(s.search_page(MIXED, "OR", 5, after=after)),
+            ls.search_page(MIXED, "OR", 5, after=after),
+            exhaustive("OR", 10)[:5] if arg == "1" else exhaustive("OR", 10)[5:],
+        )
+    if kind == "many" and arg == "terms":
+        spec = {"query_id": "t", "terms": MIXED, "mode": "OR", "k": 5}
+        return (*many(spec), exhaustive("OR"))
+    if kind == "many":
+        spec = {"query_id": "b", "mode": "BOOL", "query": "gam* OR omega", "k": 5}
+        return (*many(spec), _pairs(s.search_bool("gam* OR omega", k=5)))
+    if kind == "fielded":
+        # unit weights: most_fields OR is a plain search over the
+        # expanded terms; AND/BEST references are the brute forces
+        ones = {"text": 1.0, "title": 1.0}
+        terms = ["alpha", "beta", "omega"]
+        ref = {
+            "OR": lambda: _pairs(
+                s.search(
+                    terms + [f"title:{t}" for t in terms], "OR", 5, algo="exhaustive"
+                )
+            ),
+            "AND": lambda: _brute_fielded_and(pdf, terms, ones, 5),
+            "BEST": lambda: _brute_fielded_best(pdf, terms, ones, 5, 0.3),
+        }[arg]()
+        return (
+            _pairs(s.search_fielded(terms, ones, k=5, mode=arg, tie_breaker=0.3)),
+            ls.search_fielded(terms, ones, k=5, mode=arg, tie_breaker=0.3),
+            ref,
+        )
+    if arg == "range":
+        q = f"(title:alpha OR title:beta OR omega) AND {LATE}"
+        ref = [(d, sc) for d, sc in exhaustive("OR", 200) if d >= 30][:5]
+    else:
+        q = "title:alpha AND title:beta AND omega"
+        ref = exhaustive("AND")
+    return _pairs(s.search_bool(q, k=5)), ls.search_bool(q, k=5), ref
+
+
+@pytest.mark.parametrize("case", PARITY_CASES)
+def test_fielded_terms_dist_local_exhaustive_parity(spark, fielded_index, case):
+    """Every query type runs the one per-segment scorer: with title-field
+    terms mixed in, the distributed and local searchers return the
+    exhaustive answer bit for bit (field avgdl per term, BOOL specs of a
+    batch expanded like search_bool)."""
+    out, _, pdf = fielded_index
+    dist, local, ref = _parity_answers(
+        case, IndexSearcher(spark, out), LocalSearcher(out), pdf
+    )
+    assert ref, "the case must match documents"
+    assert dist == local == ref

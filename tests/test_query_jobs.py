@@ -49,6 +49,15 @@ def _jobs(spark, group, fn):
             3,
         ),
         ("range", lambda s: s.search_range(["the"], "doc_len", 50, 500, k=7).collect(), 4),
+        ("page", lambda s: s.search_page(["the", "of"], "OR", 5, after=(1.0, 3)).collect(), 2),
+        ("fielded", lambda s: s.search_fielded(["the", "of"], k=5, mode="BEST").collect(), 2),
+        (
+            "bool_range",
+            lambda s: s.search_bool(
+                "the AND warc_ts:[2025-01-20T00:00:00 TO *]", k=10
+            ).collect(),
+            4,
+        ),
         ("global_dfs", lambda s: s.global_dfs(["the", "of", "term0042"]), 0),
     ],
 )

@@ -71,3 +71,41 @@ def test_local_and_blockmax_matches_exhaustive(small_index):
         a = ls.search(terms, "AND", 25, algo="auto")
         b = ls.search(terms, "AND", 25, algo="exhaustive")
         assert a == b, terms
+
+
+def test_duplicate_posting_rows_raise_on_every_path(spark, small_index, tmp_path):
+    """Two postings rows for one (term, segment) mean a corrupt index (a
+    misaligned extend): every local scoring path and the distributed
+    searcher refuse it instead of scoring one of the copies."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from hail_elasticsearch_pipelines_spark.layout import load_manifest, table_path
+    from hail_elasticsearch_pipelines_spark.operators.bm25 import IndexSearcher
+    from hail_elasticsearch_pipelines_spark.operators.index_build import term_bucket
+
+    src, _ = small_index
+    out = str(tmp_path / "idx")
+    shutil.copytree(src, out)
+    manifest = load_manifest(out)
+    bucket_dir = os.path.join(
+        table_path(out, "postings", manifest),
+        f"term_bucket={term_bucket('the', manifest['params']['n_term_buckets'])}",
+    )
+    part = next(
+        f
+        for f in sorted(glob.glob(os.path.join(bucket_dir, "*.parquet")))
+        if "the" in pq.read_table(f, columns=["term"]).column("term").to_pylist()
+    )
+    shutil.copy(part, os.path.join(bucket_dir, "dup-" + os.path.basename(part)))
+
+    for algo in ("auto", "bmw", "exhaustive"):
+        with pytest.raises(ValueError, match="corrupt index: multiple postings rows"):
+            LocalSearcher(out).search(["the", "of"], "OR", 5, algo=algo)
+    with pytest.raises(ValueError, match="corrupt index: multiple postings rows"):
+        LocalSearcher(out).search_bool("the AND of", k=5)
+    with pytest.raises(Exception, match="corrupt index: multiple postings rows"):
+        IndexSearcher(spark, out).search(["the", "of"], "OR", 5).collect()
