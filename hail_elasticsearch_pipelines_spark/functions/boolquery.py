@@ -533,6 +533,28 @@ def range_atoms(node) -> list:
     return out
 
 
+def filter_atoms(node) -> list:
+    """Range, then phrase, then nested atoms of the AST — the
+    filter-context sets a searcher resolves outside the term postings
+    (none for a term-list query, ``node`` None)."""
+    if node is None:
+        return []
+    return range_atoms(node) + phrase_atoms(node) + nested_atoms(node)
+
+
+def reject_filter_atoms(node, api: str, allowed: tuple = ()) -> None:
+    """Raise QueryParseError on the driver when the AST holds a filter
+    atom ``api`` cannot evaluate (any type outside ``allowed``) — an
+    API that reads term postings only would otherwise fail inside a
+    task, or count an unresolvable atom as matching nothing."""
+    for atom in filter_atoms(node):
+        if not isinstance(atom, allowed):
+            raise QueryParseError(
+                f"{api} does not support the atom {atom.key()!r} (doc-value "
+                "range, quoted phrase or nested)"
+            )
+
+
 def has_wildcards(node) -> bool:
     """True when any atom needs termdict expansion (wildcard OR fuzzy)."""
     if isinstance(node, (RangeTerm, PhraseTerm, NestedTerm)):

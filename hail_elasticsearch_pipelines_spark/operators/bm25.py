@@ -399,6 +399,10 @@ def read_segment_deletes(
     return out
 
 
+DEFAULT_MAX_EXPANSIONS = 128  # prefix / regexp expansion cap
+DEFAULT_FUZZY_EXPANSIONS = 50  # the ES fuzzy-query default
+
+
 class ExpansionError(ValueError):
     """A multi-term expansion (prefix, wildcard, fuzzy) produced more
     terms than ``max_expansions`` — the ES ``too_many_clauses`` analog.
@@ -419,10 +423,9 @@ class RegexpExpansionError(ExpansionError):
 
 
 def py_levenshtein(a: str, b: str) -> int:
-    """Classic unit-cost Levenshtein — the exact algorithm of Spark's
-    ``levenshtein`` expression and DuckDB's ``levenshtein`` (no
-    transposition primitive, unlike ES's default Damerau variant), so
-    the serving path, the distributed path, and the SQL oracle agree
+    """Classic unit-cost Levenshtein — the exact algorithm of DuckDB's
+    ``levenshtein`` (no transposition primitive, unlike ES's default
+    Damerau variant), so fuzzy expansion and the SQL oracle agree
     term-for-term."""
     if a == b:
         return 0
@@ -489,12 +492,11 @@ def prefix_term_range(prefix: str) -> tuple[str, str]:
     return prefix, prefix[:-1] + chr(ord(prefix[-1]) + 1)
 
 
-# the regexp-query charset every engine in play interprets identically
-# (Java java.util.regex via rlike, Python re on the serving twin, RE2
-# via DuckDB regexp_matches in the oracle): literals, char classes,
-# grouping, alternation, and the * + ? quantifiers.  No escapes, no
-# braces, no anchors, no lookaround — ES regexp is likewise its own
-# conservative dialect (and implicitly anchored, as here).
+# the regexp-query charset that Python re (the expansion) and RE2 (via
+# DuckDB regexp_matches in the oracle) interpret identically: literals,
+# char classes, grouping, alternation, and the * + ? quantifiers.  No
+# escapes, no braces, no anchors, no lookaround — ES regexp is likewise
+# its own conservative dialect (and implicitly anchored, as here).
 _REGEXP_SAFE = re.compile(r"^[a-z0-9.*+?()\[\]|\-]+$")
 
 _REGEXP_META = ".*+?()[]|"
@@ -847,6 +849,203 @@ def termdict_dfs(
         use_threads=False,
     )
     return dict(zip(tbl["term"].to_pylist(), map(int, tbl["df"].to_pylist())))
+
+
+class TermdictFrontEnd:
+    """The query front end both searchers share, read on the driver from
+    the snapshot-pinned term dictionary with no Spark job: global df,
+    prefix / fuzzy / regexp expansion, facet vocabulary and the one
+    query-string parse — the Elasticsearch query rewrite against the
+    terms dictionary, ahead of the query phase.
+
+    A subclass sets ``manifest``, ``n_term_buckets`` and ``_termdict``
+    (a pyarrow dataset over the snapshot's termdict: one row per term,
+    sorted ``term`` column, so a range filter prunes row groups)."""
+
+    def global_dfs(self, terms: list[str]) -> dict[str, int]:
+        """Global document frequency per term (absent terms absent) —
+        a bucket-pruned termdict read, never posting blobs."""
+        return termdict_dfs(self._termdict, terms, self.n_term_buckets)
+
+    def _terms_where(self, flt: "ds.Expression | None") -> list[str]:
+        return self._termdict.to_table(filter=flt, columns=["term"])["term"].to_pylist()
+
+    def expand_prefix(
+        self, prefix: str, max_expansions: int = DEFAULT_MAX_EXPANSIONS
+    ) -> list[str]:
+        """Indexed terms starting with ``prefix``, sorted — a termdict
+        RANGE scan ([prefix, prefix+1) on the sorted term column, the
+        Lucene terms-enum seekCeil analog; the reference gets this from
+        ES regex/wildcard field matching, elasticsearch_client.py:166-
+        177).  A body prefix never expands into field-prefixed or facet
+        terms (facet tokens ``__f_v__`` sort before 'a' and only a '_'
+        prefix, which the validator rejects, reaches them); ``title:fo``
+        expands within the title field.  More than ``max_expansions``
+        matches raises PrefixExpansionError (the ES too_many_clauses
+        analog) — silently truncating would return a plausible but
+        wrong ranking."""
+        lo, hi = prefix_term_range(prefix)
+        terms = self._terms_where((ds.field("term") >= lo) & (ds.field("term") < hi))
+        if ":" not in prefix:
+            terms = [t for t in terms if ":" not in t]
+        if len(terms) > max_expansions:
+            raise PrefixExpansionError(
+                f"prefix {prefix!r} expands to more than {max_expansions} "
+                "terms; narrow the prefix or raise max_expansions"
+            )
+        return sorted(terms)
+
+    def expand_fuzzy(
+        self,
+        term: str,
+        max_edits: int = 1,
+        prefix_length: int = 0,
+        max_expansions: int = DEFAULT_FUZZY_EXPANSIONS,
+    ) -> list[str]:
+        """Indexed terms within ``max_edits`` Levenshtein edits of
+        ``term``, sorted — the ES ``fuzzy`` query's expansion (Lucene
+        walks a Levenshtein automaton over its terms index; the analog
+        here is a termdict scan with LENGTH pushdown ±max_edits and,
+        with ``prefix_length`` > 0, the same sorted-term range pruning
+        as prefixes).  Distance is classic unit-cost Levenshtein
+        (py_levenshtein_within), the same as DuckDB's ``levenshtein`` in
+        the oracle.  ``term`` may be field-prefixed (``title:foo``) to
+        fuzz within an analyzed field.  Over ``max_expansions`` matches
+        raises FuzzyExpansionError."""
+        import pyarrow.compute as pc
+
+        if not _PREFIX_RE.match(term):
+            raise ValueError(
+                f"bad fuzzy term {term!r}: expected lowercase [a-z0-9]+ "
+                "with an optional 'field:' prefix"
+            )
+        field, body = term.split(":", 1) if ":" in term else (None, term)
+        # length ±max_edits pushed into the scan (plus the field's
+        # prefix bytes) — the termdict materializes only plausible
+        # candidates, not the whole vocabulary
+        base = len(term) - len(body)
+        flt = pc.utf8_length(ds.field("term")).cast("int64").isin(
+            list(
+                range(
+                    max(1, base + len(body) - max_edits),
+                    base + len(body) + max_edits + 1,
+                )
+            )
+        )
+        if prefix_length > 0:
+            lo, hi = prefix_term_range(term[:base + prefix_length])
+            flt = flt & (ds.field("term") >= lo) & (ds.field("term") < hi)
+        out = []
+        pre = f"{field}:" if field is not None else None
+        for t in self._terms_where(flt):
+            if pre is not None:
+                if not t.startswith(pre):
+                    continue
+                tb = t.split(":", 1)[1]
+            else:
+                if ":" in t or t.startswith("__"):
+                    continue
+                tb = t
+            if py_levenshtein_within(tb, body, max_edits):
+                out.append(t)
+                if len(out) > max_expansions:
+                    raise FuzzyExpansionError(
+                        f"fuzzy term {term!r} (edits≤{max_edits}) expands "
+                        f"to more than {max_expansions} terms; raise "
+                        "max_expansions or prefix_length"
+                    )
+        return sorted(out)
+
+    def expand_regexp(
+        self,
+        pattern: str,
+        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
+        field: "str | None" = None,
+    ) -> list[str]:
+        """Indexed terms fully matching ``pattern`` (implicitly
+        anchored ``re.fullmatch``, conservative cross-engine dialect —
+        see check_regexp), sorted — the ES ``regexp`` query's expansion.
+        The reference's ES client matches fields by regex the same way
+        (elasticsearch_client.py:166-177).  The termdict scan prunes to
+        the union of the pattern's top-level branch prefix ranges when
+        every branch has one.  ``field`` scopes the match to an analyzed
+        field's terms.  Over ``max_expansions`` matches raises
+        RegexpExpansionError."""
+        check_regexp(pattern)
+        if field is not None and not re.fullmatch(r"[a-z0-9]+", field):
+            raise ValueError(f"bad field name {field!r}")
+        flt = None
+        for lit in regexp_prefixes(pattern):
+            pfx = f"{field}:{lit}" if field is not None else lit
+            lo, hi = prefix_term_range(pfx)
+            r = (ds.field("term") >= lo) & (ds.field("term") < hi)
+            flt = r if flt is None else (flt | r)
+        if flt is None and field is not None:
+            # [field:, field;) — ';' = chr(ord(':')+1) bounds exactly
+            # the field-prefixed terms even with no literal prefix
+            flt = (ds.field("term") >= field + ":") & (ds.field("term") < field + ";")
+        rex = re.compile(pattern)
+        terms = []
+        for t in self._terms_where(flt):
+            if field is not None:
+                body = t.split(":", 1)[1]
+            elif ":" in t or t.startswith("__"):
+                continue
+            else:
+                body = t
+            if rex.fullmatch(body):
+                terms.append(t)
+                if len(terms) > max_expansions:
+                    raise RegexpExpansionError(
+                        f"regexp {pattern!r} expands to more than "
+                        f"{max_expansions} terms; narrow the pattern or "
+                        "raise max_expansions"
+                    )
+        return sorted(terms)
+
+    def facet_terms(self, fields: list[str]) -> dict[str, list[str]]:
+        """field → its indexed facet tokens (``__<field>_<value>__``),
+        sorted — one termdict read whose filter is a range of the sorted
+        term column per field, never the whole vocabulary.  Pseudo-field
+        ``dlen`` covers the power-of-two doc-length bucket tokens."""
+        out: dict[str, list[str]] = {f: [] for f in fields}
+        if not fields:
+            return out
+        # '`' = chr(ord('_')+1): [__f_, __f`) holds exactly the tokens
+        # starting with '__f_'
+        flt = reduce(
+            lambda a, b: a | b,
+            (
+                (ds.field("term") >= f"__{f}_") & (ds.field("term") < f"__{f}`")
+                for f in fields
+            ),
+        )
+        for t in sorted(self._terms_where(flt)):
+            if t.endswith("__"):
+                out[next(f for f in fields if t.startswith(f"__{f}_"))].append(t)
+        return out
+
+    def parse_query(self, query, mode: str, expand: bool = True):
+        """(ast | None, sorted query terms) for a term list (mode
+        "OR"/"AND": no AST) or a boolean query string (mode "BOOL") —
+        the one query-string parse of the engine.  A string parses
+        against this index's analyzed, doc-value and nested fields, and
+        its wildcard/fuzzy atoms expand through the termdict unless
+        ``expand`` is False.  APIs that evaluate term postings only
+        reject range/phrase/nested atoms with bq.reject_filter_atoms."""
+        from ..functions import boolquery as bq
+
+        if mode.upper() != "BOOL":
+            return None, sorted(set(query))
+        ast = bq.parse(
+            query,
+            analyzed_fields=set(analyzed_fields_of(self.manifest)),
+            dv_fields=dv_filter_fields_of(self.manifest),
+            nested_fields=nested_paths_of(self.manifest),
+        )
+        if expand and bq.has_wildcards(ast):
+            ast = bq.expand_wildcards(ast, self.expand_prefix, self.expand_fuzzy)
+        return ast, bq.all_terms(ast)
 
 
 def _per_segment_apply(rows: DataFrame, fn, schema) -> DataFrame:
@@ -1418,30 +1617,21 @@ def plan_bool(
     raises QueryParseError."""
     from ..functions import boolquery as bq
 
-    manifest = searcher.manifest
-    ast = bq.parse(
-        query,
-        analyzed_fields=set(analyzed_fields_of(manifest)),
-        dv_fields=dv_filter_fields_of(manifest),
-        nested_fields=nested_paths_of(manifest),
-    )
-    if bq.has_wildcards(ast):
-        ast = bq.expand_wildcards(ast, searcher.expand_prefix, searcher.expand_fuzzy)
+    ast, terms = searcher.parse_query(query, "BOOL")
     if synonyms:
         # ES synonym_graph at search time — a pure query rewrite, so
         # every kernel sees a plain boolean AST
         ast = bq.expand_synonyms(ast, synonyms)
+        terms = bq.all_terms(ast)
     pos_terms = bq.positive_terms(ast)
     if not pos_terms:
         raise bq.QueryParseError("query has no positive terms")
-    terms = bq.all_terms(ast)
     boosts = bq.term_boosts(ast)
     idf = {t: v * boosts.get(t, 1.0) for t, v in query_idf(searcher, terms).items()}
     return QueryPlan(
-        terms, "BOOL", int(k), idf, field_avgdl_map(manifest, terms),
+        terms, "BOOL", int(k), idf, field_avgdl_map(searcher.manifest, terms),
         ast=ast, req=bq.required_terms(ast), pos_terms=pos_terms,
-        atoms=bq.range_atoms(ast) + bq.phrase_atoms(ast) + bq.nested_atoms(ast),
-        query_id=query_id,
+        atoms=bq.filter_atoms(ast), query_id=query_id,
     )
 
 
@@ -1618,7 +1808,7 @@ def _phrase_suggest_rows(
     return out
 
 
-class IndexSearcher:
+class IndexSearcher(TermdictFrontEnd):
     """Query-side entry point over a published index directory."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
@@ -1642,12 +1832,12 @@ class IndexSearcher:
         self._postings = self.spark.read.parquet(
             table_path(self.index_dir, "postings", self.manifest)
         )
-        td_path = table_path(self.index_dir, "termdict", self.manifest)
-        self._termdict = self.spark.read.parquet(td_path)
-        # the same termdict for driver-side df reads: opened once per
+        # the termdict front end reads on the driver: opened once per
         # snapshot (an open lists the files), pinned like every table
-        self._termdict_ds = ds.dataset(
-            td_path, format="parquet", partitioning="hive"
+        self._termdict = ds.dataset(
+            table_path(self.index_dir, "termdict", self.manifest),
+            format="parquet",
+            partitioning="hive",
         )
         self._doclens_path = table_path(self.index_dir, "doclens", self.manifest)
         self._nested_path = table_path(self.index_dir, "nested", self.manifest)
@@ -1684,12 +1874,6 @@ class IndexSearcher:
         return self._postings.filter(
             F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
         )
-
-    def global_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Global document frequency per term, read on the driver from
-        this snapshot's term DICTIONARY (bucket-pruned pyarrow scan) —
-        never posting blobs, no Spark job."""
-        return termdict_dfs(self._termdict_ds, terms, self.n_term_buckets)
 
     # columns the term/bool scoring kernels need — pos_blob (the
     # positional stream, comparable in bytes to the postings themselves)
@@ -1998,41 +2182,6 @@ class IndexSearcher:
         q = plan_fielded(self, terms, fields, k, mode, tie_breaker)
         return _ranked(self._score_segments(self._scoring_rows(q.terms), [q]), q.k)
 
-    DEFAULT_MAX_EXPANSIONS = 128
-
-    def expand_prefix(
-        self, prefix: str, max_expansions: int = DEFAULT_MAX_EXPANSIONS
-    ) -> list[str]:
-        """Indexed terms starting with ``prefix``, sorted — a termdict
-        RANGE scan ([prefix, prefix+1) on the sorted term column, the
-        Lucene terms-enum seekCeil analog; the reference gets this from
-        ES regex/wildcard field matching, elasticsearch_client.py:166-
-        177).  A body prefix never expands into field-prefixed or facet
-        terms; ``title:fo`` expands within the title field.  More than
-        ``max_expansions`` matches raises PrefixExpansionError (the ES
-        too_many_clauses analog) — silently truncating would return a
-        plausible but wrong ranking."""
-        lo, hi = prefix_term_range(prefix)
-        cond = (F.col("term") >= lo) & (F.col("term") < hi)
-        if ":" not in prefix:
-            # exclude analyzed-field terms (title:foo sorts inside
-            # [t, u)) — facet tokens (__f_v__) sort before 'a' and can
-            # only enter via a '_' prefix, which the validator rejects
-            cond &= ~F.col("term").contains(":")
-        rows = (
-            self._termdict.filter(cond)
-            .select("term")
-            .distinct()
-            .limit(max_expansions + 1)
-            .collect()
-        )
-        if len(rows) > max_expansions:
-            raise PrefixExpansionError(
-                f"prefix {prefix!r} expands to more than {max_expansions} "
-                "terms; narrow the prefix or raise max_expansions"
-            )
-        return sorted(r["term"] for r in rows)
-
     def search_prefix(
         self,
         prefix: str,
@@ -2046,63 +2195,6 @@ class IndexSearcher:
         if not terms:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
-
-    DEFAULT_FUZZY_EXPANSIONS = 50  # the ES fuzzy-query default
-
-    def expand_fuzzy(
-        self,
-        term: str,
-        max_edits: int = 1,
-        prefix_length: int = 0,
-        max_expansions: int = DEFAULT_FUZZY_EXPANSIONS,
-    ) -> list[str]:
-        """Indexed terms within ``max_edits`` Levenshtein edits of
-        ``term``, sorted — the ES ``fuzzy`` query's expansion (Lucene
-        walks a Levenshtein automaton over its terms index; the analog
-        here is a termdict scan with LENGTH pushdown ±max_edits and,
-        with ``prefix_length`` > 0, the same sorted-term range pruning
-        as prefixes).  Distance is classic unit-cost Levenshtein —
-        Spark's ``levenshtein`` expression, computed JVM-side on the
-        pruned termdict, identical to the serving twin's pure-python DP
-        and DuckDB's ``levenshtein``.  ``term`` may be field-prefixed
-        (``title:foo``) to fuzz within an analyzed field.  Over
-        ``max_expansions`` matches raises FuzzyExpansionError."""
-        if not _PREFIX_RE.match(term):
-            raise ValueError(
-                f"bad fuzzy term {term!r}: expected lowercase [a-z0-9]+ "
-                "with an optional 'field:' prefix"
-            )
-        field, body = (
-            term.split(":", 1) if ":" in term else (None, term)
-        )
-        cand = F.col("term")
-        if field is not None:
-            cand_body = F.substring_index(cand, ":", -1)
-            cond = cand.startswith(field + ":")
-        else:
-            cand_body = cand
-            cond = ~cand.contains(":") & ~cand.startswith("__")
-        if prefix_length > 0:
-            lo, hi = prefix_term_range(term[: len(term) - len(body) + prefix_length])
-            cond &= (cand >= lo) & (cand < hi)
-        cond &= F.length(cand_body).between(
-            len(body) - max_edits, len(body) + max_edits
-        )
-        cond &= F.levenshtein(cand_body, F.lit(body)) <= max_edits
-        rows = (
-            self._termdict.filter(cond)
-            .select("term")
-            .distinct()
-            .limit(max_expansions + 1)
-            .collect()
-        )
-        if len(rows) > max_expansions:
-            raise FuzzyExpansionError(
-                f"fuzzy term {term!r} (edits≤{max_edits}) expands to more "
-                f"than {max_expansions} terms; raise max_expansions or "
-                "prefix_length"
-            )
-        return sorted(r["term"] for r in rows)
 
     def search_fuzzy(
         self,
@@ -2121,55 +2213,6 @@ class IndexSearcher:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
 
-    def expand_regexp(
-        self,
-        pattern: str,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-        field: "str | None" = None,
-    ) -> list[str]:
-        """Indexed terms fully matching ``pattern`` (implicitly
-        anchored, conservative cross-engine dialect — see
-        check_regexp), sorted — the ES ``regexp`` query's expansion.
-        The reference's ES client matches fields by regex the same way
-        (elasticsearch_client.py:166-177).  The pattern's literal
-        prefix prunes the termdict scan to a sorted range when it has
-        one; the match itself runs JVM-side via ``rlike``.  ``field``
-        scopes the match to an analyzed field's terms.  Over
-        ``max_expansions`` matches raises RegexpExpansionError."""
-        check_regexp(pattern)
-        cand = F.col("term")
-        if field is not None:
-            if not re.fullmatch(r"[a-z0-9]+", field):
-                raise ValueError(f"bad field name {field!r}")
-            body = F.substring_index(cand, ":", -1)
-            cond = cand.startswith(field + ":")
-        else:
-            body = cand
-            cond = ~cand.contains(":") & ~cand.startswith("__")
-        prefixes = regexp_prefixes(pattern)
-        if prefixes:
-            rng = None
-            for lit in prefixes:
-                pfx = f"{field}:{lit}" if field is not None else lit
-                lo, hi = prefix_term_range(pfx)
-                r = (cand >= lo) & (cand < hi)
-                rng = r if rng is None else (rng | r)
-            cond &= rng
-        cond &= body.rlike("^(?:" + pattern + ")$")
-        rows = (
-            self._termdict.filter(cond)
-            .select("term")
-            .distinct()
-            .limit(max_expansions + 1)
-            .collect()
-        )
-        if len(rows) > max_expansions:
-            raise RegexpExpansionError(
-                f"regexp {pattern!r} expands to more than {max_expansions} "
-                "terms; narrow the pattern or raise max_expansions"
-            )
-        return sorted(r["term"] for r in rows)
-
     def search_regexp(
         self,
         pattern: str,
@@ -2184,24 +2227,6 @@ class IndexSearcher:
         if not terms:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
-
-    def _facet_terms_of(self, fields: list[str]) -> dict[str, list[str]]:
-        """field → its indexed facet tokens, from the term dictionary
-        (vocabulary-bounded — never the postings).  Pseudo-field
-        ``dlen`` covers the power-of-two doc-length bucket tokens."""
-        out: dict[str, list[str]] = {f: [] for f in fields}
-        conds = None
-        for f in fields:
-            c = F.col("term").startswith(f"__{f}_") & F.col("term").endswith("__")
-            conds = c if conds is None else (conds | c)
-        rows = self._termdict.filter(conds).select("term").distinct().collect()
-        for r in rows:
-            t = r["term"]
-            for f in fields:
-                if t.startswith(f"__{f}_"):
-                    out[f].append(t)
-                    break
-        return out
 
     def search_facets(
         self,
@@ -2224,29 +2249,21 @@ class IndexSearcher:
         shortcut exists, same as ES), intersects each facet token's
         postings (sorted-array searchsorted), and emits (field, value,
         partial count); a tiny groupBy-sum merges segments.  Facet
-        vocabulary rides an isin filter so the postings scan stays
-        term_bucket-pruned."""
+        vocabulary (a driver-side termdict read) rides an isin filter so
+        the postings scan stays term_bucket-pruned."""
         from ..functions import boolquery as bq
 
         mode_u = mode.upper()
-        if mode_u == "BOOL":
-            ast = bq.parse(query)  # type: ignore[arg-type]
-            qterms = sorted(set(bq.all_terms(ast)))
-        else:
-            ast = None
-            qterms = sorted(set(query))
-        facet_terms = self._facet_terms_of(fields)
-        fterms = sorted({t for ts in facet_terms.values() for t in ts})
-        all_terms = sorted(set(qterms) | set(fterms))
-        if not all_terms or not qterms:
+        ast, qterms = self.parse_query(query, mode_u)
+        bq.reject_filter_atoms(ast, "search_facets")
+        if not qterms:
             return self.spark.createDataFrame([], FACET_RESULT_SCHEMA)
-        rows = self._term_rows(all_terms).select("segment", "term", "blob")
+        field_of = {t: f for f, ts in self.facet_terms(fields).items() for t in ts}
+        rows = self._term_rows(sorted(set(qterms) | set(field_of))).select(
+            "segment", "term", "blob"
+        )
         qset = set(qterms)
-        field_of = {
-            t: f for f, ts in facet_terms.items() for t in ts
-        }
         get_deletes = self._segment_deletes_fn()
-        bool_ast = ast
 
         def facet_segment(pdf: pd.DataFrame) -> pd.DataFrame:
             if pdf.empty:
@@ -2263,28 +2280,7 @@ class IndexSearcher:
                     qdocs[r.term] = d
                 if r.term in field_of:
                     facet_rows.append((r.term, bytes(r.blob)))
-            if bool_ast is not None:
-                cand = bq.eval_docs(bool_ast, qdocs)
-                matches = (
-                    np.array([], np.int64)
-                    if isinstance(cand, tuple)
-                    else cand
-                )
-            elif mode_u == "AND":
-                if any(t not in qdocs for t in qterms):
-                    matches = np.array([], np.int64)
-                else:
-                    matches = reduce(
-                        lambda a, b: np.intersect1d(a, b, assume_unique=True),
-                        (qdocs[t] for t in qterms),
-                    )
-            else:
-                present = [qdocs[t] for t in qterms if t in qdocs]
-                matches = (
-                    reduce(np.union1d, present)
-                    if present
-                    else np.array([], np.int64)
-                )
+            matches = _match_docs(qdocs, qterms, mode_u, ast)
             if dead is not None and dead.size and matches.size:
                 matches = matches[~np.isin(matches, dead, assume_unique=True)]
             out = []
@@ -2309,25 +2305,6 @@ class IndexSearcher:
             .orderBy("field", F.desc("doc_count"), "value")
         )
 
-    def _query_ast_terms(self, query, mode_u):
-        """(ast | None, sorted query terms) for a term-list or BOOL
-        string query — shared by the aggregation APIs."""
-        from ..functions import boolquery as bq
-
-        if mode_u == "BOOL":
-            ast = bq.parse(
-                query,
-                analyzed_fields=set(analyzed_fields_of(self.manifest)),
-                dv_fields=dv_filter_fields_of(self.manifest),
-                nested_fields=nested_paths_of(self.manifest),
-            )
-            if bq.has_wildcards(ast):
-                ast = bq.expand_wildcards(
-                    ast, self.expand_prefix, self.expand_fuzzy
-                )
-            return ast, sorted(set(bq.all_terms(ast)))
-        return None, sorted(set(query))
-
     def search_stats(
         self, query: list[str] | str, mode: str = "OR"
     ) -> DataFrame:
@@ -2339,8 +2316,11 @@ class IndexSearcher:
         per segment (all associative).  The reference gets this from ES
         aggregations on its exported index
         (hail_scripts/shared/elasticsearch_utils.py metadata fields)."""
+        from ..functions import boolquery as bq
+
         mode_u = mode.upper()
-        ast, qterms = self._query_ast_terms(query, mode_u)
+        ast, qterms = self.parse_query(query, mode_u)
+        bq.reject_filter_atoms(ast, "search_stats")
         if not qterms:
             return self.spark.createDataFrame([], STATS_PARTIAL_SCHEMA)
         rows = self._term_rows(qterms).select("segment", "term", "blob")
@@ -2395,10 +2375,13 @@ class IndexSearcher:
         matching live docs — DataFrame(bucket, doc_count) sorted by
         bucket.  Same postings-only plan as search_stats; each segment
         emits its local bucket counts and a tiny groupBy-sum merges."""
+        from ..functions import boolquery as bq
+
         if interval <= 0:
             raise ValueError("interval must be positive")
         mode_u = mode.upper()
-        ast, qterms = self._query_ast_terms(query, mode_u)
+        ast, qterms = self.parse_query(query, mode_u)
+        bq.reject_filter_atoms(ast, "search_histogram")
         if not qterms:
             return self.spark.createDataFrame([], HISTOGRAM_SCHEMA)
         rows = self._term_rows(qterms).select("segment", "term", "blob")
@@ -2441,27 +2424,15 @@ class IndexSearcher:
         (or, with ``max_edits`` > 0, within edit distance — the
         did-you-mean path), ranked by global document frequency —
         DataFrame(term, df) by (df desc, term asc), ``size`` rows.
-        Termdict-only: never touches posting blobs."""
+        Termdict-only: ranked on the driver from the expansion's
+        termdict rows (one per term), never posting blobs."""
         terms = (
             self.expand_fuzzy(prefix, max_edits, max_expansions=max_expansions)
             if max_edits > 0
             else self.expand_prefix(prefix, max_expansions)
         )
-        if not terms:
-            return self.spark.createDataFrame(
-                [], "term string, df long"
-            )
-        buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
-        return (
-            self._termdict.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(terms)
-            )
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(size)
-        )
+        ranked = sorted(self.global_dfs(terms).items(), key=lambda x: (-x[1], x[0]))
+        return self.spark.createDataFrame(ranked[:size], "term string, df long")
 
     def suggest_phrase(
         self,
@@ -2579,10 +2550,8 @@ class IndexSearcher:
         from ..functions import boolquery as bq
 
         mode_u = mode.upper()
-        ast, qterms = self._query_ast_terms(query, mode_u)
-        if ast is not None and (
-            bq.range_atoms(ast) or bq.phrase_atoms(ast) or bq.nested_atoms(ast)
-        ):
+        ast, qterms = self.parse_query(query, mode_u)
+        if bq.filter_atoms(ast):
             # range/_exists_/phrase/nested atoms need the doc-value
             # store, positions, or the nested sidecar — count through
             # the aggregation front half
@@ -2612,26 +2581,7 @@ class IndexSearcher:
                 for r in pdf.itertuples()
                 if r.term in qset
             }
-            if ast is not None:
-                cand = bq.eval_docs(ast, qdocs)
-                matches = (
-                    np.array([], np.int64) if isinstance(cand, tuple) else cand
-                )
-            elif mode_u == "AND":
-                if any(t not in qdocs for t in qterms):
-                    matches = np.array([], np.int64)
-                else:
-                    matches = reduce(
-                        lambda a, b: np.intersect1d(a, b, assume_unique=True),
-                        (qdocs[t] for t in qterms),
-                    )
-            else:
-                present = list(qdocs.values())
-                matches = (
-                    reduce(np.union1d, present)
-                    if present
-                    else np.array([], np.int64)
-                )
+            matches = _match_docs(qdocs, qterms, mode_u, ast)
             if dead is not None and dead.size and matches.size:
                 matches = matches[~np.isin(matches, dead, assume_unique=True)]
             return pd.DataFrame({"n": [int(matches.size)]})
@@ -2850,24 +2800,18 @@ class IndexSearcher:
         atoms fall back to one doc-value-cogroup count job each."""
         from ..functions import boolquery as bq
 
-        af = set(analyzed_fields_of(self.manifest))
-        dvf = dv_filter_fields_of(self.manifest)
         compiled, ranged = [], []
         for name, q in sorted(filters.items()):
-            ast = bq.parse(q, analyzed_fields=af, dv_fields=dvf)
-            if bq.has_wildcards(ast):
-                ast = bq.expand_wildcards(
-                    ast, self.expand_prefix, self.expand_fuzzy
-                )
+            ast, terms = self.parse_query(q, "BOOL")
             if bq.is_pure_negation(ast):
                 raise bq.QueryParseError(
                     f"filter {name!r} is pure negation (unbounded match "
                     "set) — rewrite as '<positive> AND NOT ...'"
                 )
-            if bq.range_atoms(ast) or bq.phrase_atoms(ast) or bq.nested_atoms(ast):
+            if bq.filter_atoms(ast):
                 ranged.append((name, q))
             else:
-                compiled.append((name, ast, bq.all_terms(ast)))
+                compiled.append((name, ast, terms))
         out_rows: list[tuple[str, int]] = []
         if compiled:
             all_terms = sorted({t for _n, _a, ts in compiled for t in ts})
@@ -3226,14 +3170,8 @@ class IndexSearcher:
         and job-free."""
         from ..functions import boolquery as bq
 
-        from ..functions.boolquery import QueryParseError
-
         try:
-            ast = bq.parse(
-                query,
-                analyzed_fields=set(analyzed_fields_of(self.manifest)),
-                dv_fields=dv_filter_fields_of(self.manifest),
-            )
+            ast, _terms = self.parse_query(query, "BOOL", expand=expand)
             # facet atoms parse open-vocabulary; check their FIELDS
             # against the manifest (ES rejects queries on unmapped
             # fields in strict mappings — and an unknown facet here is
@@ -3245,14 +3183,10 @@ class IndexSearcher:
             } | {"dlen"}
             for tok in bq.facet_atom_tokens(ast):
                 if not any(tok.startswith(f"__{f}_") for f in known):
-                    raise QueryParseError(
+                    raise bq.QueryParseError(
                         f"facet atom {tok!r} names no indexed facet field "
                         f"(known: {sorted(known)})"
                     )
-            if expand and bq.has_wildcards(ast):
-                ast = bq.expand_wildcards(
-                    ast, self.expand_prefix, self.expand_fuzzy
-                )
             return {"valid": True, "error": None, "explanation": repr(ast)}
         except Exception as e:  # noqa: BLE001 — the API reports, never raises
             return {"valid": False, "error": str(e), "explanation": None}
@@ -3377,24 +3311,17 @@ class IndexSearcher:
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("fg_count"))
             .where(F.col("fg_count") >= int(min_doc_count))
+            .collect()
         )
-        joined = self._termdict.select("term", "df").join(
-            F.broadcast(fg), "term"
-        )
-        n_docs = self.n_docs
-        return (
-            joined.select(
-                "term",
-                "fg_count",
-                F.col("df").alias("bg_count"),
-                (
-                    (F.col("fg_count") / F.lit(float(sample_n)))
-                    / (F.col("df") / F.lit(float(n_docs)))
-                ).alias("lift"),
-            )
-            .orderBy(F.col("lift").desc(), F.col("term").asc())
-            .limit(int(size))
-        )
+        kept = {r["term"]: int(r["fg_count"]) for r in fg}
+        dfs = self.global_dfs(sorted(kept))
+        out = [
+            (t, c, dfs[t], (c / sample_n) / (dfs[t] / self.n_docs))
+            for t, c in kept.items()
+            if t in dfs
+        ]
+        out.sort(key=lambda r: (-r[3], r[0]))
+        return self.spark.createDataFrame(out[: int(size)], out_schema)
 
     def mget(self, ids: "list[int]") -> DataFrame:
         """ES ``_mget`` / get-by-id: one row per REQUESTED id —
@@ -3698,28 +3625,22 @@ class IndexSearcher:
 
         from ..functions import boolquery as bq
 
-        af = set(analyzed_fields_of(self.manifest))
-        dvf = dv_filter_fields_of(self.manifest)
         compiled = []
         for name, q in sorted(filters.items()):
             if "&" in name:
                 raise ValueError(f"filter name {name!r} may not contain '&'")
-            ast = bq.parse(q, analyzed_fields=af, dv_fields=dvf)
-            if bq.has_wildcards(ast):
-                ast = bq.expand_wildcards(
-                    ast, self.expand_prefix, self.expand_fuzzy
-                )
+            ast, terms = self.parse_query(q, "BOOL")
             if bq.is_pure_negation(ast):
                 raise bq.QueryParseError(
                     f"filter {name!r} is pure negation (unbounded match "
                     "set) — rewrite as '<positive> AND NOT ...'"
                 )
-            if bq.range_atoms(ast) or bq.phrase_atoms(ast) or bq.nested_atoms(ast):
+            if bq.filter_atoms(ast):
                 raise ValueError(
                     f"adjacency filter {name!r} uses doc-value/phrase/nested "
                     "atoms — not supported here (use search_filters)"
                 )
-            compiled.append((name, ast, bq.all_terms(ast)))
+            compiled.append((name, ast, terms))
         all_terms = sorted({t for _n, _a, ts in compiled for t in ts})
         rows = self._term_rows(all_terms).select("segment", "term", "blob")
         get_deletes = self._segment_deletes_fn()
@@ -4057,16 +3978,19 @@ def bm25_exhaustive_df(
                 * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl))
             )
 
-        contrib = [
-            F.when(F.col(f"__tf_{i}") > 0, F.lit(idf[i]) * w(F.col(f"__tf_{i}")))
-            for i in range(len(terms_sorted))
-        ]
-        score = contrib[0]
-        for c in contrib[1:]:
-            # ascending term order, float64 — the determinism contract;
-            # terms the doc lacks contribute nothing (when() -> NULL,
-            # skipped by the coalesced sum below)
-            score = F.coalesce(score + c, score, c)
+        # ascending term order, float64 — the determinism contract; a
+        # term the doc lacks adds 0.0 (x + 0.0 == x, so the sum is the
+        # present terms' sum bit for bit).  Each term appears once: the
+        # expression stays linear in the term count and compiles
+        score = reduce(
+            lambda a, b: a + b,
+            (
+                F.when(
+                    F.col(f"__tf_{i}") > 0, F.lit(idf[i]) * w(F.col(f"__tf_{i}"))
+                ).otherwise(F.lit(0.0))
+                for i in range(len(terms_sorted))
+            ),
+        )
         n_hit = sum(
             ((F.col(f"__tf_{i}") > 0).cast("int") for i in range(len(terms_sorted))),
             F.lit(0),

@@ -183,7 +183,7 @@ def matched_ids(
             )
             live = live.join(F.broadcast(dead_df), "doc_id", "left_anti")
         return live
-    ast, qterms = searcher._query_ast_terms(query, mode.upper())
+    ast, qterms = searcher.parse_query(query, mode)
     ranges = bq.range_atoms(ast) if ast is not None else []
     phrases = bq.phrase_atoms(ast) if ast is not None else []
     nested = bq.nested_atoms(ast) if ast is not None else []
@@ -319,10 +319,8 @@ def _matched_values(
     dl = dl.where(present_pred(dl, field))
     mode_u = mode.upper()
     if query is not None:
-        ast, qterms = searcher._query_ast_terms(query, mode_u)
-        ranges = bq.range_atoms(ast) if ast is not None else []
-        phrases = bq.phrase_atoms(ast) if ast is not None else []
-        if qterms and not ranges and not phrases:
+        ast, qterms = searcher.parse_query(query, mode_u)
+        if qterms and not bq.filter_atoms(ast):
             dpp, seg_group = _seg_params(searcher.manifest)
             vals = dl.select(
                 segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
@@ -1436,10 +1434,8 @@ def search_bucket_metrics(
 
     mode_u = mode.upper()
     if query is not None:
-        ast, qterms = searcher._query_ast_terms(query, mode_u)
-        ranges = bq.range_atoms(ast) if ast is not None else []
-        phrases = bq.phrase_atoms(ast) if ast is not None else []
-        if qterms and not ranges and not phrases:
+        ast, qterms = searcher.parse_query(query, mode_u)
+        if qterms and not bq.filter_atoms(ast):
             dpp, seg_group = _seg_params(searcher.manifest)
             vals = dl.where(F.col(bucket_field).isNotNull()).select(
                 segment_expr(F.col("doc_id"), dpp, seg_group).alias("segment"),
@@ -1573,21 +1569,11 @@ def _search_decay_bool(
         _check_scoring_rows,
         _mask_deleted,
         _topk,
-        analyzed_fields_of,
-        dv_filter_fields_of,
         field_avgdl_map,
     )
 
-    ast = bq.parse(
-        query,
-        analyzed_fields=set(analyzed_fields_of(searcher.manifest)),
-        dv_fields=dv_filter_fields_of(searcher.manifest),
-    )
-    if bq.has_wildcards(ast):
-        ast = bq.expand_wildcards(
-            ast, searcher.expand_prefix, searcher.expand_fuzzy
-        )
-    terms = bq.all_terms(ast)
+    ast, terms = searcher.parse_query(query, "BOOL")
+    bq.reject_filter_atoms(ast, "a decayed boolean query", allowed=(bq.RangeTerm,))
     pos_terms = bq.positive_terms(ast)
     if not pos_terms:
         raise bq.QueryParseError("query has no positive terms")

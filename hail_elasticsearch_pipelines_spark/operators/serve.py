@@ -6,10 +6,13 @@ query's term_bucket partition directories (hive pruning) and, within
 them, the term's rows (parquet row-group min/max on the sorted `term`
 column) via pyarrow — millisecond-scale for the lookup.
 
-Both searchers run ONE per-segment scorer: the shared planners in
-bm25.py (plan_terms / plan_fielded / plan_bool) build a QueryPlan on
-the driver, and bm25.score_segment chooses the kernel, masks tombstones
-and cuts each segment's top-k — so results are bit-identical
+Both searchers inherit ONE query front end, bm25.TermdictFrontEnd
+(global df, term expansion, facet vocabulary and the query-string
+parse, all read on the driver from the pinned termdict), and run ONE
+per-segment scorer: the shared planners in bm25.py (plan_terms /
+plan_fielded / plan_bool) build a QueryPlan on the driver, and
+bm25.score_segment chooses the kernel, masks tombstones and cuts each
+segment's top-k — so results are bit-identical
 (tests/test_serve.py).  The executors differ only in scheduling and
 caching: IndexSearcher runs score_segment in one mapInPandas task per
 segment; LocalSearcher._search_pruned runs it in-process over its hot
@@ -29,12 +32,15 @@ import pyarrow.dataset as ds
 
 from ..functions import codecs
 from .bm25 import (
+    DEFAULT_FUZZY_EXPANSIONS,
+    DEFAULT_MAX_EXPANSIONS,
     _BlockCache,
+    _match_dls,
+    _match_docs,
     _phrase_match_counts,
     _topk,
     QueryPlan,
-    analyzed_fields_of,
-    dv_filter_fields_of,
+    TermdictFrontEnd,
     field_avgdl_map,
     load_deletes,
     plan_bool,
@@ -44,7 +50,6 @@ from .bm25 import (
     score_segment,
     segment_bounds,
     term_filter,
-    termdict_dfs,
 )
 from .index_build import bm25_idf, bm25_tf_weight
 
@@ -90,7 +95,7 @@ def _put_unique(d: dict, key, value) -> None:
     d[key] = value
 
 
-class LocalSearcher:
+class LocalSearcher(TermdictFrontEnd):
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
         self._load_snapshot()
@@ -221,9 +226,6 @@ class LocalSearcher:
         out = codecs.decode_postings(blob.as_py() if hasattr(blob, "as_py") else blob)
         self._cache_put(term, seg, out)
         return out
-
-    def global_dfs(self, terms: list[str]) -> dict[str, int]:
-        return termdict_dfs(self._termdict, terms, self.n_term_buckets)
 
     def _term_rows(self, terms: list[str], columns: list[str]):
         return self._postings.to_table(
@@ -367,32 +369,6 @@ class LocalSearcher:
                 floor = float(acc_s[-1])
         return list(zip(acc_d.tolist(), acc_s.tolist()))
 
-    DEFAULT_MAX_EXPANSIONS = 128
-
-    def expand_prefix(
-        self, prefix: str, max_expansions: int = DEFAULT_MAX_EXPANSIONS
-    ) -> list[str]:
-        """Indexed terms starting with ``prefix`` — pyarrow termdict
-        range scan; same semantics/caps as IndexSearcher.expand_prefix
-        (body prefixes never leak field/facet terms; overflow raises
-        PrefixExpansionError)."""
-        from .bm25 import PrefixExpansionError, prefix_term_range
-
-        lo, hi = prefix_term_range(prefix)
-        tbl = self._termdict.to_table(
-            filter=(ds.field("term") >= lo) & (ds.field("term") < hi),
-            columns=["term"],
-        )
-        terms = set(tbl["term"].to_pylist())
-        if ":" not in prefix:
-            terms = {t for t in terms if ":" not in t}
-        if len(terms) > max_expansions:
-            raise PrefixExpansionError(
-                f"prefix {prefix!r} expands to more than {max_expansions} "
-                "terms; narrow the prefix or raise max_expansions"
-            )
-        return sorted(terms)
-
     def search_prefix(
         self,
         prefix: str,
@@ -405,73 +381,6 @@ class LocalSearcher:
         if not terms:
             return []
         return self.search(terms, mode="OR", k=k)
-
-    DEFAULT_FUZZY_EXPANSIONS = 50
-
-    def expand_fuzzy(
-        self,
-        term: str,
-        max_edits: int = 1,
-        prefix_length: int = 0,
-        max_expansions: int = DEFAULT_FUZZY_EXPANSIONS,
-    ) -> list[str]:
-        """Serving twin of IndexSearcher.expand_fuzzy: pyarrow termdict
-        scan (length ± max_edits prune, optional prefix range) + the
-        pure-python Levenshtein DP — same algorithm as Spark's
-        levenshtein expression, so both searchers expand identically."""
-        from .bm25 import (
-            _PREFIX_RE,
-            FuzzyExpansionError,
-            prefix_term_range,
-            py_levenshtein_within,
-        )
-
-        if not _PREFIX_RE.match(term):
-            raise ValueError(
-                f"bad fuzzy term {term!r}: expected lowercase [a-z0-9]+ "
-                "with an optional 'field:' prefix"
-            )
-        field, body = term.split(":", 1) if ":" in term else (None, term)
-        # length ±max_edits pushed into the scan (plus the field's
-        # prefix bytes) — the termdict materializes only plausible
-        # candidates, not the whole vocabulary
-        import pyarrow.compute as pc
-
-        base = len(term) - len(body)
-        flt = pc.utf8_length(ds.field("term")).cast("int64").isin(
-            list(
-                range(
-                    max(1, base + len(body) - max_edits),
-                    base + len(body) + max_edits + 1,
-                )
-            )
-        )
-        if prefix_length > 0:
-            lo, hi = prefix_term_range(term[:base + prefix_length])
-            flt = flt & (ds.field("term") >= lo) & (ds.field("term") < hi)
-        tbl = self._termdict.to_table(filter=flt, columns=["term"])
-        out = set()
-        pre = f"{field}:" if field is not None else None
-        for t in set(tbl["term"].to_pylist()):
-            if pre is not None:
-                if not t.startswith(pre):
-                    continue
-                tb = t.split(":", 1)[1]
-            else:
-                if ":" in t or t.startswith("__"):
-                    continue
-                tb = t
-            if abs(len(tb) - len(body)) > max_edits:
-                continue
-            if py_levenshtein_within(tb, body, max_edits):
-                out.add(t)
-                if len(out) > max_expansions:
-                    raise FuzzyExpansionError(
-                        f"fuzzy term {term!r} (edits≤{max_edits}) expands "
-                        f"to more than {max_expansions} terms; raise "
-                        "max_expansions or prefix_length"
-                    )
-        return sorted(out)
 
     def search_fuzzy(
         self,
@@ -488,64 +397,6 @@ class LocalSearcher:
         if not terms:
             return []
         return self.search(terms, mode="OR", k=k)
-
-    def expand_regexp(
-        self,
-        pattern: str,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-        field: str | None = None,
-    ) -> list[str]:
-        """Serving twin of IndexSearcher.expand_regexp: literal-prefix
-        range pushdown into the pyarrow termdict scan, anchored
-        ``re.fullmatch`` over the pruned vocabulary (Python re, Java
-        regex, and RE2 agree on the safe dialect check_regexp
-        enforces)."""
-        import re as _re
-
-        from .bm25 import (
-            RegexpExpansionError,
-            check_regexp,
-            prefix_term_range,
-            regexp_prefixes,
-        )
-
-        check_regexp(pattern)
-        if field is not None and not _re.fullmatch(r"[a-z0-9]+", field):
-            raise ValueError(f"bad field name {field!r}")
-        prefixes = regexp_prefixes(pattern)
-        flt = None
-        if prefixes:
-            # union of the branch prefix ranges — never a full
-            # vocabulary scan when every alternation branch is anchored
-            for lit in prefixes:
-                pfx = f"{field}:{lit}" if field is not None else lit
-                lo, hi = prefix_term_range(pfx)
-                r = (ds.field("term") >= lo) & (ds.field("term") < hi)
-                flt = r if flt is None else (flt | r)
-        elif field is not None:
-            # [field:, field;) — ';' = chr(ord(':')+1) bounds exactly
-            # the field-prefixed terms even with no literal prefix
-            lo, hi = field + ":", field + ";"
-            flt = (ds.field("term") >= lo) & (ds.field("term") < hi)
-        tbl = self._termdict.to_table(filter=flt, columns=["term"])
-        rex = _re.compile(pattern)
-        terms = set()
-        for t in set(tbl["term"].to_pylist()):
-            if field is not None:
-                body = t.split(":", 1)[1]
-            else:
-                if ":" in t or t.startswith("__"):
-                    continue
-                body = t
-            if rex.fullmatch(body):
-                terms.add(t)
-                if len(terms) > max_expansions:
-                    raise RegexpExpansionError(
-                        f"regexp {pattern!r} expands to more than "
-                        f"{max_expansions} terms; narrow the pattern or "
-                        "raise max_expansions"
-                    )
-        return sorted(terms)
 
     def search_regexp(
         self,
@@ -588,31 +439,16 @@ class LocalSearcher:
         IndexSearcher.search_facets: [(field, value, doc_count)] sorted
         by (field, count desc, value), counting ALL matching live docs.
         Same semantics, no Spark jobs."""
-        from functools import reduce
-
         from ..functions import boolquery as bq
 
-        mode_u = mode.upper()
-        if mode_u == "BOOL":
-            ast = bq.parse(query)  # type: ignore[arg-type]
-            qterms = sorted(set(bq.all_terms(ast)))
-        else:
-            ast = None
-            qterms = sorted(set(query))
-        prefixes = {f: f"__{f}_" for f in fields}
-        tnames = self._termdict.to_table(columns=["term"]).column("term").to_pylist()
-        fterms = sorted(
-            {
-                t
-                for t in tnames
-                if t.endswith("__")
-                and any(t.startswith(p) for p in prefixes.values())
-            }
-        )
-        all_terms = sorted(set(qterms) | set(fterms))
+        ast, qterms = self.parse_query(query, mode)
+        bq.reject_filter_atoms(ast, "search_facets")
         if not qterms:
             return []
-        tbl = self._term_rows(all_terms, ["term", "segment", "blob"])
+        field_of = {t: f for f, ts in self.facet_terms(fields).items() for t in ts}
+        tbl = self._term_rows(
+            sorted(set(qterms) | set(field_of)), ["term", "segment", "blob"]
+        )
         seg_arr = np.asarray(tbl["segment"].to_pylist())
         counts: dict[tuple[str, str], int] = {}
         qset = set(qterms)
@@ -627,28 +463,9 @@ class LocalSearcher:
                         t, int(seg), tbl["blob"][int(i)]
                     )
                     qdocs[t] = d
-                if t in fterms:
+                if t in field_of:
                     facet_rows.append((t, int(i)))
-            if ast is not None:
-                cand = bq.eval_docs(ast, qdocs)
-                matches = (
-                    np.array([], np.int64) if isinstance(cand, tuple) else cand
-                )
-            elif mode_u == "AND":
-                if any(t not in qdocs for t in qterms):
-                    matches = np.array([], np.int64)
-                else:
-                    matches = reduce(
-                        lambda a, b: np.intersect1d(a, b, assume_unique=True),
-                        (qdocs[t] for t in qterms),
-                    )
-            else:
-                present = [qdocs[t] for t in qterms if t in qdocs]
-                matches = (
-                    reduce(np.union1d, present)
-                    if present
-                    else np.array([], np.int64)
-                )
+            matches = _match_docs(qdocs, qterms, mode.upper(), ast)
             dead = self._deletes.get(int(seg))
             if dead is not None and dead.size and matches.size:
                 matches = matches[~np.isin(matches, dead, assume_unique=True)]
@@ -658,11 +475,8 @@ class LocalSearcher:
                 fd, _tf, _dl = self._decode_cached(t, int(seg), tbl["blob"][i])
                 n = int(np.isin(fd, matches, assume_unique=True).sum())
                 if n:
-                    f = next(
-                        f for f, p in prefixes.items() if t.startswith(p)
-                    )
-                    value = t[len(prefixes[f]) : -2]
-                    key = (f, value)
+                    f = field_of[t]
+                    key = (f, t[len(f"__{f}_") : -2])
                     counts[key] = counts.get(key, 0) + n
         return sorted(
             ((f, v, c) for (f, v), c in counts.items()),
@@ -688,26 +502,18 @@ class LocalSearcher:
         rows into the term-rows cache AND decoded postings into the
         decode cache — so a fresh serving process reaches its warm p99
         before real traffic instead of during it.  The df ranking comes
-        from the termdict (tiny scan); stopwords, which dominate cold
-        latency, rank first by construction.  Returns the number of
+        from the termdict (tiny scan, one row per term, ranked in
+        Arrow); stopwords, which dominate cold latency, rank first by
+        construction.  Facet tokens are skipped.  Returns the number of
         terms warmed."""
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         tbl = self._termdict.to_table(columns=["term", "df"])
-        # arrow-side aggregation: filter facet tokens, sum df per term —
-        # the python dict loop over a web-scale vocabulary cost ~0.6 s
-        tbl = tbl.filter(
-            pc.invert(pc.starts_with(tbl.column("term"), "__"))
-        )
-        agg_t = pa.table(
-            {"term": tbl.column("term"), "df": tbl.column("df")}
-        ).group_by("term").aggregate([("df", "sum")])
+        tbl = tbl.filter(pc.invert(pc.starts_with(tbl["term"], "__")))
         order = pc.sort_indices(
-            agg_t,
-            sort_keys=[("df_sum", "descending"), ("term", "ascending")],
+            tbl, sort_keys=[("df", "descending"), ("term", "ascending")]
         )[: max(0, n)]
-        top = pc.take(agg_t.column("term"), order).to_pylist()
+        top = pc.take(tbl["term"], order).to_pylist()
         if not top:
             return 0
         rows = self._rows_for(sorted(top))
@@ -730,88 +536,16 @@ class LocalSearcher:
 
     def search_count(self, query: list[str] | str, mode: str = "OR") -> int:
         """ES ``_count`` — serving twin of IndexSearcher.search_count."""
-        from functools import reduce
+        return int(len(self.matched_ids(query, mode)))
 
+    def _segment_match_dls(self, ast, qterms: list[str], mode: str):
+        """Per segment, (matching live doc ids, their doc lengths) for a
+        parsed query (parse_query) — the shared serving kernel behind
+        count/stats/histogram aggs.  Term postings only: a range, phrase
+        or nested atom raises QueryParseError."""
         from ..functions import boolquery as bq
 
-        mode_u = mode.upper()
-        if mode_u == "BOOL":
-            from .bm25 import nested_paths_of
-
-            ast = bq.parse(
-                query,  # type: ignore[arg-type]
-                analyzed_fields=set(analyzed_fields_of(self.manifest)),
-                dv_fields=dv_filter_fields_of(self.manifest),
-                nested_fields=nested_paths_of(self.manifest),
-            )
-            if bq.has_wildcards(ast):
-                ast = bq.expand_wildcards(
-                    ast, self.expand_prefix, self.expand_fuzzy
-                )
-            if bq.range_atoms(ast) or bq.phrase_atoms(ast) or bq.nested_atoms(ast):
-                # doc-value / positional / nested atoms resolve on the
-                # aggregation front half
-                return int(len(self.matched_ids(query, "BOOL")))
-            qterms = sorted(set(bq.all_terms(ast)))
-        else:
-            ast = None
-            qterms = sorted(set(query))
-        if not qterms:
-            return 0
-        rows = self._rows_for(qterms)
-        segs = sorted({s for m in rows.values() for s in m})
-        total = 0
-        for seg in segs:
-            qdocs = {
-                t: self._decode_cached(t, seg, rows[t][seg].blob)[0]
-                for t in qterms
-                if seg in rows.get(t, {})
-            }
-            if ast is not None:
-                cand = bq.eval_docs(ast, qdocs)
-                matches = (
-                    np.array([], np.int64) if isinstance(cand, tuple) else cand
-                )
-            elif mode_u == "AND":
-                if any(t not in qdocs for t in qterms):
-                    continue
-                matches = reduce(
-                    lambda a, b: np.intersect1d(a, b, assume_unique=True),
-                    (qdocs[t] for t in qterms),
-                )
-            else:
-                present = list(qdocs.values())
-                if not present:
-                    continue
-                matches = reduce(np.union1d, present)
-            dead = self._deletes.get(seg)
-            if dead is not None and dead.size and matches.size:
-                matches = matches[~np.isin(matches, dead, assume_unique=True)]
-            total += int(matches.size)
-        return total
-
-    def _segment_match_dls(self, query, mode: str):
-        """Per segment, (matching live doc ids, their doc lengths) —
-        the shared serving kernel behind stats/histogram aggs."""
-        from .bm25 import _match_dls, _match_docs, analyzed_fields_of
-
-        from ..functions import boolquery as bq
-
-        mode_u = mode.upper()
-        if mode_u == "BOOL":
-            ast = bq.parse(
-                query,
-            analyzed_fields=set(analyzed_fields_of(self.manifest)),
-            dv_fields=dv_filter_fields_of(self.manifest),
-            )
-            if bq.has_wildcards(ast):
-                ast = bq.expand_wildcards(
-                    ast, self.expand_prefix, self.expand_fuzzy
-                )
-            qterms = sorted(set(bq.all_terms(ast)))
-        else:
-            ast = None
-            qterms = sorted(set(query))
+        bq.reject_filter_atoms(ast, "this aggregation")
         if not qterms:
             return
         rows = self._rows_for(qterms)
@@ -822,7 +556,7 @@ class LocalSearcher:
                     d, _tf, dl = self._decode_cached(t, seg, rows[t][seg].blob)
                     qdocs[t] = d
                     decoded.append((d, dl))
-            matches = _match_docs(qdocs, qterms, mode_u, ast)
+            matches = _match_docs(qdocs, qterms, mode.upper(), ast)
             dead = self._deletes.get(seg)
             if dead is not None and dead.size and matches.size:
                 matches = matches[~np.isin(matches, dead, assume_unique=True)]
@@ -835,7 +569,7 @@ class LocalSearcher:
         avg_dl} over the matching live docs."""
         n = s = 0
         mn = mx = None
-        for _m, dls in self._segment_match_dls(query, mode) or ():
+        for _m, dls in self._segment_match_dls(*self.parse_query(query, mode), mode):
             n += int(dls.size)
             s += int(dls.sum())
             mn = int(dls.min()) if mn is None else min(mn, int(dls.min()))
@@ -856,7 +590,7 @@ class LocalSearcher:
         if interval <= 0:
             raise ValueError("interval must be positive")
         acc: dict[int, int] = {}
-        for _m, dls in self._segment_match_dls(query, mode) or ():
+        for _m, dls in self._segment_match_dls(*self.parse_query(query, mode), mode):
             b, c = np.unique(dls // interval * interval, return_counts=True)
             for bb, cc in zip(b.tolist(), c.tolist()):
                 acc[int(bb)] = acc.get(int(bb), 0) + int(cc)
@@ -921,23 +655,12 @@ class LocalSearcher:
                 dead = np.unique(np.concatenate(dead_all))
                 ids = ids[~np.isin(ids, dead, assume_unique=True)]
             return ids
-        if mode.upper() == "BOOL":
-            from ..functions import boolquery as bq
-            from .bm25 import analyzed_fields_of, nested_paths_of
+        from ..functions import boolquery as bq
 
-            ast = bq.parse(
-                query,
-            analyzed_fields=set(analyzed_fields_of(self.manifest)),
-            dv_fields=dv_filter_fields_of(self.manifest),
-            nested_fields=nested_paths_of(self.manifest),
-            )
-            if bq.has_wildcards(ast):
-                ast = bq.expand_wildcards(
-                    ast, self.expand_prefix, self.expand_fuzzy
-                )
-            if bq.range_atoms(ast) or bq.phrase_atoms(ast) or bq.nested_atoms(ast):
-                return self._matched_ids_ranges(ast)
-        parts = [m for m, _dls in self._segment_match_dls(query, mode) or ()]
+        ast, qterms = self.parse_query(query, mode)
+        if bq.filter_atoms(ast):
+            return self._matched_ids_ranges(ast)
+        parts = [m for m, _dls in self._segment_match_dls(ast, qterms, mode)]
         if not parts:
             return np.array([], np.int64)
         return np.concatenate(parts)  # segments hold disjoint id ranges
@@ -947,10 +670,9 @@ class LocalSearcher:
         allowed ids resolve once from the cached doc values, sliced
         per segment and injected into the shared match kernel."""
         from ..functions import boolquery as bq
-        from .bm25 import _match_docs
         from .docvalues import range_mask
 
-        qterms = sorted(set(bq.all_terms(ast)))
+        qterms = bq.all_terms(ast)
         g, p = self.manifest["globals"], self.manifest["params"]
         dpp, seg_group = int(g["docs_per_part"]), int(p["seg_group"])
         range_sets = {}
@@ -2039,12 +1761,8 @@ class LocalSearcher:
         (ADVICE r5).  Same check as IndexSearcher.search_filters."""
         from ..functions import boolquery as bq
 
-        af = set(analyzed_fields_of(self.manifest))
-        dvf = dv_filter_fields_of(self.manifest)
         for name, q in filters.items():
-            if bq.is_pure_negation(
-                bq.parse(q, analyzed_fields=af, dv_fields=dvf)
-            ):
+            if bq.is_pure_negation(self.parse_query(q, "BOOL", expand=False)[0]):
                 raise bq.QueryParseError(
                     f"filter {name!r} is pure negation (unbounded match "
                     "set) — rewrite as '<positive> AND NOT ...'"

@@ -17,6 +17,7 @@ import pytest
 from hail_elasticsearch_pipelines_spark.functions.extract import py_extract_text
 from hail_elasticsearch_pipelines_spark.functions.tokenize import py_tokenize
 from hail_elasticsearch_pipelines_spark.operators.bm25 import IndexSearcher
+from hail_elasticsearch_pipelines_spark.operators.serve import LocalSearcher
 from hail_elasticsearch_pipelines_spark.operators.index_build import (
     build_index,
     py_dlen_bucket,
@@ -80,18 +81,32 @@ def test_facet_counts_match_python_oracle(spark, agg_index, mode):
     assert got == dict(want), mode
 
 
-def test_facet_counts_bool_mode(spark, agg_index):
+@pytest.mark.parametrize(
+    "q, match",
+    [
+        ("the AND NOT term0042", lambda toks: "the" in toks and "term0042" not in toks),
+        (
+            "the AND term004*",
+            lambda toks: "the" in toks and any(t.startswith("term004") for t in toks),
+        ),
+    ],
+    ids=["not", "wildcard"],
+)
+@pytest.mark.parametrize("engine", ["dist", "local"])
+def test_facet_counts_bool_mode(spark, agg_index, engine, q, match):
+    """BOOL facet queries parse against the index fields and expand
+    wildcard atoms on both searchers."""
     out, docs = agg_index
-    s = IndexSearcher(spark, out)
-    q = "the AND NOT term0042"
-    got = {
-        (r["field"], r["value"]): r["doc_count"]
-        for r in s.search_facets(q, ["lang"], mode="BOOL").collect()
-    }
-    want = Counter()
-    for d, (toks, lang) in docs.items():
-        if "the" in toks and "term0042" not in toks:
-            want[("lang", lang)] += 1
+    if engine == "dist":
+        rows = IndexSearcher(spark, out).search_facets(q, ["lang"], mode="BOOL").collect()
+        got = {(r["field"], r["value"]): r["doc_count"] for r in rows}
+    else:
+        got = {
+            (f, v): c
+            for f, v, c in LocalSearcher(out).search_facets(q, ["lang"], mode="BOOL")
+        }
+    want = Counter(("lang", lang) for toks, lang in docs.values() if match(toks))
+    assert want
     assert got == dict(want)
 
 

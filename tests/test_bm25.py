@@ -78,6 +78,31 @@ def test_exhaustive_df_matches_oracle_ranks(spark, small_index, small_oracle):
             assert r["score"] == pytest.approx(s, abs=1e-9)
 
 
+@pytest.mark.parametrize("mode", ["OR", "AND"])
+def test_exhaustive_df_64_terms(spark, small_index, small_oracle, mode):
+    """64 query terms through the Catalyst-only path: the score
+    expression must stay linear in the term count (a form that repeats
+    the running sum per term doubles with every term, fails codegen at
+    8 terms and exhausts the driver by 16).  The terms are the 64
+    highest-df tokens of the longest doc, so AND has matches too."""
+    oracle, _ = small_oracle
+    index_dir, _ = small_index
+    docs = spark.read.parquet(f"{index_dir}/stages/docs").select(
+        "doc_id", tokenize_col("text").alias("tokens")
+    )
+    longest = max(oracle.doc_tokens, key=lambda d: len(set(oracle.doc_tokens[d])))
+    terms = sorted(
+        set(oracle.doc_tokens[longest]), key=lambda t: (-oracle.df(t), t)
+    )[:64]
+    assert len(terms) == 64
+    expected = oracle.topk(terms, mode, 10)
+    assert expected
+    got = bm25_exhaustive_df(docs, terms, mode, 10).collect()
+    assert [r["doc_id"] for r in got] == [d for d, _ in expected]
+    for r, (_d, s) in zip(got, expected):
+        assert r["score"] == pytest.approx(s, abs=1e-9)
+
+
 def test_blockmax_intersection_skips_and_matches_exhaustive():
     """`rare AND stopword`: the pruned path must (a) produce the exact
     candidate set and bit-identical scores of the exhaustive

@@ -1,6 +1,7 @@
 """Distributed query plan shape: Spark jobs per call, and the driver-side
-global-df read those counts rest on (df comes from the searcher's pinned
-termdict, never from a Spark scan)."""
+termdict reads those counts rest on (global df, term expansion and facet
+vocabulary come from the searcher's pinned termdict, never from a Spark
+scan)."""
 
 from __future__ import annotations
 
@@ -59,6 +60,23 @@ def _jobs(spark, group, fn):
             4,
         ),
         ("global_dfs", lambda s: s.global_dfs(["the", "of", "term0042"]), 0),
+        # term expansion, facet vocabulary and suggest ranking are
+        # driver-side termdict reads: only the scoring jobs remain
+        (
+            "expand",
+            lambda s: (
+                s.expand_prefix("term004"),
+                s.expand_fuzzy("term0042"),
+                s.expand_regexp("term00[0-4]."),
+            ),
+            0,
+        ),
+        ("prefix", lambda s: s.search_prefix("term004", k=10).collect(), 2),
+        ("fuzzy", lambda s: s.search_fuzzy("term0042", k=10).collect(), 2),
+        ("regexp", lambda s: s.search_regexp("term004.", k=10).collect(), 2),
+        ("bool_wildcard", lambda s: s.search_bool("the AND term004*", k=10).collect(), 2),
+        ("suggest", lambda s: s.suggest_terms("term00", size=5).collect(), 1),
+        ("facets", lambda s: s.search_facets(["the", "of"], ["lang"]).collect(), 5),
     ],
 )
 def test_jobs_per_call(spark, searcher, name, call, max_jobs):
