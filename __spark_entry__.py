@@ -283,12 +283,10 @@ def _q_bm25_index_bmw(spark, sf):
 
 
 def _q_bm25_index_segprune(spark, sf):
-    """Two-phase cross-segment pruning (r4): probe the best-bound
-    segments, skip segments whose bound can't reach the probe's k-th
-    score — must stay value-identical to the exhaustive SQL oracle."""
-    r = _searcher(spark, sf).search(
-        OR_TERMS, mode="OR", k=20, algo="auto", segment_prune=True
-    )
+    """Cross-segment pruning (r4): each scatter task skips segments
+    whose bound can't reach its running k-th score — must stay
+    value-identical to the exhaustive SQL oracle."""
+    r = _searcher(spark, sf).search(OR_TERMS, mode="OR", k=20, algo="auto")
     return r.select("doc_id", _micro(F.col("score")).alias("score_micro"))
 
 

@@ -8,11 +8,13 @@ elasticsearch_client_v7.py:84-99).  Here it is native:
     `term_bucket` → partition pruning; at 10^12 docs a query touches
     1/n_buckets of the index files, and parquet min/max stats on the
     sorted `term` column prune row groups further)
-  * per-segment scoring in Arrow UDFs (segments have disjoint doc-id
-    ranges → a doc's full score is computed in exactly one task; the
-    segment axis is also the query-time parallelism)
+  * per-segment scoring in long-lived Python workers (segments have
+    disjoint doc-id ranges → a doc's full score is computed in exactly
+    one task; the segment axis is also the query-time parallelism):
+    the driver plans the query, one plan-only job scatters it to
+    workers that each keep a cached LocalSearcher (IndexSearcher._scatter)
   * global top-k = orderBy(score desc, doc_id asc).limit(k) over at
-    most n_segments × k candidate rows (tiny)
+    most n_tasks × k candidate rows (tiny)
 
 Determinism contract (rank-identity, north rule): a doc's score is the
 sum of per-term contributions accumulated in ASCENDING TERM order,
@@ -27,6 +29,7 @@ import dataclasses
 import heapq
 import os
 import re
+import zlib
 from functools import reduce
 
 import numpy as np
@@ -821,6 +824,19 @@ def _check_scoring_rows(pdf: pd.DataFrame, idf: dict[str, float]) -> None:
     """One segment's scoring rows: unique per term, each with a df."""
     _check_unique_terms(pdf)
     _check_has_df(pdf["term"], idf)
+
+
+def pack_listing(base: str, files: list[str]) -> bytes:
+    """A snapshot's file listing under ``base``, relative and compressed
+    (the files of one write share a name stem, so a few hundred paths
+    pack into under 1 KB)."""
+    return zlib.compress("\n".join(os.path.relpath(f, base) for f in files).encode())
+
+
+def unpack_listing(base: str, packed: bytes) -> list[str]:
+    """Inverse of pack_listing."""
+    rel = zlib.decompress(packed).decode()
+    return [os.path.join(base, r) for r in rel.split("\n")] if rel else []
 
 
 def term_filter(terms: list[str], n_term_buckets: int) -> ds.Expression:
@@ -1765,6 +1781,32 @@ def score_segment(
     return _topk(docs, scores, q.k)
 
 
+def adjacency_filters(searcher, filters: "dict[str, str]") -> list[tuple]:
+    """Parse and check search_adjacency's named filters, before any
+    work, for both searchers: [(name, ast, terms)] in name order.  A
+    name with '&', a pure negation or a range/phrase/nested atom is
+    rejected."""
+    from ..functions import boolquery as bq
+
+    compiled = []
+    for name, q in sorted(filters.items()):
+        if "&" in name:
+            raise ValueError(f"filter name {name!r} may not contain '&'")
+        ast, terms = searcher.parse_query(q, "BOOL")
+        if bq.is_pure_negation(ast):
+            raise bq.QueryParseError(
+                f"filter {name!r} is pure negation (unbounded match "
+                "set) — rewrite as '<positive> AND NOT ...'"
+            )
+        if bq.filter_atoms(ast):
+            raise ValueError(
+                f"adjacency filter {name!r} uses doc-value/phrase/nested "
+                "atoms — not supported here (use search_filters)"
+            )
+        compiled.append((name, ast, terms))
+    return compiled
+
+
 def _phrase_suggest_rows(
     searcher,
     text: str,
@@ -1814,6 +1856,7 @@ class IndexSearcher(TermdictFrontEnd):
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
+        self._skipped = None
         self._load_snapshot()
 
     def _load_snapshot(self) -> None:
@@ -1829,8 +1872,14 @@ class IndexSearcher(TermdictFrontEnd):
         self.n_docs = self.manifest["globals"]["n_docs"]
         self.avgdl = self.manifest["globals"]["avgdl"]
         self.n_term_buckets = self.manifest["params"]["n_term_buckets"]
-        self._postings = self.spark.read.parquet(
-            table_path(self.index_dir, "postings", self.manifest)
+        postings_dir = table_path(self.index_dir, "postings", self.manifest)
+        self._postings = self.spark.read.parquet(postings_dir)
+        # extend_index appends postings files in place, so the scatter
+        # ships this snapshot's listing: a worker that builds its
+        # searcher later must not see files appended since
+        self._postings_listing = pack_listing(
+            postings_dir,
+            ds.dataset(postings_dir, format="parquet", partitioning="hive").files,
         )
         # the termdict front end reads on the driver: opened once per
         # snapshot (an open lists the files), pinned like every table
@@ -1893,52 +1942,55 @@ class IndexSearcher(TermdictFrontEnd):
         map stage and the scoring/top-k stage)."""
         return self._term_rows(terms_sorted).select(*self.SCORING_COLS)
 
-    def _segment_task(self, plans: list[QueryPlan]):
-        """The per-segment task body of every distributed scoring API:
-        ``run(pdf, segment, extra_sets=None)`` checks the segment's rows,
-        builds ONE block cache over them, looks up the segment's
-        tombstones and emits score_segment's top-k for each plan (a
-        batch shares the cache, so each blob decodes at most once)."""
-        get_deletes = self._segment_deletes_fn()
-        known = {t for q in plans for t in q.idf}
+    def _scatter(self, plans: list[QueryPlan]) -> DataFrame:
+        """Per-task top-k rows of ``plans`` — the query phase of every
+        distributed scoring API, the Elasticsearch per-shard searchers
+        plus coordinating merge.  One plan-only Spark job: ``n`` tasks
+        over no data, each running serve.score_partition in a reused
+        Python worker, whose LocalSearcher (pinned to this searcher's
+        manifest and postings listing) scores the segments with
+        seg % n == i from its hot
+        row, decode and block caches, pruning segments by bound.  No
+        postings are scanned, shuffled or sent through Arrow; a task
+        ships the plans, the manifest (about 1 KB) and the packed
+        postings listing.  The DataFrame stays lazy, so
+        ``_ranked(...).collect()`` is 1 job; ``last_segments_skipped``
+        is read after that collect."""
+        from ..functions import boolquery as bq
+        from .docvalues import check_field
+        from .serve import score_partition
 
-        def run(pdf: pd.DataFrame, seg: int, extra_sets=None) -> pd.DataFrame:
-            if len(pdf):
-                _check_scoring_rows(pdf, known)
-            cache = _BlockCache(pdf.itertuples())
-            dead = get_deletes(seg)
-            frames = []
-            for q in plans:
-                docs, scores = score_segment(q, cache, dead, extra_sets)
-                cols = {"doc_id": docs, "score": scores}
-                if q.query_id is not None:
-                    cols = {"query_id": [q.query_id] * len(docs), **cols}
-                frames.append(pd.DataFrame(cols))
-            if len(frames) == 1:
-                return frames[0]
-            return pd.concat(frames, ignore_index=True)
+        # an unknown range field fails here, typed, not inside a task
+        fields = {rt.field for q in plans if q.atoms for rt in bq.range_atoms(q.ast)}
+        if fields:
+            cols = ds.dataset(self._doclens_path, format="parquet").schema.names
+            for f in sorted(fields):
+                check_field(self, f, cols)
+        sc = self.spark.sparkContext
+        n_segs = int(self.manifest.get("metrics", {}).get("n_segments") or 1)
+        n = max(1, min(sc.defaultParallelism, n_segs))
+        index_dir, manifest = self.index_dir, self.manifest
+        listing = self._postings_listing
+        skipped = self._skipped = sc.accumulator(0)
 
-        return run
+        def task(it):
+            # partition i holds just i; reading the input to its end
+            # keeps the worker (and its searcher) for the next task
+            for i in it:
+                rows, n_skipped = score_partition(
+                    index_dir, manifest, listing, plans, n, i
+                )
+                skipped.add(n_skipped)
+                yield from rows
 
-    def _score_segments(self, rows: DataFrame, plans: list[QueryPlan]) -> DataFrame:
-        """Per-segment top-k rows of ``plans`` over posting ``rows``."""
-        run = self._segment_task(plans)
-        return _per_segment_apply(
-            rows,
-            lambda pdf: run(pdf, int(pdf["segment"].iloc[0])),
-            _result_schema(plans),
-        )
+        rdd = sc.parallelize(range(n), n).mapPartitions(task)
+        return self.spark.createDataFrame(rdd, _result_schema(plans))
 
-    # Auto-gate threshold for two-phase distributed segment pruning:
-    # measured crossover on the 200k-doc bench corpus, local[32] (see
-    # BENCH/BASELINE.md "segment-prune crossover") — at 100 segments
-    # pruning break-evens (job-floor overhead ≈ skipped-task savings),
-    # at 400 it wins 1.4-1.7× on both localized and flat rare-term
-    # queries; below the threshold the fixed metadata+probe job cost
-    # dominates.  The bound-flatness bail-out inside
-    # _two_phase_segment_prune caps the worst case above the threshold
-    # at one tiny metadata job.
-    SEGPRUNE_AUTO_MIN_SEGMENTS = 128
+    @property
+    def last_segments_skipped(self) -> int:
+        """Segments the last scoring call's tasks skipped by bound,
+        summed over its tasks (counted when its result is collected)."""
+        return self._skipped.value if self._skipped is not None else 0
 
     def search(
         self,
@@ -1946,7 +1998,6 @@ class IndexSearcher(TermdictFrontEnd):
         mode: str = "OR",
         k: int = 10,
         algo: str = "auto",
-        segment_prune: bool | None = None,
         min_should_match: int = 1,
     ) -> DataFrame:
         """Top-k BM25.  Returns DataFrame(doc_id, score) already sorted
@@ -1958,128 +2009,18 @@ class IndexSearcher(TermdictFrontEnd):
         score-identical; algo only changes how much of each posting
         list is decoded.
 
-        segment_prune=True adds CROSS-SEGMENT pruning (two-phase): a
-        metadata-only collect computes per-segment score bounds
-        (segment_bounds), the best-bound segments are scored first as a
-        probe, and segments whose bound is strictly below the probe's
-        k-th score never get a scoring task at all — bit-identical
-        (strict inequality forbids ties).  Costs one extra small job +
-        one tiny collect: the win is proportional to segment count (at
-        10^12 docs a rare-but-widespread term's task fan-out collapses),
-        while on a handful of segments the fixed job overhead dominates.
-        Default None AUTO-GATES on the manifest's segment count at the
-        measured crossover (SEGPRUNE_AUTO_MIN_SEGMENTS); True/False
-        force it.  The sequential LocalSearcher has it always-on for
-        free.  ``last_segments_skipped`` reports the count.
+        The pruned paths (auto/maxscore/AND-block-skip) also prune
+        ACROSS segments: each scatter task visits its segments in
+        bound order and skips a segment whose bound is strictly below
+        its running k-th score — bit-identical (strict inequality
+        forbids ties).  ``last_segments_skipped`` reports the count.
 
         ``min_should_match`` (ES analog, OR mode only): a doc must
         contain at least this many of the query terms; scoring stays
         the disjunctive sum over the terms it has.  m=1 is plain OR,
         m=len(terms) equals AND."""
         q = plan_terms(self, terms, mode, k, algo, min_should_match)
-        auto_prune = segment_prune is None
-        if auto_prune:
-            n_segs = int(
-                self.manifest.get("metrics", {}).get("n_segments", 0) or 0
-            )
-            segment_prune = n_segs >= self.SEGPRUNE_AUTO_MIN_SEGMENTS
-        rows = self._scoring_rows(q.terms)
-        self.last_segments_skipped = 0
-        if segment_prune and q.msm == 1 and algo not in ("bmw", "exhaustive"):
-            pruned = self._two_phase_segment_prune(rows, q, auto=auto_prune)
-            if pruned is not None:
-                return pruned
-        return _ranked(self._score_segments(rows, [q]), q.k)
-
-    # auto-mode bail-out: attempt the probe only when at least this
-    # fraction of candidate segments has a bound under half the best
-    # segment's bound.  On a bound-flat corpus (terms spread uniformly
-    # over doc ids) the probe floor can't beat near-max bounds, so the
-    # probe+survivor jobs are pure overhead — measured at 100 segments:
-    # prune 1.61 s vs plain 1.14 s with only 23 skipped.  Segment-
-    # correlated terms (time/site-ordered crawls — the web-scale norm)
-    # pass this test and collapse the task fan-out.
-    SEGPRUNE_MIN_DISCRIMINATION = 0.3
-
-    def _two_phase_segment_prune(
-        self, rows: DataFrame, q: QueryPlan, auto: bool = False
-    ) -> DataFrame | None:
-        """Probe-then-prune: bounds from a metadata-only collect (tiny —
-        |terms| × |segments| scalars, no blobs cross the wire thanks to
-        parquet column pruning), one scoring task for the best-bound
-        segment, then scoring tasks ONLY for segments whose bound can
-        still reach the probe's k-th score.  Returns None when pruning
-        cannot pay: fewer than 3 candidate segments (pre-gated on the
-        manifest's segment count so the metadata job isn't launched),
-        or — in auto mode — a bound distribution too flat for the probe
-        floor to skip anything (SEGPRUNE_MIN_DISCRIMINATION; the only
-        cost of a bail-out is the metadata collect)."""
-        if int(self.manifest.get("metrics", {}).get("n_segments", 999) or 999) < 3:
-            return None
-        k = q.k
-        meta = rows.select(
-            "segment",
-            "term",
-            "df",
-            F.array_max("block_max_tf").alias("mx"),
-            F.array_min("block_min_dl").alias("mn"),
-        ).collect()
-        _check_has_df({r["term"] for r in meta}, q.idf)
-        # strong[seg]: df of the segment's strongest term (highest
-        # single-row bound) — the docs that can push the probe's k-th
-        # score above other segments' bounds.  Sizing the probe by this
-        # count fixes the dilution failure where a 3-segment probe holds
-        # too few rare-term docs to establish a floor above
-        # stopword-only segment bounds (measured: 0 skips at 400
-        # segments, k=10).
-        bounds, strong, segs = segment_bounds(
-            q, ((r["segment"], r["term"], r["df"], r["mx"], r["mn"]) for r in meta)
-        )
-        if len(segs) < 3:
-            return None
-        if auto:
-            b_max = max(bounds[s] for s in segs)
-            frac = sum(1 for s in segs if bounds[s] < 0.5 * b_max) / len(segs)
-            if frac < self.SEGPRUNE_MIN_DISCRIMINATION:
-                return None
-        # probe the top-P bound segments TOGETHER: one segment's local
-        # k-th is diluted by its own weak matches, so the probe grows
-        # until it holds >= 2k strong-term docs (and at least the old
-        # max(2, ceil(k/4)) segments) — enough that its union's k-th
-        # approaches the global k-th, a stronger (still conservative)
-        # floor.  Cap at half the candidates: past that, pruning the
-        # remainder can't recoup the probe.
-        order = sorted(segs, key=lambda s: (-bounds[s], s))
-        n_min = max(2, -(-k // 4))
-        cap = max(1, len(segs) // 2)
-        n_probe, cum_strong = 0, 0
-        for s in order:
-            if n_probe >= cap:
-                break
-            n_probe += 1
-            cum_strong += strong.get(s, (0.0, 0))[1]
-            if n_probe >= n_min and cum_strong >= 2 * k:
-                break
-        n_probe = min(max(n_probe, min(n_min, cap)), cap)
-        probe_segs = order[:n_probe]
-        probe = _ranked(
-            self._score_segments(rows.filter(F.col("segment").isin(probe_segs)), [q]),
-            k,
-        ).collect()
-        floor = float(probe[k - 1]["score"]) if len(probe) >= k else None
-        survivors = [
-            s
-            for s in order[n_probe:]
-            if floor is None or not bounds[s] < floor
-        ]
-        self.last_segments_skipped = len(segs) - n_probe - len(survivors)
-        probe_df = self.spark.createDataFrame(probe, RESULT_SCHEMA)
-        if survivors:
-            rest = self._score_segments(
-                rows.filter(F.col("segment").isin(survivors)), [q]
-            )
-            probe_df = probe_df.unionByName(rest)
-        return _ranked(probe_df, k)
+        return _ranked(self._scatter([q]), q.k)
 
     def search_bool(
         self, query: str, k: int = 10, synonyms: "dict | None" = None
@@ -2092,60 +2033,12 @@ class IndexSearcher(TermdictFrontEnd):
 
         Doc-value range atoms (``n_chars:[150 TO 400]``,
         ``warc_ts:[2025-02-01T00:00:00 TO *]`` — ES query_string range
-        syntax, filter context) compose with any boolean structure: the
-        per-atom predicates push into the doclens parquet scan and the
-        allowed ids are cogrouped with the posting rows per segment, so
-        range evaluation never materializes on the driver."""
+        syntax, filter context) compose with any boolean structure: each
+        scatter task resolves the atoms from its worker's cached doc
+        values, phrase matches and nested sidecar, so range evaluation
+        never materializes on the driver."""
         q = plan_bool(self, query, k, synonyms)
-        if q.atoms:
-            return _ranked(self._score_bool_atoms(q), q.k)
-        return _ranked(self._score_segments(self._scoring_rows(q.terms), [q]), q.k)
-
-    def _score_bool_atoms(self, q: QueryPlan) -> DataFrame:
-        """Per-segment rows of a bool plan with range/phrase/nested atoms:
-        each atom's allowed ids (doclens scan, phrase matches, nested
-        sidecar) are tagged by atom key and cogrouped with the posting
-        rows per segment, and reach score_segment as ``extra_sets`` —
-        a segment holding only atom matches still gets a task."""
-        from ..functions import boolquery as bq
-        from . import docvalues as dv
-        from . import nested as nst
-
-        dl = dv.doclens_df(self)
-        dpp, seg_group = dv._seg_params(self.manifest)
-        seg_of = dv.segment_expr(F.col("doc_id"), dpp, seg_group)
-
-        def tagged(df: DataFrame, atom) -> DataFrame:
-            return df.select(
-                seg_of.alias("segment"), "doc_id", F.lit(atom.key()).alias("rkey")
-            )
-
-        parts = []
-        for rt in bq.range_atoms(q.ast):
-            dv.check_field(self, rt.field, dl.columns)
-            pred = dv.range_pred(rt, dv.is_array_type(dl, rt.field))
-            parts.append(tagged(dl.filter(pred), rt))
-        parts += [
-            tagged(self._phrase_matches(list(pt.tokens), pt.slop), pt)
-            for pt in bq.phrase_atoms(q.ast)
-        ]
-        parts += [tagged(nst.atom_match_df(self, nt), nt) for nt in bq.nested_atoms(q.ast)]
-        allowed = reduce(DataFrame.unionByName, parts)
-        rkeys = [a.key() for a in q.atoms]
-        run = self._segment_task([q])
-
-        def score_cogroup(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            # atoms with no match in this segment get an empty set
-            extra = dict.fromkeys(rkeys, np.array([], np.int64))
-            for rk, grp in right.groupby("rkey"):
-                extra[rk] = np.sort(grp["doc_id"].to_numpy(np.int64))
-            return run(left, int(key[0]), extra)
-
-        return (
-            self._scoring_rows(q.terms).groupBy("segment")
-            .cogroup(allowed.groupBy("segment"))
-            .applyInPandas(score_cogroup, _result_schema([q]))
-        )
+        return _ranked(self._scatter([q]), q.k)
 
     def search_fielded(
         self,
@@ -2180,7 +2073,7 @@ class IndexSearcher(TermdictFrontEnd):
         sums) — the "one field should dominate" ranking for fields that
         compete rather than complement (_fielded_best_scores)."""
         q = plan_fielded(self, terms, fields, k, mode, tie_breaker)
-        return _ranked(self._score_segments(self._scoring_rows(q.terms), [q]), q.k)
+        return _ranked(self._scatter([q]), q.k)
 
     def search_prefix(
         self,
@@ -2531,11 +2424,11 @@ class IndexSearcher(TermdictFrontEnd):
         matches strictly AFTER cursor position ``(score, doc_id)`` in
         the global (score desc, doc_id asc) order.  Stateless and
         O(k)-per-page like ES's search_after (vs from+size's O(from+k)
-        deep-page blowup): each segment task scores exhaustively, drops
-        docs at-or-before the cursor, and keeps its local top-k; the
-        global merge is k rows per segment.  Page 1 = after=None."""
+        deep-page blowup): each segment scores exhaustively, drops docs
+        at-or-before the cursor, and keeps its local top-k; the global
+        merge is k rows per scatter task.  Page 1 = after=None."""
         q = plan_terms(self, terms, mode, k, algo="exhaustive", after=after)
-        return _ranked(self._score_segments(self._scoring_rows(q.terms), [q]), q.k)
+        return _ranked(self._scatter([q]), q.k)
 
     def search_count(
         self, query: list[str] | str, mode: str = "OR"
@@ -3625,22 +3518,7 @@ class IndexSearcher(TermdictFrontEnd):
 
         from ..functions import boolquery as bq
 
-        compiled = []
-        for name, q in sorted(filters.items()):
-            if "&" in name:
-                raise ValueError(f"filter name {name!r} may not contain '&'")
-            ast, terms = self.parse_query(q, "BOOL")
-            if bq.is_pure_negation(ast):
-                raise bq.QueryParseError(
-                    f"filter {name!r} is pure negation (unbounded match "
-                    "set) — rewrite as '<positive> AND NOT ...'"
-                )
-            if bq.filter_atoms(ast):
-                raise ValueError(
-                    f"adjacency filter {name!r} uses doc-value/phrase/nested "
-                    "atoms — not supported here (use search_filters)"
-                )
-            compiled.append((name, ast, terms))
+        compiled = adjacency_filters(self, filters)
         all_terms = sorted({t for _n, _a, ts in compiled for t in ts})
         rows = self._term_rows(all_terms).select("segment", "term", "blob")
         get_deletes = self._segment_deletes_fn()
@@ -3769,38 +3647,32 @@ class IndexSearcher(TermdictFrontEnd):
           * ``mode`` "BOOL" + ``query`` — boolean query string
           * ``mode`` "PHRASE" + ``phrase`` — exact-phrase query
 
-        Job count is CONSTANT in the batch size: term+bool queries share
-        one scoring job (each segment's block cache decodes every blob
-        at most once across all queries); phrase queries add two (one
-        match job for ALL phrases — phrase df isn't known until matches
-        exist — plus the count); BOOL queries containing range/
-        ``_exists_``/doc-value atoms add one job each (they run
-        search_bool's doc-value cogroup — the shared block cache can't
-        see doc values).  Returns DataFrame(query_id, rank, doc_id,
-        score), rank 1..k by (score desc, doc_id asc), results
-        bit-identical per query to search/search_bool/search_phrase."""
-        plans, atom_plans, phrase_specs = [], [], []
+        Job count is CONSTANT in the batch size: term and bool queries
+        (atoms included) share one scatter, whose tasks' worker caches
+        decode each blob at most once across the batch; phrase queries
+        add two (one match job for ALL phrases — phrase df isn't known
+        until matches exist — plus the count).  Returns
+        DataFrame(query_id, rank, doc_id, score), rank 1..k by (score
+        desc, doc_id asc), results bit-identical per query to
+        search/search_bool/search_phrase."""
+        plans, phrase_specs = [], []
         for s in specs:
             if s.get("mode", "OR").upper() == "PHRASE":
                 phrase_specs.append(
                     (s["query_id"], list(s["phrase"]), int(s.get("k", 10)))
                 )
                 continue
-            q = plan_spec(self, s)
-            (atom_plans if q.atoms else plans).append(q)
+            plans.append(plan_spec(self, s))
 
         parts: list[DataFrame] = []
-        all_terms = sorted({t for q in plans for t in q.terms})
-        if all_terms:
-            parts.append(self._score_segments(self._scoring_rows(all_terms), plans))
+        if plans:
+            parts.append(self._scatter(plans))
         if phrase_specs:
             parts.append(self._phrase_scores_many(phrase_specs))
-        for q in atom_plans:
-            parts.append(_ranked(self._score_bool_atoms(q), q.k))
         if not parts:
             return self.spark.createDataFrame([], MULTI_RESULT_SCHEMA)
         per_segment = reduce(DataFrame.unionByName, parts)
-        k_pairs = [(q.query_id, q.k) for q in plans + atom_plans] + [
+        k_pairs = [(q.query_id, q.k) for q in plans] + [
             (qid, k) for qid, _, k in phrase_specs
         ]
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))

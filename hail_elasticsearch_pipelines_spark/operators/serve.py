@@ -13,16 +13,17 @@ per-segment scorer: the shared planners in bm25.py (plan_terms /
 plan_fielded / plan_bool) build a QueryPlan on the driver, and
 bm25.score_segment chooses the kernel, masks tombstones and cuts each
 segment's top-k — so results are bit-identical
-(tests/test_serve.py).  The executors differ only in scheduling and
-caching: IndexSearcher runs score_segment in one mapInPandas task per
-segment; LocalSearcher._search_pruned runs it in-process over its hot
-term-rows, decoded-postings and block caches, visiting segments in
-bound order with a running top-k.
+(tests/test_serve.py).  LocalSearcher._search_pruned runs it over its
+hot term-rows, decoded-postings and block caches, visiting segments in
+bound order with a running top-k — in-process, and as the distributed
+query phase: IndexSearcher._scatter sends its plans to Spark's Python
+workers, where score_partition runs the same loop over a slice of the
+segments on a LocalSearcher each worker keeps between tasks.
 
 Scale posture: the distributed `IndexSearcher` is the 10^12-doc path
 (per-segment scoring fans out across executors).  `LocalSearcher` is
 the latency path for small/medium indexes and the per-shard inner loop
-a real serving tier would run on each index node.
+every executor runs.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ from .bm25 import (
     DEFAULT_FUZZY_EXPANSIONS,
     DEFAULT_MAX_EXPANSIONS,
     _BlockCache,
+    _check_has_df,
     _match_dls,
     _match_docs,
     _phrase_match_counts,
@@ -100,22 +102,29 @@ class LocalSearcher(TermdictFrontEnd):
         self.index_dir = index_dir
         self._load_snapshot()
 
-    def _load_snapshot(self) -> None:
+    def _load_snapshot(
+        self, manifest: "dict | None" = None, postings: "list[str] | None" = None
+    ) -> None:
         """Pin to the CURRENT manifest generation (see
-        IndexSearcher._load_snapshot): table paths resolve through the
-        manifest's generation pointers once, deletes are read at the
-        manifest's epoch, so a concurrent maintenance publish never
-        changes what this searcher serves mid-query."""
+        IndexSearcher._load_snapshot), or to ``manifest`` and its
+        ``postings`` file listing when given (a worker serving an
+        IndexSearcher's snapshot): table paths resolve through the
+        manifest's generation pointers once, the postings files are
+        listed once, deletes are read at the manifest's epoch, so a
+        concurrent maintenance publish never changes what this searcher
+        serves mid-query."""
         from ..layout import load_manifest, table_path
 
-        self.manifest = load_manifest(self.index_dir)
+        self.manifest = manifest if manifest is not None else load_manifest(self.index_dir)
         self.n_docs = self.manifest["globals"]["n_docs"]
         self.avgdl = self.manifest["globals"]["avgdl"]
         self.n_term_buckets = self.manifest["params"]["n_term_buckets"]
+        postings_dir = table_path(self.index_dir, "postings", self.manifest)
         self._postings = ds.dataset(
-            table_path(self.index_dir, "postings", self.manifest),
+            postings_dir if postings is None else postings,
             format="parquet",
             partitioning="hive",
+            partition_base_dir=postings_dir,
         )
         self._termdict = ds.dataset(
             table_path(self.index_dir, "termdict", self.manifest),
@@ -297,7 +306,10 @@ class LocalSearcher(TermdictFrontEnd):
         )
 
     def _search_pruned(
-        self, q: QueryPlan, extra_sets: "dict | None" = None
+        self,
+        q: QueryPlan,
+        extra_sets: "dict | None" = None,
+        part: tuple[int, int] = (0, 1),
     ) -> list[tuple[int, float]]:
         """The one local scoring loop (term, page, fielded, bool and
         batch queries): rows come from the hot term-rows cache
@@ -315,13 +327,18 @@ class LocalSearcher(TermdictFrontEnd):
         blobs are decoded (``last_segments_skipped``).  ``extra_sets``
         maps a bool plan's atom keys to (doc ids, their segments); the
         segments it names are visited even when no query term touches
-        them."""
+        them.  ``part=(i, n)`` visits only segments with seg % n == i
+        (one task of IndexSearcher's scatter).
+
+        A term with posting rows but no termdict df is a corrupt index
+        and raises, whatever the query would otherwise return."""
         self.last_segments_skipped = 0
+        rows = self._rows_for(q.terms)
+        _check_has_df([t for t in q.terms if rows[t]], q.idf)
         if extra_sets is None and (
             not q.idf or any(t not in q.idf for t in q.required)
         ):
             return []
-        rows = self._rows_for(q.terms)
         bounds, _strong, segs = segment_bounds(
             q,
             (
@@ -334,8 +351,11 @@ class LocalSearcher(TermdictFrontEnd):
             segs = set(segs).union(
                 *(np.unique(s_of).tolist() for _ids, s_of in extra_sets.values())
             )
+        i, n = part
         # bound desc, segment asc for deterministic order on ties
-        order = sorted(segs, key=lambda s: (-bounds.get(s, 0.0), s))
+        order = sorted(
+            (s for s in segs if s % n == i), key=lambda s: (-bounds.get(s, 0.0), s)
+        )
         prune = q.prunable
         acc_d = np.array([], np.int64)
         acc_s = np.array([], np.float64)
@@ -670,26 +690,9 @@ class LocalSearcher(TermdictFrontEnd):
         allowed ids resolve once from the cached doc values, sliced
         per segment and injected into the shared match kernel."""
         from ..functions import boolquery as bq
-        from .docvalues import range_mask
 
         qterms = bq.all_terms(ast)
-        g, p = self.manifest["globals"], self.manifest["params"]
-        dpp, seg_group = int(g["docs_per_part"]), int(p["seg_group"])
-        range_sets = {}
-        for rt in bq.range_atoms(ast):
-            all_ids, vals = self._docvalues(rt.field)
-            ids = all_ids[
-                range_mask(vals, rt, rt.field in self._dv_array_fields)
-            ]
-            range_sets[rt.key()] = (ids, (ids // dpp) // seg_group)
-        for pt in bq.phrase_atoms(ast):
-            ids = np.sort(self._phrase_match_rows(list(pt.tokens), pt.slop)[0])
-            range_sets[pt.key()] = (ids, (ids // dpp) // seg_group)
-        for nt in bq.nested_atoms(ast):
-            from . import nested as nst
-
-            ids = nst.local_atom_ids(self, nt)
-            range_sets[nt.key()] = (ids, (ids // dpp) // seg_group)
+        range_sets = self._atom_sets(ast)
         rows = self._rows_for(qterms) if qterms else {}
         seg_list = {s for m in rows.values() for s in m}
         for _ids, segs in range_sets.values():
@@ -795,12 +798,13 @@ class LocalSearcher(TermdictFrontEnd):
         if not allowed.size:
             return []
         dfs = self.global_dfs(qterms)
+        rows = self._rows_for(qterms)
+        _check_has_df([t for t in qterms if rows[t]], dfs)
         if not dfs or (mode_u == "AND" and any(t not in dfs for t in qterms)):
             return []
         idf = {t: bm25_idf(self.n_docs, d) for t, d in dfs.items()}
         avgdl = field_avgdl_map(self.manifest, qterms)
         msm = len(qterms) if mode_u == "AND" else 1
-        rows = self._rows_for(qterms)
         acc_d, acc_s = [], []
         for seg in sorted({s for m in rows.values() for s in m}):
             postings = {
@@ -879,12 +883,13 @@ class LocalSearcher(TermdictFrontEnd):
         if not allowed.size:
             return []
         dfs = self.global_dfs(qterms)
+        rows = self._rows_for(qterms)
+        _check_has_df([t for t in qterms if rows[t]], dfs)
         if not dfs or (mode_u == "AND" and any(t not in dfs for t in qterms)):
             return []
         idf = {t: bm25_idf(self.n_docs, d) for t, d in dfs.items()}
         avgdl = field_avgdl_map(self.manifest, qterms)
         msm = len(qterms) if mode_u == "AND" else 1
-        rows = self._rows_for(qterms)
         acc_d, acc_s = [], []
         for seg in sorted({s for m in rows.values() for s in m}):
             postings = {
@@ -1152,12 +1157,13 @@ class LocalSearcher(TermdictFrontEnd):
         if not qterms:
             return []
         dfs = self.global_dfs(qterms)
+        rows = self._rows_for(qterms)
+        _check_has_df([t for t in qterms if rows[t]], dfs)
         if not dfs or (mode_u == "AND" and any(t not in dfs for t in qterms)):
             return []
         idf = {t: bm25_idf(self.n_docs, d) for t, d in dfs.items()}
         avgdl = field_avgdl_map(self.manifest, qterms)
         msm = len(qterms) if mode_u == "AND" else 1
-        rows = self._rows_for(qterms)
         acc_d, acc_s = [], []
         for seg in sorted({s for m in rows.values() for s in m}):
             postings = {
@@ -1248,12 +1254,13 @@ class LocalSearcher(TermdictFrontEnd):
         if not qterms:
             return []
         dfs = self.global_dfs(qterms)
+        rows = self._rows_for(qterms)
+        _check_has_df([t for t in qterms if rows[t]], dfs)
         if not dfs or (mode_u == "AND" and any(t not in dfs for t in qterms)):
             return []
         idf = {t: bm25_idf(self.n_docs, d) for t, d in dfs.items()}
         avgdl = field_avgdl_map(self.manifest, qterms)
         msm = len(qterms) if mode_u == "AND" else 1
-        rows = self._rows_for(qterms)
         acc_d, acc_s = [], []
         for seg in sorted({s for m in rows.values() for s in m}):
             postings = {
@@ -1811,17 +1818,19 @@ class LocalSearcher(TermdictFrontEnd):
     def search_adjacency(self, filters: "dict[str, str]") -> list[tuple]:
         """adjacency_matrix — serving twin of
         IndexSearcher.search_adjacency: [(key, doc_count)] sorted, keys
-        ``a`` and ``a&b`` (names sorted), empty pairs omitted."""
+        ``a`` and ``a&b`` (names sorted), empty pairs omitted; the same
+        filters are rejected (adjacency_filters)."""
         from itertools import combinations
 
-        self._reject_pure_negation(filters)
+        from .bm25 import adjacency_filters
+
         sets = {
-            name: set(self.matched_ids(q, "BOOL").tolist())
-            for name, q in sorted(filters.items())
+            name: {
+                d for m, _dls in self._segment_match_dls(ast, terms, "BOOL")
+                for d in m.tolist()
+            }
+            for name, ast, terms in adjacency_filters(self, filters)
         }
-        for name in sets:
-            if "&" in name:
-                raise ValueError(f"filter name {name!r} may not contain '&'")
         out = [(n, len(ids)) for n, ids in sets.items()]
         for a, b in combinations(sorted(sets), 2):
             inter = sets[a] & sets[b]
@@ -2021,7 +2030,7 @@ class LocalSearcher(TermdictFrontEnd):
                 )
                 continue
             q = plan_spec(self, s)
-            out[q.query_id] = self._search_pruned(q, self._atom_sets(q))
+            out[q.query_id] = self._search_pruned(q, self._atom_sets(q.ast))
         return out
 
     def search_bool(
@@ -2033,31 +2042,32 @@ class LocalSearcher(TermdictFrontEnd):
         pruning (bound summed over POSITIVE terms only — facet/NOT
         terms filter, never score)."""
         q = plan_bool(self, query, k, synonyms)
-        return self._search_pruned(q, self._atom_sets(q))
+        return self._search_pruned(q, self._atom_sets(q.ast))
 
-    def _atom_sets(self, q: QueryPlan) -> "dict[str, tuple] | None":
-        """A bool plan's range / quoted-phrase / nested atoms (filter
+    def _atom_sets(self, ast) -> "dict[str, tuple] | None":
+        """A bool query's range / quoted-phrase / nested atoms (filter
         context) resolved once: atom key → (matching doc ids, their
         segments), from cached doc values / positional chain matches /
-        the nested sidecar.  None when the plan has no atoms."""
-        if not q.atoms:
-            return None
+        the nested sidecar.  None when there are no atoms."""
         from ..functions import boolquery as bq
+
+        if ast is None or not bq.filter_atoms(ast):
+            return None
         from . import nested as nst
         from .docvalues import range_mask
 
         g, p = self.manifest["globals"], self.manifest["params"]
         dpp, seg_group = int(g["docs_per_part"]), int(p["seg_group"])
         sets: dict[str, np.ndarray] = {}
-        for rt in bq.range_atoms(q.ast):
+        for rt in bq.range_atoms(ast):
             all_ids, vals = self._docvalues(rt.field)
             ids = all_ids[range_mask(vals, rt, rt.field in self._dv_array_fields)]
             sets[rt.key()] = ids
-        for pt in bq.phrase_atoms(q.ast):
+        for pt in bq.phrase_atoms(ast):
             sets[pt.key()] = np.sort(
                 self._phrase_match_rows(list(pt.tokens), pt.slop)[0]
             )
-        for nt in bq.nested_atoms(q.ast):
+        for nt in bq.nested_atoms(ast):
             sets[nt.key()] = nst.local_atom_ids(self, nt)
         return {rk: (ids, (ids // dpp) // seg_group) for rk, ids in sets.items()}
 
@@ -2269,3 +2279,58 @@ class LocalSearcher(TermdictFrontEnd):
             ((d, qw * s + rw * ph_score.get(d, 0.0)) for d, s in base),
             key=lambda t: (-t[1], t[0]),
         )[: int(k)]
+
+
+# index_dir → (snapshot pin, the LocalSearcher a Python worker keeps
+# between tasks of IndexSearcher._scatter): one snapshot per index dir,
+# so its caches stay within LocalSearcher's byte caps.  Tasks reach it
+# through the module-level score_partition, by reference; a cache
+# captured in a task closure would be pickled with it and start empty
+# every task.
+_SEARCHERS: dict[str, tuple[tuple, LocalSearcher]] = {}
+
+
+def pinned_searcher(index_dir: str, manifest: dict, listing: bytes) -> LocalSearcher:
+    """This process's searcher over ``index_dir``, pinned to
+    ``manifest`` and the packed postings ``listing``
+    (bm25.pack_listing): the cached one while both are the same, else a
+    new one that replaces it."""
+    pin = (manifest, listing)
+    hit = _SEARCHERS.get(index_dir)
+    if hit is not None and hit[0] == pin:
+        return hit[1]
+    from ..layout import table_path
+    from .bm25 import unpack_listing
+
+    s = LocalSearcher.__new__(LocalSearcher)
+    s.index_dir = index_dir
+    s._load_snapshot(
+        manifest, unpack_listing(table_path(index_dir, "postings", manifest), listing)
+    )
+    _SEARCHERS[index_dir] = (pin, s)
+    return s
+
+
+def score_partition(
+    index_dir: str,
+    manifest: dict,
+    listing: bytes,
+    plans: list[QueryPlan],
+    n: int,
+    i: int,
+) -> tuple[list[tuple], int]:
+    """Task ``i`` of ``n`` of a distributed scoring query: each plan's
+    top-k over the segments with seg % n == i, from the worker's pinned
+    searcher (rows stay cached for every segment, because tasks are
+    not sticky to workers).  Returns the rows — (doc_id, score), with
+    query_id first for batch plans — and the segments skipped by
+    bound."""
+    s = pinned_searcher(index_dir, manifest, listing)
+    rows: list[tuple] = []
+    skipped = 0
+    for q in plans:
+        hits = s._search_pruned(q, s._atom_sets(q.ast), part=(i, n))
+        skipped += s.last_segments_skipped
+        tag = () if q.query_id is None else (q.query_id,)
+        rows += [(*tag, d, sc) for d, sc in hits]
+    return rows, skipped

@@ -1,7 +1,7 @@
 """Distributed query plan shape: Spark jobs per call, and the driver-side
 termdict reads those counts rest on (global df, term expansion and facet
 vocabulary come from the searcher's pinned termdict, never from a Spark
-scan)."""
+scan).  Scoring calls are one plan-only scatter job (IndexSearcher._scatter)."""
 
 from __future__ import annotations
 
@@ -33,6 +33,8 @@ def _jobs(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+# Upper bounds per call; test_scoring_jobs_per_call pins the scoring
+# calls at their scatter counts.
 @pytest.mark.parametrize(
     "name, call, max_jobs",
     [
@@ -85,12 +87,69 @@ def test_jobs_per_call(spark, searcher, name, call, max_jobs):
     assert n <= max_jobs, f"{name}: {n} Spark jobs > {max_jobs}"
 
 
-def test_postings_term_without_termdict_row_raises(spark, small_index, tmp_path):
-    """A postings row whose term has no termdict row is a corrupt index:
-    the query must fail naming the term, not drop that term's docs or
-    score it with df 0."""
+# Scoring calls: one scatter job (a batch adds its per-query rank job).
+SCORING_CALLS = {
+    "or": (lambda s: s.search(["the", "term0042"], "OR", 10).collect(), 1),
+    "and": (lambda s: s.search(["the", "of"], "AND", 10).collect(), 1),
+    "bool": (lambda s: s.search_bool("the AND (of OR term0042)", k=10).collect(), 1),
+    "page": (lambda s: s.search_page(["the", "of"], "OR", 5, after=(1.0, 3)).collect(), 1),
+    "fielded": (lambda s: s.search_fielded(["the", "of"], k=5, mode="BEST").collect(), 1),
+    "prefix": (lambda s: s.search_prefix("term004", k=10).collect(), 1),
+    "fuzzy": (lambda s: s.search_fuzzy("term0042", k=10).collect(), 1),
+    "regexp": (lambda s: s.search_regexp("term004.", k=10).collect(), 1),
+    "bool_wildcard": (lambda s: s.search_bool("the AND term004*", k=10).collect(), 1),
+    "bool_range": (
+        lambda s: s.search_bool("the AND warc_ts:[2025-01-20T00:00:00 TO *]", k=10).collect(),
+        1,
+    ),
+    "many": (
+        lambda s: s.search_many(
+            [
+                {"query_id": "a", "terms": ["the", "term0042"], "mode": "OR", "k": 5},
+                {"query_id": "b", "mode": "BOOL", "query": "the AND of", "k": 5},
+                {
+                    "query_id": "c", "mode": "BOOL", "k": 5,
+                    "query": "the AND warc_ts:[2025-01-20T00:00:00 TO *]",
+                },
+            ]
+        ).collect(),
+        2,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SCORING_CALLS))
+def test_scoring_jobs_per_call(spark, searcher, name):
+    call, max_jobs = SCORING_CALLS[name]
+    call(searcher)
+    n = _jobs(spark, f"scoring_{name}", lambda: call(searcher))
+    assert n <= max_jobs, f"{name}: {n} Spark jobs > {max_jobs}"
+
+
+def test_search_collect_is_one_stage_without_shuffle(spark, searcher):
+    """A search collect is one job of one stage over no scanned data:
+    the plan has no Exchange and no file scan, only the scatter's rows."""
+    sc = spark.sparkContext
+    df = searcher.search(["the", "term0042"], "OR", 10)
+    df.collect()
+    sc.setJobGroup("one_stage", "scatter shape probe")
+    try:
+        df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("one_stage")
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "FileScan" not in plan, plan
+
+
+@pytest.fixture(scope="module")
+def corrupt_index(small_index, tmp_path_factory):
+    """A copy of the small index whose termdict lost the row of a term
+    that still has postings rows."""
     src, _ = small_index
-    out = str(tmp_path / "idx")
+    out = str(tmp_path_factory.mktemp("corrupt") / "idx")
     shutil.copytree(src, out)
     victim = "term0042"
     manifest = load_manifest(out)
@@ -108,14 +167,42 @@ def test_postings_term_without_termdict_row_raises(spark, small_index, tmp_path)
         if os.path.exists(crc):  # Hadoop's checksum of the old bytes
             os.remove(crc)
     assert rewritten == 1
+    return out, victim
 
+
+def _corrupt_calls(victim):
+    """Queries touching the term: OR, exhaustive, AND, the term alone,
+    bool and range-filtered."""
+    return (
+        lambda s: s.search([victim, "the"], "OR", 10),
+        lambda s: s.search([victim, "the"], "OR", 10, algo="exhaustive"),
+        lambda s: s.search([victim, "the"], "AND", 10),
+        lambda s: s.search([victim], "OR", 10),
+        lambda s: s.search_bool(f"the OR {victim}", k=10),
+        lambda s: s.search_range([victim], "doc_len", 0, 10**6, k=5),
+    )
+
+
+def test_postings_term_without_termdict_row_raises(spark, corrupt_index):
+    """A postings row whose term has no termdict row is a corrupt index:
+    the query must fail naming the term, not drop that term's docs or
+    score it with df 0."""
+    out, victim = corrupt_index
     s = IndexSearcher(spark, out)
     assert victim not in s.global_dfs([victim, "the"])
-    for run in (
-        lambda: s.search([victim, "the"], "OR", 10).collect(),
-        lambda: s.search([victim, "the"], "OR", 10, algo="exhaustive").collect(),
-        lambda: s.search_bool(f"the OR {victim}", k=10).collect(),
-        lambda: s.search_range([victim], "doc_len", 0, 10**6, k=5).collect(),
-    ):
+    for run in _corrupt_calls(victim):
         with pytest.raises(Exception, match=f"corrupt index.*{victim}"):
-            run()
+            run(s).collect()
+
+
+def test_postings_term_without_termdict_row_raises_local(corrupt_index):
+    """The same corrupt index fails the same way on LocalSearcher (which
+    runs every distributed scoring task), whatever the query would
+    otherwise return."""
+    from hail_elasticsearch_pipelines_spark.operators.serve import LocalSearcher
+
+    out, victim = corrupt_index
+    s = LocalSearcher(out)
+    for run in _corrupt_calls(victim):
+        with pytest.raises(ValueError, match=f"corrupt index.*{victim}"):
+            run(s)

@@ -1,7 +1,8 @@
 """Cross-segment pruning (r3 verdict item 6): per-segment score bounds
 let rare-term queries skip whole segments before reading their posting
-blobs (LocalSearcher) or launching their scoring tasks (IndexSearcher
-two-phase probe), bit-identically to exhaustive scoring.
+blobs, bit-identically to exhaustive scoring — in LocalSearcher, and in
+each task of IndexSearcher's scatter (which runs the same loop over its
+share of the segments).
 
 Lucene/ES analog: per-segment max scores drive ES's top-level WAND —
 the reference gets this from ES for free
@@ -71,36 +72,62 @@ def test_local_cross_segment_prune_skips_segments(many_segments):
     assert len(touched) <= n_total_segments - ls.last_segments_skipped
 
 
-def test_distributed_two_phase_prune_bit_identical(spark, many_segments):
+def _pairs(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def test_distributed_segment_prune_bit_identical(spark, many_segments):
+    """Every scatter task prunes its segments by bound: distributed auto
+    == distributed exhaustive == local exhaustive."""
     s = IndexSearcher(spark, many_segments)
+    ls = LocalSearcher(many_segments)
     for terms, mode in QUERIES:
-        expected = [
-            (r["doc_id"], r["score"])
-            for r in s.search(terms, mode, 10, algo="exhaustive").collect()
-        ]
-        got = [
-            (r["doc_id"], r["score"])
-            for r in s.search(
-                terms, mode, 10, algo="auto", segment_prune=True
-            ).collect()
-        ]
-        assert got == expected, (terms, mode)
+        expected = _pairs(s.search(terms, mode, 10, algo="exhaustive"))
+        assert expected == ls.search(terms, mode, 10, algo="exhaustive")
+        assert _pairs(s.search(terms, mode, 10, algo="auto")) == expected, (terms, mode)
 
 
-def test_distributed_two_phase_prune_skips_tasks(spark, many_segments):
-    """Task-count evidence: with segment_prune=True the second-phase
-    scoring job receives only surviving segments."""
+def test_distributed_segment_prune_skips_segments(spark, many_segments):
+    """Rare-OR-stopword on the ~38-segment index: the tasks skip
+    stopword-only segments (summed through the searcher's accumulator)
+    and the answer stays exhaustive-identical; an exhaustive query
+    skips nothing."""
     s = IndexSearcher(spark, many_segments)
-    res = s.search(
-        ["the", "term0042"], "OR", 10, algo="auto", segment_prune=True
-    )
-    got = [(r["doc_id"], r["score"]) for r in res.collect()]
-    assert s.last_segments_skipped > 0
-    expected = [
-        (r["doc_id"], r["score"])
-        for r in s.search(["the", "term0042"], "OR", 10).collect()
-    ]
+    expected = _pairs(s.search(["the", "term0042"], "OR", 10, algo="exhaustive"))
+    assert s.last_segments_skipped == 0
+    got = _pairs(s.search(["the", "term0042"], "OR", 10))
     assert got == expected
+    assert s.last_segments_skipped > 0
+
+
+def test_scatter_width_from_manifest_segment_count(spark, many_segments, tmp_path):
+    """The scatter runs min(default parallelism, manifest segment count)
+    tasks: the 38-segment index gets one task per core, a one-segment
+    index one task."""
+    sc = spark.sparkContext
+
+    def n_tasks(index_dir):
+        s = IndexSearcher(spark, index_dir)
+        df = s.search(["the", "term0042"], "OR", 10)
+        group = f"scatter_width_{index_dir}"
+        sc.setJobGroup(group, "scatter width probe")
+        try:
+            df.collect()
+        finally:
+            sc.setJobGroup(None, None)
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        (stage,) = sc.statusTracker().getJobInfo(job).stageIds
+        n_segs = s.manifest["metrics"]["n_segments"]
+        return sc.statusTracker().getStageInfo(stage).numTasks, n_segs
+
+    tasks, n_segs = n_tasks(many_segments)
+    assert n_segs > sc.defaultParallelism and tasks == sc.defaultParallelism
+    one = str(tmp_path / "one_segment")
+    build_index(
+        spark, spark.createDataFrame(gen_pages_pdf(np.arange(40))), one,
+        docs_per_part=64, seg_group=1, n_term_buckets=8,
+    )
+    assert n_tasks(one) == (1, 1)
 
 
 def test_local_bool_required_conjunct_segment_prune(spark, many_segments):
@@ -130,44 +157,5 @@ def test_prune_handles_fewer_than_k_results(many_segments, spark):
     expected = ls.search(terms, "OR", 5000, algo="exhaustive")
     assert ls.search(terms, "OR", 5000, algo="auto") == expected
     s = IndexSearcher(spark, many_segments)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in s.search(
-            terms, "OR", 5000, algo="auto", segment_prune=True
-        ).collect()
-    ]
-    assert got == expected
-
-
-def test_auto_gate_on_manifest_segment_count(spark, many_segments, tmp_path):
-    """segment_prune=None auto-gates on the manifest's segment count:
-    below SEGPRUNE_AUTO_MIN_SEGMENTS the probe machinery must not run
-    (last_segments_skipped stays 0); at or above it, auto must attempt
-    pruning and stay bit-identical to exhaustive."""
-    s = IndexSearcher(spark, many_segments)  # ~38 segments < threshold
-    assert s.manifest["metrics"]["n_segments"] < s.SEGPRUNE_AUTO_MIN_SEGMENTS
-    s.search(["term0042", "the"], "OR", 10).collect()
+    assert _pairs(s.search(terms, "OR", 5000, algo="auto")) == expected
     assert s.last_segments_skipped == 0
-
-    out = str(tmp_path / "idx_many")
-    build_index(
-        spark,
-        spark.createDataFrame(gen_pages_pdf(np.arange(600))),
-        out,
-        docs_per_part=4,
-        seg_group=1,
-        n_term_buckets=8,
-    )
-    s2 = IndexSearcher(spark, out)
-    assert s2.manifest["metrics"]["n_segments"] >= s2.SEGPRUNE_AUTO_MIN_SEGMENTS
-    terms = ["term0042", "the"]
-    exp = [
-        (r["doc_id"], r["score"])
-        for r in s2.search(terms, "OR", 10, algo="exhaustive").collect()
-    ]
-    got = [(r["doc_id"], r["score"]) for r in s2.search(terms, "OR", 10).collect()]
-    assert got == exp
-    # term0042 is rare and segment-localized at 4 docs/segment — the
-    # df-sized probe must establish a floor that skips stopword-only
-    # segments
-    assert s2.last_segments_skipped > 0

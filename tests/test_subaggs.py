@@ -245,3 +245,9 @@ class TestAdjacencyMatrix:
             s.search_adjacency({"x&y": "the"})
         with pytest.raises(ValueError, match="doc-value/phrase"):
             s.search_adjacency({"r": "the AND stars:[1 TO 2]"})
+        # the serving twin rejects the same filters, before any work
+        with pytest.raises(ValueError, match="may not contain"):
+            L.search_adjacency({"x&y": "the"})
+        for q in ('the AND doc_len:[1 TO 100]', 'the AND "of the"'):
+            with pytest.raises(ValueError, match="doc-value/phrase"):
+                L.search_adjacency({"a": q, "b": "of"})
