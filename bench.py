@@ -197,23 +197,19 @@ def main():
     q["and_selective_exhaustive"] = cold(
         lambda ls: ls.search(SEL_AND, "AND", 10, algo="exhaustive")
     )
-    # cross-segment pruning probe (r4): since the scatter prunes in
-    # every task, both keys time the same call (kept for the trajectory)
+    # cross-segment pruning probe (r4): every scatter task prunes its
+    # segments by bound
     t0 = time.time()
     searcher.search(SEL_OR, "OR", 10, algo="auto").collect()
     q["or_selective_dist_segprune"] = round(time.time() - t0, 4)
     segprune_skipped = getattr(searcher, "last_segments_skipped", 0)
-    t0 = time.time()
-    searcher.search(SEL_OR, "OR", 10, algo="auto").collect()
-    q["or_selective_dist_plain"] = round(time.time() - t0, 4)
 
     # many-segment crossover evidence (r5): a 400-segment index (the
     # 10^3-segment fan-out regime scaled down) with a site-correlated
     # marker token (doc ids are url-ordered, urls group by site → the
     # marker is contiguous in doc_id space, the time/site-locality a
     # real crawl has).  Probes: localized query (bounds discriminate →
-    # deep skip) and flat rare-term query; the "plain" and "auto" keys
-    # time the same scatter call since every task prunes by bound.
+    # deep skip) and flat rare-term query.
     marker = F.concat(F.lit("sitemark"), F.regexp_extract("url", r"site(\d+)\.", 1))
     pages_ms = pages.withColumn(
         "text",
@@ -231,13 +227,12 @@ def main():
     sms = IndexSearcher(spark, idx_ms)
     segprune_ms = {"n_segments": sms.manifest["metrics"]["n_segments"]}
     for qname, terms in (("local", ["sitemark42", "the"]), ("flat", SEL_OR)):
-        for mode_name in ("plain", "auto"):
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                sms.search(terms, "OR", 10, algo="auto").collect()
-                best = min(best, time.time() - t0)
-            q[f"segprune400_{qname}_{mode_name}"] = round(best, 4)
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.time()
+            sms.search(terms, "OR", 10, algo="auto").collect()
+            best = min(best, time.time() - t0)
+        q[f"segprune400_{qname}_auto"] = round(best, 4)
         segprune_ms[f"skipped_{qname}"] = sms.last_segments_skipped
 
     # 10^3-segment validation (r5 verdict ask #8): same probes at 1000
@@ -251,13 +246,12 @@ def main():
     sms1k = IndexSearcher(spark, idx_ms1k)
     segprune_ms["n_segments_1k"] = sms1k.manifest["metrics"]["n_segments"]
     for qname, terms in (("local", ["sitemark42", "the"]), ("flat", SEL_OR)):
-        for mode_name in ("plain", "auto"):
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                sms1k.search(terms, "OR", 10, algo="auto").collect()
-                best = min(best, time.time() - t0)
-            q[f"segprune1000_{qname}_{mode_name}"] = round(best, 4)
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.time()
+            sms1k.search(terms, "OR", 10, algo="auto").collect()
+            best = min(best, time.time() - t0)
+        q[f"segprune1000_{qname}_auto"] = round(best, 4)
         segprune_ms[f"skipped1k_{qname}"] = sms1k.last_segments_skipped
 
     # stopword phrase: the vectorized adjacency matcher's showcase.

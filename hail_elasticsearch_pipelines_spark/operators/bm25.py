@@ -29,7 +29,6 @@ import dataclasses
 import heapq
 import os
 import re
-import zlib
 from functools import reduce
 
 import numpy as np
@@ -824,19 +823,6 @@ def _check_scoring_rows(pdf: pd.DataFrame, idf: dict[str, float]) -> None:
     """One segment's scoring rows: unique per term, each with a df."""
     _check_unique_terms(pdf)
     _check_has_df(pdf["term"], idf)
-
-
-def pack_listing(base: str, files: list[str]) -> bytes:
-    """A snapshot's file listing under ``base``, relative and compressed
-    (the files of one write share a name stem, so a few hundred paths
-    pack into under 1 KB)."""
-    return zlib.compress("\n".join(os.path.relpath(f, base) for f in files).encode())
-
-
-def unpack_listing(base: str, packed: bytes) -> list[str]:
-    """Inverse of pack_listing."""
-    rel = zlib.decompress(packed).decode()
-    return [os.path.join(base, r) for r in rel.split("\n")] if rel else []
 
 
 def term_filter(terms: list[str], n_term_buckets: int) -> ds.Expression:
@@ -1877,9 +1863,9 @@ class IndexSearcher(TermdictFrontEnd):
         # extend_index appends postings files in place, so the scatter
         # ships this snapshot's listing: a worker that builds its
         # searcher later must not see files appended since
-        self._postings_listing = pack_listing(
-            postings_dir,
-            ds.dataset(postings_dir, format="parquet", partitioning="hive").files,
+        self._postings_listing = tuple(
+            os.path.relpath(f, postings_dir)
+            for f in ds.dataset(postings_dir, format="parquet", partitioning="hive").files
         )
         # the termdict front end reads on the driver: opened once per
         # snapshot (an open lists the files), pinned like every table
@@ -1949,11 +1935,10 @@ class IndexSearcher(TermdictFrontEnd):
         over no data, each running serve.score_partition in a reused
         Python worker, whose LocalSearcher (pinned to this searcher's
         manifest and postings listing) scores the segments with
-        seg % n == i from its hot
-        row, decode and block caches, pruning segments by bound.  No
-        postings are scanned, shuffled or sent through Arrow; a task
-        ships the plans, the manifest (about 1 KB) and the packed
-        postings listing.  The DataFrame stays lazy, so
+        seg % n == i from its hot row, decode and block caches, pruning
+        segments by bound.  No postings are shuffled or
+        sent through Arrow; a task ships the plans, the manifest (about
+        1 KB) and the postings file names.  The DataFrame stays lazy, so
         ``_ranked(...).collect()`` is 1 job; ``last_segments_skipped``
         is read after that collect."""
         from ..functions import boolquery as bq
@@ -1988,8 +1973,12 @@ class IndexSearcher(TermdictFrontEnd):
 
     @property
     def last_segments_skipped(self) -> int:
-        """Segments the last scoring call's tasks skipped by bound,
-        summed over its tasks (counted when its result is collected)."""
+        """Segments skipped by bound, summed over the tasks of the most
+        recently BUILT scoring DataFrame, through a Spark accumulator
+        the tasks add to when it is collected.  Valid after exactly one
+        collect of that DataFrame: collecting it again, or a retried or
+        speculative task, adds the skips again, and building another
+        scoring query before the collect points this at the new one."""
         return self._skipped.value if self._skipped is not None else 0
 
     def search(

@@ -28,6 +28,8 @@ every executor runs.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow.dataset as ds
 
@@ -2044,11 +2046,14 @@ class LocalSearcher(TermdictFrontEnd):
         q = plan_bool(self, query, k, synonyms)
         return self._search_pruned(q, self._atom_sets(q.ast))
 
-    def _atom_sets(self, ast) -> "dict[str, tuple] | None":
+    def _atom_sets(
+        self, ast, part: tuple[int, int] = (0, 1)
+    ) -> "dict[str, tuple] | None":
         """A bool query's range / quoted-phrase / nested atoms (filter
         context) resolved once: atom key → (matching doc ids, their
         segments), from cached doc values / positional chain matches /
-        the nested sidecar.  None when there are no atoms."""
+        the nested sidecar; with ``part=(i, n)`` only the docs of
+        segments with seg % n == i.  None when there are no atoms."""
         from ..functions import boolquery as bq
 
         if ast is None or not bq.filter_atoms(ast):
@@ -2065,23 +2070,31 @@ class LocalSearcher(TermdictFrontEnd):
             sets[rt.key()] = ids
         for pt in bq.phrase_atoms(ast):
             sets[pt.key()] = np.sort(
-                self._phrase_match_rows(list(pt.tokens), pt.slop)[0]
+                self._phrase_match_rows(list(pt.tokens), pt.slop, part=part)[0]
             )
         for nt in bq.nested_atoms(ast):
             sets[nt.key()] = nst.local_atom_ids(self, nt)
-        return {rk: (ids, (ids // dpp) // seg_group) for rk, ids in sets.items()}
+        i, n = part
+        out = {}
+        for rk, ids in sets.items():
+            segs = (ids // dpp) // seg_group
+            keep = segs % n == i
+            out[rk] = (ids[keep], segs[keep])
+        return out
 
     def _phrase_match_rows(
         self,
         phrase: list[str],
         slop: int = 0,
         expansions: "list[str] | None" = None,
+        part: tuple[int, int] = (0, 1),
     ):
         """(docs, tfs, dls) arrays of every live phrase-chain match —
         the shared front half of search_phrase, search_phrase_prefix
         and search_rescore.  With ``expansions``, the final phrase slot
         accepts any of the expanded terms (the match_phrase_prefix
-        shape — same synthetic merged posting as the distributed twin)."""
+        shape — same synthetic merged posting as the distributed twin).
+        ``part`` restricts it to a scatter task's segments."""
         import numpy as np
 
         from .bm25 import _PFX_SLOT, _merge_posting_variants
@@ -2099,7 +2112,10 @@ class LocalSearcher(TermdictFrontEnd):
         )
         seg_arr = np.asarray(tbl["segment"].to_pylist())
         all_docs, all_tf, all_dl = [], [], []
+        i_part, n_part = part
         for seg in np.unique(seg_arr):
+            if seg % n_part != i_part:
+                continue
             idxs = np.flatnonzero(seg_arr == seg)
             post = {}
             for i in idxs:
@@ -2281,55 +2297,56 @@ class LocalSearcher(TermdictFrontEnd):
         )[: int(k)]
 
 
-# index_dir → (snapshot pin, the LocalSearcher a Python worker keeps
-# between tasks of IndexSearcher._scatter): one snapshot per index dir,
-# so its caches stay within LocalSearcher's byte caps.  Tasks reach it
-# through the module-level score_partition, by reference; a cache
-# captured in a task closure would be pickled with it and start empty
-# every task.
-_SEARCHERS: dict[str, tuple[tuple, LocalSearcher]] = {}
+# (pin, searcher): the LocalSearcher this Python worker keeps between
+# tasks of IndexSearcher._scatter.  One snapshot per worker, whatever
+# index dirs its tasks serve, so a worker's memory stays within one
+# searcher's byte caps; a task for another index dir or generation
+# replaces it.  Tasks reach it through the module-level score_partition,
+# by reference; a cache captured in a task closure would be pickled with
+# it and start empty every task.
+_PINNED: "tuple[tuple, LocalSearcher] | None" = None
 
 
-def pinned_searcher(index_dir: str, manifest: dict, listing: bytes) -> LocalSearcher:
+def pinned_searcher(index_dir: str, manifest: dict, listing: tuple) -> LocalSearcher:
     """This process's searcher over ``index_dir``, pinned to
-    ``manifest`` and the packed postings ``listing``
-    (bm25.pack_listing): the cached one while both are the same, else a
+    ``manifest`` and ``listing`` (its postings files, relative to the
+    postings dir): the kept one while all three are the same, else a
     new one that replaces it."""
-    pin = (manifest, listing)
-    hit = _SEARCHERS.get(index_dir)
-    if hit is not None and hit[0] == pin:
-        return hit[1]
+    global _PINNED
+    pin = (index_dir, manifest, listing)
+    if _PINNED is not None and _PINNED[0] == pin:
+        return _PINNED[1]
     from ..layout import table_path
-    from .bm25 import unpack_listing
 
+    _PINNED = None  # the old snapshot goes before the new one loads
+    postings_dir = table_path(index_dir, "postings", manifest)
     s = LocalSearcher.__new__(LocalSearcher)
     s.index_dir = index_dir
-    s._load_snapshot(
-        manifest, unpack_listing(table_path(index_dir, "postings", manifest), listing)
-    )
-    _SEARCHERS[index_dir] = (pin, s)
+    s._load_snapshot(manifest, [os.path.join(postings_dir, f) for f in listing])
+    _PINNED = (pin, s)
     return s
 
 
 def score_partition(
     index_dir: str,
     manifest: dict,
-    listing: bytes,
+    listing: tuple,
     plans: list[QueryPlan],
     n: int,
     i: int,
 ) -> tuple[list[tuple], int]:
     """Task ``i`` of ``n`` of a distributed scoring query: each plan's
     top-k over the segments with seg % n == i, from the worker's pinned
-    searcher (rows stay cached for every segment, because tasks are
-    not sticky to workers).  Returns the rows — (doc_id, score), with
+    searcher (its row cache is keyed by part, because tasks are not
+    sticky to workers).  Returns the rows — (doc_id, score), with
     query_id first for batch plans — and the segments skipped by
     bound."""
     s = pinned_searcher(index_dir, manifest, listing)
     rows: list[tuple] = []
     skipped = 0
+    part = (i, n)
     for q in plans:
-        hits = s._search_pruned(q, s._atom_sets(q.ast), part=(i, n))
+        hits = s._search_pruned(q, s._atom_sets(q.ast, part), part)
         skipped += s.last_segments_skipped
         tag = () if q.query_id is None else (q.query_id,)
         rows += [(*tag, d, sc) for d, sc in hits]

@@ -100,6 +100,25 @@ def test_distributed_segment_prune_skips_segments(spark, many_segments):
     assert s.last_segments_skipped > 0
 
 
+def test_task_atom_sets_cover_its_segments(many_segments):
+    """A scatter task's share of a bool query's atoms, part=(i, n):
+    its range and phrase atom docs come only from segments with
+    seg % n == i, and the n shares together are the whole index's."""
+    from hail_elasticsearch_pipelines_spark.operators.bm25 import plan_bool
+
+    ls = LocalSearcher(many_segments)
+    n = 4
+    ast = plan_bool(ls, 'the AND doc_len:[1 TO 300] AND "of the"', 10).ast
+    whole = ls._atom_sets(ast)
+    shares = [ls._atom_sets(ast, (i, n)) for i in range(n)]
+    assert len(whole) == 2
+    for rk, (ids, _segs) in whole.items():
+        assert len(ids)
+        assert all((sh[rk][1] % n == i).all() for i, sh in enumerate(shares))
+        got = np.sort(np.concatenate([sh[rk][0] for sh in shares]))
+        assert np.array_equal(got, np.sort(ids))
+
+
 def test_scatter_width_from_manifest_segment_count(spark, many_segments, tmp_path):
     """The scatter runs min(default parallelism, manifest segment count)
     tasks: the 38-segment index gets one task per core, a one-segment

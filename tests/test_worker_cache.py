@@ -1,6 +1,6 @@
 """Executor-resident searchers: each Python worker keeps one LocalSearcher
-per index dir between tasks (serve.pinned_searcher), pinned to the
-manifest the driver's IndexSearcher ships with every scatter."""
+between tasks (serve.pinned_searcher), pinned to the index dir, manifest
+and postings files the driver's IndexSearcher ships with every scatter."""
 
 from __future__ import annotations
 
@@ -75,3 +75,37 @@ def test_worker_searcher_survives_between_tasks(spark, small_index):
     repeated = {pid: ids for pid, ids in seen.items() if len(ids) > 1}
     assert repeated, seen  # workers are reused
     assert all(len(set(ids)) == 1 for ids in repeated.values()), repeated
+
+
+def test_worker_keeps_one_searcher(spark, small_index, tmp_path):
+    """Scatters over two index dirs, in turn, then a task per worker
+    pins both dirs: every worker ends with exactly one live
+    LocalSearcher, the last dir's, so a worker's memory stays within
+    one searcher's caps however many index dirs its tasks serve."""
+    a, _ = small_index
+    b = str(tmp_path / "b")
+    shutil.copytree(a, b)
+    sa, sb = IndexSearcher(spark, a), IndexSearcher(spark, b)
+    for _round in range(3):
+        assert _pairs(sa.search(["the", "of"], "OR", 10)) == _pairs(
+            sb.search(["the", "of"], "OR", 10)
+        )
+    pins = [(s.index_dir, s.manifest, s._postings_listing) for s in (sa, sb)]
+    sc = spark.sparkContext
+
+    def probe(it):
+        import gc
+        import os
+
+        from hail_elasticsearch_pipelines_spark.operators import serve
+
+        for _i in it:
+            for pin in pins:
+                serve.pinned_searcher(*pin)
+            gc.collect()
+            live = sum(isinstance(o, serve.LocalSearcher) for o in gc.get_objects())
+            yield os.getpid(), live, serve._PINNED[0][0]
+
+    n = 2 * sc.defaultParallelism
+    out = sc.parallelize(range(n), n).mapPartitions(probe).collect()
+    assert all(live == 1 and last == b for _pid, live, last in out), out
