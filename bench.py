@@ -235,6 +235,20 @@ def main():
         q[f"segprune400_{qname}_auto"] = round(best, 4)
         segprune_ms[f"skipped_{qname}"] = sms.last_segments_skipped
 
+    # reduced (non-scoring and phrase) queries on many segments: one
+    # gather job, every task reading its share of the segments
+    reduced = {
+        "phrase": lambda s: s.search_phrase(["of", "the"], 10).collect(),
+        "count": lambda s: s.search_count(SEL_OR, "OR").collect(),
+        "facets": lambda s: s.search_facets(SEL_OR, ["lang"], "OR").collect(),
+        "filters": lambda s: s.search_filters(
+            {"a": SEL_OR[0], "b": f"{SEL_OR[1]} AND NOT {SEL_OR[0]}",
+             "r": f"{SEL_OR[1]} AND doc_len:[1 TO 300]"}
+        ).collect(),
+    }
+    for qname, call in reduced.items():
+        q[f"segprune400_{qname}_dist"] = round(min(timed(lambda: call(sms)) for _ in range(3)), 4)
+
     # 10^3-segment validation (r5 verdict ask #8): same probes at 1000
     # segments — the 100x-scale segment count
     idx_ms1k = f"{BENCH_DIR}/index_ms1000_{CPUS}"
@@ -253,6 +267,8 @@ def main():
             best = min(best, time.time() - t0)
         q[f"segprune1000_{qname}_auto"] = round(best, 4)
         segprune_ms[f"skipped1k_{qname}"] = sms1k.last_segments_skipped
+    for qname, call in reduced.items():
+        q[f"segprune1000_{qname}_dist"] = round(min(timed(lambda: call(sms1k)) for _ in range(3)), 4)
 
     # stopword phrase: the vectorized adjacency matcher's showcase.
     # warm = best-of-3 (same discipline as every other key: the r5

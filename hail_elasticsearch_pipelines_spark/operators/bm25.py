@@ -11,10 +11,11 @@ elasticsearch_client_v7.py:84-99).  Here it is native:
   * per-segment scoring in long-lived Python workers (segments have
     disjoint doc-id ranges → a doc's full score is computed in exactly
     one task; the segment axis is also the query-time parallelism):
-    the driver plans the query, one plan-only job scatters it to
-    workers that each keep a cached LocalSearcher (IndexSearcher._scatter)
-  * global top-k = orderBy(score desc, doc_id asc).limit(k) over at
-    most n_tasks × k candidate rows (tiny)
+    the driver plans the query, one plan-only job sends it to
+    workers that each keep a cached LocalSearcher (IndexSearcher._tasks)
+  * the coordinating reduce: global top-k = orderBy(score desc, doc_id
+    asc).limit(k) over at most n_tasks × k candidate rows (tiny); every
+    other query merges its tasks' partials with a reducer below
 
 Determinism contract (rank-identity, north rule): a doc's score is the
 sum of per-term contributions accumulated in ASCENDING TERM order,
@@ -34,7 +35,7 @@ from functools import reduce
 import numpy as np
 import pandas as pd
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,11 +58,6 @@ MULTI_RESULT_SCHEMA = T.StructType(
     ]
 )
 
-# per-segment rows of a batch (search_many): one extra query_id column
-QUERY_RESULT_SCHEMA = T.StructType(
-    [T.StructField("query_id", T.StringType(), False)] + RESULT_SCHEMA.fields
-)
-
 FACET_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("field", T.StringType(), False),
@@ -70,12 +66,13 @@ FACET_RESULT_SCHEMA = T.StructType(
     ]
 )
 
-STATS_PARTIAL_SCHEMA = T.StructType(
+STATS_SCHEMA = T.StructType(
     [
-        T.StructField("n", T.LongType(), False),
+        T.StructField("n_hits", T.LongType(), False),
+        T.StructField("min_dl", T.LongType(), True),
+        T.StructField("max_dl", T.LongType(), True),
         T.StructField("sum_dl", T.LongType(), False),
-        T.StructField("min_dl", T.LongType(), False),
-        T.StructField("max_dl", T.LongType(), False),
+        T.StructField("avg_dl", T.DoubleType(), True),
     ]
 )
 
@@ -85,6 +82,39 @@ HISTOGRAM_SCHEMA = T.StructType(
         T.StructField("doc_count", T.LongType(), False),
     ]
 )
+
+COUNT_SCHEMA = T.StructType([T.StructField("n_hits", T.LongType(), False)])
+
+FILTERS_SCHEMA = T.StructType(
+    [
+        T.StructField("name", T.StringType(), False),
+        T.StructField("doc_count", T.LongType(), False),
+    ]
+)
+
+ADJACENCY_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.StringType(), False),
+        T.StructField("doc_count", T.LongType(), False),
+    ]
+)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as a DataFrame over a local
+    relation, through Arrow: collecting it runs no Spark job, where a
+    createDataFrame of the Python list is an RDD whose collect is a
+    job of its own (0 jobs and 67 ms vs 1 job and 580 ms for 100 rows,
+    4 cores, loaded host)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    tbl = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(tbl, schema)
 
 
 def _match_docs(
@@ -853,6 +883,116 @@ def termdict_dfs(
     return dict(zip(tbl["term"].to_pylist(), map(int, tbl["df"].to_pylist())))
 
 
+# the tables extend_index appends files to in place: a snapshot is its
+# manifest plus these tables' file names at load time
+LISTED_TABLES = ("postings", "doclens", "nested")
+
+
+def snapshot_listing(index_dir: str, manifest: dict) -> dict[str, tuple]:
+    """table → its parquet files (relative to the table dir) now; a
+    table without a dir lists none.  Searchers read only these files, so
+    rows appended after the snapshot stay invisible to it."""
+    from ..layout import table_path
+
+    out = {}
+    for name in LISTED_TABLES:
+        d = table_path(index_dir, name, manifest)
+        files = (
+            ds.dataset(d, format="parquet", partitioning="hive").files
+            if os.path.isdir(d)
+            else []
+        )
+        out[name] = tuple(os.path.relpath(f, d) for f in files)
+    return out
+
+
+# ---- reducers: each merges the partials of one partial kernel
+# (LocalSearcher.*_partial, over disjoint segment sets) into the API's
+# answer; both searchers run the same one ----
+
+
+def add_counts(partials) -> dict:
+    """Key-wise sum of {key: count} partials — count, filters,
+    adjacency, histogram and facet partials are additive because
+    segments hold disjoint doc ids.  Keys stay even at 0."""
+    out: dict = {}
+    for p in partials:
+        for key, n in p.items():
+            out[key] = out.get(key, 0) + n
+    return out
+
+
+def merge_stats(partials) -> dict:
+    """ES ``stats`` of doc length from (n, sum, min, max) partials."""
+    live = [p for p in partials if p[0]]
+    n = sum(p[0] for p in live)
+    s = sum(p[1] for p in live)
+    return {
+        "n_hits": n,
+        "min_dl": min((p[2] for p in live), default=None),
+        "max_dl": max((p[3] for p in live), default=None),
+        "sum_dl": s,
+        "avg_dl": s / n if n else None,
+    }
+
+
+# a match whose factor w is below w_k·(1 − 2⁻⁴⁸) scores strictly below
+# the k-th match whatever the idf: idf > 0 and rounding is monotone, and
+# a relative gap of 2⁻⁴⁸ is far wider than the product's rounding error
+_TIE_MARGIN = 1.0 - 2.0**-48
+
+
+def pseudo_candidates(docs: np.ndarray, w: np.ndarray, k: int) -> tuple:
+    """One partial of a pseudo-term query (phrase, phrase_prefix,
+    span_first): (n_matches, docs, w) keeping the top k by (w desc, doc
+    asc) plus every further match that may tie the k-th score, so the
+    reducer's global top-k is exact although df, hence idf, is only
+    known after every partial is in."""
+    order = np.lexsort((docs, -w))
+    if order.size > k > 0:
+        order = order[w[order] >= w[order[k - 1]] * _TIE_MARGIN]
+    return int(docs.size), docs[order], w[order]
+
+
+def reduce_pseudo(partials, k: int, n_docs: int) -> list[tuple[int, float]]:
+    """Top-k (doc_id, score) of a pseudo-term query from its
+    pseudo_candidates partials: df = all matches, score = idf·w."""
+    n = sum(p[0] for p in partials)
+    if not n:
+        return []
+    idf = bm25_idf(n_docs, n)
+    docs = np.concatenate([p[1] for p in partials])
+    w = np.concatenate([p[2] for p in partials])
+    d, s = _topk(docs, idf * w, k)
+    return list(zip(d.tolist(), s.tolist()))
+
+
+def reduce_rescore(
+    partials, k: int, window: int, n_docs: int, query_weight: float, rescore_weight: float
+) -> list[tuple[int, float]]:
+    """search_rescore from its (base rows, phrase matches, window docs,
+    their w) partials: the base query's global top ``window`` re-ranked
+    by query_weight·bm25 + rescore_weight·phrase score (phrase idf from
+    every match; docs without the phrase add 0)."""
+    base = [r for p in partials for r in p[0]]
+    d, s = _topk(
+        np.array([r[0] for r in base], np.int64),
+        np.array([r[1] for r in base], np.float64),
+        window,
+    )
+    n = sum(p[1] for p in partials)
+    ph: dict[int, float] = {}
+    if n:
+        idf = bm25_idf(n_docs, n)
+        for p in partials:
+            ph.update(zip(p[2].tolist(), (idf * p[3]).tolist()))
+    qw, rw = float(query_weight), float(rescore_weight)
+    return sorted(
+        ((doc, qw * sc + rw * ph.get(doc, 0.0)) for doc, sc in zip(d.tolist(), s.tolist())),
+        key=lambda t: (-t[1], t[0]),
+    )[: int(k)]
+
+
 class TermdictFrontEnd:
     """The query front end both searchers share, read on the driver from
     the snapshot-pinned term dictionary with no Spark job: global df,
@@ -860,9 +1000,11 @@ class TermdictFrontEnd:
     query-string parse — the Elasticsearch query rewrite against the
     terms dictionary, ahead of the query phase.
 
-    A subclass sets ``manifest``, ``n_term_buckets`` and ``_termdict``
-    (a pyarrow dataset over the snapshot's termdict: one row per term,
-    sorted ``term`` column, so a range filter prunes row groups)."""
+    A subclass sets ``index_dir``, ``manifest``, ``n_docs``,
+    ``n_term_buckets``, ``_listing`` (snapshot_listing) and
+    ``_termdict`` (a pyarrow dataset over the snapshot's termdict: one
+    row per term, sorted ``term`` column, so a range filter prunes row
+    groups), and defines ``_gather`` for the reduced queries below."""
 
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
         """Global document frequency per term (absent terms absent) —
@@ -1049,58 +1191,263 @@ class TermdictFrontEnd:
             ast = bq.expand_wildcards(ast, self.expand_prefix, self.expand_fuzzy)
         return ast, bq.all_terms(ast)
 
+    # ---- reduced queries: parse and check here, run one partial kernel
+    # (LocalSearcher.*_partial) over every segment through _gather, merge
+    # with its reducer.  LocalSearcher's _gather is its own kernel over
+    # part (0, 1); IndexSearcher's is one Spark job of worker tasks, each
+    # over its share of the segments, and its methods return these
+    # answers as DataFrames. ----
 
-def _per_segment_apply(rows: DataFrame, fn, schema) -> DataFrame:
-    """Per-segment pandas kernel WITHOUT per-group Arrow machinery:
-    hash-partition by segment, sort within partitions, and stream each
-    partition's batches through ONE mapInPandas, flushing the kernel on
-    segment boundaries (the same move `_merge_bucket` makes for the
-    build-side merge).  ``groupBy("segment").applyInPandas`` costs
-    ~2-3 ms of Arrow/pandas setup per GROUP — pure machinery that
-    dominated the plain distributed path on many-segment indexes (a
-    10^3-segment probe spent ~2.5 s in it with a no-op kernel).
-    Memory stays O(largest segment's rows), exactly applyInPandas'
-    envelope.  Output row SET is identical; every caller aggregates or
-    sorts downstream, so ordering differences cannot surface."""
+    def _gather(self, method: str, *args) -> list:
+        """The partials of kernel ``method`` covering every segment."""
+        raise NotImplementedError
 
-    def flush(buf):
-        pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
-        return fn(pdf.reset_index(drop=True))
+    def _listed(self, table: str) -> list[str]:
+        """Absolute paths of ``table``'s files in this snapshot."""
+        from ..layout import table_path
 
-    def gen(batches):
-        buf: list[pd.DataFrame] = []
-        cur = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for seg, grp in pdf.groupby("segment", sort=True):
-                if cur is not None and seg != cur:
-                    out = flush(buf)
-                    if len(out):
-                        yield out
-                    buf = []
-                cur = seg
-                buf.append(grp)
-        if buf:
-            out = flush(buf)
-            if len(out):
-                yield out
+        d = table_path(self.index_dir, table, self.manifest)
+        return [os.path.join(d, f) for f in self._listing[table]]
 
-    return (
-        rows.repartition("segment")
-        .sortWithinPartitions("segment")
-        .mapInPandas(gen, schema=schema)
-    )
+    def _require_positions(self, what: str = "a phrase query") -> None:
+        if not self.manifest["params"].get("with_positions", True):
+            raise ValueError(
+                f"{what} needs positional postings, but this index was "
+                "built with with_positions=False — rebuild with positions"
+            )
 
+    def _check_range_fields(self, ast) -> None:
+        """An unknown range field raises DocValueError here, on the
+        driver, not inside a task."""
+        from ..functions import boolquery as bq
+        from .docvalues import check_field
 
-def _result_schema(plans) -> T.StructType:
-    """Row schema of per-segment scoring output for ``plans``."""
-    return QUERY_RESULT_SCHEMA if plans[0].query_id is not None else RESULT_SCHEMA
+        fields = sorted({rt.field for rt in bq.range_atoms(ast)}) if ast is not None else []
+        if fields:
+            cols = ds.dataset(self._listed("doclens"), format="parquet").schema.names
+            for f in fields:
+                check_field(self, f, cols)
 
+    def _match_spec(self, query, mode: str):
+        """(ast, sorted terms, MODE) of ``query`` for the match-set
+        kernels, parsed once on the driver; None is match_all."""
+        if query is None:
+            return None
+        ast, qterms = self.parse_query(query, mode)
+        self._check_range_fields(ast)
+        return ast, qterms, mode.upper()
 
-def _ranked(per_segment: DataFrame, k: int) -> DataFrame:
-    """Global top-k of per-segment rows by (score desc, doc_id asc)."""
-    return per_segment.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    def _agg_spec(self, query, mode: str, api: str):
+        """_match_spec of a term-postings aggregation: range, phrase and
+        nested atoms are rejected (QueryParseError)."""
+        from ..functions import boolquery as bq
+
+        spec = self._match_spec(query, mode)
+        bq.reject_filter_atoms(spec[0], api)
+        return spec
+
+    def search_count(self, query, mode: str = "OR") -> int:
+        """ES ``_count``: live docs matching ``query`` (term list with
+        "OR"/"AND", boolean string with "BOOL", atoms included)."""
+        spec = self._match_spec(query, mode)
+        return add_counts(self._gather("_count_partial", {"n": spec}))["n"]
+
+    def search_filters(self, filters: "dict[str, str]") -> list[tuple[str, int]]:
+        """ES ``filters`` aggregation — named boolean filters, each with
+        its live match count, [(name, doc_count)] in name order, all
+        counted in one pass.  A pure-negation filter ('NOT lang:en')
+        raises: its match set is unbounded, and 0 would be plausible but
+        wrong."""
+        from ..functions import boolquery as bq
+
+        specs = {}
+        for name, q in sorted(filters.items()):
+            specs[name] = self._match_spec(q, "BOOL")
+            if bq.is_pure_negation(specs[name][0]):
+                raise bq.QueryParseError(
+                    f"filter {name!r} is pure negation (unbounded match "
+                    "set) — rewrite as '<positive> AND NOT ...'"
+                )
+        return sorted(add_counts(self._gather("_count_partial", specs)).items())
+
+    def search_adjacency(self, filters: "dict[str, str]") -> list[tuple[str, int]]:
+        """ES ``adjacency_matrix``: live match counts for every named
+        filter and every non-empty pairwise intersection — [(key,
+        doc_count)] sorted, keys ``a`` and ``a&b`` (names sorted, the ES
+        key convention; empty pairs omitted).  Filters with
+        range/phrase/nested atoms are rejected (adjacency_filters)."""
+        compiled = adjacency_filters(self, filters)
+        return sorted(add_counts(self._gather("_adjacency_partial", compiled)).items())
+
+    def search_facets(
+        self, query: "list[str] | str", fields: list[str], mode: str = "OR"
+    ) -> list[tuple[str, str, int]]:
+        """ES ``terms`` aggregation: per-facet-value counts of ALL docs
+        matching the query, [(field, value, doc_count)] sorted by
+        (field, doc_count desc, value).  ``query`` is a term list with
+        mode "OR"/"AND", or a boolean query string with mode="BOOL".
+        The reference's seqr UI gets faceted search from ES
+        aggregations on the exported index
+        (hail_scripts/shared/elasticsearch_utils.py:38-77 facet-typed
+        mapping); here the facet tokens' postings are the agg input,
+        the facet vocabulary a driver-side termdict read."""
+        spec = self._agg_spec(query, mode, "search_facets")
+        if not spec[1]:
+            return []
+        field_of = {t: f for f, ts in self.facet_terms(fields).items() for t in ts}
+        counts = add_counts(self._gather("_facet_partial", spec, field_of))
+        return sorted(
+            ((f, v, c) for (f, v), c in counts.items()), key=lambda x: (x[0], -x[2], x[1])
+        )
+
+    def search_stats(self, query, mode: str = "OR") -> dict:
+        """ES ``stats`` aggregation over the matching docs' length:
+        {n_hits, min_dl, max_dl, sum_dl, avg_dl}.  No doclens read — dl
+        rides every posting.  The reference gets this from ES
+        aggregations on its exported index
+        (hail_scripts/shared/elasticsearch_utils.py metadata fields)."""
+        return merge_stats(
+            self._gather("_stats_partial", self._agg_spec(query, mode, "search_stats"))
+        )
+
+    def search_histogram(self, query, interval: int, mode: str = "OR") -> list[tuple[int, int]]:
+        """ES ``histogram`` aggregation on doc length: per fixed-width
+        bucket (``floor(dl / interval) * interval``) the count of
+        matching live docs, [(bucket, doc_count)] sorted by bucket."""
+        if interval <= 0:
+            raise ValueError("interval must be positive")
+        spec = self._agg_spec(query, mode, "search_histogram")
+        return sorted(add_counts(self._gather("_histogram_partial", spec, interval)).items())
+
+    def _pseudo_tops(self, specs: list[tuple], ks: list[int]) -> list[list]:
+        """Top-k (doc_id, score) of each pseudo-term spec
+        (LocalSearcher._pseudo_rows) — one gather for the batch."""
+        self._require_positions()
+        parts = self._gather("_pseudo_partial", specs, ks)
+        return [reduce_pseudo([p[j] for p in parts], k, self.n_docs) for j, k in enumerate(ks)]
+
+    def search_phrase(
+        self, phrase: list[str], k: int = 10, slop: int = 0
+    ) -> list[tuple[int, float]]:
+        """Phrase BM25 top-k: docs containing the terms at consecutive
+        positions (``slop=0``), or within an in-order window stretched
+        by at most ``slop`` positions (the ES ``match_phrase`` slop /
+        span_near in_order=true shape — see _phrase_match_counts),
+        scored as one pseudo-term (tf = chain-start count, df =
+        matching docs), [(doc_id, score)] by (score desc, doc_id asc)."""
+        if int(slop) < 0:
+            raise ValueError("slop must be >= 0")
+        return self._pseudo_tops([("phrase", list(phrase), int(slop), None)], [int(k)])[0]
+
+    def search_phrase_prefix(
+        self,
+        phrase: list[str],
+        k: int = 10,
+        slop: int = 0,
+        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
+    ) -> list[tuple[int, float]]:
+        """ES ``match_phrase_prefix`` — autocomplete-as-you-type: the
+        LAST token is a prefix; a doc matches when the leading tokens
+        form a phrase chain (same slop semantics as search_phrase)
+        whose final slot holds ANY indexed expansion of the prefix.
+        Expansion is the termdict range scan (expand_prefix, typed cap);
+        the expansions merge into one synthetic pseudo-term posting per
+        segment (_merge_posting_variants — the Lucene multi-term-synonym
+        span), so the chain kernel and the one-pseudo-term scoring run
+        unchanged, bit-identically to search_phrase when the prefix
+        expands to exactly one term."""
+        if not phrase:
+            raise ValueError("match_phrase_prefix needs at least one token")
+        if int(slop) < 0:
+            raise ValueError("slop must be >= 0")
+        self._require_positions()
+        expansions = self.expand_prefix(str(phrase[-1]), max_expansions)
+        if not expansions:
+            return []
+        spec = ("phrase", list(phrase[:-1]), int(slop), expansions)
+        return self._pseudo_tops([spec], [int(k)])[0]
+
+    def search_span_first(self, term: str, end: int, k: int = 10) -> list[tuple[int, float]]:
+        """ES ``span_first``: the term must occur within the first
+        ``end`` token positions (0-based, so ``end=3`` admits positions
+        0-2) — the "title-ish lead matters" query for schemaless
+        corpora.  Scored as one pseudo-term whose tf is the count of
+        qualifying positions and whose df is the number of matching
+        live docs (the search_phrase scoring contract)."""
+        if int(end) <= 0:
+            raise ValueError("span_first end must be a positive int")
+        self._require_positions("span_first")
+        return self._pseudo_tops([("span_first", term, int(end))], [int(k)])[0]
+
+    def search_rescore(
+        self,
+        terms: list[str],
+        rescore_phrase: list[str],
+        k: int = 10,
+        window_size: int = 50,
+        query_weight: float = 1.0,
+        rescore_weight: float = 1.0,
+        mode: str = "OR",
+        slop: int = 0,
+    ) -> list[tuple[int, float]]:
+        """ES ``rescore`` API (score_mode: total): run the cheap term
+        query, take its top ``window_size`` hits, and re-rank just that
+        window with a proximity (phrase) query —
+
+            final = query_weight·bm25 + rescore_weight·phrase_score
+
+        where phrase_score uses the phrase's GLOBAL df (Lucene rescore
+        evaluates the rescore query with full index stats, only
+        restricted to the window's docs).  Window docs without the
+        phrase contribute 0 from the rescore side.  One gather: each
+        partial holds its segments' base top window (a superset of their
+        share of the global window) and the phrase factors of those docs."""
+        if window_size < k:
+            raise ValueError("window_size must be >= k")
+        self._require_positions()
+        q = plan_terms(self, terms, mode, window_size)
+        parts = self._gather("_rescore_partial", q, list(rescore_phrase), int(slop))
+        return reduce_rescore(
+            parts, k, window_size, self.n_docs, query_weight, rescore_weight
+        )
+
+    def search_many(self, specs: list[dict]) -> "dict[str, list[tuple[int, float]]]":
+        """Batch query execution (the ES ``msearch`` analog): {query_id:
+        [(doc_id, score)]}, bit-identical per query to search /
+        search_bool / search_phrase.  Specs are dicts with ``query_id``,
+        ``k`` and ONE OF:
+          * ``terms`` + ``mode`` "OR"/"AND" — BM25 term query
+          * ``mode`` "BOOL" + ``query`` — boolean query string
+          * ``mode`` "PHRASE" + ``phrase`` — exact-phrase query
+        One gather whatever the batch size: each partial holds every
+        plan's top-k rows and every phrase's candidates over its
+        segments, so a worker decodes each blob at most once."""
+        plans, phrases = [], []
+        for s in specs:
+            if s.get("mode", "OR").upper() == "PHRASE":
+                spec = ("phrase", list(s["phrase"]), 0, None)
+                phrases.append((s["query_id"], spec, int(s.get("k", 10))))
+            else:
+                plans.append(plan_spec(self, s))
+                self._check_range_fields(plans[-1].ast)
+        if not specs:
+            return {}
+        if phrases:
+            self._require_positions()
+        parts = self._gather(
+            "_many_partial", plans, [p[1] for p in phrases], [p[2] for p in phrases]
+        )
+        hits: dict = {}
+        for p in parts:
+            for qid, d, sc in p[0]:
+                hits.setdefault(qid, []).append((d, sc))
+        out = {
+            q.query_id: sorted(hits.get(q.query_id, []), key=lambda r: (-r[1], r[0]))[: q.k]
+            for q in plans
+        }
+        for j, (qid, _spec, k) in enumerate(phrases):
+            out[qid] = reduce_pseudo([p[1][j] for p in parts], k, self.n_docs)
+        return {s["query_id"]: out[s["query_id"]] for s in specs}
 
 
 def _topk(docs: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -1523,11 +1870,22 @@ class QueryPlan:
         return self.terms if self.mode == "AND" and self.variants is None else []
 
     @property
+    def bounded(self) -> bool:
+        """True when no idf is negative, so block and segment maxima
+        bound scores from above.  A term whose global df exceeds n_docs
+        (deletes lower n_docs at once, df only at compaction) has a
+        negative idf; such a plan scores exhaustively."""
+        return all(v >= 0 for v in self.idf.values())
+
+    @property
     def prunable(self) -> bool:
         """True when a segment whose score bound is strictly below the
         running k-th score may be skipped: the top-k term kernels and
         the required-seeded bool kernel.  Not msm, bmw, exhaustive,
-        cursor pages, fielded AND/BEST or bool queries with atoms."""
+        cursor pages, fielded AND/BEST, bool queries with atoms or
+        unbounded plans."""
+        if not self.bounded:
+            return False
         if self.mode == "BOOL":
             return bool(self.req) and not self.atoms
         return (
@@ -1710,7 +2068,7 @@ def score_segment(
     it, the bool query evaluates over doc sets.  Every kernel keeps the
     ascending-term float64 accumulation, so all choices are
     bit-identical to the exhaustive one."""
-    exhaustive = q.algo == "exhaustive" or q.after is not None
+    exhaustive = q.algo == "exhaustive" or q.after is not None or not q.bounded
     if q.mode == "BOOL" and q.req and extra_sets is None:
         docs, scores = _eval_bool_blockmax(
             cache, q.ast, q.req, q.pos_terms, q.idf, q.avgdl, dead=dead
@@ -1858,15 +2216,13 @@ class IndexSearcher(TermdictFrontEnd):
         self.n_docs = self.manifest["globals"]["n_docs"]
         self.avgdl = self.manifest["globals"]["avgdl"]
         self.n_term_buckets = self.manifest["params"]["n_term_buckets"]
-        postings_dir = table_path(self.index_dir, "postings", self.manifest)
-        self._postings = self.spark.read.parquet(postings_dir)
-        # extend_index appends postings files in place, so the scatter
-        # ships this snapshot's listing: a worker that builds its
-        # searcher later must not see files appended since
-        self._postings_listing = tuple(
-            os.path.relpath(f, postings_dir)
-            for f in ds.dataset(postings_dir, format="parquet", partitioning="hive").files
+        self._postings = self.spark.read.parquet(
+            table_path(self.index_dir, "postings", self.manifest)
         )
+        # extend_index appends postings, doclens and nested files in
+        # place, so the tasks ship this snapshot's listing: a worker that
+        # builds its searcher later must not see files appended since
+        self._listing = snapshot_listing(self.index_dir, self.manifest)
         # the termdict front end reads on the driver: opened once per
         # snapshot (an open lists the files), pinned like every table
         self._termdict = ds.dataset(
@@ -1875,7 +2231,6 @@ class IndexSearcher(TermdictFrontEnd):
             partitioning="hive",
         )
         self._doclens_path = table_path(self.index_dir, "doclens", self.manifest)
-        self._nested_path = table_path(self.index_dir, "nested", self.manifest)
         self._refresh_deletes_state()
 
     def _refresh_deletes_state(self) -> None:
@@ -1928,48 +2283,56 @@ class IndexSearcher(TermdictFrontEnd):
         map stage and the scoring/top-k stage)."""
         return self._term_rows(terms_sorted).select(*self.SCORING_COLS)
 
-    def _scatter(self, plans: list[QueryPlan]) -> DataFrame:
-        """Per-task top-k rows of ``plans`` — the query phase of every
-        distributed scoring API, the Elasticsearch per-shard searchers
-        plus coordinating merge.  One plan-only Spark job: ``n`` tasks
-        over no data, each running serve.score_partition in a reused
-        Python worker, whose LocalSearcher (pinned to this searcher's
-        manifest and postings listing) scores the segments with
-        seg % n == i from its hot row, decode and block caches, pruning
-        segments by bound.  No postings are shuffled or
-        sent through Arrow; a task ships the plans, the manifest (about
-        1 KB) and the postings file names.  The DataFrame stays lazy, so
-        ``_ranked(...).collect()`` is 1 job; ``last_segments_skipped``
-        is read after that collect."""
-        from ..functions import boolquery as bq
-        from .docvalues import check_field
-        from .serve import score_partition
+    def _tasks(self, method: str, args: tuple, emit):
+        """The query phase of every distributed API, the Elasticsearch
+        per-shard searchers: an RDD of ``n`` plan-only tasks over no
+        data (n = cores, at most the segment count).  Task ``i`` runs
+        partial kernel ``method`` with ``part=(i, n)`` in a reused Python
+        worker (serve.run_partition), whose LocalSearcher, pinned to this
+        searcher's manifest and file listing, reads the segments with
+        seg % n == i from its hot row, decode and block caches.  No
+        postings are shuffled or sent through Arrow; a task ships the
+        args, the manifest (about 1 KB) and the file names.  ``emit``
+        turns a partial into the task's rows."""
+        from .serve import run_partition
 
-        # an unknown range field fails here, typed, not inside a task
-        fields = {rt.field for q in plans if q.atoms for rt in bq.range_atoms(q.ast)}
-        if fields:
-            cols = ds.dataset(self._doclens_path, format="parquet").schema.names
-            for f in sorted(fields):
-                check_field(self, f, cols)
         sc = self.spark.sparkContext
         n_segs = int(self.manifest.get("metrics", {}).get("n_segments") or 1)
         n = max(1, min(sc.defaultParallelism, n_segs))
-        index_dir, manifest = self.index_dir, self.manifest
-        listing = self._postings_listing
-        skipped = self._skipped = sc.accumulator(0)
+        index_dir, manifest, listing = self.index_dir, self.manifest, self._listing
 
         def task(it):
             # partition i holds just i; reading the input to its end
             # keeps the worker (and its searcher) for the next task
             for i in it:
-                rows, n_skipped = score_partition(
-                    index_dir, manifest, listing, plans, n, i
-                )
-                skipped.add(n_skipped)
-                yield from rows
+                yield from emit(run_partition(index_dir, manifest, listing, method, args, n, i))
 
-        rdd = sc.parallelize(range(n), n).mapPartitions(task)
-        return self.spark.createDataFrame(rdd, _result_schema(plans))
+        return sc.parallelize(range(n), n).mapPartitions(task)
+
+    def _gather(self, method: str, *args) -> list:
+        """The tasks' partials of ``method``, collected: one Spark job;
+        the caller reduces them (the coordinating node's reduce)."""
+        return self._tasks(method, args, lambda p: [p]).collect()
+
+    def _scatter(self, q: QueryPlan) -> DataFrame:
+        """Top-k of plan ``q`` by (score desc, doc_id asc) over the
+        tasks' top-k rows (LocalSearcher._score_partial, pruning segments
+        by bound), lazy: its collect is 1 job, and
+        ``last_segments_skipped`` is read after it."""
+        self._check_range_fields(q.ast)
+        skipped = self._skipped = self.spark.sparkContext.accumulator(0)
+
+        def emit(partial):
+            rows, n_skipped = partial
+            skipped.add(n_skipped)
+            return rows
+
+        rdd = self._tasks("_score_partial", ([q],), emit)
+        return (
+            self.spark.createDataFrame(rdd, RESULT_SCHEMA)
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(q.k)
+        )
 
     @property
     def last_segments_skipped(self) -> int:
@@ -2009,7 +2372,7 @@ class IndexSearcher(TermdictFrontEnd):
         the disjunctive sum over the terms it has.  m=1 is plain OR,
         m=len(terms) equals AND."""
         q = plan_terms(self, terms, mode, k, algo, min_should_match)
-        return _ranked(self._scatter([q]), q.k)
+        return self._scatter(q)
 
     def search_bool(
         self, query: str, k: int = 10, synonyms: "dict | None" = None
@@ -2027,7 +2390,7 @@ class IndexSearcher(TermdictFrontEnd):
         values, phrase matches and nested sidecar, so range evaluation
         never materializes on the driver."""
         q = plan_bool(self, query, k, synonyms)
-        return _ranked(self._scatter([q]), q.k)
+        return self._scatter(q)
 
     def search_fielded(
         self,
@@ -2062,7 +2425,7 @@ class IndexSearcher(TermdictFrontEnd):
         sums) — the "one field should dominate" ranking for fields that
         compete rather than complement (_fielded_best_scores)."""
         q = plan_fielded(self, terms, fields, k, mode, tie_breaker)
-        return _ranked(self._scatter([q]), q.k)
+        return self._scatter(q)
 
     def search_prefix(
         self,
@@ -2110,191 +2473,6 @@ class IndexSearcher(TermdictFrontEnd):
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
 
-    def search_facets(
-        self,
-        query: list[str] | str,
-        fields: list[str],
-        mode: str = "OR",
-    ) -> DataFrame:
-        """ES ``terms`` aggregation: per-facet-value counts of ALL docs
-        matching the query — DataFrame(field, value, doc_count), sorted
-        by (field, doc_count desc, value).  ``query`` is a term list
-        with mode "OR"/"AND", or a boolean query string with
-        mode="BOOL".  The reference's seqr UI gets faceted search from
-        ES aggregations on the exported index
-        (hail_scripts/shared/elasticsearch_utils.py:38-77 facet-typed
-        mapping); here the facet tokens' postings ARE the agg input.
-
-        Scale posture: one scoring-shaped job — each segment task
-        decodes the query terms' postings once, forms the full match
-        set (facet counting is inherently match-set-complete; no top-k
-        shortcut exists, same as ES), intersects each facet token's
-        postings (sorted-array searchsorted), and emits (field, value,
-        partial count); a tiny groupBy-sum merges segments.  Facet
-        vocabulary (a driver-side termdict read) rides an isin filter so
-        the postings scan stays term_bucket-pruned."""
-        from ..functions import boolquery as bq
-
-        mode_u = mode.upper()
-        ast, qterms = self.parse_query(query, mode_u)
-        bq.reject_filter_atoms(ast, "search_facets")
-        if not qterms:
-            return self.spark.createDataFrame([], FACET_RESULT_SCHEMA)
-        field_of = {t: f for f, ts in self.facet_terms(fields).items() for t in ts}
-        rows = self._term_rows(sorted(set(qterms) | set(field_of))).select(
-            "segment", "term", "blob"
-        )
-        qset = set(qterms)
-        get_deletes = self._segment_deletes_fn()
-
-        def facet_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame(
-                    {"field": [], "value": [], "doc_count": []}
-                )
-            _check_unique_terms(pdf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            qdocs: dict[str, np.ndarray] = {}
-            facet_rows: list[tuple[str, bytes]] = []
-            for r in pdf.itertuples():
-                if r.term in qset:
-                    d, _tf, _dl = codecs.decode_postings(bytes(r.blob))
-                    qdocs[r.term] = d
-                if r.term in field_of:
-                    facet_rows.append((r.term, bytes(r.blob)))
-            matches = _match_docs(qdocs, qterms, mode_u, ast)
-            if dead is not None and dead.size and matches.size:
-                matches = matches[~np.isin(matches, dead, assume_unique=True)]
-            out = []
-            if matches.size:
-                for t, blob in facet_rows:
-                    fd, _tf, _dl = codecs.decode_postings(blob)
-                    n = int(
-                        np.isin(fd, matches, assume_unique=True).sum()
-                    )
-                    if n:
-                        f = field_of[t]
-                        value = t[len(f"__{f}_") : -2]
-                        out.append((f, value, n))
-            return pd.DataFrame(
-                out, columns=["field", "value", "doc_count"]
-            )
-
-        per_segment = _per_segment_apply(rows, facet_segment, FACET_RESULT_SCHEMA)
-        return (
-            per_segment.groupBy("field", "value")
-            .agg(F.sum("doc_count").alias("doc_count"))
-            .orderBy("field", F.desc("doc_count"), "value")
-        )
-
-    def search_stats(
-        self, query: list[str] | str, mode: str = "OR"
-    ) -> DataFrame:
-        """ES ``stats`` aggregation over the matching docs' length
-        field: one row (n_hits, min_dl, max_dl, sum_dl, avg_dl).
-        Needs NO doclens read — dl rides every posting, so each segment
-        task derives its partial (count, sum, min, max) from the query
-        terms' decoded streams alone; the merge is a 4-scalar combine
-        per segment (all associative).  The reference gets this from ES
-        aggregations on its exported index
-        (hail_scripts/shared/elasticsearch_utils.py metadata fields)."""
-        from ..functions import boolquery as bq
-
-        mode_u = mode.upper()
-        ast, qterms = self.parse_query(query, mode_u)
-        bq.reject_filter_atoms(ast, "search_stats")
-        if not qterms:
-            return self.spark.createDataFrame([], STATS_PARTIAL_SCHEMA)
-        rows = self._term_rows(qterms).select("segment", "term", "blob")
-        get_deletes = self._segment_deletes_fn()
-
-        def stats_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            cols = ["n", "sum_dl", "min_dl", "max_dl"]
-            if pdf.empty:
-                return pd.DataFrame(columns=cols)
-            _check_unique_terms(pdf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            qdocs, decoded = {}, []
-            for r in pdf.itertuples():
-                d, _tf, dl = codecs.decode_postings(bytes(r.blob))
-                qdocs[r.term] = d
-                decoded.append((d, dl))
-            matches = _match_docs(qdocs, qterms, mode_u, ast)
-            if dead is not None and dead.size and matches.size:
-                matches = matches[~np.isin(matches, dead, assume_unique=True)]
-            if not matches.size:
-                return pd.DataFrame(columns=cols)
-            dls = _match_dls(decoded, matches)
-            return pd.DataFrame(
-                [
-                    (
-                        int(matches.size),
-                        int(dls.sum()),
-                        int(dls.min()),
-                        int(dls.max()),
-                    )
-                ],
-                columns=cols,
-            )
-
-        partials = _per_segment_apply(rows, stats_segment, STATS_PARTIAL_SCHEMA)
-        return partials.agg(
-            F.sum("n").alias("n_hits"),
-            F.min("min_dl").alias("min_dl"),
-            F.max("max_dl").alias("max_dl"),
-            F.sum("sum_dl").alias("sum_dl"),
-            (F.sum("sum_dl") / F.sum("n")).alias("avg_dl"),
-        )
-
-    def search_histogram(
-        self,
-        query: list[str] | str,
-        interval: int,
-        mode: str = "OR",
-    ) -> DataFrame:
-        """ES ``histogram`` aggregation on doc length: per fixed-width
-        bucket (``floor(dl / interval) * interval``), the count of
-        matching live docs — DataFrame(bucket, doc_count) sorted by
-        bucket.  Same postings-only plan as search_stats; each segment
-        emits its local bucket counts and a tiny groupBy-sum merges."""
-        from ..functions import boolquery as bq
-
-        if interval <= 0:
-            raise ValueError("interval must be positive")
-        mode_u = mode.upper()
-        ast, qterms = self.parse_query(query, mode_u)
-        bq.reject_filter_atoms(ast, "search_histogram")
-        if not qterms:
-            return self.spark.createDataFrame([], HISTOGRAM_SCHEMA)
-        rows = self._term_rows(qterms).select("segment", "term", "blob")
-        get_deletes = self._segment_deletes_fn()
-
-        def hist_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame({"bucket": [], "doc_count": []})
-            _check_unique_terms(pdf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            qdocs, decoded = {}, []
-            for r in pdf.itertuples():
-                d, _tf, dl = codecs.decode_postings(bytes(r.blob))
-                qdocs[r.term] = d
-                decoded.append((d, dl))
-            matches = _match_docs(qdocs, qterms, mode_u, ast)
-            if dead is not None and dead.size and matches.size:
-                matches = matches[~np.isin(matches, dead, assume_unique=True)]
-            if not matches.size:
-                return pd.DataFrame({"bucket": [], "doc_count": []})
-            dls = _match_dls(decoded, matches)
-            b, c = np.unique(dls // interval * interval, return_counts=True)
-            return pd.DataFrame({"bucket": b, "doc_count": c})
-
-        partials = _per_segment_apply(rows, hist_segment, HISTOGRAM_SCHEMA)
-        return (
-            partials.groupBy("bucket")
-            .agg(F.sum("doc_count").alias("doc_count"))
-            .orderBy("bucket")
-        )
-
     def suggest_terms(
         self,
         prefix: str,
@@ -2337,9 +2515,7 @@ class IndexSearcher(TermdictFrontEnd):
         collating); never reads posting blobs otherwise."""
         rows = _phrase_suggest_rows(
             self, text, size, max_edits, max_errors, per_term, collate,
-            lambda ts: int(
-                self.search_count(sorted(set(ts)), "AND").collect()[0][0]
-            ),
+            lambda ts: TermdictFrontEnd.search_count(self, sorted(set(ts)), "AND"),
         )
         return self.spark.createDataFrame(
             rows, "suggestion string, score double"
@@ -2417,71 +2593,89 @@ class IndexSearcher(TermdictFrontEnd):
         at-or-before the cursor, and keeps its local top-k; the global
         merge is k rows per scatter task.  Page 1 = after=None."""
         q = plan_terms(self, terms, mode, k, algo="exhaustive", after=after)
-        return _ranked(self._scatter([q]), q.k)
-
-    def search_count(
-        self, query: list[str] | str, mode: str = "OR"
-    ) -> DataFrame:
-        """ES ``_count`` API: total number of live docs matching the
-        query (term list with OR/AND, or a boolean string with
-        mode="BOOL") — DataFrame with one row ``n_hits``.  Counting
-        needs the match SET, not scores: each segment task decodes only
-        doc-id streams (tf/dl/positions never materialize into the
-        result), emits one partial count, and a scalar sum merges —
-        the cheapest possible full-match job shape."""
-        from ..functions import boolquery as bq
-
-        mode_u = mode.upper()
-        ast, qterms = self.parse_query(query, mode_u)
-        if bq.filter_atoms(ast):
-            # range/_exists_/phrase/nested atoms need the doc-value
-            # store, positions, or the nested sidecar — count through
-            # the aggregation front half
-            # (same job shape, plus the per-atom sides)
-            from . import docvalues as dv
-
-            return dv.matched_ids(self, query, mode_u).agg(
-                F.count(F.lit(1)).alias("n_hits")
-            )
-        if not qterms:
-            return self.spark.createDataFrame(
-                [(0,)], "n_hits long"
-            )
-        rows = self._term_rows(qterms).select("segment", "term", "blob")
-        get_deletes = self._segment_deletes_fn()
-        qset = set(qterms)
-
-        count_schema = T.StructType([T.StructField("n", T.LongType(), False)])
-
-        def count_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame({"n": []})
-            _check_unique_terms(pdf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            qdocs = {
-                r.term: codecs.decode_postings(bytes(r.blob))[0]
-                for r in pdf.itertuples()
-                if r.term in qset
-            }
-            matches = _match_docs(qdocs, qterms, mode_u, ast)
-            if dead is not None and dead.size and matches.size:
-                matches = matches[~np.isin(matches, dead, assume_unique=True)]
-            return pd.DataFrame({"n": [int(matches.size)]})
-
-        per_segment = _per_segment_apply(rows, count_segment, count_schema)
-        return per_segment.agg(
-            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_hits")
-        )
+        return self._scatter(q)
 
     # ---- doc-value queries (operators/docvalues.py): range filters,
     # sort-by-field, and field aggregations over the doclens sidecar ----
 
-    def matched_ids(self, query, mode: str = "OR") -> DataFrame:
-        """DataFrame(doc_id) of live matching docs; query=None =
-        match_all."""
-        from . import docvalues as dv
+    def matched_ids(self, query=None, mode: str = "OR") -> DataFrame:
+        """DataFrame(doc_id) of live docs matching ``query`` (term list
+        with OR/AND, boolean string with "BOOL", None = match_all) —
+        the doc-value aggregation front half.  Lazy: the tasks' id rows
+        (LocalSearcher._ids_partial) join doc values JVM-side."""
+        from .docvalues import MATCHED_SCHEMA
 
-        return dv.matched_ids(self, query, mode)
+        rdd = self._tasks(
+            "_ids_partial", (self._match_spec(query, mode),),
+            lambda ids: ((d,) for d in ids.tolist()),
+        )
+        return self.spark.createDataFrame(rdd, MATCHED_SCHEMA)
+
+    # ---- reduced queries (TermdictFrontEnd), as DataFrames ----
+
+    def search_count(self, query, mode: str = "OR") -> DataFrame:
+        """ES ``_count`` as DataFrame(n_hits)."""
+        return local_frame(self.spark, [(super().search_count(query, mode),)], COUNT_SCHEMA)
+
+    def search_filters(self, filters: "dict[str, str]") -> DataFrame:
+        """ES ``filters`` aggregation as DataFrame(name, doc_count)."""
+        return local_frame(self.spark, super().search_filters(filters), FILTERS_SCHEMA)
+
+    def search_adjacency(self, filters: "dict[str, str]") -> DataFrame:
+        """ES ``adjacency_matrix`` as DataFrame(key, doc_count)."""
+        return local_frame(self.spark, super().search_adjacency(filters), ADJACENCY_SCHEMA)
+
+    def search_facets(self, query, fields: list[str], mode: str = "OR") -> DataFrame:
+        """ES ``terms`` aggregation as DataFrame(field, value, doc_count)."""
+        rows = super().search_facets(query, fields, mode)
+        return local_frame(self.spark, rows, FACET_RESULT_SCHEMA)
+
+    def search_stats(self, query, mode: str = "OR") -> DataFrame:
+        """ES ``stats`` of doc length as a one-row DataFrame(n_hits,
+        min_dl, max_dl, sum_dl, avg_dl)."""
+        st = super().search_stats(query, mode)
+        return local_frame(self.spark, [tuple(st[c] for c in STATS_SCHEMA.names)], STATS_SCHEMA)
+
+    def search_histogram(self, query, interval: int, mode: str = "OR") -> DataFrame:
+        """ES ``histogram`` of doc length as DataFrame(bucket, doc_count)."""
+        rows = super().search_histogram(query, interval, mode)
+        return local_frame(self.spark, rows, HISTOGRAM_SCHEMA)
+
+    def search_phrase(self, phrase: list[str], k: int = 10, slop: int = 0) -> DataFrame:
+        """Phrase BM25 top-k as DataFrame(doc_id, score)."""
+        return local_frame(self.spark, super().search_phrase(phrase, k, slop), RESULT_SCHEMA)
+
+    def search_phrase_prefix(
+        self,
+        phrase: list[str],
+        k: int = 10,
+        slop: int = 0,
+        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
+    ) -> DataFrame:
+        """ES ``match_phrase_prefix`` as DataFrame(doc_id, score)."""
+        rows = super().search_phrase_prefix(phrase, k, slop, max_expansions)
+        return local_frame(self.spark, rows, RESULT_SCHEMA)
+
+    def search_span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
+        """ES ``span_first`` as DataFrame(doc_id, score)."""
+        return local_frame(self.spark, super().search_span_first(term, end, k), RESULT_SCHEMA)
+
+    def search_rescore(
+        self,
+        terms: list[str],
+        rescore_phrase: list[str],
+        k: int = 10,
+        window_size: int = 50,
+        query_weight: float = 1.0,
+        rescore_weight: float = 1.0,
+        mode: str = "OR",
+        slop: int = 0,
+    ) -> DataFrame:
+        """ES ``rescore`` as DataFrame(doc_id, score)."""
+        rows = super().search_rescore(
+            terms, rescore_phrase, k, window_size, query_weight, rescore_weight, mode, slop
+        )
+        return local_frame(self.spark, rows, RESULT_SCHEMA)
 
     def search_sorted(
         self, query, by: str, ascending: bool = False, k: int = 10,
@@ -2663,86 +2857,6 @@ class IndexSearcher(TermdictFrontEnd):
 
         return dv.search_bucket_metrics(
             self, query, bucket_field, interval, metric_field, mode
-        )
-
-    FILTERS_SCHEMA = T.StructType(
-        [
-            T.StructField("name", T.StringType(), False),
-            T.StructField("doc_count", T.LongType(), False),
-        ]
-    )
-
-    def search_filters(self, filters: "dict[str, str]") -> DataFrame:
-        """ES ``filters`` aggregation — named boolean filters, each
-        with its live match count; DataFrame(name, doc_count) in name
-        order.  All range-free filters share ONE counting job (each
-        segment task decodes the union of their terms' doc-id streams
-        once and evaluates every filter against it — the ES
-        one-pass-per-shard shape); filters with range/_exists_/dv
-        atoms fall back to one doc-value-cogroup count job each."""
-        from ..functions import boolquery as bq
-
-        compiled, ranged = [], []
-        for name, q in sorted(filters.items()):
-            ast, terms = self.parse_query(q, "BOOL")
-            if bq.is_pure_negation(ast):
-                raise bq.QueryParseError(
-                    f"filter {name!r} is pure negation (unbounded match "
-                    "set) — rewrite as '<positive> AND NOT ...'"
-                )
-            if bq.filter_atoms(ast):
-                ranged.append((name, q))
-            else:
-                compiled.append((name, ast, terms))
-        out_rows: list[tuple[str, int]] = []
-        if compiled:
-            all_terms = sorted({t for _n, _a, ts in compiled for t in ts})
-            rows = self._term_rows(all_terms).select("segment", "term", "blob")
-            get_deletes = self._segment_deletes_fn()
-            shared = [(n, a) for n, a, _ts in compiled]
-
-            def count_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-                if pdf.empty:
-                    return pd.DataFrame({"name": [], "n": []})
-                _check_unique_terms(pdf)
-                dead = get_deletes(pdf["segment"].iloc[0])
-                qdocs = {
-                    r.term: codecs.decode_postings(bytes(r.blob))[0]
-                    for r in pdf.itertuples()
-                }
-                names, ns = [], []
-                for name, ast in shared:
-                    cand = bq.eval_docs(ast, qdocs)
-                    if isinstance(cand, tuple):
-                        n = 0
-                    else:
-                        if dead is not None and dead.size and cand.size:
-                            cand = cand[
-                                ~np.isin(cand, dead, assume_unique=True)
-                            ]
-                        n = int(cand.size)
-                    names.append(name)
-                    ns.append(n)
-                return pd.DataFrame({"name": names, "n": ns})
-
-            agg = (
-                _per_segment_apply(rows, count_segment, "name string, n long")
-                .groupBy("name")
-                .agg(F.sum("n").alias("doc_count"))
-            )
-            out_rows = [
-                (r["name"], int(r["doc_count"])) for r in agg.collect()
-            ]
-            got = {n for n, _c in out_rows}
-            out_rows += [
-                (name, 0) for name, _a, _ts in compiled if name not in got
-            ]
-        for name, q in ranged:
-            out_rows.append(
-                (name, int(self.search_count(q, "BOOL").collect()[0][0]))
-            )
-        return self.spark.createDataFrame(
-            sorted(out_rows), IndexSearcher.FILTERS_SCHEMA
         )
 
     EXPLAIN_SCHEMA = T.StructType(
@@ -3018,14 +3132,14 @@ class IndexSearcher(TermdictFrontEnd):
         pinned generation/epoch: present in doclens (isin pushes into
         the scan) and not tombstoned.  Bounded by |ids| — the existence
         primitive behind the pinned query and get-by-id shapes."""
-        from .docvalues import _seg_params
+        from .docvalues import _seg_params, doclens_df
 
         want = sorted({int(i) for i in ids})
         if not want:
             return set()
         present = {
             int(r["doc_id"])
-            for r in self.spark.read.parquet(self._doclens_path)
+            for r in doclens_df(self)
             .select("doc_id")
             .where(F.col("doc_id").isin(want))
             .collect()
@@ -3212,11 +3326,13 @@ class IndexSearcher(TermdictFrontEnd):
         docs-array contract).  The isin predicate pushes into the
         doc_id-ordered doclens scan, so row-group stats prune the doc
         store to the files holding the hits."""
+        from .docvalues import doclens_df
+
         want = list(dict.fromkeys(int(i) for i in ids))
         if not want:
             raise ValueError("mget needs at least one id")
         live = self.live_doc_ids(want)
-        doclens = self.spark.read.parquet(self._doclens_path)
+        doclens = doclens_df(self)
         fetched = [
             c for c in doclens.columns if c not in ("doc_id", "doc_len")
         ]
@@ -3251,7 +3367,9 @@ class IndexSearcher(TermdictFrontEnd):
         holding the hits.  Larger sets (search_many output, big k)
         fall back to a broadcast join: no driver-side row
         materialization, no mega-IN-list expression."""
-        doclens = self.spark.read.parquet(self._doclens_path)
+        from .docvalues import doclens_df
+
+        doclens = doclens_df(self)
         # url + any stored metadata fields the field manifest kept
         fetched = [
             c for c in doclens.columns if c not in ("doc_id", "doc_len")
@@ -3289,486 +3407,15 @@ class IndexSearcher(TermdictFrontEnd):
             .orderBy(*order_cols)
         )
 
-    def search_phrase(
-        self, phrase: list[str], k: int = 10, slop: int = 0
-    ) -> DataFrame:
-        """Phrase BM25 top-k: docs containing the terms at consecutive
-        positions (``slop=0``), or within an in-order window stretched
-        by at most ``slop`` positions (the ES ``match_phrase`` slop /
-        span_near in_order=true shape — see _phrase_match_counts),
-        scored as one pseudo-term (tf = chain-start count, df =
-        matching docs).
-
-        Two jobs by necessity: the phrase's global df isn't known until
-        matches are found, so matches (doc_id, tf, dl — tiny relative to
-        postings) are materialized once, counted, then scored JVM-side
-        with the exact float64 expression the oracle uses."""
-        if not self.manifest["params"].get("with_positions", True):
-            raise ValueError(
-                "phrase queries need positional postings, but this index was "
-                "built with with_positions=False — rebuild with positions"
-            )
-        matches = self._phrase_matches(phrase, slop)
-        return self._score_phrase_matches(matches, k)
-
-    def _score_phrase_matches(self, matches: DataFrame, k: int) -> DataFrame:
-        """Back half of search_phrase / search_phrase_prefix: count the
-        materialized matches for the pseudo-term's global df, then score
-        JVM-side with the exact float64 oracle expression."""
-        matches.persist()
-        try:
-            df_count = matches.count()
-            if df_count == 0:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
-            idf = bm25_idf(self.n_docs, df_count)
-            w = (F.lit(BM25_K1 + 1.0) * F.col("tf")) / (
-                F.col("tf")
-                + F.lit(BM25_K1)
-                * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(self.avgdl))
-            )
-            return (
-                matches.select("doc_id", (F.lit(idf) * w).alias("score"))
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .localCheckpoint()  # cut lineage before unpersist
-            )
-        finally:
-            matches.unpersist()
-
-    def search_span_first(
-        self, term: str, end: int, k: int = 10
-    ) -> DataFrame:
-        """ES ``span_first`` query: the term must occur within the
-        first ``end`` token positions (positions are 0-based, so
-        ``end=3`` admits positions 0-2) — the "title-ish lead matters"
-        query for schemaless corpora.  Scored as one pseudo-term whose
-        tf is the count of qualifying positions and whose df is the
-        number of matching live docs (the search_phrase scoring
-        contract; reuses its back half)."""
-        if int(end) <= 0:
-            raise ValueError("span_first end must be a positive int")
-        if not self.manifest["params"].get("with_positions", True):
-            raise ValueError(
-                "span_first needs positional postings, but this index was "
-                "built with with_positions=False — rebuild with positions"
-            )
-        end_i = int(end)
-        get_deletes = self._segment_deletes_fn()
-
-        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = {"doc_id": [], "tf": [], "dl": []}
-            if pdf.empty:
-                return pd.DataFrame(out)
-            _check_unique_terms(pdf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            r = next(pdf.itertuples())
-            d, tf, dl = codecs.decode_postings(bytes(r.blob))
-            if d.size == 0:
-                return pd.DataFrame(out)
-            pos, offs = codecs.decode_position_lists(bytes(r.pos_blob), tf)
-            # per-doc qualifying count: positions ascend within each
-            # slice, and every posted doc has >= 1 position, so a
-            # reduceat over the <end mask counts per slice exactly
-            counts = np.add.reduceat(
-                (pos < end_i).astype(np.int64), offs[:-1]
-            )
-            hit = counts > 0
-            docs, tfs, dls = d[hit], counts[hit], dl[hit]
-            if dead is not None and dead.size and docs.size:
-                keep = ~np.isin(docs, dead, assume_unique=True)
-                docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-            return pd.DataFrame({"doc_id": docs, "tf": tfs, "dl": dls})
-
-        rows = self._term_rows([term]).select("segment", "term", "blob", "pos_blob")
-        matches = _per_segment_apply(
-            rows,
-            match_segment,
-            T.StructType(
-                [
-                    T.StructField("doc_id", T.LongType(), False),
-                    T.StructField("tf", T.LongType(), False),
-                    T.StructField("dl", T.LongType(), False),
-                ]
-            ),
-        )
-        return self._score_phrase_matches(matches, k)
-
-    def search_phrase_prefix(
-        self,
-        phrase: list[str],
-        k: int = 10,
-        slop: int = 0,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-    ) -> DataFrame:
-        """ES ``match_phrase_prefix`` — autocomplete-as-you-type: the
-        LAST token is a prefix; a doc matches when the leading tokens
-        form a phrase chain (same slop semantics as search_phrase)
-        whose final slot holds ANY indexed expansion of the prefix.
-        Expansion is the termdict range scan (expand_prefix, typed cap);
-        the expansions merge into one synthetic pseudo-term posting per
-        segment (_merge_posting_variants — the Lucene multi-term-synonym
-        span), so the chain kernel and the one-pseudo-term scoring
-        contract (tf = chain starts, df = matching docs) run unchanged
-        and bit-identically to search_phrase when the prefix expands to
-        exactly one term."""
-        if not phrase:
-            raise ValueError("match_phrase_prefix needs at least one token")
-        if not self.manifest["params"].get("with_positions", True):
-            raise ValueError(
-                "phrase queries need positional postings, but this index was "
-                "built with with_positions=False — rebuild with positions"
-            )
-        lead, prefix = list(phrase[:-1]), str(phrase[-1])
-        expansions = self.expand_prefix(prefix, max_expansions)
-        if not expansions:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        matches = self._phrase_matches(lead, slop, expansions=expansions)
-        return self._score_phrase_matches(matches, k)
-
-    def _phrase_matches(
-        self,
-        phrase: list[str],
-        slop: int = 0,
-        expansions: "list[str] | None" = None,
-    ) -> DataFrame:
-        """DataFrame(doc_id, tf, dl) of phrase-chain matches.  With
-        ``expansions``, the phrase gains a FINAL slot that any of the
-        expanded terms may fill (the match_phrase_prefix shape): the
-        expansions present in a segment merge into one synthetic
-        posting via _merge_posting_variants."""
-        exp = sorted(set(expansions)) if expansions is not None else None
-        terms_sorted = sorted(set(phrase) | set(exp or ()))
-        phrase_t = list(phrase) + ([_PFX_SLOT] if exp is not None else [])
-        slop_i = int(slop)
-        get_deletes = self._segment_deletes_fn()
-
-        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = {"doc_id": [], "tf": [], "dl": []}
-            if pdf.empty:
-                return pd.DataFrame(out)
-            _check_unique_terms(pdf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            post = {}
-            for r in pdf.itertuples():
-                d, tf, dl = codecs.decode_postings(bytes(r.blob))
-                pos, offs = codecs.decode_position_lists(bytes(r.pos_blob), tf)
-                post[r.term] = (d, dl, pos, offs)
-            if exp is not None:
-                present = [post[v] for v in exp if v in post]
-                if not present:
-                    return pd.DataFrame(out)
-                post[_PFX_SLOT] = _merge_posting_variants(present)
-            if not all(t in post for t in phrase_t):
-                return pd.DataFrame(out)
-            common = reduce(
-                lambda a, b: np.intersect1d(a, b, assume_unique=True),
-                (post[t][0] for t in dict.fromkeys(phrase_t)),
-            )
-            if dead is not None and dead.size:
-                common = common[~np.isin(common, dead, assume_unique=True)]
-            d0, dl0, _, _ = post[phrase_t[0]]
-            dl_idx = np.searchsorted(d0, common)
-            tfs = _phrase_match_counts(post, phrase_t, common, slop_i)
-            hit = tfs > 0
-            return pd.DataFrame(
-                {
-                    "doc_id": common[hit],
-                    "tf": tfs[hit],
-                    "dl": dl0[dl_idx[hit]],
-                }
-            )
-
-        rows = self._term_rows(terms_sorted).select(
-            "segment", "term", "blob", "pos_blob"
-        )
-        return _per_segment_apply(
-            rows,
-            match_segment,
-            T.StructType(
-                [
-                    T.StructField("doc_id", T.LongType(), False),
-                    T.StructField("tf", T.LongType(), False),
-                    T.StructField("dl", T.LongType(), False),
-                ]
-            ),
-        )
-
-    def search_adjacency(self, filters: "dict[str, str]") -> DataFrame:
-        """ES ``adjacency_matrix`` aggregation: live match counts for
-        every named filter AND every pairwise intersection — the
-        co-occurrence matrix behind "which watches fire together".
-        One counting job: each segment task evaluates all filters
-        against one decoded-term union and emits singles + non-empty
-        pair counts (keys ``a`` and ``a&b``, names sorted — the ES key
-        convention); empty pairs are omitted, as in ES.  Filters with
-        range/_exists_/dv/phrase atoms are rejected (use
-        search_filters for those shapes)."""
-        from itertools import combinations
-
-        from ..functions import boolquery as bq
-
-        compiled = adjacency_filters(self, filters)
-        all_terms = sorted({t for _n, _a, ts in compiled for t in ts})
-        rows = self._term_rows(all_terms).select("segment", "term", "blob")
-        get_deletes = self._segment_deletes_fn()
-
-        def count_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame({"key": [], "n": []})
-            _check_unique_terms(pdf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            qdocs = {
-                r.term: codecs.decode_postings(bytes(r.blob))[0]
-                for r in pdf.itertuples()
-            }
-            sets = {}
-            for name, ast, _ts in compiled:
-                cand = bq.eval_docs(ast, qdocs)
-                if isinstance(cand, tuple):
-                    cand = np.array([], np.int64)
-                elif dead is not None and dead.size and cand.size:
-                    cand = cand[~np.isin(cand, dead, assume_unique=True)]
-                sets[name] = cand
-            keys, ns = [], []
-            for name, ids in sets.items():
-                keys.append(name)
-                ns.append(int(ids.size))
-            for a, b in combinations(sorted(sets), 2):
-                inter = np.intersect1d(sets[a], sets[b], assume_unique=True)
-                if inter.size:
-                    keys.append(f"{a}&{b}")
-                    ns.append(int(inter.size))
-            return pd.DataFrame({"key": keys, "n": ns})
-
-        agg = (
-            _per_segment_apply(rows, count_segment, "key string, n long")
-            .groupBy("key")
-            .agg(F.sum("n").alias("doc_count"))
-        )
-        out = [(r["key"], int(r["doc_count"])) for r in agg.collect()]
-        got = {k for k, _n in out}
-        out += [(name, 0) for name, _a, _t in compiled if name not in got]
-        return self.spark.createDataFrame(
-            sorted(out),
-            T.StructType(
-                [
-                    T.StructField("key", T.StringType(), False),
-                    T.StructField("doc_count", T.LongType(), False),
-                ]
-            ),
-        )
-
-    def search_rescore(
-        self,
-        terms: list[str],
-        rescore_phrase: list[str],
-        k: int = 10,
-        window_size: int = 50,
-        query_weight: float = 1.0,
-        rescore_weight: float = 1.0,
-        mode: str = "OR",
-        slop: int = 0,
-    ) -> DataFrame:
-        """ES ``rescore`` API (score_mode: total): run the cheap term
-        query, take its top ``window_size`` hits, and re-rank just that
-        window with a proximity (phrase) query —
-
-            final = query_weight·bm25 + rescore_weight·phrase_score
-
-        where phrase_score uses the phrase's GLOBAL df (Lucene rescore
-        evaluates the rescore query with full index stats, only
-        restricted to the window's docs).  Window docs without the
-        phrase contribute 0 from the rescore side.
-
-        The window (≤ window_size rows) is the only driver-side
-        materialization — the phrase match job and the base query job
-        stay fully distributed; the window rides back in as a broadcast
-        join against the phrase matches."""
-        if window_size < k:
-            raise ValueError("window_size must be >= k")
-        base = [
-            (int(r["doc_id"]), float(r["score"]))
-            for r in self.search(terms, mode=mode, k=window_size).collect()
-        ]
-        if not base:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        window = self.spark.createDataFrame(
-            [(d,) for d, _s in base],
-            T.StructType([T.StructField("doc_id", T.LongType(), False)]),
-        )
-        matches = self._phrase_matches(rescore_phrase, slop)
-        matches.persist()
-        try:
-            df_count = matches.count()
-            # phrase stats of the WINDOW docs only — the window side
-            # broadcasts into an inner join, so at most window_size
-            # rows ever reach the driver
-            ph_rows = (
-                matches.join(F.broadcast(window), "doc_id").collect()
-                if df_count
-                else []
-            )
-        finally:
-            matches.unpersist()
-        ph_score: dict[int, float] = {}
-        if ph_rows:
-            idf = bm25_idf(self.n_docs, df_count)
-            for r in ph_rows:
-                tf, dl = float(r["tf"]), float(r["dl"])
-                w = ((BM25_K1 + 1.0) * tf) / (
-                    tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / self.avgdl)
-                )
-                ph_score[int(r["doc_id"])] = idf * w
-        qw, rw = float(query_weight), float(rescore_weight)
-        rescored = sorted(
-            (
-                (d, qw * s + rw * ph_score.get(d, 0.0))
-                for d, s in base
-            ),
-            key=lambda t: (-t[1], t[0]),
-        )[: int(k)]
-        return self.spark.createDataFrame(rescored, RESULT_SCHEMA)
-
     def search_many(self, specs: list[dict]) -> DataFrame:
-        """Batch query execution (the ES ``msearch`` analog).  Specs are
-        dicts with ``query_id``, ``k`` and ONE OF:
-          * ``terms`` + ``mode`` "OR"/"AND" — BM25 term query
-          * ``mode`` "BOOL" + ``query`` — boolean query string
-          * ``mode`` "PHRASE" + ``phrase`` — exact-phrase query
-
-        Job count is CONSTANT in the batch size: term and bool queries
-        (atoms included) share one scatter, whose tasks' worker caches
-        decode each blob at most once across the batch; phrase queries
-        add two (one match job for ALL phrases — phrase df isn't known
-        until matches exist — plus the count).  Returns
-        DataFrame(query_id, rank, doc_id, score), rank 1..k by (score
-        desc, doc_id asc), results bit-identical per query to
-        search/search_bool/search_phrase."""
-        plans, phrase_specs = [], []
-        for s in specs:
-            if s.get("mode", "OR").upper() == "PHRASE":
-                phrase_specs.append(
-                    (s["query_id"], list(s["phrase"]), int(s.get("k", 10)))
-                )
-                continue
-            plans.append(plan_spec(self, s))
-
-        parts: list[DataFrame] = []
-        if plans:
-            parts.append(self._scatter(plans))
-        if phrase_specs:
-            parts.append(self._phrase_scores_many(phrase_specs))
-        if not parts:
-            return self.spark.createDataFrame([], MULTI_RESULT_SCHEMA)
-        per_segment = reduce(DataFrame.unionByName, parts)
-        k_pairs = [(q.query_id, q.k) for q in plans] + [
-            (qid, k) for qid, _, k in phrase_specs
+        """TermdictFrontEnd.search_many as DataFrame(query_id, rank,
+        doc_id, score), rank 1..k by (score desc, doc_id asc)."""
+        rows = [
+            (qid, rank, d, sc)
+            for qid, hits in super().search_many(specs).items()
+            for rank, (d, sc) in enumerate(hits, 1)
         ]
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        k_map = F.create_map(
-            *[x for qid, k in k_pairs for x in (F.lit(qid), F.lit(k))]
-        )
-        return (
-            per_segment.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_map[F.col("query_id")])
-            .select("query_id", "rank", "doc_id", "score")
-        )
-
-    def _phrase_scores_many(self, phrase_specs: list[tuple]) -> DataFrame:
-        """(query_id, doc_id, score) for a BATCH of phrase queries in
-        two jobs total: one segment-parallel match job for every phrase
-        (position blobs decoded once per (term, segment) across the
-        batch), one tiny count job for the per-query global df (the
-        phrase idf needs it), then JVM-side scoring — job count is
-        independent of the number of phrase queries."""
-        if not self.manifest["params"].get("with_positions", True):
-            raise ValueError(
-                "phrase queries need positional postings, but this index was "
-                "built with with_positions=False — rebuild with positions"
-            )
-        compiled = [(qid, list(ph)) for qid, ph, _ in phrase_specs]
-        all_terms = sorted({t for _, ph in compiled for t in ph})
-        get_deletes = self._segment_deletes_fn()
-
-        def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = {"query_id": [], "doc_id": [], "tf": [], "dl": []}
-            if pdf.empty:
-                return pd.DataFrame(out)
-            _check_unique_terms(pdf)
-            dead = get_deletes(pdf["segment"].iloc[0])
-            post = {}
-            for r in pdf.itertuples():
-                d, tf, dl = codecs.decode_postings(bytes(r.blob))
-                pos, offs = codecs.decode_position_lists(bytes(r.pos_blob), tf)
-                post[r.term] = (d, dl, pos, offs)
-            for qid, phrase_t in compiled:
-                if not all(t in post for t in phrase_t):
-                    continue
-                common = reduce(
-                    lambda a, b: np.intersect1d(a, b, assume_unique=True),
-                    (post[t][0] for t in dict.fromkeys(phrase_t)),
-                )
-                if dead is not None and dead.size:
-                    common = common[~np.isin(common, dead, assume_unique=True)]
-                if common.size == 0:
-                    continue
-                d0, dl0, _, _ = post[phrase_t[0]]
-                dl_idx = np.searchsorted(d0, common)
-                tfs = _phrase_match_counts(post, phrase_t, common)
-                hit = tfs > 0
-                out["query_id"].extend([qid] * int(hit.sum()))
-                out["doc_id"].extend(common[hit].tolist())
-                out["tf"].extend(tfs[hit].tolist())
-                out["dl"].extend(dl0[dl_idx[hit]].tolist())
-            return pd.DataFrame(out)
-
-        rows = self._term_rows(all_terms).select(
-            "segment", "term", "blob", "pos_blob"
-        )
-        matches = _per_segment_apply(
-            rows,
-            match_segment,
-            T.StructType(
-                [
-                    T.StructField("query_id", T.StringType(), False),
-                    T.StructField("doc_id", T.LongType(), False),
-                    T.StructField("tf", T.LongType(), False),
-                    T.StructField("dl", T.LongType(), False),
-                ]
-            ),
-        )
-        matches.persist()
-        try:
-            counts = {
-                r["query_id"]: int(r["n"])
-                for r in matches.groupBy("query_id")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            if not counts:
-                return self.spark.createDataFrame([], QUERY_RESULT_SCHEMA)
-            idf_map = F.create_map(
-                *[
-                    x
-                    for qid, n in counts.items()
-                    for x in (F.lit(qid), F.lit(bm25_idf(self.n_docs, n)))
-                ]
-            )
-            w = (F.lit(BM25_K1 + 1.0) * F.col("tf")) / (
-                F.col("tf")
-                + F.lit(BM25_K1)
-                * (
-                    F.lit(1.0 - BM25_B)
-                    + F.lit(BM25_B) * F.col("dl") / F.lit(self.avgdl)
-                )
-            )
-            return matches.select(
-                "query_id",
-                "doc_id",
-                (idf_map[F.col("query_id")] * w).alias("score"),
-            ).localCheckpoint()  # cut lineage before unpersist
-        finally:
-            matches.unpersist()
+        return local_frame(self.spark, rows, MULTI_RESULT_SCHEMA)
 
 
 def bm25_exhaustive_df(

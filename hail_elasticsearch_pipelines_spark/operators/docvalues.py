@@ -25,6 +25,7 @@ scorers for the docs that survive the filter.
 
 from __future__ import annotations
 
+import os
 from typing import TYPE_CHECKING
 
 import numpy as np
@@ -97,10 +98,22 @@ def _values_lookup(
     return ok, {c: right[c].to_numpy()[take] for c in cols}
 
 
+def listed_df(searcher: "IndexSearcher", table: str) -> DataFrame:
+    """The pinned snapshot's rows of ``table`` ("doclens" or "nested"):
+    its generation-resolved dir, read through a file-name glob of the
+    files listed at searcher construction, so rows extend_index appended
+    since stay invisible.  A part-file name is unique to the write that
+    made it, so the name alone pins the file in any partition dir."""
+    from ..layout import table_path
+
+    names = sorted({os.path.basename(f) for f in searcher._listing[table]})
+    path = table_path(searcher.index_dir, table, searcher.manifest)
+    return searcher.spark.read.option("pathGlobFilter", "{" + ",".join(names) + "}").parquet(path)
+
+
 def doclens_df(searcher: "IndexSearcher") -> DataFrame:
-    """The pinned snapshot's doclens table (generation-resolved path
-    captured at searcher construction)."""
-    return searcher.spark.read.parquet(searcher._doclens_path)
+    """The pinned snapshot's doclens table."""
+    return listed_df(searcher, "doclens")
 
 
 def check_field(searcher: "IndexSearcher", field: str, cols) -> None:
@@ -157,138 +170,6 @@ def _all_dead_ids(searcher: "IndexSearcher") -> np.ndarray:
     if not dead:
         return np.array([], np.int64)
     return np.unique(np.concatenate(list(dead.values())))
-
-
-def matched_ids(
-    searcher: "IndexSearcher",
-    query: "list[str] | str | None",
-    mode: str = "OR",
-) -> DataFrame:
-    """DataFrame(doc_id) of live docs matching ``query`` (term list
-    with OR/AND, boolean string with mode="BOOL", or ``None`` =
-    match_all).  Per-segment tasks decode only doc-id streams and emit
-    matched ids — the doc-value aggregation front half."""
-    from ..functions import boolquery as bq
-    from .bm25 import _check_unique_terms, _match_docs
-
-    spark = searcher.spark
-    if query is None:
-        # match_all: every live doclens id (deletes anti-joined; the
-        # tombstone side is small by construction — see _all_dead_ids)
-        live = doclens_df(searcher).select("doc_id")
-        dead = _all_dead_ids(searcher)
-        if dead.size:
-            dead_df = spark.createDataFrame(
-                [(int(d),) for d in dead.tolist()], MATCHED_SCHEMA
-            )
-            live = live.join(F.broadcast(dead_df), "doc_id", "left_anti")
-        return live
-    ast, qterms = searcher.parse_query(query, mode)
-    ranges = bq.range_atoms(ast) if ast is not None else []
-    phrases = bq.phrase_atoms(ast) if ast is not None else []
-    nested = bq.nested_atoms(ast) if ast is not None else []
-    if not qterms and not ranges and not phrases and not nested:
-        return spark.createDataFrame([], MATCHED_SCHEMA)
-    get_deletes = searcher._segment_deletes_fn()
-    mode_u = mode.upper()
-
-    if ranges or phrases or nested:
-        # BOOL query with doc-value range / quoted-phrase atoms:
-        # allowed ids per atom ride a per-segment cogroup (pure-atom
-        # queries — bounded filters of match_all — cogroup against an
-        # empty posting side)
-        dl = doclens_df(searcher)
-        dpp, seg_group = _seg_params(searcher.manifest)
-        seg_of = segment_expr(F.col("doc_id"), dpp, seg_group)
-        parts = []
-        for rt in ranges:
-            check_field(searcher, rt.field, dl.columns)
-            parts.append(
-                dl.filter(range_pred(rt, is_array_type(dl, rt.field))).select(
-                    seg_of.alias("segment"),
-                    "doc_id",
-                    F.lit(rt.key()).alias("rkey"),
-                )
-            )
-        for pt in phrases:
-            parts.append(
-                searcher._phrase_matches(list(pt.tokens), pt.slop).select(
-                    seg_of.alias("segment"),
-                    "doc_id",
-                    F.lit(pt.key()).alias("rkey"),
-                )
-            )
-        if nested:
-            from . import nested as nst
-
-            for nt in nested:
-                parts.append(
-                    nst.atom_match_df(searcher, nt).select(
-                        seg_of.alias("segment"),
-                        "doc_id",
-                        F.lit(nt.key()).alias("rkey"),
-                    )
-                )
-        allowed = parts[0]
-        for p in parts[1:]:
-            allowed = allowed.unionByName(p)
-        rkeys = (
-            [rt.key() for rt in ranges]
-            + [pt.key() for pt in phrases]
-            + [nt.key() for nt in nested]
-        )
-        rows = (
-            searcher._term_rows(qterms).select("segment", "term", "blob")
-            if qterms
-            else spark.createDataFrame(
-                [], "segment int, term string, blob binary"
-            )
-        )
-
-        def ids_segment_rng(
-            key, left: pd.DataFrame, right: pd.DataFrame
-        ) -> pd.DataFrame:
-            dead = get_deletes(int(key[0]))
-            qdocs = {}
-            if not left.empty:
-                _check_unique_terms(left)
-                qdocs = {
-                    r.term: codecs.decode_postings(bytes(r.blob))[0]
-                    for r in left.itertuples()
-                }
-            empty_ids = np.array([], np.int64)
-            for rk in rkeys:
-                qdocs[rk] = empty_ids
-            for rk, grp in right.groupby("rkey"):
-                qdocs[rk] = np.sort(grp["doc_id"].to_numpy(np.int64))
-            matches = _match_docs(qdocs, qterms, mode_u, ast)
-            if dead is not None and dead.size and matches.size:
-                matches = matches[~np.isin(matches, dead, assume_unique=True)]
-            return pd.DataFrame({"doc_id": matches})
-
-        return (
-            rows.groupBy("segment")
-            .cogroup(allowed.groupBy("segment"))
-            .applyInPandas(ids_segment_rng, MATCHED_SCHEMA)
-        )
-
-    rows = searcher._term_rows(qterms).select("segment", "term", "blob")
-
-    def ids_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame({"doc_id": []})
-        _check_unique_terms(pdf)
-        dead = get_deletes(pdf["segment"].iloc[0])
-        qdocs = {
-            r.term: codecs.decode_postings(bytes(r.blob))[0]
-            for r in pdf.itertuples()
-        }
-        matches = _match_docs(qdocs, qterms, mode_u, ast)
-        if dead is not None and dead.size and matches.size:
-            matches = matches[~np.isin(matches, dead, assume_unique=True)]
-        return pd.DataFrame({"doc_id": matches})
-
-    return rows.groupBy("segment").applyInPandas(ids_segment, MATCHED_SCHEMA)
 
 
 def _matched_values(
@@ -371,7 +252,7 @@ def _matched_values(
                 .cogroup(vals.groupBy("segment"))
                 .applyInPandas(vals_segment, schema)
             )
-    return matched_ids(searcher, query, mode).join(
+    return searcher.matched_ids(query, mode).join(
         dl.select("doc_id", field), "doc_id"
     )
 
@@ -1346,7 +1227,7 @@ def search_missing(
     check_field(searcher, field, dl.columns)
     nulls = dl.where(~present_pred(dl, field)).select("doc_id")
     return (
-        matched_ids(searcher, query, mode)
+        searcher.matched_ids(query, mode)
         .join(nulls, "doc_id")
         .agg(F.count(F.lit(1)).alias("missing_count"))
     )
@@ -1531,7 +1412,7 @@ def search_bucket_metrics(
     )
 
     return (
-        matched_ids(searcher, query, mode)
+        searcher.matched_ids(query, mode)
         .join(proj, "doc_id")
         .groupBy("bucket")
         .agg(
@@ -1854,7 +1735,7 @@ def _two_field_rows(searcher: "IndexSearcher", query, f1: str, f2: str, mode: st
     vals = dl.where(
         F.col(f1).isNotNull() & F.col(f2).isNotNull()
     ).select("doc_id", f1, f2)
-    return matched_ids(searcher, query, mode).join(vals, "doc_id")
+    return searcher.matched_ids(query, mode).join(vals, "doc_id")
 
 
 def search_weighted_avg(
@@ -1982,7 +1863,7 @@ def search_multi_terms(
         pred = c if pred is None else (pred & c)
     vals = dl.where(pred).select("doc_id", *fields)
     g = (
-        matched_ids(searcher, query, mode)
+        searcher.matched_ids(query, mode)
         .join(vals, "doc_id")
         .groupBy(*fields)
         .agg(F.count(F.lit(1)).alias("doc_count"))

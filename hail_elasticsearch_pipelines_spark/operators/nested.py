@@ -35,6 +35,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -87,31 +88,19 @@ def _norm_conditions(searcher, field: str, conditions: dict) -> list:
 
 
 def nested_df(searcher) -> DataFrame:
-    """The pinned snapshot's nested sidecar (generation-resolved at
-    searcher construction)."""
-    import os
+    """The pinned snapshot's nested sidecar."""
+    from .docvalues import listed_df
 
-    if not os.path.isdir(searcher._nested_path):
+    _require_sidecar(searcher)
+    return listed_df(searcher, "nested")
+
+
+def _require_sidecar(searcher) -> None:
+    if not searcher._listing["nested"]:
         raise DocValueError(
             "this index has no nested sidecar — no array-of-struct "
             "column was present at build time"
         )
-    return searcher.spark.read.parquet(searcher._nested_path)
-
-
-def atom_match_df(searcher, nt) -> DataFrame:
-    """Distinct LIVE doc ids matching one NestedTerm — the injected
-    filter set for ``search_bool`` / ``matched_ids``.  field= partition
-    pruning + (leaf, value) equality predicates push into the parquet
-    scan; the doclens semi-join bounds the result to live primaries."""
-    field, leaf = _split_path(searcher, nt.path)
-    nd = nested_df(searcher)
-    pred = (F.col("field") == field) & (F.col("leaf") == leaf)
-    if not getattr(nt, "exists", False):
-        pred &= F.col("value") == nt.value
-    ids = nd.filter(pred).select("doc_id").distinct()
-    live = searcher.spark.read.parquet(searcher._doclens_path).select("doc_id")
-    return ids.join(live, "doc_id", "left_semi")
 
 
 def nested_match_ids(searcher, field: str, conditions: dict) -> DataFrame:
@@ -131,7 +120,7 @@ def nested_match_ids(searcher, field: str, conditions: dict) -> DataFrame:
         for leaf, val in conds
     ]
     inter = reduce(lambda a, b: a.join(b, ["doc_id", "obj"]), sets)
-    live = searcher.spark.read.parquet(searcher._doclens_path).select("doc_id")
+    live = doclens_df(searcher).select("doc_id")
     out = inter.select("doc_id").distinct().join(live, "doc_id", "left_semi")
     dead = _all_dead_ids(searcher)
     if dead.size:
@@ -165,12 +154,10 @@ def search_nested_terms(
     join the (field, leaf)-pruned sidecar scan; the shuffle carries
     (value, doc_id|obj) rows of MATCHING docs only, then one count
     aggregation — never the corpus."""
-    from .docvalues import matched_ids
-
     _split_path(searcher, f"{field}.{leaf}")
     if count not in ("docs", "objects"):
         raise DocValueError("count must be 'docs' or 'objects'")
-    ids = matched_ids(searcher, query, mode)
+    ids = searcher.matched_ids(query, mode)
     nd = nested_df(searcher).filter(
         (F.col("field") == field) & (F.col("leaf") == leaf)
     )
@@ -240,7 +227,7 @@ def nested_inner_hits(searcher, field: str, conditions: dict) -> DataFrame:
         for leaf, val in conds
     ]
     inter = reduce(lambda a, b: a.join(b, ["doc_id", "obj"]), sets).distinct()
-    live = searcher.spark.read.parquet(searcher._doclens_path).select("doc_id")
+    live = doclens_df(searcher).select("doc_id")
     out = inter.join(live, "doc_id", "left_semi")
     dead = _all_dead_ids(searcher)
     if dead.size:
@@ -350,9 +337,9 @@ def search_nested(
 
 
 def local_atom_ids(local, nt) -> np.ndarray:
-    """Serving twin of atom_match_df: sorted unique live doc ids for
-    one NestedTerm, read via a pyarrow dataset scan with field=
-    partition pruning and (leaf, value) predicate pushdown."""
+    """Sorted unique live doc ids for one NestedTerm — a bool query's
+    nested atom — read via a pyarrow dataset scan with field= partition
+    pruning and (leaf, value) predicate pushdown."""
     field, leaf = _split_path(local, nt.path)
     value = None if getattr(nt, "exists", False) else nt.value
     tbl = _local_scan(local, field, leaf, value, columns=["doc_id"])
@@ -378,22 +365,29 @@ def local_match_ids(local, field: str, conditions: dict) -> np.ndarray:
     return _live_only(local, ids)
 
 
-def _local_scan(local, field: str, leaf: str, value: str, columns):
-    import os
+def nested_dataset(local) -> "ds.Dataset":
+    """The pinned snapshot's nested sidecar as a pyarrow dataset."""
+    _require_sidecar(local)
+    return ds.dataset(
+        local._listed("nested"),
+        format="parquet",
+        partitioning="hive",
+        partition_base_dir=local._nested_path,
+    )
 
-    import pyarrow.dataset as ds
 
-    path = local._nested_path
-    if not os.path.isdir(path):
-        raise DocValueError(
-            "this index has no nested sidecar — no array-of-struct "
-            "column was present at build time"
-        )
-    dataset = ds.dataset(path, format="parquet", partitioning="hive")
+def atom_filter(field: str, leaf: str, value: "str | None") -> "ds.Expression":
+    """The sidecar scan filter of a nested atom: the field= partition,
+    then (leaf, value) for row-group pruning; value None matches any
+    value (the exists atom)."""
     pred = (ds.field("field") == field) & (ds.field("leaf") == leaf)
-    if value is not None:  # None = exists atom (any value)
-        pred &= ds.field("value") == value
-    return dataset.to_table(columns=columns, filter=pred)
+    return pred if value is None else pred & (ds.field("value") == value)
+
+
+def _local_scan(local, field: str, leaf: str, value: str, columns):
+    return nested_dataset(local).to_table(
+        columns=columns, filter=atom_filter(field, leaf, value)
+    )
 
 
 def _live_only(local, ids: np.ndarray) -> np.ndarray:

@@ -16,9 +16,12 @@ segment's top-k — so results are bit-identical
 (tests/test_serve.py).  LocalSearcher._search_pruned runs it over its
 hot term-rows, decoded-postings and block caches, visiting segments in
 bound order with a running top-k — in-process, and as the distributed
-query phase: IndexSearcher._scatter sends its plans to Spark's Python
-workers, where score_partition runs the same loop over a slice of the
-segments on a LocalSearcher each worker keeps between tasks.
+query phase: IndexSearcher's tasks run on Spark's Python workers, where
+run_partition calls a partial kernel (_score_partial, _count_partial,
+_facet_partial, _pseudo_partial, ...) over a slice of the segments on a
+LocalSearcher each worker keeps between tasks.  Every non-scoring and
+phrase API is one such kernel plus one reducer in bm25.py; this searcher
+reduces its one partial over every segment.
 
 Scale posture: the distributed `IndexSearcher` is the 10^12-doc path
 (per-segment scoring fans out across executors).  `LocalSearcher` is
@@ -28,7 +31,7 @@ every executor runs.
 
 from __future__ import annotations
 
-import os
+from functools import reduce
 
 import numpy as np
 import pyarrow.dataset as ds
@@ -51,8 +54,10 @@ from .bm25 import (
     plan_fielded,
     plan_spec,
     plan_terms,
+    pseudo_candidates,
     score_segment,
     segment_bounds,
+    snapshot_listing,
     term_filter,
 )
 from .index_build import bm25_idf, bm25_tf_weight
@@ -105,28 +110,28 @@ class LocalSearcher(TermdictFrontEnd):
         self._load_snapshot()
 
     def _load_snapshot(
-        self, manifest: "dict | None" = None, postings: "list[str] | None" = None
+        self, manifest: "dict | None" = None, listing: "dict | None" = None
     ) -> None:
         """Pin to the CURRENT manifest generation (see
-        IndexSearcher._load_snapshot), or to ``manifest`` and its
-        ``postings`` file listing when given (a worker serving an
-        IndexSearcher's snapshot): table paths resolve through the
-        manifest's generation pointers once, the postings files are
-        listed once, deletes are read at the manifest's epoch, so a
-        concurrent maintenance publish never changes what this searcher
-        serves mid-query."""
+        IndexSearcher._load_snapshot), or to ``manifest`` and its file
+        ``listing`` when given (a worker serving an IndexSearcher's
+        snapshot): table paths resolve through the manifest's generation
+        pointers once, the postings, doclens and nested files are listed
+        once (bm25.snapshot_listing), deletes are read at the manifest's
+        epoch, so neither a maintenance publish nor an in-place append
+        changes what this searcher serves."""
         from ..layout import load_manifest, table_path
 
         self.manifest = manifest if manifest is not None else load_manifest(self.index_dir)
         self.n_docs = self.manifest["globals"]["n_docs"]
         self.avgdl = self.manifest["globals"]["avgdl"]
         self.n_term_buckets = self.manifest["params"]["n_term_buckets"]
-        postings_dir = table_path(self.index_dir, "postings", self.manifest)
+        self._listing = listing or snapshot_listing(self.index_dir, self.manifest)
         self._postings = ds.dataset(
-            postings_dir if postings is None else postings,
+            self._listed("postings"),
             format="parquet",
             partitioning="hive",
-            partition_base_dir=postings_dir,
+            partition_base_dir=table_path(self.index_dir, "postings", self.manifest),
         )
         self._termdict = ds.dataset(
             table_path(self.index_dir, "termdict", self.manifest),
@@ -451,60 +456,6 @@ class LocalSearcher(TermdictFrontEnd):
             plan_fielded(self, terms, fields, k, mode, tie_breaker)
         )
 
-    def search_facets(
-        self,
-        query: list[str] | str,
-        fields: list[str],
-        mode: str = "OR",
-    ) -> list[tuple[str, str, int]]:
-        """ES ``terms`` aggregation, serving-path twin of
-        IndexSearcher.search_facets: [(field, value, doc_count)] sorted
-        by (field, count desc, value), counting ALL matching live docs.
-        Same semantics, no Spark jobs."""
-        from ..functions import boolquery as bq
-
-        ast, qterms = self.parse_query(query, mode)
-        bq.reject_filter_atoms(ast, "search_facets")
-        if not qterms:
-            return []
-        field_of = {t: f for f, ts in self.facet_terms(fields).items() for t in ts}
-        tbl = self._term_rows(
-            sorted(set(qterms) | set(field_of)), ["term", "segment", "blob"]
-        )
-        seg_arr = np.asarray(tbl["segment"].to_pylist())
-        counts: dict[tuple[str, str], int] = {}
-        qset = set(qterms)
-        for seg in np.unique(seg_arr):
-            idxs = np.flatnonzero(seg_arr == seg)
-            qdocs: dict[str, np.ndarray] = {}
-            facet_rows: list[tuple[str, int]] = []
-            for i in idxs:
-                t = tbl["term"][int(i)].as_py()
-                if t in qset:
-                    d, _tf, _dl = self._decode_cached(
-                        t, int(seg), tbl["blob"][int(i)]
-                    )
-                    qdocs[t] = d
-                if t in field_of:
-                    facet_rows.append((t, int(i)))
-            matches = _match_docs(qdocs, qterms, mode.upper(), ast)
-            dead = self._deletes.get(int(seg))
-            if dead is not None and dead.size and matches.size:
-                matches = matches[~np.isin(matches, dead, assume_unique=True)]
-            if not matches.size:
-                continue
-            for t, i in facet_rows:
-                fd, _tf, _dl = self._decode_cached(t, int(seg), tbl["blob"][i])
-                n = int(np.isin(fd, matches, assume_unique=True).sum())
-                if n:
-                    f = field_of[t]
-                    key = (f, t[len(f"__{f}_") : -2])
-                    counts[key] = counts.get(key, 0) + n
-        return sorted(
-            ((f, v, c) for (f, v), c in counts.items()),
-            key=lambda x: (x[0], -x[2], x[1]),
-        )
-
     def search_page(
         self,
         terms: list[str],
@@ -556,68 +507,6 @@ class LocalSearcher(TermdictFrontEnd):
             self._cache_put(t, seg, decoded)
         return len(top)
 
-    def search_count(self, query: list[str] | str, mode: str = "OR") -> int:
-        """ES ``_count`` — serving twin of IndexSearcher.search_count."""
-        return int(len(self.matched_ids(query, mode)))
-
-    def _segment_match_dls(self, ast, qterms: list[str], mode: str):
-        """Per segment, (matching live doc ids, their doc lengths) for a
-        parsed query (parse_query) — the shared serving kernel behind
-        count/stats/histogram aggs.  Term postings only: a range, phrase
-        or nested atom raises QueryParseError."""
-        from ..functions import boolquery as bq
-
-        bq.reject_filter_atoms(ast, "this aggregation")
-        if not qterms:
-            return
-        rows = self._rows_for(qterms)
-        for seg in sorted({s for m in rows.values() for s in m}):
-            qdocs, decoded = {}, []
-            for t in qterms:
-                if seg in rows.get(t, {}):
-                    d, _tf, dl = self._decode_cached(t, seg, rows[t][seg].blob)
-                    qdocs[t] = d
-                    decoded.append((d, dl))
-            matches = _match_docs(qdocs, qterms, mode.upper(), ast)
-            dead = self._deletes.get(seg)
-            if dead is not None and dead.size and matches.size:
-                matches = matches[~np.isin(matches, dead, assume_unique=True)]
-            if matches.size:
-                yield matches, _match_dls(decoded, matches)
-
-    def search_stats(self, query, mode: str = "OR") -> dict:
-        """ES ``stats`` aggregation — serving twin of
-        IndexSearcher.search_stats: {n_hits, min_dl, max_dl, sum_dl,
-        avg_dl} over the matching live docs."""
-        n = s = 0
-        mn = mx = None
-        for _m, dls in self._segment_match_dls(*self.parse_query(query, mode), mode):
-            n += int(dls.size)
-            s += int(dls.sum())
-            mn = int(dls.min()) if mn is None else min(mn, int(dls.min()))
-            mx = int(dls.max()) if mx is None else max(mx, int(dls.max()))
-        return {
-            "n_hits": n,
-            "min_dl": mn,
-            "max_dl": mx,
-            "sum_dl": s,
-            "avg_dl": (s / n) if n else None,
-        }
-
-    def search_histogram(
-        self, query, interval: int, mode: str = "OR"
-    ) -> list[tuple[int, int]]:
-        """ES ``histogram`` aggregation — serving twin: [(bucket,
-        doc_count)] sorted by bucket."""
-        if interval <= 0:
-            raise ValueError("interval must be positive")
-        acc: dict[int, int] = {}
-        for _m, dls in self._segment_match_dls(*self.parse_query(query, mode), mode):
-            b, c = np.unique(dls // interval * interval, return_counts=True)
-            for bb, cc in zip(b.tolist(), c.tolist()):
-                acc[int(bb)] = acc.get(int(bb), 0) + int(cc)
-        return sorted(acc.items())
-
     # ---- doc-value queries: serving twins of the docvalues.py ops ----
 
     def _docvalues(self, field: str) -> tuple[np.ndarray, np.ndarray]:
@@ -630,7 +519,7 @@ class LocalSearcher(TermdictFrontEnd):
 
         from .docvalues import DocValueError
 
-        dset = _ds.dataset(self._doclens_path, format="parquet")
+        dset = _ds.dataset(self._listed("doclens"), format="parquet")
         if field not in dset.schema.names:
             raise DocValueError(
                 f"{field!r} is not a doc-value field of this index "
@@ -668,57 +557,169 @@ class LocalSearcher(TermdictFrontEnd):
 
     def matched_ids(self, query=None, mode: str = "OR") -> np.ndarray:
         """Sorted live doc ids matching the query; None = match_all.
-        BOOL queries may contain doc-value range atoms (incl.
+        BOOL queries may contain range, phrase and nested atoms (incl.
         pure-range queries — bounded filters of match_all)."""
-        if query is None:
-            ids, _ = self._docvalues("doc_len")
-            dead_all = [d for d in self._deletes.values() if d is not None and d.size]
-            if dead_all:
-                dead = np.unique(np.concatenate(dead_all))
-                ids = ids[~np.isin(ids, dead, assume_unique=True)]
-            return ids
-        from ..functions import boolquery as bq
+        return self._ids_partial(self._match_spec(query, mode))
 
-        ast, qterms = self.parse_query(query, mode)
-        if bq.filter_atoms(ast):
-            return self._matched_ids_ranges(ast)
-        parts = [m for m, _dls in self._segment_match_dls(ast, qterms, mode)]
-        if not parts:
-            return np.array([], np.int64)
-        return np.concatenate(parts)  # segments hold disjoint id ranges
+    # ---- partial kernels: each reads only the segments of ``part=(i,
+    # n)`` (seg % n == i) and returns a small partial its module-level
+    # reducer merges — over part (0, 1) for this searcher's own queries
+    # (_gather), over the n parts of IndexSearcher's tasks for the
+    # distributed ones (run_partition) ----
 
-    def _matched_ids_ranges(self, ast) -> np.ndarray:
-        """matched_ids for a BOOL AST with doc-value range atoms:
-        allowed ids resolve once from the cached doc values, sliced
-        per segment and injected into the shared match kernel."""
-        from ..functions import boolquery as bq
+    def _gather(self, method: str, *args) -> list:
+        """The one partial of ``method`` over every segment."""
+        return [getattr(self, method)(*args)]
 
-        qterms = bq.all_terms(ast)
-        range_sets = self._atom_sets(ast)
+    def _segments_of(self, ids: np.ndarray) -> np.ndarray:
+        g, p = self.manifest["globals"], self.manifest["params"]
+        return (ids // int(g["docs_per_part"])) // int(p["seg_group"])
+
+    def _segment_matches(self, spec, part: tuple[int, int] = (0, 1)):
+        """Per segment of ``part``, ascending: (segment, its live doc ids
+        matching ``spec``, [(docs, dls)] of the query terms it holds) —
+        the one match-set kernel behind every partial below.  ``spec``
+        is TermdictFrontEnd._match_spec's (ast, terms, mode); range,
+        phrase and nested atoms resolve through _atom_sets."""
+        ast, qterms, mode = spec
+        atoms = self._atom_sets(ast, part) or {}
         rows = self._rows_for(qterms) if qterms else {}
-        seg_list = {s for m in rows.values() for s in m}
-        for _ids, segs in range_sets.values():
-            seg_list |= set(np.unique(segs).tolist())
-        out = []
-        for seg in sorted(seg_list):
-            qdocs = {}
+        segs = {s for m in rows.values() for s in m}
+        for _ids, s_of in atoms.values():
+            segs.update(np.unique(s_of).tolist())
+        i, n = part
+        for seg in sorted(s for s in segs if s % n == i):
+            qdocs, decoded = {}, []
             for t in qterms:
-                if seg in rows.get(t, {}):
-                    d, _tf, _dl = self._decode_cached(
-                        t, seg, rows[t][seg].blob
-                    )
+                r = rows[t].get(seg)
+                if r is not None:
+                    d, _tf, dl = self._decode_cached(t, seg, r.blob)
                     qdocs[t] = d
-            for rk, (ids, segs) in range_sets.items():
-                qdocs[rk] = ids[segs == seg]
-            matches = _match_docs(qdocs, qterms, "BOOL", ast)
-            dead = self._deletes.get(int(seg))
+                    decoded.append((d, dl))
+            for rk, (ids, s_of) in atoms.items():
+                qdocs[rk] = ids[s_of == seg]
+            matches = _match_docs(qdocs, qterms, mode, ast)
+            dead = self._deletes.get(seg)
             if dead is not None and dead.size and matches.size:
                 matches = matches[~np.isin(matches, dead, assume_unique=True)]
             if matches.size:
-                out.append(matches)
-        if not out:
-            return np.array([], np.int64)
-        return np.concatenate(out)
+                yield seg, matches, decoded
+
+    def _ids_partial(self, spec, part: tuple[int, int] = (0, 1)) -> np.ndarray:
+        """Ascending live doc ids of ``part`` matching ``spec`` (None:
+        every live doc) — matched_ids' partial; segments hold disjoint,
+        ascending id ranges, so the reducer is a concatenation."""
+        if spec is None:
+            ids, _ = self._docvalues("doc_len")
+            ids = ids[self._segments_of(ids) % part[1] == part[0]]
+            dead_all = [d for d in self._deletes.values() if d is not None and d.size]
+            if dead_all:
+                ids = ids[~np.isin(ids, np.concatenate(dead_all))]
+            return ids
+        parts = [m for _seg, m, _dec in self._segment_matches(spec, part)]
+        return np.concatenate(parts) if parts else np.array([], np.int64)
+
+    def _count_partial(self, specs: dict, part: tuple[int, int] = (0, 1)) -> dict:
+        """{name: live match count in ``part``} of named specs (search_count, search_filters)."""
+        return {name: int(self._ids_partial(spec, part).size) for name, spec in specs.items()}
+
+    def _adjacency_partial(self, compiled: list, part: tuple[int, int] = (0, 1)) -> dict:
+        """{key: count} in ``part`` of each named filter
+        (bm25.adjacency_filters) and of every non-empty pairwise
+        intersection, keyed ``a&b`` (names sorted)."""
+        from itertools import combinations
+
+        sets = {name: self._ids_partial((ast, ts, "BOOL"), part) for name, ast, ts in compiled}
+        out = {name: int(ids.size) for name, ids in sets.items()}
+        for a, b in combinations(sorted(sets), 2):
+            n = np.intersect1d(sets[a], sets[b], assume_unique=True).size
+            if n:
+                out[f"{a}&{b}"] = int(n)
+        return out
+
+    def _matched_dls(self, spec, part: tuple[int, int]) -> np.ndarray:
+        """Doc lengths of ``part``'s matches, from the dl streams of the
+        query terms' postings (no doclens read)."""
+        dls = [_match_dls(dec, m) for _seg, m, dec in self._segment_matches(spec, part)]
+        return np.concatenate(dls) if dls else np.array([], np.int64)
+
+    def _stats_partial(self, spec, part: tuple[int, int] = (0, 1)) -> tuple:
+        """(n, sum, min, max) of ``part``'s match doc lengths."""
+        dls = self._matched_dls(spec, part)
+        if not dls.size:
+            return 0, 0, None, None
+        return int(dls.size), int(dls.sum()), int(dls.min()), int(dls.max())
+
+    def _histogram_partial(self, spec, interval: int, part: tuple[int, int] = (0, 1)) -> dict:
+        """{bucket: count} of ``part``'s match doc lengths."""
+        b, c = np.unique(self._matched_dls(spec, part) // interval * interval, return_counts=True)
+        return dict(zip(b.tolist(), c.tolist()))
+
+    def _facet_partial(self, spec, field_of: dict, part: tuple[int, int] = (0, 1)) -> dict:
+        """{(field, value): count} of the facet tokens ``field_of`` (token
+        → field) among ``part``'s matches."""
+        rows = self._rows_for(sorted(field_of))
+        counts: dict = {}
+        for seg, matches, _dec in self._segment_matches(spec, part):
+            for t, f in field_of.items():
+                r = rows[t].get(seg)
+                if r is None:
+                    continue
+                fd = self._decode_cached(t, seg, r.blob)[0]
+                n = int(np.isin(fd, matches, assume_unique=True).sum())
+                if n:
+                    key = (f, t[len(f"__{f}_") : -2])
+                    counts[key] = counts.get(key, 0) + n
+        return counts
+
+    def _score_partial(self, plans: list[QueryPlan], part: tuple[int, int] = (0, 1)):
+        """Each plan's top-k over ``part`` — rows (doc_id, score), with
+        query_id first for batch plans — and the segments skipped by
+        bound: IndexSearcher._scatter's task."""
+        rows: list[tuple] = []
+        skipped = 0
+        for q in plans:
+            hits = self._search_pruned(q, self._atom_sets(q.ast, part), part)
+            skipped += self.last_segments_skipped
+            tag = () if q.query_id is None else (q.query_id,)
+            rows += [(*tag, d, sc) for d, sc in hits]
+        return rows, skipped
+
+    def _pseudo_rows(self, spec: tuple, part: tuple[int, int]):
+        """(docs, tfs, dls) of every live match in ``part`` of a
+        pseudo-term spec: ("phrase", tokens, slop, prefix expansions or
+        None) — a phrase chain — or ("span_first", term, end)."""
+        kind, *args = spec
+        if kind == "span_first":
+            return self._span_first_rows(*args, part=part)
+        return self._phrase_match_rows(*args, part=part)
+
+    def _pseudo_partial(self, specs: list, ks: list, part: tuple[int, int] = (0, 1)) -> list:
+        """Per spec, its bm25.pseudo_candidates in ``part``: the match
+        count and the top-k docs by their tf/dl factor w, ties kept."""
+        out = []
+        for spec, k in zip(specs, ks):
+            docs, tfs, dls = self._pseudo_rows(spec, part)
+            out.append(pseudo_candidates(docs, bm25_tf_weight(tfs, dls, self.avgdl), k))
+        return out
+
+    def _many_partial(
+        self, plans: list[QueryPlan], specs: list, ks: list, part: tuple[int, int] = (0, 1)
+    ) -> tuple:
+        """search_many in ``part``: the plans' (query_id, doc_id, score)
+        rows and the phrase specs' pseudo-term candidates."""
+        return self._score_partial(plans, part)[0], self._pseudo_partial(specs, ks, part)
+
+    def _rescore_partial(
+        self, q: QueryPlan, phrase: list[str], slop: int, part: tuple[int, int] = (0, 1)
+    ) -> tuple:
+        """search_rescore in ``part``: the base plan's top window rows,
+        the phrase's match count, and the window docs it matches with
+        their factor w."""
+        base = self._search_pruned(q, part=part)
+        docs, tfs, dls = self._phrase_match_rows(phrase, slop, part=part)
+        win = np.isin(docs, np.array([d for d, _s in base], np.int64))
+        return base, int(docs.size), docs[win], bm25_tf_weight(tfs[win], dls[win], self.avgdl)
 
     def _dv_lookup(
         self, field: str, ids: np.ndarray, allow_array: bool = False
@@ -1751,32 +1752,6 @@ class LocalSearcher(TermdictFrontEnd):
                 out.append((bv, int(in_b.sum()), None, None, None, None))
         return out
 
-    def search_filters(
-        self, filters: "dict[str, str]"
-    ) -> list[tuple[str, int]]:
-        """ES ``filters`` aggregation — named boolean filters, each
-        with its live match count; [(name, doc_count)] in name order
-        (serving twin of IndexSearcher.search_filters)."""
-        self._reject_pure_negation(filters)
-        return [
-            (name, int(len(self.matched_ids(q, "BOOL"))))
-            for name, q in sorted(filters.items())
-        ]
-
-    def _reject_pure_negation(self, filters: "dict[str, str]") -> None:
-        """Counting aggregations must fail loud on a pure-negation
-        filter ('NOT lang:en'): its match set is a complement, which
-        the shared match kernel maps to 0 — plausible but wrong
-        (ADVICE r5).  Same check as IndexSearcher.search_filters."""
-        from ..functions import boolquery as bq
-
-        for name, q in filters.items():
-            if bq.is_pure_negation(self.parse_query(q, "BOOL", expand=False)[0]):
-                raise bq.QueryParseError(
-                    f"filter {name!r} is pure negation (unbounded match "
-                    "set) — rewrite as '<positive> AND NOT ...'"
-                )
-
     def significant_text(
         self,
         texts: "dict[int, str]",
@@ -1816,29 +1791,6 @@ class LocalSearcher(TermdictFrontEnd):
         ]
         out.sort(key=lambda r: (-r[3], r[0]))
         return out[: int(size)]
-
-    def search_adjacency(self, filters: "dict[str, str]") -> list[tuple]:
-        """adjacency_matrix — serving twin of
-        IndexSearcher.search_adjacency: [(key, doc_count)] sorted, keys
-        ``a`` and ``a&b`` (names sorted), empty pairs omitted; the same
-        filters are rejected (adjacency_filters)."""
-        from itertools import combinations
-
-        from .bm25 import adjacency_filters
-
-        sets = {
-            name: {
-                d for m, _dls in self._segment_match_dls(ast, terms, "BOOL")
-                for d in m.tolist()
-            }
-            for name, ast, terms in adjacency_filters(self, filters)
-        }
-        out = [(n, len(ids)) for n, ids in sets.items()]
-        for a, b in combinations(sorted(sets), 2):
-            inter = sets[a] & sets[b]
-            if inter:
-                out.append((f"{a}&{b}", len(inter)))
-        return sorted(out)
 
     def termvectors(
         self, text: str, with_df: bool = True
@@ -2019,22 +1971,6 @@ class LocalSearcher(TermdictFrontEnd):
                 out[int(mid)] = (snippet, n)
         return out
 
-    def search_many(self, specs: list[dict]) -> dict[str, list[tuple[int, float]]]:
-        """msearch analog: term ("OR"/"AND"), "BOOL" (query string) and
-        "PHRASE" specs — same spec shape and planner as
-        IndexSearcher.search_many; the searcher's caches amortize shared
-        terms across the batch."""
-        out: dict[str, list[tuple[int, float]]] = {}
-        for s in specs:
-            if s.get("mode", "OR").upper() == "PHRASE":
-                out[s["query_id"]] = self.search_phrase(
-                    list(s["phrase"]), int(s.get("k", 10))
-                )
-                continue
-            q = plan_spec(self, s)
-            out[q.query_id] = self._search_pruned(q, self._atom_sets(q.ast))
-        return out
-
     def search_bool(
         self, query: str, k: int = 10, synonyms: "dict | None" = None
     ) -> list[tuple[int, float]]:
@@ -2061,8 +1997,6 @@ class LocalSearcher(TermdictFrontEnd):
         from . import nested as nst
         from .docvalues import range_mask
 
-        g, p = self.manifest["globals"], self.manifest["params"]
-        dpp, seg_group = int(g["docs_per_part"]), int(p["seg_group"])
         sets: dict[str, np.ndarray] = {}
         for rt in bq.range_atoms(ast):
             all_ids, vals = self._docvalues(rt.field)
@@ -2077,7 +2011,7 @@ class LocalSearcher(TermdictFrontEnd):
         i, n = part
         out = {}
         for rk, ids in sets.items():
-            segs = (ids // dpp) // seg_group
+            segs = self._segments_of(ids)
             keep = segs % n == i
             out[rk] = (ids[keep], segs[keep])
         return out
@@ -2089,39 +2023,29 @@ class LocalSearcher(TermdictFrontEnd):
         expansions: "list[str] | None" = None,
         part: tuple[int, int] = (0, 1),
     ):
-        """(docs, tfs, dls) arrays of every live phrase-chain match —
-        the shared front half of search_phrase, search_phrase_prefix
-        and search_rescore.  With ``expansions``, the final phrase slot
-        accepts any of the expanded terms (the match_phrase_prefix
-        shape — same synthetic merged posting as the distributed twin).
-        ``part`` restricts it to a scatter task's segments."""
-        import numpy as np
-
+        """(docs, tfs, dls) arrays of every live phrase-chain match in
+        ``part`` — the match kernel of phrase and phrase_prefix queries,
+        rescore and quoted-phrase atoms.  With ``expansions``, the final
+        phrase slot accepts any of the expanded terms (the
+        match_phrase_prefix shape: one synthetic merged posting)."""
         from .bm25 import _PFX_SLOT, _merge_posting_variants
 
-        if not self.manifest["params"].get("with_positions", True):
-            raise ValueError(
-                "phrase queries need positional postings, but this index was "
-                "built with with_positions=False — rebuild with positions"
-            )
+        self._require_positions()
         exp = sorted(set(expansions)) if expansions is not None else None
         terms_sorted = sorted(set(phrase) | set(exp or ()))
         phrase_t = list(phrase) + ([_PFX_SLOT] if exp is not None else [])
-        tbl = self._term_rows(
-            terms_sorted, ["term", "segment", "blob", "pos_blob"]
-        )
+        tbl = self._term_rows(terms_sorted, ["term", "segment", "blob", "pos_blob"])
         seg_arr = np.asarray(tbl["segment"].to_pylist())
-        all_docs, all_tf, all_dl = [], [], []
+        out = []
         i_part, n_part = part
         for seg in np.unique(seg_arr):
             if seg % n_part != i_part:
                 continue
-            idxs = np.flatnonzero(seg_arr == seg)
             post = {}
-            for i in idxs:
-                t = tbl["term"][int(i)].as_py()
-                d, tf, dl = self._decode_cached(t, int(seg), tbl["blob"][int(i)])
-                pos, offs = self._pos_cached(t, int(seg), tbl["pos_blob"][int(i)], tf)
+            for i in np.flatnonzero(seg_arr == seg).tolist():
+                t = tbl["term"][i].as_py()
+                d, tf, dl = self._decode_cached(t, int(seg), tbl["blob"][i])
+                pos, offs = self._pos_cached(t, int(seg), tbl["pos_blob"][i], tf)
                 _put_unique(post, t, (d, dl, pos, offs))
             if exp is not None:
                 present = [post[v] for v in exp if v in post]
@@ -2130,8 +2054,6 @@ class LocalSearcher(TermdictFrontEnd):
                 post[_PFX_SLOT] = _merge_posting_variants(present)
             if not all(t in post for t in phrase_t):
                 continue
-            from functools import reduce
-
             common = reduce(
                 lambda a, b: np.intersect1d(a, b, assume_unique=True),
                 (post[t][0] for t in dict.fromkeys(phrase_t)),
@@ -2140,214 +2062,72 @@ class LocalSearcher(TermdictFrontEnd):
             if dead is not None and dead.size:
                 common = common[~np.isin(common, dead, assume_unique=True)]
             d0, dl0, _, _ = post[phrase_t[0]]
-            dl_idx = np.searchsorted(d0, common)
             tfs = _phrase_match_counts(post, phrase_t, common, int(slop))
             hit = tfs > 0
-            all_docs.extend(common[hit].tolist())
-            all_tf.extend(tfs[hit].tolist())
-            all_dl.extend(dl0[dl_idx[hit]].tolist())
-        return (
-            np.asarray(all_docs, dtype=np.int64),
-            np.asarray(all_tf, dtype=np.int64),
-            np.asarray(all_dl, dtype=np.int64),
-        )
+            out.append((common[hit], tfs[hit], dl0[np.searchsorted(d0, common[hit])]))
+        return _concat_rows(out)
 
-    def search_phrase(
-        self, phrase: list[str], k: int = 10, slop: int = 0
-    ) -> list[tuple[int, float]]:
-        """Phrase BM25 top-k (exact adjacency, or in-order slop
-        window) — same semantics/floats as IndexSearcher.search_phrase
-        (tested bit-identical)."""
-        from .index_build import BM25_B, BM25_K1
-
-        docs, all_tf, all_dl = self._phrase_match_rows(phrase, slop)
-        if not docs.size:
-            return []
-        idf = bm25_idf(self.n_docs, len(docs))
-        tf = all_tf.astype(np.float64)
-        dl = all_dl.astype(np.float64)
-        w = ((BM25_K1 + 1.0) * tf) / (
-            tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / self.avgdl)
-        )
-        scores = idf * w
-        d, s = _topk(docs, scores, k)
-        return list(zip(d.tolist(), s.tolist()))
-
-    def search_span_first(
-        self, term: str, end: int, k: int = 10
-    ) -> list[tuple[int, float]]:
-        """ES span_first — serving twin of
-        IndexSearcher.search_span_first, bit-identical (same qualifying
-        count, same pseudo-term scoring)."""
-        from .index_build import BM25_B, BM25_K1
-
-        if int(end) <= 0:
-            raise ValueError("span_first end must be a positive int")
-        if not self.manifest["params"].get("with_positions", True):
-            raise ValueError(
-                "span_first needs positional postings, but this index was "
-                "built with with_positions=False — rebuild with positions"
-            )
-        end_i = int(end)
-        tbl = self._term_rows([term], ["term", "segment", "blob", "pos_blob"])
-        all_docs, all_tf, all_dl = [], [], []
-        for i in range(tbl.num_rows):
-            seg = int(tbl["segment"][i].as_py())
+    def _span_first_rows(self, term: str, end: int, part: tuple[int, int] = (0, 1)):
+        """(docs, tfs, dls) of the live docs in ``part`` holding ``term``
+        before position ``end``, tf = the count of such positions."""
+        tbl = self._term_rows([term], ["segment", "blob", "pos_blob"])
+        out = []
+        for i, seg in enumerate(tbl["segment"].to_pylist()):
+            if seg % part[1] != part[0]:
+                continue
             d, tf, dl = self._decode_cached(term, seg, tbl["blob"][i])
             if not d.size:
                 continue
             pos, offs = self._pos_cached(term, seg, tbl["pos_blob"][i], tf)
-            counts = np.add.reduceat(
-                (pos < end_i).astype(np.int64), offs[:-1]
-            )
+            # positions ascend within each doc's slice and every posted
+            # doc has >= 1 position, so reduceat counts per slice
+            counts = np.add.reduceat((pos < end).astype(np.int64), offs[:-1])
             hit = counts > 0
-            docs, tfs, dls = d[hit], counts[hit], dl[hit]
             dead = self._deletes.get(seg)
-            if dead is not None and dead.size and docs.size:
-                keep = ~np.isin(docs, dead, assume_unique=True)
-                docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-            all_docs.extend(docs.tolist())
-            all_tf.extend(tfs.tolist())
-            all_dl.extend(dls.tolist())
-        if not all_docs:
-            return []
-        docs = np.asarray(all_docs, np.int64)
-        tf = np.asarray(all_tf, np.float64)
-        dl = np.asarray(all_dl, np.float64)
-        idf = bm25_idf(self.n_docs, len(docs))
-        w = ((BM25_K1 + 1.0) * tf) / (
-            tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / self.avgdl)
-        )
-        d_out, s_out = _topk(docs, idf * w, k)
-        return list(zip(d_out.tolist(), s_out.tolist()))
+            if dead is not None and dead.size:
+                hit &= ~np.isin(d, dead, assume_unique=True)
+            out.append((d[hit], counts[hit], dl[hit]))
+        return _concat_rows(out)
 
-    def search_phrase_prefix(
-        self,
-        phrase: list[str],
-        k: int = 10,
-        slop: int = 0,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-    ) -> list[tuple[int, float]]:
-        """ES ``match_phrase_prefix`` — serving twin of
-        IndexSearcher.search_phrase_prefix, bit-identical: same prefix
-        expansion, same merged pseudo-term posting, same one-pseudo-term
-        scoring."""
-        from .index_build import BM25_B, BM25_K1
 
-        if not phrase:
-            raise ValueError("match_phrase_prefix needs at least one token")
-        lead, prefix = list(phrase[:-1]), str(phrase[-1])
-        expansions = self.expand_prefix(prefix, max_expansions)
-        if not expansions:
-            return []
-        docs, all_tf, all_dl = self._phrase_match_rows(
-            lead, slop, expansions=expansions
-        )
-        if not docs.size:
-            return []
-        idf = bm25_idf(self.n_docs, len(docs))
-        tf = all_tf.astype(np.float64)
-        dl = all_dl.astype(np.float64)
-        w = ((BM25_K1 + 1.0) * tf) / (
-            tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / self.avgdl)
-        )
-        d, s = _topk(docs, idf * w, k)
-        return list(zip(d.tolist(), s.tolist()))
-
-    def search_rescore(
-        self,
-        terms: list[str],
-        rescore_phrase: list[str],
-        k: int = 10,
-        window_size: int = 50,
-        query_weight: float = 1.0,
-        rescore_weight: float = 1.0,
-        mode: str = "OR",
-        slop: int = 0,
-    ) -> list[tuple[int, float]]:
-        """ES rescore (score_mode: total) — serving twin of
-        IndexSearcher.search_rescore, bit-identical: same window, same
-        global phrase df, same per-doc float64 combination."""
-        from .index_build import BM25_B, BM25_K1
-
-        if window_size < k:
-            raise ValueError("window_size must be >= k")
-        base = self.search(terms, mode=mode, k=window_size)
-        if not base:
-            return []
-        docs, all_tf, all_dl = self._phrase_match_rows(rescore_phrase, slop)
-        ph_score: dict[int, float] = {}
-        if docs.size:
-            idf = bm25_idf(self.n_docs, len(docs))
-            win = {d for d, _s in base}
-            for d, tf_i, dl_i in zip(
-                docs.tolist(), all_tf.tolist(), all_dl.tolist()
-            ):
-                if d not in win:
-                    continue
-                tf, dl = float(tf_i), float(dl_i)
-                w = ((BM25_K1 + 1.0) * tf) / (
-                    tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl / self.avgdl)
-                )
-                ph_score[d] = idf * w
-        qw, rw = float(query_weight), float(rescore_weight)
-        return sorted(
-            ((d, qw * s + rw * ph_score.get(d, 0.0)) for d, s in base),
-            key=lambda t: (-t[1], t[0]),
-        )[: int(k)]
+def _concat_rows(parts: list[tuple]) -> tuple:
+    """Concatenate per-segment (docs, tfs, dls) triples as int64."""
+    if not parts:
+        return tuple(np.array([], np.int64) for _ in range(3))
+    return tuple(np.concatenate(c).astype(np.int64, copy=False) for c in zip(*parts))
 
 
 # (pin, searcher): the LocalSearcher this Python worker keeps between
-# tasks of IndexSearcher._scatter.  One snapshot per worker, whatever
+# tasks of IndexSearcher._tasks.  One snapshot per worker, whatever
 # index dirs its tasks serve, so a worker's memory stays within one
 # searcher's byte caps; a task for another index dir or generation
-# replaces it.  Tasks reach it through the module-level score_partition,
+# replaces it.  Tasks reach it through the module-level run_partition,
 # by reference; a cache captured in a task closure would be pickled with
 # it and start empty every task.
 _PINNED: "tuple[tuple, LocalSearcher] | None" = None
 
 
-def pinned_searcher(index_dir: str, manifest: dict, listing: tuple) -> LocalSearcher:
+def pinned_searcher(index_dir: str, manifest: dict, listing: dict) -> LocalSearcher:
     """This process's searcher over ``index_dir``, pinned to
-    ``manifest`` and ``listing`` (its postings files, relative to the
-    postings dir): the kept one while all three are the same, else a
-    new one that replaces it."""
+    ``manifest`` and ``listing`` (bm25.snapshot_listing): the kept one
+    while all three are the same, else a new one that replaces it."""
     global _PINNED
     pin = (index_dir, manifest, listing)
     if _PINNED is not None and _PINNED[0] == pin:
         return _PINNED[1]
-    from ..layout import table_path
-
     _PINNED = None  # the old snapshot goes before the new one loads
-    postings_dir = table_path(index_dir, "postings", manifest)
     s = LocalSearcher.__new__(LocalSearcher)
     s.index_dir = index_dir
-    s._load_snapshot(manifest, [os.path.join(postings_dir, f) for f in listing])
+    s._load_snapshot(manifest, listing)
     _PINNED = (pin, s)
     return s
 
 
-def score_partition(
-    index_dir: str,
-    manifest: dict,
-    listing: tuple,
-    plans: list[QueryPlan],
-    n: int,
-    i: int,
-) -> tuple[list[tuple], int]:
-    """Task ``i`` of ``n`` of a distributed scoring query: each plan's
-    top-k over the segments with seg % n == i, from the worker's pinned
-    searcher (its row cache is keyed by part, because tasks are not
-    sticky to workers).  Returns the rows — (doc_id, score), with
-    query_id first for batch plans — and the segments skipped by
-    bound."""
-    s = pinned_searcher(index_dir, manifest, listing)
-    rows: list[tuple] = []
-    skipped = 0
-    part = (i, n)
-    for q in plans:
-        hits = s._search_pruned(q, s._atom_sets(q.ast, part), part)
-        skipped += s.last_segments_skipped
-        tag = () if q.query_id is None else (q.query_id,)
-        rows += [(*tag, d, sc) for d, sc in hits]
-    return rows, skipped
+def run_partition(
+    index_dir: str, manifest: dict, listing: dict, method: str, args: tuple, n: int, i: int
+):
+    """Task ``i`` of ``n`` of a distributed query: partial kernel
+    ``method`` over the segments with seg % n == i, on the worker's
+    pinned searcher (its caches are not keyed by part: tasks are not
+    sticky to workers)."""
+    return getattr(pinned_searcher(index_dir, manifest, listing), method)(*args, part=(i, n))

@@ -1697,7 +1697,6 @@ def _delete_by_query_locked(
     upsert's replacements.  ``query=None`` is rejected — wiping an
     index must be an explicit rebuild, not a match_all delete."""
     from ..functions.tokenize import token_count_col
-    from ..operators import docvalues as dv
     from ..operators.bm25 import IndexSearcher
 
     if query is None:
@@ -1713,7 +1712,7 @@ def _delete_by_query_locked(
     seg_group = int(params["seg_group"])
     text_fields = tuple(params.get("text_fields") or ())
     searcher = IndexSearcher(spark, index_dir)
-    matched = dv.matched_ids(searcher, query, mode)  # live ids only
+    matched = searcher.matched_ids(query, mode)  # live ids only
     doclens_path = layout.table_path(index_dir, "doclens", manifest)
     deletes_path = layout.table_path(index_dir, "deletes", manifest)
     dl = spark.read.parquet(doclens_path)
@@ -1835,7 +1834,6 @@ def update_by_query(
     driver-side id lists).  Like ES with ``conflicts=proceed``, a doc
     re-crawled between resolution and rewrite is retagged under its
     url — url is the stable document identity here."""
-    from ..operators import docvalues as dv
     from ..operators.bm25 import IndexSearcher
 
     if query is None:
@@ -1846,7 +1844,7 @@ def update_by_query(
     searcher = IndexSearcher(spark, index_dir)
     doclens = spark.read.parquet(searcher._doclens_path)
     updates = (
-        dv.matched_ids(searcher, query, mode)
+        searcher.matched_ids(query, mode)
         .join(doclens.select("doc_id", "url"), "doc_id")
         .select("url", F.lit(new_value).alias("new_value"))
     )

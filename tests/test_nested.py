@@ -342,21 +342,22 @@ class TestNestedTermsAgg:
 
 
 class TestPlan:
-    def test_nested_pushdown_reaches_scan(self, spark, nested_index):
-        """100×-scale posture: a nested-atom resolution must be a
-        PRUNED scan — field= partition filter plus (leaf, value)
-        pushed data filters on the sidecar parquet, so row-group
-        min/max stats skip everything but the matching range."""
+    def test_nested_pushdown_reaches_scan(self, nested_index):
+        """100×-scale posture: a nested-atom resolution (the bool atom
+        path every searcher task runs) must be a PRUNED scan — the
+        field= partition filter selects only that field's sidecar files,
+        and the (leaf, value) predicates go with the scan to the parquet
+        reader, whose row-group min/max stats skip the rest."""
         from hail_elasticsearch_pipelines_spark.operators import nested as nst
 
         out, _ = nested_index
-        s = IndexSearcher(spark, out)
-        df = nst.atom_match_df(s, bq.NestedTerm("links.anchor", "a1"))
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
-        assert "field" in plan.split("PartitionFilters", 1)[1][:200]
-        pushed = plan.split("PushedFilters", 1)[1][:300]
-        assert "leaf" in pushed and "value" in pushed, pushed
+        dset = nst.nested_dataset(LocalSearcher(out))
+        flt = nst.atom_filter("links", "anchor", "a1")
+        frags = list(dset.get_fragments(filter=flt))
+        assert frags and all("field=links" in f.path for f in frags)
+        assert not list(dset.get_fragments(filter=nst.atom_filter("nosuch", "anchor", "a1")))
+        assert '(leaf == "anchor")' in str(flt) and '(value == "a1")' in str(flt), flt
+        assert dset.to_table(filter=flt).num_rows > 0
 
 
 class TestMaintenance:

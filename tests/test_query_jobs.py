@@ -1,7 +1,9 @@
 """Distributed query plan shape: Spark jobs per call, and the driver-side
 termdict reads those counts rest on (global df, term expansion and facet
 vocabulary come from the searcher's pinned termdict, never from a Spark
-scan).  Scoring calls are one plan-only scatter job (IndexSearcher._scatter)."""
+scan).  Every query is one plan-only job of worker tasks
+(IndexSearcher._tasks): lazy for scoring calls and matched_ids, run at
+call time and reduced on the driver for the others."""
 
 from __future__ import annotations
 
@@ -49,7 +51,7 @@ def _jobs(spark, group, fn):
                     {"query_id": "b", "mode": "BOOL", "query": "the AND of", "k": 5},
                 ]
             ).collect(),
-            3,
+            1,
         ),
         ("range", lambda s: s.search_range(["the"], "doc_len", 50, 500, k=7).collect(), 4),
         ("page", lambda s: s.search_page(["the", "of"], "OR", 5, after=(1.0, 3)).collect(), 2),
@@ -78,7 +80,7 @@ def _jobs(spark, group, fn):
         ("regexp", lambda s: s.search_regexp("term004.", k=10).collect(), 2),
         ("bool_wildcard", lambda s: s.search_bool("the AND term004*", k=10).collect(), 2),
         ("suggest", lambda s: s.suggest_terms("term00", size=5).collect(), 1),
-        ("facets", lambda s: s.search_facets(["the", "of"], ["lang"]).collect(), 5),
+        ("facets", lambda s: s.search_facets(["the", "of"], ["lang"]).collect(), 1),
     ],
 )
 def test_jobs_per_call(spark, searcher, name, call, max_jobs):
@@ -87,7 +89,7 @@ def test_jobs_per_call(spark, searcher, name, call, max_jobs):
     assert n <= max_jobs, f"{name}: {n} Spark jobs > {max_jobs}"
 
 
-# Scoring calls: one scatter job (a batch adds its per-query rank job).
+# Scoring calls: one scatter job (a batch is one gather job).
 SCORING_CALLS = {
     "or": (lambda s: s.search(["the", "term0042"], "OR", 10).collect(), 1),
     "and": (lambda s: s.search(["the", "of"], "AND", 10).collect(), 1),
@@ -113,7 +115,7 @@ SCORING_CALLS = {
                 },
             ]
         ).collect(),
-        2,
+        1,
     ),
 }
 
@@ -123,6 +125,49 @@ def test_scoring_jobs_per_call(spark, searcher, name):
     call, max_jobs = SCORING_CALLS[name]
     call(searcher)
     n = _jobs(spark, f"scoring_{name}", lambda: call(searcher))
+    assert n <= max_jobs, f"{name}: {n} Spark jobs > {max_jobs}"
+
+
+RANGE = "the AND doc_len:[1 TO 300]"
+
+# Reduced calls: one gather job of worker tasks (IndexSearcher._gather),
+# reduced on the driver into a DataFrame over a local relation, whose
+# collect runs no job; matched_ids stays a lazy scatter of id rows, so
+# its count is the scatter plus the count's own aggregation.
+REDUCED_CALLS = {
+    "phrase": (lambda s: s.search_phrase(["of", "the"], k=10).collect(), 1),
+    "phrase_prefix": (lambda s: s.search_phrase_prefix(["the", "term004"], k=10).collect(), 1),
+    "span_first": (lambda s: s.search_span_first("the", 5, k=10).collect(), 1),
+    "rescore": (lambda s: s.search_rescore(["the"], ["of", "the"], 10, 40).collect(), 1),
+    "many_phrase": (
+        lambda s: s.search_many(
+            [
+                {"query_id": "a", "terms": ["the", "term0042"], "mode": "OR", "k": 5},
+                {"query_id": "b", "mode": "BOOL", "query": RANGE, "k": 5},
+                {"query_id": "p", "mode": "PHRASE", "phrase": ["of", "the"], "k": 5},
+            ]
+        ).collect(),
+        1,
+    ),
+    "count": (lambda s: s.search_count(["the", "of"], "OR").collect(), 1),
+    "count_range": (lambda s: s.search_count(RANGE, "BOOL").collect(), 1),
+    "stats": (lambda s: s.search_stats(["the", "of"], "OR").collect(), 1),
+    "histogram": (lambda s: s.search_histogram(["the", "of"], 32, "OR").collect(), 1),
+    "facets": (lambda s: s.search_facets(["the", "of"], ["lang"]).collect(), 1),
+    "filters": (lambda s: s.search_filters({"a": "the AND of", "r": RANGE}).collect(), 1),
+    "adjacency": (
+        lambda s: s.search_adjacency({"a": "the AND of", "b": "term0042"}).collect(),
+        1,
+    ),
+    "matched_ids_range": (lambda s: s.matched_ids(RANGE, "BOOL").count(), 2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(REDUCED_CALLS))
+def test_reduced_jobs_per_call(spark, searcher, name):
+    call, max_jobs = REDUCED_CALLS[name]
+    call(searcher)
+    n = _jobs(spark, f"reduced_{name}", lambda: call(searcher))
     assert n <= max_jobs, f"{name}: {n} Spark jobs > {max_jobs}"
 
 

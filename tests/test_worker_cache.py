@@ -1,6 +1,6 @@
 """Executor-resident searchers: each Python worker keeps one LocalSearcher
 between tasks (serve.pinned_searcher), pinned to the index dir, manifest
-and postings files the driver's IndexSearcher ships with every scatter."""
+and file listing the driver's IndexSearcher ships with every task."""
 
 from __future__ import annotations
 
@@ -57,7 +57,7 @@ def test_worker_searcher_survives_between_tasks(spark, small_index):
     cache outlives the task that built it."""
     index_dir, _ = small_index
     s = IndexSearcher(spark, index_dir)
-    manifest, listing = s.manifest, s._postings_listing
+    manifest, listing = s.manifest, s._listing
     sc = spark.sparkContext
 
     def probe(it):
@@ -90,7 +90,7 @@ def test_worker_keeps_one_searcher(spark, small_index, tmp_path):
         assert _pairs(sa.search(["the", "of"], "OR", 10)) == _pairs(
             sb.search(["the", "of"], "OR", 10)
         )
-    pins = [(s.index_dir, s.manifest, s._postings_listing) for s in (sa, sb)]
+    pins = [(s.index_dir, s.manifest, s._listing) for s in (sa, sb)]
     sc = spark.sparkContext
 
     def probe(it):
