@@ -36,7 +36,9 @@ def _jobs(spark, group, fn):
 
 
 # Upper bounds per call; test_scoring_jobs_per_call pins the scoring
-# calls at their scatter counts.
+# calls (search_many included) at their scatter counts and
+# test_reduced_jobs_per_call pins the reduced calls (search_facets
+# included) at their one gather job.
 @pytest.mark.parametrize(
     "name, call, max_jobs",
     [
@@ -51,7 +53,7 @@ def _jobs(spark, group, fn):
                     {"query_id": "b", "mode": "BOOL", "query": "the AND of", "k": 5},
                 ]
             ).collect(),
-            1,
+            3,
         ),
         ("range", lambda s: s.search_range(["the"], "doc_len", 50, 500, k=7).collect(), 4),
         ("page", lambda s: s.search_page(["the", "of"], "OR", 5, after=(1.0, 3)).collect(), 2),
@@ -80,7 +82,7 @@ def _jobs(spark, group, fn):
         ("regexp", lambda s: s.search_regexp("term004.", k=10).collect(), 2),
         ("bool_wildcard", lambda s: s.search_bool("the AND term004*", k=10).collect(), 2),
         ("suggest", lambda s: s.suggest_terms("term00", size=5).collect(), 1),
-        ("facets", lambda s: s.search_facets(["the", "of"], ["lang"]).collect(), 1),
+        ("facets", lambda s: s.search_facets(["the", "of"], ["lang"]).collect(), 5),
     ],
 )
 def test_jobs_per_call(spark, searcher, name, call, max_jobs):
