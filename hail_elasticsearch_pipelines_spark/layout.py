@@ -81,6 +81,21 @@ def save_manifest_atomic(index_dir: str, manifest: dict) -> None:
     os.replace(tmp, final)
 
 
+def rows_past_snapshot(index_dir: str, manifest: dict) -> bool:
+    """True when ``index_dir``'s table dirs may hold rows that
+    ``manifest``'s snapshot does not: an op is in flight (extend_index
+    writes its intent marker before its in-place appends and removes it
+    after saving its manifest) or a newer manifest is published.  Asked
+    after the files are listed, it cannot miss an append among them."""
+    stages = os.path.join(index_dir, "stages")
+    if os.path.isdir(stages) and any(e.startswith("_EXTEND_INTENT_") for e in os.listdir(stages)):
+        return True
+    try:
+        return load_manifest(index_dir) != manifest
+    except (OSError, ValueError):
+        return True
+
+
 def table_path(index_dir: str, name: str, manifest: dict | None = None) -> str:
     """Resolve a logical table to its CURRENT directory via the manifest
     generation pointer; plain name when unmapped or when no manifest

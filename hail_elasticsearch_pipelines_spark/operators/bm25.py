@@ -883,27 +883,58 @@ def termdict_dfs(
     return dict(zip(tbl["term"].to_pylist(), map(int, tbl["df"].to_pylist())))
 
 
-# the tables extend_index appends files to in place: a snapshot is its
-# manifest plus these tables' file names at load time
-LISTED_TABLES = ("postings", "doclens", "nested")
+def snapshot_bounds(manifest: dict) -> "tuple[int, int] | None":
+    """(doc id end, segment end) of the snapshot ``manifest`` publishes:
+    its doc ids are below the first, its postings segments below the
+    second.  extend_index appends the next batch's postings, nested and
+    doclens rows in place before it saves the manifest, but at ids from
+    the next segment boundary on, so a reader that keeps rows below
+    these bounds never sees them, however late it lists the files.
+    None for a manifest written before it recorded ``doc_id_end``: its
+    readers read every row on disk."""
+    g = manifest["globals"]
+    end = g.get("doc_id_end")
+    if end is None:
+        return None
+    per_segment = int(g["docs_per_part"]) * int(manifest["params"]["seg_group"])
+    return int(end), -(-int(end) // per_segment)
 
 
-def snapshot_listing(index_dir: str, manifest: dict) -> dict[str, tuple]:
-    """table → its parquet files (relative to the table dir) now; a
-    table without a dir lists none.  Searchers read only these files, so
-    rows appended after the snapshot stay invisible to it."""
+def _pin_bound(searcher, table: str) -> "tuple[str, int] | None":
+    """(column, exclusive bound) that pins ``table``'s listed files to
+    the searcher's snapshot; None when they can hold no rows past it
+    (layout.rows_past_snapshot, asked after the listing), so a
+    quiescent index is read, and its scans planned, unfiltered."""
+    from ..layout import rows_past_snapshot
+
+    bounds = snapshot_bounds(searcher.manifest)
+    if bounds is None or not rows_past_snapshot(searcher.index_dir, searcher.manifest):
+        return None
+    return ("segment", bounds[1]) if table == "postings" else ("doc_id", bounds[0])
+
+
+def pinned_dataset(searcher, table: str) -> ds.Dataset:
+    """``table``'s rows in ``searcher``'s snapshot as a pyarrow dataset
+    ("postings", "doclens" or "nested"; snapshot_bounds)."""
     from ..layout import table_path
 
-    out = {}
-    for name in LISTED_TABLES:
-        d = table_path(index_dir, name, manifest)
-        files = (
-            ds.dataset(d, format="parquet", partitioning="hive").files
-            if os.path.isdir(d)
-            else []
-        )
-        out[name] = tuple(os.path.relpath(f, d) for f in files)
-    return out
+    dset = ds.dataset(
+        table_path(searcher.index_dir, table, searcher.manifest),
+        format="parquet",
+        partitioning="hive",
+    )
+    bound = _pin_bound(searcher, table)
+    return dset if bound is None else dset.filter(ds.field(bound[0]) < bound[1])
+
+
+def pinned_df(searcher, table: str) -> DataFrame:
+    """``table``'s rows in ``searcher``'s snapshot as a DataFrame
+    (pinned_dataset's Spark twin; the read lists the files)."""
+    from ..layout import table_path
+
+    df = searcher.spark.read.parquet(table_path(searcher.index_dir, table, searcher.manifest))
+    bound = _pin_bound(searcher, table)
+    return df if bound is None else df.filter(F.col(bound[0]) < bound[1])
 
 
 # ---- reducers: each merges the partials of one partial kernel
@@ -1001,7 +1032,7 @@ class TermdictFrontEnd:
     terms dictionary, ahead of the query phase.
 
     A subclass sets ``index_dir``, ``manifest``, ``n_docs``,
-    ``n_term_buckets``, ``_listing`` (snapshot_listing) and
+    ``n_term_buckets`` and
     ``_termdict`` (a pyarrow dataset over the snapshot's termdict: one
     row per term, sorted ``term`` column, so a range filter prunes row
     groups), and defines ``_gather`` for the reduced queries below."""
@@ -1202,13 +1233,6 @@ class TermdictFrontEnd:
         """The partials of kernel ``method`` covering every segment."""
         raise NotImplementedError
 
-    def _listed(self, table: str) -> list[str]:
-        """Absolute paths of ``table``'s files in this snapshot."""
-        from ..layout import table_path
-
-        d = table_path(self.index_dir, table, self.manifest)
-        return [os.path.join(d, f) for f in self._listing[table]]
-
     def _require_positions(self, what: str = "a phrase query") -> None:
         if not self.manifest["params"].get("with_positions", True):
             raise ValueError(
@@ -1224,7 +1248,7 @@ class TermdictFrontEnd:
 
         fields = sorted({rt.field for rt in bq.range_atoms(ast)}) if ast is not None else []
         if fields:
-            cols = ds.dataset(self._listed("doclens"), format="parquet").schema.names
+            cols = pinned_dataset(self, "doclens").schema.names
             for f in fields:
                 check_field(self, f, cols)
 
@@ -1870,22 +1894,11 @@ class QueryPlan:
         return self.terms if self.mode == "AND" and self.variants is None else []
 
     @property
-    def bounded(self) -> bool:
-        """True when no idf is negative, so block and segment maxima
-        bound scores from above.  A term whose global df exceeds n_docs
-        (deletes lower n_docs at once, df only at compaction) has a
-        negative idf; such a plan scores exhaustively."""
-        return all(v >= 0 for v in self.idf.values())
-
-    @property
     def prunable(self) -> bool:
         """True when a segment whose score bound is strictly below the
         running k-th score may be skipped: the top-k term kernels and
         the required-seeded bool kernel.  Not msm, bmw, exhaustive,
-        cursor pages, fielded AND/BEST, bool queries with atoms or
-        unbounded plans."""
-        if not self.bounded:
-            return False
+        cursor pages, fielded AND/BEST or bool queries with atoms."""
         if self.mode == "BOOL":
             return bool(self.req) and not self.atoms
         return (
@@ -2068,7 +2081,7 @@ def score_segment(
     it, the bool query evaluates over doc sets.  Every kernel keeps the
     ascending-term float64 accumulation, so all choices are
     bit-identical to the exhaustive one."""
-    exhaustive = q.algo == "exhaustive" or q.after is not None or not q.bounded
+    exhaustive = q.algo == "exhaustive" or q.after is not None
     if q.mode == "BOOL" and q.req and extra_sets is None:
         docs, scores = _eval_bool_blockmax(
             cache, q.ast, q.req, q.pos_terms, q.idf, q.avgdl, dead=dead
@@ -2216,13 +2229,7 @@ class IndexSearcher(TermdictFrontEnd):
         self.n_docs = self.manifest["globals"]["n_docs"]
         self.avgdl = self.manifest["globals"]["avgdl"]
         self.n_term_buckets = self.manifest["params"]["n_term_buckets"]
-        self._postings = self.spark.read.parquet(
-            table_path(self.index_dir, "postings", self.manifest)
-        )
-        # extend_index appends postings, doclens and nested files in
-        # place, so the tasks ship this snapshot's listing: a worker that
-        # builds its searcher later must not see files appended since
-        self._listing = snapshot_listing(self.index_dir, self.manifest)
+        self._postings = pinned_df(self, "postings")
         # the termdict front end reads on the driver: opened once per
         # snapshot (an open lists the files), pinned like every table
         self._termdict = ds.dataset(
@@ -2231,6 +2238,7 @@ class IndexSearcher(TermdictFrontEnd):
             partitioning="hive",
         )
         self._doclens_path = table_path(self.index_dir, "doclens", self.manifest)
+        self._nested_path = table_path(self.index_dir, "nested", self.manifest)
         self._refresh_deletes_state()
 
     def _refresh_deletes_state(self) -> None:
@@ -2289,25 +2297,27 @@ class IndexSearcher(TermdictFrontEnd):
         data (n = cores, at most the segment count).  Task ``i`` runs
         partial kernel ``method`` with ``part=(i, n)`` in a reused Python
         worker (serve.run_partition), whose LocalSearcher, pinned to this
-        searcher's manifest and file listing, reads the segments with
+        searcher's manifest (snapshot_bounds), reads the segments with
         seg % n == i from its hot row, decode and block caches.  No
         postings are shuffled or sent through Arrow; a task ships the
-        args, the manifest (about 1 KB) and the file names.  ``emit``
-        turns a partial into the task's rows."""
+        args and the manifest (about 1 KB).  ``emit`` turns a partial
+        into the task's rows."""
         from .serve import run_partition
 
-        sc = self.spark.sparkContext
-        n_segs = int(self.manifest.get("metrics", {}).get("n_segments") or 1)
-        n = max(1, min(sc.defaultParallelism, n_segs))
-        index_dir, manifest, listing = self.index_dir, self.manifest, self._listing
+        n, index_dir, manifest = self._n_tasks(), self.index_dir, self.manifest
 
         def task(it):
             # partition i holds just i; reading the input to its end
             # keeps the worker (and its searcher) for the next task
             for i in it:
-                yield from emit(run_partition(index_dir, manifest, listing, method, args, n, i))
+                yield from emit(run_partition(index_dir, manifest, method, args, n, i))
 
-        return sc.parallelize(range(n), n).mapPartitions(task)
+        return self.spark.sparkContext.parallelize(range(n), n).mapPartitions(task)
+
+    def _n_tasks(self) -> int:
+        """Tasks per distributed query: the cores, at most the segments."""
+        n_segs = int(self.manifest.get("metrics", {}).get("n_segments") or 1)
+        return max(1, min(self.spark.sparkContext.defaultParallelism, n_segs))
 
     def _gather(self, method: str, *args) -> list:
         """The tasks' partials of ``method``, collected: one Spark job;
@@ -2601,15 +2611,34 @@ class IndexSearcher(TermdictFrontEnd):
     def matched_ids(self, query=None, mode: str = "OR") -> DataFrame:
         """DataFrame(doc_id) of live docs matching ``query`` (term list
         with OR/AND, boolean string with "BOOL", None = match_all) —
-        the doc-value aggregation front half.  Lazy: the tasks' id rows
-        (LocalSearcher._ids_partial) join doc values JVM-side."""
-        from .docvalues import MATCHED_SCHEMA
+        the doc-value aggregation front half, lazy, so doc values join
+        it JVM-side.  match_all is the snapshot's doclens ids minus the
+        dead ones; any other query is _tasks' plan-only tasks, each
+        returning its ids (LocalSearcher._ids_partial) as one Arrow
+        batch."""
+        import pyarrow as pa
 
-        rdd = self._tasks(
-            "_ids_partial", (self._match_spec(query, mode),),
-            lambda ids: ((d,) for d in ids.tolist()),
-        )
-        return self.spark.createDataFrame(rdd, MATCHED_SCHEMA)
+        from .docvalues import MATCHED_SCHEMA, _all_dead_ids, doclens_df
+        from .serve import run_partition
+
+        if query is None:
+            live = doclens_df(self).select("doc_id")
+            dead = _all_dead_ids(self)
+            if dead.size:
+                dead_df = local_frame(self.spark, [(int(d),) for d in dead.tolist()], MATCHED_SCHEMA)
+                live = live.join(F.broadcast(dead_df), "doc_id", "left_anti")
+            return live
+        n, index_dir, manifest = self._n_tasks(), self.index_dir, self.manifest
+        args = (self._match_spec(query, mode),)
+        schema = pa.schema([pa.field("doc_id", pa.int64(), nullable=False)])
+
+        def task(batches):
+            for b in batches:  # partition i holds just i
+                for i in b.column(0).to_pylist():
+                    ids = run_partition(index_dir, manifest, "_ids_partial", args, n, i)
+                    yield pa.RecordBatch.from_arrays([pa.array(ids, pa.int64())], schema=schema)
+
+        return self.spark.range(0, n, 1, n).mapInArrow(task, MATCHED_SCHEMA)
 
     # ---- reduced queries (TermdictFrontEnd), as DataFrames ----
 

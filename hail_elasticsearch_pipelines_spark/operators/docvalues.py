@@ -25,7 +25,6 @@ scorers for the docs that survive the filter.
 
 from __future__ import annotations
 
-import os
 from typing import TYPE_CHECKING
 
 import numpy as np
@@ -98,22 +97,11 @@ def _values_lookup(
     return ok, {c: right[c].to_numpy()[take] for c in cols}
 
 
-def listed_df(searcher: "IndexSearcher", table: str) -> DataFrame:
-    """The pinned snapshot's rows of ``table`` ("doclens" or "nested"):
-    its generation-resolved dir, read through a file-name glob of the
-    files listed at searcher construction, so rows extend_index appended
-    since stay invisible.  A part-file name is unique to the write that
-    made it, so the name alone pins the file in any partition dir."""
-    from ..layout import table_path
-
-    names = sorted({os.path.basename(f) for f in searcher._listing[table]})
-    path = table_path(searcher.index_dir, table, searcher.manifest)
-    return searcher.spark.read.option("pathGlobFilter", "{" + ",".join(names) + "}").parquet(path)
-
-
 def doclens_df(searcher: "IndexSearcher") -> DataFrame:
-    """The pinned snapshot's doclens table."""
-    return listed_df(searcher, "doclens")
+    """The pinned snapshot's doclens table (bm25.snapshot_bounds)."""
+    from .bm25 import pinned_df
+
+    return pinned_df(searcher, "doclens")
 
 
 def check_field(searcher: "IndexSearcher", field: str, cols) -> None:

@@ -31,6 +31,7 @@ shared per-segment delete filters downstream.
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 import numpy as np
@@ -88,15 +89,15 @@ def _norm_conditions(searcher, field: str, conditions: dict) -> list:
 
 
 def nested_df(searcher) -> DataFrame:
-    """The pinned snapshot's nested sidecar."""
-    from .docvalues import listed_df
+    """The pinned snapshot's nested sidecar (bm25.snapshot_bounds)."""
+    from .bm25 import pinned_df
 
     _require_sidecar(searcher)
-    return listed_df(searcher, "nested")
+    return pinned_df(searcher, "nested")
 
 
 def _require_sidecar(searcher) -> None:
-    if not searcher._listing["nested"]:
+    if not os.path.isdir(searcher._nested_path):
         raise DocValueError(
             "this index has no nested sidecar — no array-of-struct "
             "column was present at build time"
@@ -367,13 +368,10 @@ def local_match_ids(local, field: str, conditions: dict) -> np.ndarray:
 
 def nested_dataset(local) -> "ds.Dataset":
     """The pinned snapshot's nested sidecar as a pyarrow dataset."""
+    from .bm25 import pinned_dataset
+
     _require_sidecar(local)
-    return ds.dataset(
-        local._listed("nested"),
-        format="parquet",
-        partitioning="hive",
-        partition_base_dir=local._nested_path,
-    )
+    return pinned_dataset(local, "nested")
 
 
 def atom_filter(field: str, leaf: str, value: "str | None") -> "ds.Expression":

@@ -50,6 +50,7 @@ from .bm25 import (
     TermdictFrontEnd,
     field_avgdl_map,
     load_deletes,
+    pinned_dataset,
     plan_bool,
     plan_fielded,
     plan_spec,
@@ -57,7 +58,6 @@ from .bm25 import (
     pseudo_candidates,
     score_segment,
     segment_bounds,
-    snapshot_listing,
     term_filter,
 )
 from .index_build import bm25_idf, bm25_tf_weight
@@ -109,30 +109,22 @@ class LocalSearcher(TermdictFrontEnd):
         self.index_dir = index_dir
         self._load_snapshot()
 
-    def _load_snapshot(
-        self, manifest: "dict | None" = None, listing: "dict | None" = None
-    ) -> None:
+    def _load_snapshot(self, manifest: "dict | None" = None) -> None:
         """Pin to the CURRENT manifest generation (see
-        IndexSearcher._load_snapshot), or to ``manifest`` and its file
-        ``listing`` when given (a worker serving an IndexSearcher's
-        snapshot): table paths resolve through the manifest's generation
-        pointers once, the postings, doclens and nested files are listed
-        once (bm25.snapshot_listing), deletes are read at the manifest's
-        epoch, so neither a maintenance publish nor an in-place append
-        changes what this searcher serves."""
+        IndexSearcher._load_snapshot), or to ``manifest`` when given (a
+        worker serving an IndexSearcher's snapshot): table paths resolve
+        through the manifest's generation pointers once, postings,
+        doclens and nested rows are read below the manifest's bounds
+        (bm25.snapshot_bounds), deletes at the manifest's epoch, so
+        neither a maintenance publish nor an in-place append changes
+        what this searcher serves."""
         from ..layout import load_manifest, table_path
 
         self.manifest = manifest if manifest is not None else load_manifest(self.index_dir)
         self.n_docs = self.manifest["globals"]["n_docs"]
         self.avgdl = self.manifest["globals"]["avgdl"]
         self.n_term_buckets = self.manifest["params"]["n_term_buckets"]
-        self._listing = listing or snapshot_listing(self.index_dir, self.manifest)
-        self._postings = ds.dataset(
-            self._listed("postings"),
-            format="parquet",
-            partitioning="hive",
-            partition_base_dir=table_path(self.index_dir, "postings", self.manifest),
-        )
+        self._postings = pinned_dataset(self, "postings")
         self._termdict = ds.dataset(
             table_path(self.index_dir, "termdict", self.manifest),
             format="parquet",
@@ -515,11 +507,9 @@ class LocalSearcher(TermdictFrontEnd):
         hit = self._dv_cache.get(field)
         if hit is not None:
             return hit
-        import pyarrow.dataset as _ds
-
         from .docvalues import DocValueError
 
-        dset = _ds.dataset(self._listed("doclens"), format="parquet")
+        dset = pinned_dataset(self, "doclens")
         if field not in dset.schema.names:
             raise DocValueError(
                 f"{field!r} is not a doc-value field of this index "
@@ -2107,27 +2097,25 @@ def _concat_rows(parts: list[tuple]) -> tuple:
 _PINNED: "tuple[tuple, LocalSearcher] | None" = None
 
 
-def pinned_searcher(index_dir: str, manifest: dict, listing: dict) -> LocalSearcher:
+def pinned_searcher(index_dir: str, manifest: dict) -> LocalSearcher:
     """This process's searcher over ``index_dir``, pinned to
-    ``manifest`` and ``listing`` (bm25.snapshot_listing): the kept one
-    while all three are the same, else a new one that replaces it."""
+    ``manifest``: the kept one while both are the same, else a new one
+    that replaces it."""
     global _PINNED
-    pin = (index_dir, manifest, listing)
+    pin = (index_dir, manifest)
     if _PINNED is not None and _PINNED[0] == pin:
         return _PINNED[1]
     _PINNED = None  # the old snapshot goes before the new one loads
     s = LocalSearcher.__new__(LocalSearcher)
     s.index_dir = index_dir
-    s._load_snapshot(manifest, listing)
+    s._load_snapshot(manifest)
     _PINNED = (pin, s)
     return s
 
 
-def run_partition(
-    index_dir: str, manifest: dict, listing: dict, method: str, args: tuple, n: int, i: int
-):
+def run_partition(index_dir: str, manifest: dict, method: str, args: tuple, n: int, i: int):
     """Task ``i`` of ``n`` of a distributed query: partial kernel
     ``method`` over the segments with seg % n == i, on the worker's
     pinned searcher (its caches are not keyed by part: tasks are not
     sticky to workers)."""
-    return getattr(pinned_searcher(index_dir, manifest, listing), method)(*args, part=(i, n))
+    return getattr(pinned_searcher(index_dir, manifest), method)(*args, part=(i, n))

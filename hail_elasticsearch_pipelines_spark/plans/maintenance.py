@@ -417,6 +417,10 @@ def repair_index(spark: SparkSession, index_dir: str) -> dict:
     ).collect()[0]
     g = manifest["globals"]
     g["n_docs"] = int(row["n"])
+    # a kept crashed batch is in no extension record: the snapshot's id
+    # end comes from the reconciled rows, dead ones included
+    max_id = spark.read.parquet(doclens_path).agg(F.max("doc_id")).collect()[0][0]
+    g["doc_id_end"] = int(max_id) + 1 if max_id is not None else 0
     g["total_tokens"] = int(row["tok"] or 0)
     g["avgdl"] = g["total_tokens"] / g["n_docs"] if g["n_docs"] else 0.0
     if rep_tf:
@@ -751,6 +755,11 @@ def _extend_index_locked(
         )
         manifest["deletes_epoch"] = new_epoch
 
+    if new_stats["n_docs"]:
+        # the batch's ids are dense from id_base; readers pinned to the
+        # manifest saved below read the rows under this bound, so a
+        # later batch's in-place appends stay invisible to them
+        g["doc_id_end"] = id_base + new_stats["n_docs"]
     g["n_docs"] += new_stats["n_docs"] - n_killed
     g["total_tokens"] += new_stats["total_tokens"] - killed_tokens
     g["avgdl"] = g["total_tokens"] / g["n_docs"] if g["n_docs"] else 0.0

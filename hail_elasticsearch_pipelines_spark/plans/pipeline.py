@@ -326,6 +326,9 @@ class IndexBuildPipeline:
             )
         globals_["docs_per_part"] = self.docs_per_part
         globals_["n_parts"] = math.ceil(globals_["n_docs"] / self.docs_per_part) if globals_["n_docs"] else 0
+        # doc ids are dense from 0: readers pin a snapshot to the rows
+        # below this bound (bm25.snapshot_bounds)
+        globals_["doc_id_end"] = globals_["n_docs"]
         with open(gpath, "w") as f:
             json.dump(globals_, f)
         mark_complete(path, fp)

@@ -342,22 +342,47 @@ class TestNestedTermsAgg:
 
 
 class TestPlan:
-    def test_nested_pushdown_reaches_scan(self, nested_index):
+    def test_nested_pushdown_reaches_scan(self, nested_index, tmp_path):
         """100×-scale posture: a nested-atom resolution (the bool atom
         path every searcher task runs) must be a PRUNED scan — the
         field= partition filter selects only that field's sidecar files,
-        and the (leaf, value) predicates go with the scan to the parquet
-        reader, whose row-group min/max stats skip the rest."""
+        and the (leaf, value) predicates reach the parquet reader, whose
+        row-group min/max stats skip the rest.  The sidecar is rewritten
+        in 16-row row groups (same sorted rows) so there is more than
+        one group to skip."""
+        import shutil
+
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+
         from hail_elasticsearch_pipelines_spark.operators import nested as nst
 
-        out, _ = nested_index
-        dset = nst.nested_dataset(LocalSearcher(out))
+        src, _ = nested_index
+        out = str(tmp_path / "idx")
+        shutil.copytree(src, out)
+        for root, _dirs, files in os.walk(os.path.join(out, "nested")):
+            for f in files:
+                if f.endswith(".parquet"):
+                    path = os.path.join(root, f)
+                    pq.write_table(pq.read_table(path, partitioning=None), path, row_group_size=16)
         flt = nst.atom_filter("links", "anchor", "a1")
-        frags = list(dset.get_fragments(filter=flt))
+        # the files, unpinned: a pinned (filtered) dataset lists none
+        files = ds.dataset(os.path.join(out, "nested"), format="parquet", partitioning="hive")
+        frags = list(files.get_fragments(filter=flt))
         assert frags and all("field=links" in f.path for f in frags)
-        assert not list(dset.get_fragments(filter=nst.atom_filter("nosuch", "anchor", "a1")))
-        assert '(leaf == "anchor")' in str(flt) and '(value == "a1")' in str(flt), flt
-        assert dset.to_table(filter=flt).num_rows > 0
+        assert not list(files.get_fragments(filter=nst.atom_filter("nosuch", "anchor", "a1")))
+        n_groups = sum(f.num_row_groups for f in frags)
+        kept = sum(len(f.split_by_row_group(flt, schema=files.schema)) for f in frags)
+        assert 0 < kept < n_groups / 2, (kept, n_groups)
+        # the pinned scan of a nested atom returns every matching row
+        dset = nst.nested_dataset(LocalSearcher(out))
+        tbl = dset.to_table(columns=["field", "leaf", "value", "doc_id"])
+        want = sorted(
+            d
+            for fld, lf, v, d in zip(*(tbl[c].to_pylist() for c in tbl.column_names))
+            if (fld, lf, v) == ("links", "anchor", "a1")
+        )
+        assert want and sorted(dset.to_table(filter=flt)["doc_id"].to_pylist()) == want
 
 
 class TestMaintenance:

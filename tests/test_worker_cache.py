@@ -1,6 +1,6 @@
 """Executor-resident searchers: each Python worker keeps one LocalSearcher
-between tasks (serve.pinned_searcher), pinned to the index dir, manifest
-and file listing the driver's IndexSearcher ships with every task."""
+between tasks (serve.pinned_searcher), pinned to the index dir and
+manifest the driver's IndexSearcher ships with every task."""
 
 from __future__ import annotations
 
@@ -57,7 +57,7 @@ def test_worker_searcher_survives_between_tasks(spark, small_index):
     cache outlives the task that built it."""
     index_dir, _ = small_index
     s = IndexSearcher(spark, index_dir)
-    manifest, listing = s.manifest, s._listing
+    manifest = s.manifest
     sc = spark.sparkContext
 
     def probe(it):
@@ -66,7 +66,7 @@ def test_worker_searcher_survives_between_tasks(spark, small_index):
         from hail_elasticsearch_pipelines_spark.operators import serve
 
         for _i in it:  # a worker that leaves input unread is not reused
-            yield os.getpid(), id(serve.pinned_searcher(index_dir, manifest, listing))
+            yield os.getpid(), id(serve.pinned_searcher(index_dir, manifest))
 
     seen: dict[int, list] = {}
     for _ in range(12):
@@ -90,7 +90,7 @@ def test_worker_keeps_one_searcher(spark, small_index, tmp_path):
         assert _pairs(sa.search(["the", "of"], "OR", 10)) == _pairs(
             sb.search(["the", "of"], "OR", 10)
         )
-    pins = [(s.index_dir, s.manifest, s._listing) for s in (sa, sb)]
+    pins = [(s.index_dir, s.manifest) for s in (sa, sb)]
     sc = spark.sparkContext
 
     def probe(it):
