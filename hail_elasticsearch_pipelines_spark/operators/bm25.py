@@ -99,6 +99,16 @@ ADJACENCY_SCHEMA = T.StructType(
     ]
 )
 
+SUGGEST_SCHEMA = T.StructType(
+    [T.StructField("term", T.StringType()), T.StructField("df", T.LongType())]
+)
+
+PHRASE_SUGGEST_SCHEMA = T.StructType(
+    [T.StructField("suggestion", T.StringType()), T.StructField("score", T.DoubleType())]
+)
+
+DOC_ID_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
+
 
 def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
     """``rows`` (tuples in ``schema`` order) as a DataFrame over a local
@@ -1607,6 +1617,15 @@ def _score_intersection_blockmax(
     return cand, scores
 
 
+# An "auto" OR plan with more terms than this scores exhaustively: each
+# step of MaxScore's essential-term split re-scores every candidate over
+# the terms so far, so its cost grows with the square of the term count.
+# On a 20k-page index (LocalSearcher, warm, 4 cores) the two cross
+# between 12 and 16 terms, with or without stopwords among them; at 32
+# terms MaxScore takes 52-63 ms against 14-23 ms exhaustive.
+MAXSCORE_MAX_TERMS = 12
+
+
 def _score_union_maxscore(
     cache: _BlockCache,
     terms_sorted: list[str],
@@ -2123,7 +2142,9 @@ def score_segment(
     elif q.algo == "bmw" and not exhaustive:
         # WAND and MaxScore return the segment's top-k already
         return _score_union_blockmax(cache, q.terms, q.idf, q.avgdl, q.k, dead=dead)
-    elif q.algo in ("auto", "maxscore") and not exhaustive:
+    elif (
+        q.algo == "maxscore" or (q.algo == "auto" and len(q.terms) <= MAXSCORE_MAX_TERMS)
+    ) and not exhaustive:
         return _score_union_maxscore(cache, q.terms, q.idf, q.avgdl, q.k, dead=dead)
     else:
         postings = _live_postings(cache, q.terms, dead)
@@ -2365,8 +2386,9 @@ class IndexSearcher(TermdictFrontEnd):
         """Top-k BM25.  Returns DataFrame(doc_id, score) already sorted
         by (score desc, doc_id asc), exactly k rows or fewer.
 
-        algo: "auto" (AND → block-skip intersection, OR → MaxScore),
-        "bmw" (OR → window block-max WAND), "maxscore" (OR → MaxScore),
+        algo: "auto" (AND → block-skip intersection, OR → MaxScore up
+        to MAXSCORE_MAX_TERMS terms, exhaustive above), "bmw" (OR →
+        window block-max WAND), "maxscore" (OR → MaxScore),
         "exhaustive" (always full decode).  All paths are rank- AND
         score-identical; algo only changes how much of each posting
         list is decoded.
@@ -2448,7 +2470,7 @@ class IndexSearcher(TermdictFrontEnd):
         semantics — every expanded term scores with its own idf)."""
         terms = self.expand_prefix(prefix, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, [], RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
 
     def search_fuzzy(
@@ -2465,7 +2487,7 @@ class IndexSearcher(TermdictFrontEnd):
         rare typo variants when their df differs)."""
         terms = self.expand_fuzzy(term, max_edits, prefix_length, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, [], RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
 
     def search_regexp(
@@ -2480,7 +2502,7 @@ class IndexSearcher(TermdictFrontEnd):
         term keeps its own idf)."""
         terms = self.expand_regexp(pattern, max_expansions, field)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, [], RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
 
     def suggest_terms(
@@ -2502,7 +2524,7 @@ class IndexSearcher(TermdictFrontEnd):
             else self.expand_prefix(prefix, max_expansions)
         )
         ranked = sorted(self.global_dfs(terms).items(), key=lambda x: (-x[1], x[0]))
-        return self.spark.createDataFrame(ranked[:size], "term string, df long")
+        return local_frame(self.spark, ranked[:size], SUGGEST_SCHEMA)
 
     def suggest_phrase(
         self,
@@ -2527,9 +2549,7 @@ class IndexSearcher(TermdictFrontEnd):
             self, text, size, max_edits, max_errors, per_term, collate,
             lambda ts: TermdictFrontEnd.search_count(self, sorted(set(ts)), "AND"),
         )
-        return self.spark.createDataFrame(
-            rows, "suggestion string, score double"
-        )
+        return local_frame(self.spark, rows, PHRASE_SUGGEST_SCHEMA)
 
     MLT_MAX_QUERY_TERMS = 25  # the ES more_like_this default
 
@@ -2585,7 +2605,7 @@ class IndexSearcher(TermdictFrontEnd):
             like_text, max_query_terms, min_term_freq, min_doc_freq
         )
         if not top:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, [], RESULT_SCHEMA)
         return self.search(top, mode="OR", k=k)
 
     def search_page(
@@ -3323,7 +3343,7 @@ class IndexSearcher(TermdictFrontEnd):
             ]
         )
         if not ids:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         sample_n = len(ids)
         fg = (
             docs.filter(F.col("doc_id").isin(ids))
@@ -3346,7 +3366,7 @@ class IndexSearcher(TermdictFrontEnd):
             if t in dfs
         ]
         out.sort(key=lambda r: (-r[3], r[0]))
-        return self.spark.createDataFrame(out[: int(size)], out_schema)
+        return local_frame(self.spark, out[: int(size)], out_schema)
 
     def mget(self, ids: "list[int]") -> DataFrame:
         """ES ``_mget`` / get-by-id: one row per REQUESTED id —
@@ -3368,7 +3388,7 @@ class IndexSearcher(TermdictFrontEnd):
         found = (
             F.col("doc_id").isin(sorted(live)) if live else F.lit(False)
         )
-        req = self.spark.createDataFrame([(i,) for i in want], "doc_id long")
+        req = local_frame(self.spark, [(i,) for i in want], DOC_ID_SCHEMA)
         if live:
             rows = doclens.where(
                 F.col("doc_id").isin(sorted(live))
@@ -3421,7 +3441,7 @@ class IndexSearcher(TermdictFrontEnd):
         results = results.persist()
         rows = results.limit(max_collect + 1).collect()
         if len(rows) <= max_collect:
-            hits = self.spark.createDataFrame(rows, results.schema)
+            hits = local_frame(self.spark, rows, results.schema)
             ids = [r["doc_id"] for r in rows]
             results.unpersist()
             return (

@@ -38,6 +38,7 @@ from .bm25 import (
     _msm_scores,
     _topk,
     bm25_idf,
+    local_frame,
 )
 
 FED_SCHEMA = T.StructType(
@@ -93,7 +94,7 @@ def search_indices(
     qterms = sorted(set(terms))
     searchers = [IndexSearcher(spark, p) for p in index_dirs]
     if not qterms:
-        return spark.createDataFrame([], FED_SCHEMA)
+        return local_frame(spark, [], FED_SCHEMA)
     if dfs:
         n_docs, avgdl, df_map = combined_stats(searchers, qterms)
         idf_of = {
@@ -122,7 +123,7 @@ def search_indices(
             .withColumn("index_id", F.lit(i).cast("long"))
         )
     if not parts:
-        return spark.createDataFrame([], FED_SCHEMA)
+        return local_frame(spark, [], FED_SCHEMA)
     rows = parts[0]
     for p in parts[1:]:
         rows = rows.unionByName(p)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .bm25 import local_frame
+
 RRF_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -85,7 +87,7 @@ def hybrid_rrf_search(
         ).collect()
     ]
     fused = rrf_fuse([bm, vs], k=k, rank_constant=rank_constant)
-    return searcher.spark.createDataFrame(fused, RRF_SCHEMA)
+    return local_frame(searcher.spark, fused, RRF_SCHEMA)
 
 
 def search_pinned(
@@ -122,4 +124,4 @@ def search_pinned(
         if d not in seen:
             seen.add(d)
             out.append((d, len(out) + 1, False))
-    return searcher.spark.createDataFrame(out[: int(k)], PINNED_SCHEMA)
+    return local_frame(searcher.spark, out[: int(k)], PINNED_SCHEMA)

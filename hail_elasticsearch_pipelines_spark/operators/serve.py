@@ -290,7 +290,8 @@ class LocalSearcher(TermdictFrontEnd):
         """Top-k BM25 → [(doc_id, score)] by (score desc, doc_id asc).
         Identical accumulation order to IndexSearcher → bit-identical.
         algo mirrors IndexSearcher.search: "auto" (AND → block-skip,
-        OR → MaxScore), "bmw", "maxscore", "exhaustive".
+        OR → MaxScore up to bm25.MAXSCORE_MAX_TERMS terms), "bmw",
+        "maxscore", "exhaustive".
 
         The pruned paths (auto/maxscore/AND-block-skip) add
         CROSS-SEGMENT pruning (the Lucene/ES per-segment max-score

@@ -4,10 +4,20 @@
 Package the library once:
     (cd /root/repo && zip -qr /tmp/engine.zip hail_elasticsearch_pipelines_spark)
 
-Then on a cluster (or local[N] in the sandbox):
-    spark-submit --py-files /tmp/engine.zip scripts/build_index_job.py \
+Then on a cluster (or local[N] on one machine):
+    spark-submit \
+        --py-files /tmp/engine.zip,hail_elasticsearch_pipelines_spark/worker/pyspark_fastworker.py \
+        --conf spark.python.worker.module=pyspark_fastworker \
+        scripts/build_index_job.py \
         --input <parquet path or Iceberg table> --out <index dir> \
         [--lang en] [--chunks 8] [--term-buckets 64] [--extend]
+
+The worker module spares every Python task pyspark's re-read of the zips
+on its path (100-250 ms a task on Python 3.11).  --py-files puts it in
+each executor's working directory, where the Python daemon finds it; in
+local mode add --conf spark.executorEnv.PYTHONPATH=<checkout>/hail_elasticsearch_pipelines_spark/worker.
+Without the two extra options pyspark's default worker runs (README,
+"Running on a cluster").
 
 The driver process only composes the plan; all heavy work is executor-
 side (Arrow UDF partial builds, bucketed shuffle merge).  Re-running

@@ -217,3 +217,37 @@ def test_maxscore_union_skips_and_matches_exhaustive():
     n_stop_blocks = len(cache.block_last["the"])
     decoded = sum(1 for (t, _) in cache._blocks if t == "the")
     assert decoded <= 50 and decoded < 0.2 * n_stop_blocks
+
+
+def test_many_term_or_scores_exhaustively(spark, small_index, small_oracle, monkeypatch):
+    """An ``auto`` OR over more than MAXSCORE_MAX_TERMS terms (a 60+
+    term prefix expansion) runs the exhaustive union, bit-identical to
+    ``algo="exhaustive"`` and the oracle on both searchers; a 3-term OR
+    (the benchmark's shape) still runs MaxScore."""
+    from hail_elasticsearch_pipelines_spark.operators import bm25
+    from hail_elasticsearch_pipelines_spark.operators.serve import LocalSearcher
+
+    index_dir, _ = small_index
+    dist, local = IndexSearcher(spark, index_dir), LocalSearcher(index_dir)
+    terms = dist.expand_prefix("term0", max_expansions=1000)
+    assert len(terms) >= 60 > bm25.MAXSCORE_MAX_TERMS
+    oracle, _ = small_oracle
+    expected = oracle.topk(terms, "OR", 10)
+    _assert_identical(dist.search(terms, "OR", 10).collect(), expected)
+    _assert_identical(dist.search(terms, "OR", 10, algo="exhaustive").collect(), expected)
+    assert local.search(terms, "OR", 10) == local.search(terms, "OR", 10, algo="exhaustive")
+    _assert_identical(
+        [{"doc_id": d, "score": s} for d, s in local.search(terms, "OR", 10)], expected
+    )
+
+    calls = []
+    maxscore = bm25._score_union_maxscore
+    monkeypatch.setattr(
+        bm25, "_score_union_maxscore",
+        lambda cache, ts, *a, **kw: calls.append(len(ts)) or maxscore(cache, ts, *a, **kw),
+    )
+    local = LocalSearcher(index_dir)
+    local.search(terms, "OR", 10)
+    assert not calls
+    local.search(["of", "term0042", "the"], "OR", 10)
+    assert calls and set(calls) == {3}

@@ -173,6 +173,23 @@ def test_reduced_jobs_per_call(spark, searcher, name):
     assert n <= max_jobs, f"{name}: {n} Spark jobs > {max_jobs}"
 
 
+# Answers built on the driver from termdict reads are local relations:
+# building and collecting them runs no Spark job.
+LOCAL_ANSWERS = {
+    "suggest_terms": lambda s: s.suggest_terms("term00", size=5).collect(),
+    "suggest_phrase": lambda s: s.suggest_phrase("teh term0042", size=3).collect(),
+    "prefix_empty": lambda s: s.search_prefix("zzzznothing", k=10).collect(),
+}
+
+
+@pytest.mark.parametrize("name", sorted(LOCAL_ANSWERS))
+def test_local_answers_run_no_job(spark, searcher, name):
+    call = LOCAL_ANSWERS[name]
+    call(searcher)
+    n = _jobs(spark, f"local_{name}", lambda: call(searcher))
+    assert n == 0, f"{name}: {n} Spark jobs"
+
+
 def test_search_collect_is_one_stage_without_shuffle(spark, searcher):
     """A search collect is one job of one stage over no scanned data:
     the plan has no Exchange and no file scan, only the scatter's rows."""
